@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -31,8 +30,9 @@ object Bench {
     * the optimizer correctly eliminated the join under count().
     * The noop sink consumes every row of the final projection and
     * discards it, so the plan the user would pay for is the plan the
-    * bench measures. Shared with ScaleSpike so 10x spikes measure the
-    * same action as the round bench. */
+    * bench measures. Shared with ScaleSpike and Probe so spikes and
+    * probes measure the same action as the round bench
+    * (audits/bench_r12_noop_action.json). */
   def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
@@ -65,57 +65,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the query surface (r17): the
-      // default 100 entries thrash under 314 distinct queries (~5
-      // codegen'd stages each), so EVERY pass recompiled virtually
-      // every stage — janino frames dominated driver stack samples and
-      // a 63-query A/B measured ~1.8x end-to-end (p1/p2/p3
-      // 45-52/42-50/42-53 s stock vs 25.2/25.0/23.0 s sized, quiet
-      // windows). Scale-independent: this is driver-JVM metadata (the
-      // cache holds compiled classes, ~KBs each), and any long-running
-      // service with a wide query surface wants it sized to that
-      // surface, not to the 100-entry default.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-    // SPARK_GRAFT_CONF=k=v;k2=v2 — extra session confs, an experiment
-    // aid (e.g. codegen knobs for the in-suite-amplification probes);
-    // the driver never sets it, so round records run stock. Malformed
-    // entries fail loudly — a typo'd knob silently ignored would make
-    // an experiment "measure" the stock config. LIMITATION (r14
-    // advice): ';' is the entry separator with no escape, so a conf
-    // VALUE containing a semicolon (legal in e.g. extraJavaOptions)
-    // cannot be injected here — the truncated tail entry then fails
-    // the k=v require loudly rather than half-applying.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
-        builder.config(kv.take(i), kv.drop(i + 1))
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val metrics = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (iteration aid; the
     // driver never sets it, so round benches always cover everything).
-    // Unknown names fail LOUDLY — a typo'd filter would otherwise run
-    // ZERO queries and exit 0 with value=0.000, an iteration run that
-    // "measured" nothing reading as instant success (VerifyOne's rule)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.benchQueries.keySet
-      require(unknown.isEmpty, "Bench: unknown SPARK_GRAFT_ONLY " +
-        s"quer${if (unknown.size == 1) "y" else "ies"} " +
-        s"${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val qs = SparkEntry.benchQueries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    // Unknown or empty names fail loudly (SparkEntry.select)
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val qs = only.fold(SparkEntry.benchQueries.toSeq)(names =>
+      SparkEntry.select(SparkEntry.benchQueries, names, "Bench: SPARK_GRAFT_ONLY"))
+      .sortBy(_._1)
+    // session shape and the SPARK_GRAFT_CONF experiment aid: Session.local
+    val spark = Session.local(Session.cpus(32))
+    val metrics = new TaskMetricsListener
+    spark.sparkContext.addSparkListener(metrics)
     // warmup: full untimed pass (ignore failures here; the timed pass reports them)
     qs.foreach { case (_, fn) =>
       try materialize(fn(spark, sfDir)) catch { case _: Throwable => () }

@@ -35,18 +35,11 @@ import org.apache.spark.sql.functions._
   * 3). `tablesCsv` (default all) restricts synthesis to the tables
   * the timed queries actually read, so a documents/embeddings spike
   * doesn't pay a 100× lineitem build it never scans.
+  * Env: SPARK_GRAFT_CPUS (default 32).
   */
 object ScaleSpike {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     try run(spark, args) finally spark.stop()
   }
 

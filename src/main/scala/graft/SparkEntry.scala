@@ -772,6 +772,22 @@ object SparkEntry {
           .splitPolicySteppingScenarios(s, d, approx = true)),
     )
 
+  /** Resolve a caller's query-name list against `registry`, in the
+    * caller's order, duplicates dropped. A typo'd OR EMPTY list fails
+    * LOUDLY and names the offenders: silently running nothing dumps or
+    * times nothing, and a "0/0 pass" or value=0.000 run reads as a
+    * verified or instant success (the empty case: a shell variable
+    * holding the list expands to nothing). `who` prefixes the error. */
+  def select[V](registry: Map[String, V], names: Seq[String],
+                who: String): Seq[(String, V)] = {
+    require(names.nonEmpty, s"$who: no query names given")
+    val unknown = names.distinct.filterNot(registry.contains)
+    require(unknown.isEmpty,
+      s"$who: unknown quer${if (unknown.size == 1) "y" else "ies"} " +
+        s"${unknown.sorted.mkString(", ")}")
+    names.distinct.map(n => n -> registry(n))
+  }
+
   /** DuckDB-runnable oracle per query (same column names, same order). */
   def oracleSql: Map[String, String] =
     scanOracles ++ aggOracles ++ graft.filters.FilterQueries.oracles ++

@@ -1,57 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
-/** Builder-side helper: dump only the named queries (fast oracle-parity
-  * iteration via tools/check.py) — same output layout as Verify. */
-object VerifyOne {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
-    // a typo'd OR EMPTY name list must fail LOUDLY: silently running
-    // nothing dumps nothing, check.py reports "0/0 pass", and the
-    // operator reads an unverified query set as verified (the empty
-    // case: a shell variable holding the list expands to nothing)
-    require(names.nonEmpty, "VerifyOne: no query names given")
-    val unknown = names -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"VerifyOne: unknown quer${if (unknown.size == 1) "y" else "ies"} " +
-        s"${unknown.toSeq.sorted.mkString(", ")} — not in SparkEntry.queries")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val out = new java.io.File(outDir)
-    out.mkdirs()
-    SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
-      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    }
-    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
-      .map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-  }
-}
 
+/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query...]
+  * With no names, dumps every query and every oracle (the correctness
+  * gate's contract). With names, dumps only those queries and their oracle
+  * entries — fast oracle-parity iteration via tools/check.py.
+  * Env: SPARK_GRAFT_CPUS (default 4). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the query surface (Bench.scala r17 note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "Verify: <sfDir> <outDir> [query...]")
+    val sfDir = args(0); val outDir = args(1)
+    val (qs, oracles) =
+      if (args.length == 2) (SparkEntry.queries.toSeq, SparkEntry.oracleSql)
+      else {
+        val sel = SparkEntry.select(SparkEntry.queries, args.drop(2).toSeq, "Verify")
+        val names = sel.map(_._1).toSet
+        (sel, SparkEntry.oracleSql.filter(kv => names(kv._1)))
+      }
+    val spark = Session.local(Session.cpus(4))
     // clear stale results first: a query that fails this run must not
     // inherit a previous run's parquet and pass by accident
     def rmrf(f: java.io.File): Unit = {
@@ -62,7 +31,7 @@ object Verify {
     if (out.exists()) rmrf(out)
     out.mkdirs()
     var failed = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
+    qs.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -70,7 +39,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
@@ -83,9 +52,9 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in builder-authored SQL would otherwise
     * make the driver's json.load fail and silently zero the round's
-    * correctness. ONE copy shared with [[VerifyOne]] (an escaping fix
-    * applied to one entry point must not leave the other emitting
-    * unparseable oracle_sql.json). */
+    * correctness. ONE copy, shared with Bench's record paths (an
+    * escaping fix applied to one writer must not leave the other
+    * emitting unparseable JSON). */
   private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

@@ -148,7 +148,7 @@ object AnalyticsQueries {
   private[graft] def regionSplitExecFrame(s: SparkSession, d: String,
                                           approx: Boolean): DataFrame = {
     val grown = grownOrders(s, d)
-    // the plan input is 16-row metadata (materialized — ScanAudit);
+    // the plan input is 16-row metadata (materialized — scan audit);
     // `tagged` stays lazy, its two consumers are the honest data work
     val buckets = Tools.materializeMeta(
       Tools.totalOrderBuckets(grown, "region_key", 16))
@@ -354,7 +354,7 @@ object AnalyticsQueries {
       val grown = Tables.load(s, d, "orders")
         .withColumn("region_key", col("o_orderkey") * col("o_orderkey"))
       // 16-row bucket stats feed three forks inside normalizerPlan —
-      // materialized so the corpus scans once (ScanAudit)
+      // materialized so the corpus scans once (scan audit)
       Tools.normalizerPlan(Tools.materializeMeta(
           Tools.totalOrderBuckets(grown, "region_key", 16)))
         .orderBy("action", "bucket")
@@ -394,7 +394,7 @@ object AnalyticsQueries {
       import org.apache.spark.sql.expressions.Window
       val C = 5
       // 16-row region metadata feeding candidate fan-out + two count
-      // joins — materialized so orders scans once (ScanAudit)
+      // joins — materialized so orders scans once (scan audit)
       val regions = Tools.materializeMeta(Tools.totalOrderBuckets(
           Tables.load(s, d, "orders"), "o_orderkey", 16)
         .select(col("bucket"), col("n_rows"),
@@ -543,7 +543,7 @@ object AnalyticsQueries {
     "flush_policy" -> ((s, d) => {
       // materialized HERE (16 rows), not inside the lazy helper: the
       // fam aggregate scans the corpus and feeds flushPolicy's four
-      // forks (ScanAudit); a many-thousand-region caller materializes
+      // forks (scan audit); a many-thousand-region caller materializes
       // or not at its own scale
       val fam = Tools.materializeMeta(Tools.withTotalOrderTag(
           Tables.eventCellsTwoFamilies(s, d), "rowkey", 8)
@@ -698,7 +698,7 @@ object AnalyticsQueries {
       val grown = Tables.load(s, d, "orders")
         .withColumn("region_key", col("o_orderkey") * col("o_orderkey"))
       // materialized: the bucket stats feed the plan AND the merge
-      // application — lazy, each fork re-scans orders (ScanAudit)
+      // application — lazy, each fork re-scans orders (scan audit)
       val buckets = Tools.materializeMeta(
         Tools.totalOrderBuckets(grown, "region_key", 16))
       Tools.applyMerges(buckets, Tools.normalizerPlan(buckets))
@@ -1704,7 +1704,7 @@ object AnalyticsQueries {
       val grown = Tables.load(s, d, "orders")
       // 16-row region stats feeding the plan join AND every cost
       // function's fork inside stochasticCost — materialized, the
-      // corpus scans once instead of 16 times (ScanAudit's worst hit)
+      // corpus scans once instead of 16 times (the scan audit's worst hit)
       val tagged = Tools.materializeMeta(
         Tools.totalOrderBuckets(grown, "o_orderkey", 16,
           Seq(sum(floor(col("o_totalprice") * 100).cast("bigint")).as("storefile"),
@@ -1796,7 +1796,7 @@ object AnalyticsQueries {
     "rsgroup_balance" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       // region metadata (16 + 8 rows) under three ranking forks —
-      // materialized so each table scans once (ScanAudit)
+      // materialized so each table scans once (scan audit)
       val ordersR = Tools.materializeMeta(
         Tools.totalOrderBuckets(Tables.load(s, d, "orders"), "o_orderkey", 16)
           .select(lit("t_orders").as("table_name"), col("bucket"), col("n_rows")))

@@ -394,7 +394,9 @@ object Tools {
     * across consumers, so a lazy 16-row bucket table consumed by k
     * downstream branches re-scans the fact table k times (the
     * canaryWriteProbe / hbck-catalog fix, generalized; found
-    * systematically by [[graft.ScanAudit]]). Values are identical to
+    * systematically by the r8/r9 repeated-scan audit,
+    * audits/SCANAUDIT_r9.md; `graft.Probe` prints the same per-source
+    * scan counts today). Values are identical to
     * the lazy form — oracle parity is untouched — and the row guard
     * keeps this an explicit metadata-only tool, never a data collect. */
   def materializeMeta(df: DataFrame, maxRows: Int = 4096): DataFrame = {

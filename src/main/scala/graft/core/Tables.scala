@@ -90,24 +90,37 @@ object Tables {
     * This memoizes the PLAN (the resolved DataFrame), never results:
     * every action against the returned DataFrame still scans parquet,
     * so bench/oracle runs keep computing from the inputs. Eviction
-    * discipline (the r12 rule): the key carries the file's (or the
-    * directory head file's) modification time and length, so a
-    * regenerated corpus gets a fresh read plan — and dead sessions are
-    * swept so a service hosting many short-lived sessions doesn't
-    * retain them (the PipelineQueries.sweepDead pattern). Loader
+    * discipline (the r12 rule): the key carries the path's generation
+    * stamp ([[pathStamp]]), so a regenerated corpus gets a fresh read
+    * plan and the superseded stamps of that session and path are
+    * evicted — and dead sessions are swept so a service hosting many
+    * short-lived sessions doesn't retain them (the
+    * PipelineQueries.sweepDead pattern). Loader
     * callers only ever read the driver-generated testdata tables,
     * which are replaced wholesale between generations (never appended
     * in place), so mtime+len is a sound generation stamp. */
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private[graft] final case class LoadKey(session: String, path: String,
+                                         stamp: String)
+  private[graft] val readMemo =
+    new java.util.concurrent.ConcurrentHashMap[LoadKey, DataFrame]()
 
-  private def pathStamp(spark: SparkSession, path: String): String = {
+  /** Generation stamp of a table path: (count, newest mtime, total
+    * length) over its data files — the direct children of a directory
+    * and the files one level down (a partitioned `k=v/` layout), or
+    * the file itself. A missing table fails naming the table and path
+    * (a raw Hadoop FileNotFoundException names neither the table nor
+    * the loader). */
+  private def pathStamp(spark: SparkSession, name: String, path: String): String = {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = fs.getFileStatus(p)
+    val st = try fs.getFileStatus(p) catch {
+      case e: java.io.FileNotFoundException => throw new IllegalArgumentException(
+        s"Tables.load: table '$name' not found at $path", e)
+    }
     if (st.isDirectory) {
-      val files = fs.listStatus(p).filter(_.isFile)
+      val (dirs, direct) = fs.listStatus(p).partition(_.isDirectory)
+      val files = direct ++ dirs.flatMap(d => fs.listStatus(d.getPath).filter(_.isFile))
       s"dir:${files.length}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
         files.map(_.getLen).sum
     } else s"file:${st.getModificationTime}:${st.getLen}"
@@ -120,9 +133,15 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     sweepDeadLoads()
     val path = s"$sfDir/$name.parquet"
-    val key = org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark) +
-      s"|$path|" + pathStamp(spark, path)
-    readMemo.computeIfAbsent(key, _ => loadFresh(spark, sfDir, name))
+    val key = LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark),
+      path, pathStamp(spark, name, path))
+    val hit = readMemo.get(key)
+    if (hit != null) hit else {
+      // a new stamp supersedes this session's earlier ones for the path
+      readMemo.keySet().removeIf(k =>
+        k.session == key.session && k.path == path && k.stamp != key.stamp)
+      readMemo.computeIfAbsent(key, _ => loadFresh(spark, sfDir, name))
+    }
   }
 
   private def loadFresh(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -61,7 +61,7 @@ object MutationQueries {
     // CAS waves are STORE ROUND TRIPS: each guard reads the state the
     // previous wave COMMITTED, so chaining the waves lazily in one
     // plan re-derives every earlier wave per reference — the r10
-    // ScanAudit measured 54 customer scans for a 3-wave lazy chain
+    // scan audit measured 54 customer scans for a 3-wave lazy chain
     // (exponential in chain length). Like the store itself, waves 1-2
     // commit copy-on-write (ensure-once ingest, the
     // secondary_index/snapshot discipline); the registered query is

@@ -60,8 +60,8 @@ object Scans {
     * keeps between scanner RPCs. The literal matters at scale: the r8
     * form carried the cursor as a lazy broadcast scalar, which kept
     * the `key > cursor` predicate out of the parquet scan
-    * (PushedFilters stayed empty — the r9 ScanAudit re-verification
-    * caught it), so every page re-read the WHOLE table; as a literal
+    * (PushedFilters stayed empty — the r9 scan-audit re-verification,
+    * audits/SCANAUDIT_r9.md, caught it), so every page re-read the WHOLE table; as a literal
     * the predicate pushes and each page min/max-prunes to the row
     * groups past the cursor. The price is one tiny driver job per
     * page during construction — a cursor is sequential by nature.

@@ -287,16 +287,27 @@ object Ann {
     * job per materialization of every IVF/IMI/kmeans plan. Same
     * values, same sort order (sort_array on structs orders by the
     * leading `cell` field, which is unique — equal to the driver-side
-    * sortBy below), same element schema (built from the input's own
-    * fields). Non-local inputs (the trainIters = 0 lazy-seeded path)
-    * keep the aggregate form. */
-  private[sim] def centroidArray(cent: DataFrame): DataFrame = {
+    * sort by `cell` below), same element schema: the (cell:int, c_emb,
+    * c_norm) struct the aggregate builds, columns picked BY NAME, so a
+    * local table in another column order still works and any other
+    * shape fails naming its columns. Non-local inputs (the
+    * trainIters = 0 lazy-seeded path) keep the aggregate form. */
+  private[graft] def centroidArray(cent: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
     if (cent.queryExecution.logical.isInstanceOf[LocalRelation]) {
-      val rows = cent.collect().sortBy(_.getInt(0))
+      val fields = cent.schema.fields.map(f => f.name -> f.dataType).toMap
+      require(fields.get("cell").contains(IntegerType) &&
+        fields.contains("c_emb") && fields.contains("c_norm"),
+        "centroidArray: expected columns (cell:int, c_emb, c_norm), got " +
+          cent.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
+            .mkString("(", ", ", ")"))
+      val idx = Seq("cell", "c_emb", "c_norm").map(cent.schema.fieldIndex)
+      val rows = cent.collect()
+        .map(r => org.apache.spark.sql.Row.fromSeq(idx.map(r.get)))
+        .sortBy(_.getInt(0))
       val schema = StructType(Seq(StructField("cents",
-        ArrayType(StructType(cent.schema.fields), containsNull = false),
+        ArrayType(StructType(idx.map(cent.schema.fields)), containsNull = false),
         nullable = false)))
       val row: org.apache.spark.sql.Row =
         org.apache.spark.sql.Row(rows.toSeq)
@@ -337,8 +348,9 @@ object Ann {
 
   /** The flat-IVF candidate stream BEFORE the top-k heap — one row per
     * (query, probed-cell member) scored pair. Exposed so candidate-
-    * volume audits (ImiAudit, pruning specs) can count what the
-    * routing admits without re-deriving the plan. */
+    * volume audits (audits/imi_audit_r14.json, imi_audit_r15.json;
+    * pruning specs) can count what the routing admits without
+    * re-deriving the plan. */
   private[graft] def ivfScored(vectors: DataFrame, queries: DataFrame,
                                nCells: Int = 0, nprobe: Int = 4,
                                trainIters: Int = 2,

@@ -228,4 +228,30 @@ class CodebookTopKSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted.toSeq
     assert(imi == bf, s"exhaustive-probe IMI diverged from brute force at d=65")
   }
+
+  test("centroidArray: a reordered driver-local table matches the aggregate form; other shapes fail naming columns") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types._
+    val emb = ArrayType(DoubleType)
+    val reordered = spark.createDataFrame(java.util.Arrays.asList(
+        Row(5.0, Seq(3.0, 4.0), 2), Row(1.0, Seq(1.0, 0.0), 0), Row(1.0, Seq(0.0, 1.0), 1)),
+      StructType(Seq(StructField("c_norm", DoubleType), StructField("c_emb", emb),
+        StructField("cell", IntegerType))))
+    assert(reordered.queryExecution.logical.isInstanceOf[LocalRelation])
+    def cents(df: DataFrame): Seq[org.apache.spark.sql.Row] =
+      Ann.centroidArray(df).collect().head.getSeq[Row](0)
+    val fast = cents(reordered)
+    // the same rows behind a non-local plan take the aggregate form
+    val agg = cents(reordered.repartition(2))
+    assert(fast == agg, s"fast $fast != agg $agg")
+    assert(fast.map(_.getInt(0)) == Seq(0, 1, 2))
+    assert(fast.head.schema.fieldNames.toSeq == Seq("cell", "c_emb", "c_norm"))
+    val longCell = spark.createDataFrame(java.util.Arrays.asList(Row(0L, Seq(1.0), 1.0)),
+      StructType(Seq(StructField("cell", LongType), StructField("c_emb", emb),
+        StructField("c_norm", DoubleType))))
+    val e = intercept[IllegalArgumentException](Ann.centroidArray(longCell))
+    assert(e.getMessage.contains("(cell:bigint, c_emb:array<double>, c_norm:double)"),
+      e.getMessage)
+  }
 }

@@ -123,4 +123,52 @@ class CoreToolsSpec extends SparkSpec {
     assert(fIdx >= 0 && pIdx >= 0 && fIdx < pIdx,
       s"Filter must sit above the pinned Project:\n$plan")
   }
+
+  test("SparkEntry.select: caller order, duplicates dropped; unknown or empty lists fail naming the offenders") {
+    val reg = Map("a" -> 1, "b" -> 2, "c" -> 3)
+    assert(SparkEntry.select(reg, Seq("c", "a", "c"), "T") == Seq("c" -> 3, "a" -> 1))
+    val many = intercept[IllegalArgumentException](
+      SparkEntry.select(reg, Seq("a", "zz", "yy"), "T"))
+    assert(many.getMessage.contains("T: unknown queries yy, zz"), many.getMessage)
+    val one = intercept[IllegalArgumentException](SparkEntry.select(reg, Seq("q"), "T"))
+    assert(one.getMessage.contains("T: unknown query q"), one.getMessage)
+    val empty = intercept[IllegalArgumentException](SparkEntry.select(reg, Nil, "T"))
+    assert(empty.getMessage.contains("T: no query names given"), empty.getMessage)
+    assert(SparkEntry.select(SparkEntry.benchQueries, Seq("scan_range"), "T")
+      .map(_._1) == Seq("scan_range"))
+  }
+
+  test("Tables.load memo: nested files restamp, superseded stamps evicted, missing table named") {
+    import java.nio.file.{Files, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    // a temp COPY of read-only testdata in a partitioned (k=v/) layout:
+    // the table dir's only direct child is a directory
+    val dir = Files.createTempDirectory("graft_load_memo").toFile
+    try {
+      val part = new java.io.File(dir, "t.parquet/k=1")
+      part.mkdirs()
+      val file = part.toPath.resolve("part-0.parquet")
+      Files.copy(java.nio.file.Paths.get(s"$sfDir/customer.parquet"), file)
+      val a = graft.core.Tables.load(spark, dir.getPath, "t")
+      assert(graft.core.Tables.load(spark, dir.getPath, "t") eq a, "memo hit expected")
+      assert(a.columns.contains("c_custkey"), a.columns.mkString(","))
+      // regenerate one level down: a fresh plan over the new file
+      Files.copy(java.nio.file.Paths.get(s"$sfDir/supplier.parquet"), file,
+        StandardCopyOption.REPLACE_EXISTING)
+      val b = graft.core.Tables.load(spark, dir.getPath, "t")
+      assert(!(b eq a) && b.columns.contains("s_suppkey"), b.columns.mkString(","))
+      val path = s"${dir.getPath}/t.parquet"
+      val stamps = graft.core.Tables.readMemo.keySet().asScala.filter(_.path == path)
+      assert(stamps.size == 1, s"superseded stamps kept: $stamps")
+      val missing = intercept[IllegalArgumentException](
+        graft.core.Tables.load(spark, dir.getPath, "absent"))
+      assert(missing.getMessage.contains("'absent'") &&
+        missing.getMessage.contains(s"${dir.getPath}/absent.parquet"), missing.getMessage)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
+  }
 }

@@ -2,7 +2,10 @@
 """Local mimic of the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf parquet tables and compare with the Verify.scala
 parquet dumps (columns sorted by name, rows sorted, exact + tolerant
-compare reported separately)."""
+compare reported separately). Also lists, by name, the dumped result
+directories with no oracle entry (the rows-only set), so drift between
+the query and oracle maps shows in the output; they do not affect the
+pass count or the exit code."""
 import sys, json, glob, os
 import duckdb, pandas as pd, numpy as np
 
@@ -72,5 +75,9 @@ for name, sql in sorted(oracle.items()):
 n_ok = sum(1 for v in results.values() if v.startswith("OK"))
 for k, v in results.items():
     print(f"{'PASS' if v.startswith('OK') else 'FAIL'} {k}: {v}")
+rows_only = sorted(d for d in os.listdir(out_dir)
+                   if os.path.isdir(f"{out_dir}/{d}") and d not in oracle)
+print(f"\nrows-only (dumped, no oracle entry): {len(rows_only)}: "
+      + (", ".join(rows_only) or "-"))
 print(f"\n{n_ok}/{len(results)} pass")
 sys.exit(0 if n_ok == len(results) else 1)
