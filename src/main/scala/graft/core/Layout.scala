@@ -21,7 +21,11 @@ object Layout {
       .sortWithinPartitions(keyCol)
       .write.mode("overwrite").parquet(path)
 
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** The parquet at `path`, resolved once per (session, path, stamp)
+    * through [[Tables.readMemo]]: plans, not results — a rewrite of
+    * the path is seen by the next read because its stamp changes. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    Tables.read(spark, path, "Layout.read: parquet")
 
   /** Bucket `df` unless this JVM already holds `table`. Bucketing is
     * ingest-time work done once; the recurring operation a bucketed
@@ -164,22 +168,8 @@ object Indexes {
 object Snapshots {
   def path(base: String, version: Int): String = s"$base/v=$version"
 
-  def write(df: DataFrame, keyCol: String, base: String, version: Int): Unit = {
+  def write(df: DataFrame, keyCol: String, base: String, version: Int): Unit =
     Layout.writeSorted(df, keyCol, path(base, version))
-    evictManifests(base, version)
-  }
-
-  /** The manifest memo trusts version immutability, but EVERY path
-    * that replaces a version dir breaks it — writeSorted's
-    * mode(overwrite) (the documented half-written-version recovery
-    * path, or a caller re-calling write), restore's roll-forward into
-    * an existing slot, and a re-export over a populated target
-    * (copyVersionDir deletes dst first). Each replacement site evicts
-    * all cached manifests of its (base, version), whatever session or
-    * keyCol cached them, AFTER the replacement commits — a stale
-    * manifest would read deleted part-file paths. */
-  private def evictManifests(base: String, version: Int): Unit =
-    manifests.keySet.removeIf(_.contains(s"|$base|$version|"))
 
   def read(spark: SparkSession, base: String, version: Int): DataFrame =
     Layout.read(spark, path(base, version))
@@ -256,66 +246,28 @@ object Snapshots {
     * through a scan of non-overlapping regions (they are absent from
     * the read, not filtered after it). The residual in-file predicate
     * still pushes to parquet for the boundary regions. */
-  // manifest rows memoized per (session, base, version, keyCol): a
-  // snapshot version is immutable, and recomputing the manifest —
-  // a full thin-column scan + shuffle — on EVERY direct-scan call
+  // manifest rows memoized per (session, version path, stamp, keyCol)
+  // — the read memo's key (Tables.stampKey): recomputing the manifest,
+  // a full thin-column scan + shuffle, on EVERY direct-scan call
   // charged the "pruned" read more IO than an unpruned one (the
-  // reference persists the manifest at snapshot-write time; this map
-  // is the session-local stand-in)
-  private val manifests =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, Long, Long)]]()
-  // memo bound: each entry is #regions tuples (tiny), but a process
-  // cycling through unbounded distinct snapshots would still grow the
-  // map forever — past the cap the whole memo resets (it's a cache;
-  // the next call of each live key rebuilds its one manifest)
-  private val manifestCap = 256
+  // reference persists the manifest at snapshot-write time). Any
+  // rewrite of the version — in process or not, filling an empty one
+  // included — writes fresh part-file names, so it changes the stamp
+  // and the next scan rebuilds. Past the cap the memo resets.
+  private val manifests = new java.util.concurrent.ConcurrentHashMap[
+    (Tables.LoadKey, String), Array[(String, Long, Long)]]()
 
   def scanDirect(spark: SparkSession, base: String, version: Int,
                  keyCol: String, lo: Long, hi: Long): DataFrame = {
     require(hi >= lo, s"bad range [$lo, $hi)")
-    val key = org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark) +
-      s"|$base|$version|$keyCol"
-    if (manifests.size > manifestCap) manifests.clear()
-    def build() = manifests.computeIfAbsent(key, _ =>
+    val key = (Tables.stampKey(spark, "Snapshots.scanDirect: snapshot",
+      path(base, version)), keyCol)
+    if (manifests.size >= Tables.memoCap) manifests.clear()
+    val picked = manifests.computeIfAbsent(key, _ =>
       regionManifest(spark, base, version, keyCol)
         .select("file", "start_key", "end_key").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
-    def pick(m: Array[(String, Long, Long)]) =
-      m.filter { case (_, s0, e0) => s0 < hi && e0 >= lo }.map(_._1)
-    var manifest = build()
-    // VALIDATE-ON-USE: eviction at the replacement sites covers every
-    // in-process deterministic path, but a scan RACING a replacement
-    // can still publish a stale manifest after the eviction ran (the
-    // CHM reservation is invisible to removeIf), and an out-of-process
-    // rewrite evicts nothing. Every replacement writes fresh random
-    // part-file names, so staleness always shows as a missing file —
-    // #regions driver-side existence probes (the same metadata cost
-    // as the reference's getSplits), then one rebuild heals it.
-    // The probe walks the WHOLE manifest, not just the picked subset:
-    // a stale manifest can pick ZERO files (the rewrite moved data
-    // into a key range the old regions never covered) and a
-    // picked-only probe returned a wrong EMPTY result forever (r12
-    // core review).
-    if (manifest.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(manifest.head._1)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!manifest.forall { case (f, _, _) =>
-          fs.exists(new org.apache.hadoop.fs.Path(f)) }) {
-        manifests.remove(key)
-        manifest = build()
-      }
-    } else {
-      // an EMPTY cached manifest has no file paths to probe, so the
-      // existence check above can never detect an out-of-process
-      // rewrite that filled the version (r13 review: a previously
-      // empty version returned a wrong empty result FOREVER). Don't
-      // trust the memo for empties — rebuild every call; the rebuild
-      // is a metadata-sized job on a genuinely empty version, and a
-      // filled version heals on its first read.
-      manifests.remove(key)
-      manifest = build()
-    }
-    val picked = pick(manifest)
+      .filter { case (_, s0, e0) => s0 < hi && e0 >= lo }.map(_._1)
     val pred = col(keyCol) >= lo && col(keyCol) < hi
     if (picked.isEmpty) read(spark, base, version).where(lit(false))
     else spark.read.parquet(picked.toIndexedSeq: _*).where(pred)
@@ -351,10 +303,8 @@ object Snapshots {
     * receiving side verifies integrity). Here: a byte-level copy of the
     * version directory; verification is the caller composing per-bucket
     * digests over source and export (see the export_snapshot query). */
-  def exportSnapshot(base: String, version: Int, targetBase: String): Unit = {
+  def exportSnapshot(base: String, version: Int, targetBase: String): Unit =
     copyVersionDir(path(base, version), path(targetBase, version))
-    evictManifests(targetBase, version)
-  }
 
   /** In-place restoreSnapshot (hbase-server/.../master/snapshot/
     * RestoreSnapshotHandler.java:63, executing RestoreSnapshotHelper
@@ -376,7 +326,6 @@ object Snapshots {
       s"restore writes a NEW current version (got v$newCurrentVersion " +
         s"over snapshot v$snapshotVersion)")
     copyVersionDir(path(base, snapshotVersion), path(base, newCurrentVersion))
-    evictManifests(base, newCurrentVersion)
   }
 
   /** The rollback audit — the dual of [[diff]]: given the snapshot

@@ -14,14 +14,9 @@ object Tables {
 
   /** Whether the parquet at `path` (a single file or a directory of
     * part files) encodes its `ts` column as TIMESTAMP(NANOS) — read
-    * from ONE footer with ParquetFileReader, driver-side, no Spark
-    * plan. The former probe (set nanosAsLong session-wide, plan a
-    * read, branch on the decoded type, restore) opened a window where
-    * the temporary `true` was visible to CONCURRENT unrelated parquet
-    * loads on other threads — any TIMESTAMP(NANOS) file planned inside
-    * it silently decoded ts as long (r13 advice; the r13 lock only
-    * serialized events loads against EACH OTHER). The footer probe
-    * never touches session conf, so the window is gone. */
+    * from footers with ParquetFileReader, driver-side, no Spark plan
+    * and no session-conf round-trip (a temporary session-wide
+    * nanosAsLong flag was visible to concurrent unrelated loads). */
   private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
     import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
@@ -44,12 +39,9 @@ object Tables {
       } finally reader.close()
     }
     if (fs.getFileStatus(p).isDirectory) {
-      // FILES only (r14 advice): a partitioned/nested layout would
-      // hand ParquetFileReader a subdirectory and fail obscurely —
-      // name the layout problem instead. Directories are skipped,
-      // not descended: this loader serves the flat single-generation
-      // dirs the generators write; a partitioned events table would
-      // need a per-partition probe to be trustworthy.
+      // FILES only: a partitioned/nested layout would hand
+      // ParquetFileReader a subdirectory and fail obscurely — name the
+      // layout problem instead
       val entries = fs.listStatus(p).filter(_.isFile).map(_.getPath)
         .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
         .sortBy(_.getName)
@@ -57,124 +49,117 @@ object Tables {
         s"tsIsNanos: no data FILES directly under $path — " +
           "nested/partitioned parquet layouts need a flat events dir " +
           "(one generation of part files)")
-      // mixed-generation guard (r14 verdict low finding): letting the
-      // lexicographically-first footer speak for the whole dir would
-      // mis-decode or fail mid-scan when NANOS and MICROS part files
-      // co-reside (a partial regeneration). Probing first AND last
-      // catches generations that sort as contiguous blocks for two
-      // footer reads, not |files|. NOT COVERED (r15 advice): two
-      // write jobs' part files can INTERLEAVE lexicographically (the
-      // part-NNNNN- numeric prefixes restart per job and the UUID
-      // tails shuffle the order), putting the same generation at both
-      // probed endpoints — a dir mixed that way still passes here and
-      // fails at scan time instead; probing one footer per distinct
-      // job-UUID suffix would close it at |jobs| footer reads.
-      val headNanos = footerIsNanos(entries.head)
-      if (entries.length > 1 && footerIsNanos(entries.last) != headNanos)
+      // mixed-generation guard: one footer per write job. Spark names
+      // part files part-NNNNN-<job uuid>-cNNN, and two jobs' files
+      // interleave lexicographically, so no fixed pair of endpoints
+      // speaks for the dir. A file with no job uuid is its own group.
+      // Runs on a memo miss only: |jobs| footer reads per stamp.
+      val jobUuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+      val probes = entries.groupBy(f => jobUuid.findFirstIn(f.getName).getOrElse(f.getName))
+        .values.map(_.head).toSeq.sortBy(_.getName)
+        .map(f => f -> footerIsNanos(f))
+      probes.find(_._2 != probes.head._2).foreach { case (f, _) =>
         throw new IllegalStateException(
           s"tsIsNanos: mixed ts encodings under $path — " +
-            s"${entries.head.getName} and ${entries.last.getName} disagree " +
+            s"${probes.head._1.getName} and ${f.getName} disagree " +
             "on TIMESTAMP(NANOS); regenerate the dir as one generation")
-      headNanos
+      }
+      probes.head._2
     } else footerIsNanos(p)
   }
 
-  /** Session-scoped LOADER memo (r16 "not yet optimized" item): every
-    * `load` call used to pay a fresh `spark.read.parquet` — a driver-
-    * side footer/schema read plus file listing — and for `events`
-    * additionally the [[tsIsNanos]] footer probe, per CALL. The suite
-    * makes hundreds of load calls per bench pass over the same
-    * immutable testdata files, so the repeated driver work is pure
-    * fixed cost (measured ~3-4 ms/call; ~1.5 s of a full pass).
-    *
-    * This memoizes the PLAN (the resolved DataFrame), never results:
-    * every action against the returned DataFrame still scans parquet,
-    * so bench/oracle runs keep computing from the inputs. Eviction
-    * discipline (the r12 rule): the key carries the path's generation
-    * stamp ([[pathStamp]]), so a regenerated corpus gets a fresh read
-    * plan and the superseded stamps of that session and path are
-    * evicted — and dead sessions are swept so a service hosting many
-    * short-lived sessions doesn't retain them (the
-    * PipelineQueries.sweepDead pattern). Loader
-    * callers only ever read the driver-generated testdata tables,
-    * which are replaced wholesale between generations (never appended
-    * in place), so mtime+len is a sound generation stamp. */
+  /** Session-scoped PLAN memo — the one reader of every parquet path
+    * graft treats as immutable: the generated tables ([[load]]) and
+    * snapshot versions, index and ledger dirs ([[Layout.read]]). A
+    * fresh `spark.read.parquet` relists the path and runs schema
+    * inference (a one-task Spark job reading a footer) per call; HBase
+    * opens a store file's reader once per region open, and this is the
+    * same once-per-version resolution. Invariants:
+    *  - plans, not results: the memo holds the resolved DataFrame, and
+    *    every action against it still scans parquet;
+    *  - stamp-keyed: the key is (session, path, [[pathStamp]]), and
+    *    every rewrite of a path (Snapshots.write over a version,
+    *    restore, exportSnapshot, an out-of-process writer) changes the
+    *    stamp, so the next read resolves afresh; a new stamp evicts the
+    *    path's older stamps in that session;
+    *  - bounded: each commit is a new version path that same-path
+    *    eviction never reaches, so past [[memoCap]] entries the memo
+    *    resets, and dead sessions are swept. */
   private[graft] final case class LoadKey(session: String, path: String,
                                          stamp: String)
   private[graft] val readMemo =
     new java.util.concurrent.ConcurrentHashMap[LoadKey, DataFrame]()
+  private[graft] val memoCap = 256
 
-  /** Generation stamp of a table path: (count, newest mtime, total
-    * length) over its data files — the direct children of a directory
-    * and the files one level down (a partitioned `k=v/` layout), or
-    * the file itself. A missing table fails naming the table and path
-    * (a raw Hadoop FileNotFoundException names neither the table nor
-    * the loader). */
-  private def pathStamp(spark: SparkSession, name: String, path: String): String = {
-    import org.apache.hadoop.fs.Path
+  /** Generation stamp of a path: (count, newest mtime, total length,
+    * hash of the sorted names) over every file below it, or of the
+    * file itself. Spark writes fresh random part-file names per job,
+    * so the names catch a same-size rewrite inside one mtime tick. A
+    * missing path fails naming `what` and the path (a raw Hadoop
+    * FileNotFoundException names neither). */
+  private def pathStamp(spark: SparkSession, what: String, path: String): String = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = try fs.getFileStatus(p) catch {
+    val root = try fs.getFileStatus(p) catch {
       case e: java.io.FileNotFoundException => throw new IllegalArgumentException(
-        s"Tables.load: table '$name' not found at $path", e)
+        s"$what not found at $path", e)
     }
-    if (st.isDirectory) {
-      val (dirs, direct) = fs.listStatus(p).partition(_.isDirectory)
-      val files = direct ++ dirs.flatMap(d => fs.listStatus(d.getPath).filter(_.isFile))
-      s"dir:${files.length}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
-        files.map(_.getLen).sum
-    } else s"file:${st.getModificationTime}:${st.getLen}"
+    // listStatus, not listFiles: a LocatedFileStatus copies owner and
+    // permissions, which the local FS reads by forking a shell per file
+    def below(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(below) else Seq(st)
+    val files = below(root)
+    s"${files.length}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
+      s"${files.map(_.getLen).sum}:" +
+      scala.util.hashing.MurmurHash3.seqHash(files.map(_.getPath.toString).sorted)
   }
 
-  private def sweepDeadLoads(): Unit =
-    readMemo.entrySet().removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
+  private[graft] def stampKey(spark: SparkSession, what: String, path: String): LoadKey =
+    LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark),
+      path, pathStamp(spark, what, path))
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    sweepDeadLoads()
-    val path = s"$sfDir/$name.parquet"
-    val key = LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark),
-      path, pathStamp(spark, name, path))
+  /** The memoized plan of the parquet at `path` (see [[readMemo]]);
+    * `events` applies the events table's ts normalization. */
+  private[graft] def read(spark: SparkSession, path: String, what: String,
+                          events: Boolean = false): DataFrame = {
+    readMemo.entrySet().removeIf(_.getValue.sparkSession.sparkContext.isStopped)
+    val key = stampKey(spark, what, path)
     val hit = readMemo.get(key)
     if (hit != null) hit else {
-      // a new stamp supersedes this session's earlier ones for the path
       readMemo.keySet().removeIf(k =>
         k.session == key.session && k.path == path && k.stamp != key.stamp)
-      readMemo.computeIfAbsent(key, _ => loadFresh(spark, sfDir, name))
+      if (readMemo.size >= memoCap) readMemo.clear()
+      readMemo.computeIfAbsent(key, _ => loadFresh(spark, path, events))
     }
   }
 
-  private def loadFresh(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") {
-      // events.parquet has shipped with two ts encodings across data
-      // generations: TIMESTAMP(NANOS) (which Spark's vectorized reader
-      // rejects — read nanos as long, integer-div to µs; exact, the
-      // generator emits µs precision and the DuckDB oracle also
-      // truncates ns→µs) and plain TIMESTAMP(MICROS) (usable as-is).
-      // Branch on the FOOTER type (one driver-side footer read — never
-      // a session-conf round-trip, see [[tsIsNanos]]) so both
-      // generations load. Either way normalize to TimestampType (LTZ):
-      // watermarks reject TIMESTAMP_NTZ, and the UTC session timezone
-      // (set in every entrypoint builder) makes the NTZ→LTZ cast
-      // wall-clock exact.
-      val path = s"$sfDir/$name.parquet"
-      if (tsIsNanos(spark, path)) {
-        // NANOS generation: the flag must be set AND stay set — the
-        // scan consults it again at execution. The session-wide side
-        // effect is confined to this data generation and documented:
-        // other NANOS parquet in the session reads as long too.
-        // Setting a constant "true" is idempotent, so concurrent
-        // events loads no longer race (no restore exists to misfire).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(path)
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      } else {
-        val df = spark.read.parquet(path)
-        if (df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
-          df.withColumn("ts", col("ts").cast("timestamp"))
-        else df
-      }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    read(spark, s"$sfDir/$name.parquet", s"Tables.load: table '$name'",
+      events = name == "events")
+
+  /** events.parquet has shipped with two ts encodings across data
+    * generations: TIMESTAMP(NANOS) (which Spark's vectorized reader
+    * rejects — read nanos as long, integer-div to µs; exact, the
+    * generator emits µs precision and the DuckDB oracle also truncates
+    * ns→µs) and plain TIMESTAMP(MICROS) (usable as-is). Branch on the
+    * FOOTER type ([[tsIsNanos]]) so both generations load, and either
+    * way normalize to TimestampType (LTZ): watermarks reject
+    * TIMESTAMP_NTZ, and the UTC session timezone makes the NTZ→LTZ
+    * cast wall-clock exact. */
+  private def loadFresh(spark: SparkSession, path: String, events: Boolean): DataFrame = {
+    val nanos = events && tsIsNanos(spark, path)
+    // NANOS generation: the flag must be set AND stay set — the scan
+    // consults it again at execution. Other NANOS parquet in the
+    // session reads as long too; a constant "true" never races.
+    if (nanos) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = spark.read.parquet(path)
+    if (nanos) df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else if (events &&
+      df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+      df.withColumn("ts", col("ts").cast("timestamp"))
+    else df
+  }
 
   /** Unpivot a wide relational table into HBase-style cells
     * `(rowkey, family, qualifier, value)`. Values are cast to string

@@ -171,4 +171,65 @@ class CoreToolsSpec extends SparkSpec {
       rm(dir)
     }
   }
+
+  test("Tables.load(events): interleaved mixed-generation part files fail naming the odd file") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft_mixed_events").toFile
+    val events = new java.io.File(dir, "events.parquet")
+    events.mkdirs()
+    def write(name: String, unit: String): Unit = {
+      val schema = MessageTypeParser.parseMessageType(
+        s"message events { required int64 ts (TIMESTAMP($unit,true)); }")
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+          new Path(new java.io.File(events, name).getPath), spark.sparkContext.hadoopConfiguration))
+        .withType(schema).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1000L))
+      finally w.close()
+    }
+    try {
+      // two write jobs whose part numbers interleave: job A holds both
+      // the first and the last file name, job B only the middle one
+      val (a, b) = ("0a0a0a0a-0000-4000-8000-00000000000a",
+        "0b0b0b0b-0000-4000-8000-00000000000b")
+      write(s"part-00000-$a-c000.snappy.parquet", "NANOS")
+      write(s"part-00001-$b-c000.snappy.parquet", "MICROS")
+      write(s"part-00002-$a-c000.snappy.parquet", "NANOS")
+      val e = intercept[IllegalStateException](
+        graft.core.Tables.load(spark, dir.getPath, "events"))
+      assert(e.getMessage.contains("mixed ts encodings") &&
+        e.getMessage.contains(s"part-00001-$b"), e.getMessage)
+      assert(spark.conf.get(nanosFlag, "false") != "true",
+        s"refused load leaked $nanosFlag=true")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
+  }
+
+  test("no parquet read bypasses the read memo outside its three allowed sites") {
+    import java.io.File
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    def scala(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    // the memo's own loader (Tables.loadFresh), scanDirect's picked-
+    // file read and ScaleSpike's corpus synthesis
+    val allowed = Map("graft/core/Tables.scala" -> 1, "graft/core/Layout.scala" -> 1,
+      "graft/ScaleSpike.scala" -> 1)
+    val call = java.util.regex.Pattern.quote("spark.read.parquet(")
+    val bypass = scala(root).map { f =>
+      root.toPath.relativize(f.toPath).toString ->
+        (java.nio.file.Files.readString(f.toPath).split(call, -1).length - 1)
+    }.filter { case (f, n) => n > allowed.getOrElse(f, 0) }
+    assert(bypass.isEmpty, "spark.read.parquet( outside the read memo — read through " +
+      "Layout.read / Tables.load instead: " +
+      bypass.map { case (f, n) => s"$f ($n)" }.mkString(", "))
+  }
 }

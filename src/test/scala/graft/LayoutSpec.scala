@@ -232,4 +232,112 @@ class LayoutSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](Snapshots.restore(dir, 3, 2))
     assert(e.getMessage.contains("NEW current version"))
   }
+
+  // the snapshot read memo: Snapshots.read / Layout.read resolve a
+  // (session, path, stamp) plan once; a rewrite changes the stamp
+  private def kv(keys: Seq[Long], mul: Long) = {
+    import spark.implicits._
+    keys.map(k => (k, k * mul)).toDF("k", "v")
+  }
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("snapshot read memo: a second read of one version is the same plan and starts no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_readmemo").toString
+    Snapshots.write(kv(1L to 50L, 2), "k", dir, 1)
+    val group = "graft-read-memo-spec"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    def jobsIn(body: => Unit): Int = {
+      jobs.set(0)
+      sc.setJobGroup(group, "read memo spec")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      // control: an unmemoized read runs its schema-inference job, so
+      // the listener does see read-time jobs
+      assert(jobsIn(spark.read.parquet(Snapshots.path(dir, 1))) > 0)
+      val first = Snapshots.read(spark, dir, 1)
+      var second: org.apache.spark.sql.DataFrame = null
+      val n = jobsIn { second = Snapshots.read(spark, dir, 1) }
+      assert(second eq first, "second read of an unchanged version re-resolved")
+      assert(n == 0, s"memoized snapshot read started $n jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("snapshot read memo: Snapshots.write over the same version is seen by the next read") {
+    val dir = Files.createTempDirectory("graft_readmemo_write").toString
+    Snapshots.write(kv(1L to 50L, 2), "k", dir, 1)
+    assert(Snapshots.read(spark, dir, 1).count() == 50L)
+    Snapshots.write(kv(100L to 119L, 3), "k", dir, 1)
+    assert(rows(Snapshots.read(spark, dir, 1)) == (100L to 119L).map(k => (k, k * 3)))
+  }
+
+  test("snapshot read memo: Snapshots.restore into a slot is seen by the next read") {
+    val dir = Files.createTempDirectory("graft_readmemo_restore").toString
+    Snapshots.write(kv(1L to 10L, 2), "k", dir, 1)
+    Snapshots.write(kv(20L to 40L, 5), "k", dir, 2)
+    assert(Snapshots.read(spark, dir, 2).count() == 21L)
+    Snapshots.restore(dir, 1, 2)
+    assert(rows(Snapshots.read(spark, dir, 2)) == (1L to 10L).map(k => (k, k * 2)))
+  }
+
+  test("snapshot read memo: a bare Layout.writeSorted behind the memo is seen by the next read") {
+    val dir = Files.createTempDirectory("graft_readmemo_behind").toString
+    Snapshots.write(kv(1L to 30L, 2), "k", dir, 1)
+    assert(Snapshots.read(spark, dir, 1).count() == 30L)
+    // no Snapshots entry point runs: the in-JVM stand-in for another
+    // process replacing the version dir
+    Layout.writeSorted(kv(200L to 204L, 7), "k", Snapshots.path(dir, 1))
+    assert(rows(Snapshots.read(spark, dir, 1)) == (200L to 204L).map(k => (k, k * 7)))
+  }
+
+  test("snapshot read memo: older versions read the same rows after newer commits") {
+    val dir = Files.createTempDirectory("graft_readmemo_old").toString
+    Snapshots.write(kv(1L to 40L, 2), "k", dir, 1)
+    val v1 = rows(Snapshots.read(spark, dir, 1))
+    Snapshots.write(kv(1L to 40L, 3), "k", dir, 2)
+    Snapshots.write(kv(41L to 60L, 4), "k", dir, 3)
+    assert(rows(Snapshots.read(spark, dir, 1)) == v1)
+    assert(rows(Snapshots.read(spark, dir, 2)) == (1L to 40L).map(k => (k, k * 3)))
+  }
+
+  test("read memo stamp: a same-size rewrite inside one mtime tick restamps by file name") {
+    import java.nio.file.{Paths, attribute}
+    val dir = Files.createTempDirectory("graft_stamp_names")
+    val a = dir.resolve("part-a.parquet")
+    Files.copy(Paths.get(s"$sfDir/region.parquet"), a)
+    val before = Layout.read(spark, dir.toString)
+    assert(before.count() == 5L)
+    // same count, same length, same mtime: only the name tells the
+    // rewrite apart — a stale plan would list the deleted part-a
+    val mtime = Files.getLastModifiedTime(a)
+    val b = Files.move(a, dir.resolve("part-b.parquet"))
+    Files.setLastModifiedTime(b, attribute.FileTime.fromMillis(mtime.toMillis))
+    val after = Layout.read(spark, dir.toString)
+    assert(!(after eq before), "rename behind the memo kept the old plan")
+    assert(after.count() == 5L)
+  }
+
+  test("read memo is capped at Tables.memoCap entries") {
+    val dir = Files.createTempDirectory("graft_memo_cap")
+    val src = java.nio.file.Paths.get(s"$sfDir/region.parquet")
+    val paths = (0 to Tables.memoCap).map { i =>
+      Files.copy(src, dir.resolve(s"r$i.parquet")).toString
+    }
+    paths.foreach(Layout.read(spark, _))
+    assert(Tables.readMemo.size <= Tables.memoCap,
+      s"memo holds ${Tables.readMemo.size} plans past the cap ${Tables.memoCap}")
+    val last = Layout.read(spark, paths.last)
+    assert(Layout.read(spark, paths.last) eq last)
+  }
 }
