@@ -81,6 +81,13 @@ object Bench {
     qs.foreach { case (_, fn) =>
       try materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
+    // the shared memos the warmup built are exactly the ones the
+    // selected queries consume: memo_setup rebuilds those and no others,
+    // so a filtered run of memo-free queries (kv-only, or pipeline arms
+    // like dedup_exact) pays no shingle builds nobody reads
+    val memoSetup = graft.pipeline.PipelineQueries.builtShared(spark, sfDir)
+    if (memoSetup.nonEmpty)
+      System.err.println(s"[bench] memo_setup builds: ${memoSetup.mkString(", ")}")
 
     def gcMillis: Long = {
       import scala.jdk.CollectionConverters._
@@ -149,12 +156,6 @@ object Bench {
       }
       System.err.println(s"[bench] gc drain: $rounds rounds, $prev blocks live")
     }
-    // prewarm only when some selected query actually CONSUMES a shared
-    // memo — a filtered run of memo-free queries (kv-only, or pipeline
-    // arms like dedup_exact that touch no memo) must not pay ~seconds
-    // of shingle builds nobody reads
-    val anyMemoConsumer = qs.exists { case (n, _) =>
-      graft.pipeline.PipelineQueries.sharedMemoConsumers.contains(n) }
     def timedPass(): Seq[QRec] = {
       graft.pipeline.PipelineQueries.resetShared()
       drainGarbage()
@@ -175,7 +176,7 @@ object Bench {
         QRec(name, wall, gc, (tk1 - tk0) / 1e3,
           (sr1 - sr0) / 1e6, (sw1 - sw0) / 1e6)
       }
-      val setup = if (!anyMemoConsumer) Nil else {
+      val setup = if (memoSetup.isEmpty) Nil else {
         // a failed prewarm is survivable (consumers rebuild their own
         // memos) but must be VISIBLE in the record: otherwise the
         // near-zero memo_setup line plus consumer-absorbed build costs
@@ -184,8 +185,7 @@ object Bench {
         // run still exits 0 — no query failed).
         var name = "memo_setup"
         val rec = timed("memo_setup") {
-          try graft.pipeline.PipelineQueries.prewarmShared(spark, sfDir,
-            selected = Some(qs.map(_._1).toSet))
+          try graft.pipeline.PipelineQueries.prewarmShared(spark, sfDir, memoSetup)
           catch { case e: Throwable => // consumers rebuild + report it
             System.err.println(s"[bench] memo_setup FAILED: ${e.getMessage}")
             name = "memo_setup_FAILED"

@@ -88,12 +88,14 @@ object Probe extends AdaptiveSparkPlanHelper {
       .waitUntilEmpty(spark.sparkContext)
     opts.plans.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
     qs.foreach { case (name, fn) =>
-      try Bench.materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
-      graft.pipeline.PipelineQueries.resetShared()
       // match the suite's shape: memo consumers run against prewarmed
-      // shared tables (the bench charges those to memo_setup)
-      graft.pipeline.PipelineQueries.prewarmShared(spark, sfDir,
-        selected = Some(Set(name)))
+      // shared tables (the bench charges those to memo_setup) — the
+      // ones this query's warmup built, starting from none
+      graft.pipeline.PipelineQueries.resetShared()
+      try Bench.materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
+      val shared = graft.pipeline.PipelineQueries.builtShared(spark, sfDir)
+      graft.pipeline.PipelineQueries.resetShared()
+      graft.pipeline.PipelineQueries.prewarmShared(spark, sfDir, shared)
       System.gc(); Thread.sleep(300)
       drainBus()
       val df = (1 to opts.repeat).map { rep =>

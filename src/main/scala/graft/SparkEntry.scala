@@ -21,38 +21,52 @@ object SparkEntry {
   // ------------------------------------------------------------------
   // §2A scans & point reads
   // ------------------------------------------------------------------
-  private val scanQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scan_range" -> ((s, d) =>
+  private val scanQueries: Seq[Query] = Seq(
+    Query("scan_range", (s, d) =>
       Scans.range(T(s, d, "orders"), "o_orderkey", 1000L, 2000L,
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"))
-        .orderBy("o_orderkey")),
-    "scan_reversed" -> ((s, d) =>
+        .orderBy("o_orderkey"),
+      Oracle("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
+        |WHERE o_orderkey >= 1000 AND o_orderkey < 2000 ORDER BY o_orderkey""".stripMargin)),
+    Query("scan_reversed", (s, d) =>
       Scans.reversed(T(s, d, "orders"), "o_orderkey", 100,
-        Seq("o_orderkey", "o_custkey", "o_totalprice"))),
-    "scan_limit" -> ((s, d) =>
+        Seq("o_orderkey", "o_custkey", "o_totalprice")),
+      Oracle("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_orderkey DESC LIMIT 100""".stripMargin)),
+    Query("scan_limit", (s, d) =>
       Filters.pageFilter(T(s, d, "lineitem"), Seq("l_orderkey", "l_linenumber"), 500)
-        .select("l_orderkey", "l_linenumber", "l_quantity")),
-    "get_point" -> ((s, d) =>
+        .select("l_orderkey", "l_linenumber", "l_quantity"),
+      Oracle("""SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber LIMIT 500""".stripMargin)),
+    Query("get_point", (s, d) =>
       Scans.get(T(s, d, "orders"), "o_orderkey", 42L,
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"))),
-    "multi_get" -> ((s, d) =>
+        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")),
+      Oracle("SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey = 42")),
+    Query("multi_get", (s, d) =>
       Scans.multiGet(T(s, d, "orders"), "o_orderkey",
         Seq(1L, 2L, 3L, 5L, 8L, 13L, 21L, 34L, 55L, 89L),
         Seq("o_orderkey", "o_custkey", "o_orderstatus"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      Oracle("""SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
+        |WHERE o_orderkey IN (1,2,3,5,8,13,21,34,55,89) ORDER BY o_orderkey""".stripMargin)),
     // the large-batch Get path: 2000 keys is past any sane IN-list, so
     // the key set rides a broadcast hash semi-join — one scan pass over
     // the table, no shuffle of the big side (plan-asserted in spec)
-    "multi_get_bulk" -> ((s, d) => {
+    Query("multi_get_bulk", (s, d) => {
       import s.implicits._
       val keys = (0 until 2000).map(i => 3L * i + 1).toDF("o_orderkey")
       Scans.multiGetBulk(T(s, d, "orders"), "o_orderkey", keys,
         Seq("o_orderkey", "o_custkey", "o_orderstatus")).orderBy("o_orderkey")
-    }),
+    },
+      // the Spark side semi-joins the literal key set {3i+1 : i<2000};
+      // arithmetic form of the same set
+      Oracle("""SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
+        |WHERE o_orderkey % 3 = 1 AND o_orderkey BETWEEN 1 AND 5998
+        |ORDER BY o_orderkey""".stripMargin)),
     // Table.existsAll: presence probe per key, misses reported FALSE —
     // the table side reads ONLY the key column (no value bytes move,
     // the API's whole point; plan-asserted in spec)
-    "multi_exists" -> ((s, d) => {
+    Query("multi_exists", (s, d) => {
       import s.implicits._
       // 36 in-range probes + 4 past any scale factor's keyspace, so
       // hit AND miss rows both occur at every SF
@@ -60,71 +74,124 @@ object SparkEntry {
         (1 to 4).map(i => 1000000000000000L + i)).toDF("o_orderkey")
       Scans.multiExists(T(s, d, "orders"), "o_orderkey", keys)
         .orderBy("o_orderkey")
-    }),
+    },
+      Oracle("""SELECT p.o_orderkey,
+        |       EXISTS(SELECT 1 FROM orders o
+        |              WHERE o.o_orderkey = p.o_orderkey) AS key_exists
+        |FROM (SELECT DISTINCT 7 * i + 1 AS o_orderkey FROM range(0, 36) t(i)
+        |      UNION ALL
+        |      SELECT 1000000000000000 + i FROM range(1, 5) t(i)) p
+        |ORDER BY p.o_orderkey""".stripMargin)),
     // the bloom-pruned variant: key set past broadcast size → SMJ, with
     // a BloomFilterAggregate scalar subquery pruning the table scan
     // before the exchange (the HFile-bloom-filter read path; plan spec
     // asserts might_contain sits below the join)
-    "multi_get_bloom" -> ((s, d) => {
+    Query("multi_get_bloom", (s, d) => {
       import s.implicits._
       val keys = (0 until 3000).map(i => 7L * i + 2).toDF("o_orderkey")
       Scans.multiGetBloomSmj(T(s, d, "orders"), "o_orderkey", keys,
         Seq("o_orderkey", "o_custkey", "o_orderstatus")).orderBy("o_orderkey")
-    }),
+    },
+      Oracle("""SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
+        |WHERE o_orderkey % 7 = 2 AND o_orderkey BETWEEN 2 AND 20995
+        |ORDER BY o_orderkey""".stripMargin)),
     // Scan.setSmall: the one-RPC bounded scan — 25 rows from key 5000
     // up, planned as TakeOrderedAndProject over a pushed range (the
     // spec asserts the plan shape; no global sort, no scanner state)
-    "scan_small" -> ((s, d) =>
+    Query("scan_small", (s, d) =>
       Scans.small(T(s, d, "orders"), "o_orderkey", 5000L, 25,
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"))),
+        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")),
+      Oracle("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
+        |WHERE o_orderkey >= 5000 ORDER BY o_orderkey LIMIT 25""".stripMargin)),
     // Scan.setLoadColumnFamiliesOnDemand (HBASE-5416): the metadata
     // family (lang, n_chars) is ESSENTIAL to the filter; the fat text
     // family loads lazily — phase 1's scan never reads `text`
     // (ReadSchema plan-asserted in spec), phase 2 fetches full rows
     // for the passing keys only
-    "scan_lazy_cf" -> ((s, d) =>
+    Query("scan_lazy_cf", (s, d) =>
       Scans.lazyCf(T(s, d, "documents"), "doc_id",
           Seq("lang", "n_chars"),
           col("lang") === "en" && col("n_chars") > 400)
-        .orderBy("doc_id")),
-    "scan_time_range" -> ((s, d) =>
+        .orderBy("doc_id"),
+      // the lazy-CF two-phase result ≡ the single-pass filter
+      Oracle("""SELECT doc_id, text, lang, source, n_chars FROM documents
+        |WHERE lang = 'en' AND n_chars > 400 ORDER BY doc_id""".stripMargin)),
+    Query("scan_time_range", (s, d) =>
       Scans.timeRange(Tables.eventCells(s, d), "2024-01-10 00:00:00", "2024-01-20 00:00:00")
         .select("rowkey", "qualifier", "ts", "value", "event_id")
-        .orderBy("event_id")),
-    "scan_max_versions" -> ((s, d) =>
+        .orderBy("event_id"),
+      Oracle("""SELECT user_id AS rowkey, event_type AS qualifier, ts, value, event_id FROM events
+        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
+        |ORDER BY event_id""".stripMargin)),
+    Query("scan_max_versions", (s, d) =>
       Scans.maxVersions(Tables.eventCells(s, d), 2)
         .select("rowkey", "qualifier", "ts", "value", "event_id")
-        .orderBy("rowkey", "qualifier", "event_id")),
+        .orderBy("rowkey", "qualifier", "event_id"),
+      Oracle("""SELECT rowkey, qualifier, ts, value, event_id FROM (
+        |  SELECT user_id AS rowkey, event_type AS qualifier, ts, value, event_id,
+        |         row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events) WHERE rn <= 2 ORDER BY rowkey, qualifier, event_id""".stripMargin)),
     // TIMELINE-consistency read (Consistency.java): every 5th rowkey's
     // primary is down, so it reads the 10-day-lagged replica state and
     // flags stale=true; healthy keys read the primary's latest version
-    "timeline_read" -> ((s, d) =>
+    Query("timeline_read", (s, d) =>
       Scans.timelineRead(Tables.eventCells(s, d),
           pmod(col("rowkey"), lit(5)) === 0, "10 DAYS")
         .select("rowkey", "qualifier", "ts", "value", "event_id", "stale")
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      Oracle("WITH " + Tables.eventCellsSql + """,
+        |hz AS (SELECT max(ts) - INTERVAL 10 DAY AS h FROM vcells),
+        |vis AS (SELECT v.*, rowkey % 5 = 0 AS stale FROM vcells v, hz
+        |        WHERE NOT (rowkey % 5 = 0) OR ts <= h),
+        |r AS (SELECT rowkey, qualifier, ts, value, event_id, stale,
+        |        row_number() OVER (PARTITION BY rowkey, family, qualifier
+        |                           ORDER BY ts DESC, event_id DESC) AS rn
+        |      FROM vis)
+        |SELECT rowkey, qualifier, ts, value, event_id, stale FROM r
+        |WHERE rn = 1 ORDER BY event_id""".stripMargin)),
     // Scan.setBatch partial-row chunking: every cell tagged with its
     // (batch_idx, pos_in_batch) scanner coordinates at batch=2
-    "scan_batch" -> ((s, d) =>
+    Query("scan_batch", (s, d) =>
       Scans.batchCells(Tables.customerCells(s, d), 2)
-        .orderBy("rowkey", "batch_idx", "pos_in_batch")),
+        .orderBy("rowkey", "batch_idx", "pos_in_batch"),
+      Oracle("WITH " + graft.core.Tables.customerCellsSql + """,
+        |r AS (SELECT rowkey, family, qualifier, value,
+        |        row_number() OVER (PARTITION BY rowkey ORDER BY family, qualifier) - 1 AS k
+        |      FROM cells)
+        |SELECT rowkey, family, qualifier, value,
+        |       CAST(k // 2 AS BIGINT) AS batch_idx, CAST(k % 2 AS BIGINT) AS pos_in_batch
+        |FROM r ORDER BY rowkey, batch_idx, pos_in_batch""".stripMargin)),
     // Scan.setRowOffsetPerColumnFamily(1) + setMaxResultsPerColumnFamily(2):
     // per (row, family) skip the FIRST cell in scan order (qualifier
     // asc, newest version first within a qualifier), return the next
     // two — CELL-counted per store, the API next to
     // ColumnPaginationFilter's per-row COLUMN count
-    "scan_store_limit" -> ((s, d) =>
+    Query("scan_store_limit", (s, d) =>
       Scans.storeLimit(Tables.eventCellsTwoFamilies(s, d), limit = 2, offset = 1,
           Seq(col("qualifier"), col("ts").desc, col("event_id").desc))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      Oracle("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
+        |r AS (SELECT rowkey, family, qualifier, ts, value, event_id,
+        |             row_number() OVER (PARTITION BY rowkey, family
+        |               ORDER BY qualifier, ts DESC, event_id DESC) AS rn
+        |      FROM vcells2)
+        |SELECT rowkey, family, qualifier, ts, value, event_id
+        |FROM r WHERE rn > 1 AND rn <= 3 ORDER BY event_id""".stripMargin)),
     // per-family version time ranges: family `web` keeps mid-January,
     // family `act` keeps early January — one disjunctive pushed predicate
-    "scan_family_time_range" -> ((s, d) =>
+    Query("scan_family_time_range", (s, d) =>
       Scans.familyTimeRange(Tables.eventCellsTwoFamilies(s, d), Map(
           "web" -> ("2024-01-10 00:00:00", "2024-01-20 00:00:00"),
           "act" -> ("2024-01-02 00:00:00", "2024-01-12 00:00:00")))
         .select("rowkey", "family", "qualifier", "ts", "value", "event_id")
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      Oracle("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """
+        |SELECT rowkey, family, qualifier, ts, value, event_id FROM vcells2
+        |WHERE (family = 'web' AND ts >= TIMESTAMP '2024-01-10 00:00:00'
+        |                      AND ts <  TIMESTAMP '2024-01-20 00:00:00')
+        |   OR (family = 'act' AND ts >= TIMESTAMP '2024-01-02 00:00:00'
+        |                      AND ts <  TIMESTAMP '2024-01-12 00:00:00')
+        |ORDER BY event_id""".stripMargin)),
     // HBase has no native secondary indexes; applications maintain an
     // index TABLE (indexed value → rowkeys) at INGEST time and query
     // through it. The index is written rowkey-sorted on the INDEXED
@@ -134,7 +201,7 @@ object SparkEntry {
     // column. The build is ensure-once (Indexes registry): the
     // registered query itself is lookup-only, as index maintenance is
     // an ingest-time concern, not a per-read one.
-    "secondary_index" -> ((s, d) => {
+    Query("secondary_index", (s, d) => {
       val orders = T(s, d, "orders")
       val idxDir = graft.core.Indexes.ensure(s, d, "orders_custkey") { target =>
         graft.core.Layout.writeSorted(
@@ -145,24 +212,34 @@ object SparkEntry {
       orders.join(broadcast(hits.select("o_orderkey")), Seq("o_orderkey"))
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
-    }),
+    },
+      // querying through the index must equal filtering the base directly
+      Oracle("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_custkey BETWEEN 100 AND 120 ORDER BY o_orderkey""".stripMargin)),
     // REST/Thrift scanner paging: three successive pageSize-7 fetches,
     // each an independent `key > cursor` pushed range scan resuming at
     // the previous page's max key (the scanner-handle protocol,
     // stateless)
-    "scan_cursor" -> ((s, d) =>
+    Query("scan_cursor", (s, d) =>
       Scans.pagedScan(T(s, d, "orders"), "o_orderkey", 7, 3,
-        Seq("o_orderkey", "o_custkey", "o_totalprice"))),
+        Seq("o_orderkey", "o_custkey", "o_totalprice")),
+      Oracle("""SELECT o_orderkey, o_custkey, o_totalprice,
+        |       CAST((rn - 1) // 7 AS BIGINT) AS page_idx
+        |FROM (SELECT o_orderkey, o_custkey, o_totalprice,
+        |             row_number() OVER (ORDER BY o_orderkey) AS rn FROM orders)
+        |WHERE rn <= 21 ORDER BY o_orderkey""".stripMargin)),
     // getRowOrBefore: greatest row at or below a (possibly absent) key
     // — key 31 is a TPC-H orderkey gap, the closest row before is 7
-    "get_closest_before" -> ((s, d) =>
+    Query("get_closest_before", (s, d) =>
       Scans.closestRowBefore(T(s, d, "orders"), "o_orderkey", 31L,
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"))),
+        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")),
+      Oracle("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
+        |WHERE o_orderkey <= 31 ORDER BY o_orderkey DESC LIMIT 1""".stripMargin)),
     // the salted-rowkey pattern: stored key = salt + "-" + padded key
     // (ingest spread over 8 regions); a range scan on the ORIGINAL key
     // fans out to 8 pushed per-prefix ranges on the stored sorted key
     // and must equal the unsalted scan_range row set exactly
-    "salted_scan" -> ((s, d) => {
+    Query("salted_scan", (s, d) => {
       val dir = graft.core.Indexes.ensure(s, d, "orders_salted") { target =>
         graft.core.Layout.writeSorted(
           T(s, d, "orders").select(
@@ -173,29 +250,55 @@ object SparkEntry {
       graft.core.Salt.saltedRangeScan(
           graft.core.Layout.read(s, dir), "salted_key", 8, 1000L, 2000L)
         .orderBy("o_orderkey")
-    }),
+    },
+      Oracle("""SELECT CAST(o_orderkey % 8 AS VARCHAR) || '-' ||
+        |         lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS salted_key,
+        |       o_orderkey, o_totalprice
+        |FROM orders WHERE o_orderkey >= 1000 AND o_orderkey < 2000
+        |ORDER BY o_orderkey""".stripMargin)),
     // Scan.setRaw(true): delete markers visible, no masking — the raw
     // store content of the same edit slice wal_replay masks
-    "scan_raw" -> ((s, d) => {
+    Query("scan_raw", (s, d) => {
       val edits = Tables.eventCells(s, d)
         .withColumn("op", when(col("event_id") % 7 === 0, "delete").otherwise("put"))
       Scans.raw(edits, "2024-01-05 00:00:00", "2024-01-25 00:00:00")
         .select("rowkey", "qualifier", "ts", "op", "value", "event_id")
         .orderBy("event_id")
-    }),
+    },
+      Oracle("""SELECT user_id AS rowkey, event_type AS qualifier, ts,
+        |       CASE WHEN event_id % 7 = 0 THEN 'delete' ELSE 'put' END AS op,
+        |       value, event_id
+        |FROM events
+        |WHERE ts >= TIMESTAMP '2024-01-05 00:00:00' AND ts < TIMESTAMP '2024-01-25 00:00:00'
+        |ORDER BY event_id""".stripMargin)),
     // KEEP_DELETED_CELLS: as-of read where family `web` (keep=true)
     // only honors deletes at/below the read point while `act`
     // (keep=false, post-compaction store) is masked by ALL deletes
-    "scan_keep_deleted" -> ((s, d) => {
+    Query("scan_keep_deleted", (s, d) => {
       val edits = Tables.eventCellsTwoFamilies(s, d)
         .withColumn("op", when(col("event_id") % 7 === 0, "delete").otherwise("put"))
       Scans.pointInTimeRead(edits, "2024-01-15 00:00:00", Set("web"))
         .orderBy("rowkey", "family", "qualifier")
-    }),
+    },
+      Oracle("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
+        |ed AS (SELECT *, CASE WHEN event_id % 7 = 0 THEN 'delete' ELSE 'put' END AS op
+        |       FROM vcells2),
+        |p AS (SELECT rowkey, family, qualifier, ts, event_id, value,
+        |        row_number() OVER (PARTITION BY rowkey, family, qualifier
+        |                           ORDER BY ts DESC, event_id DESC) AS rn
+        |      FROM ed WHERE op = 'put' AND ts <= TIMESTAMP '2024-01-15 00:00:00'),
+        |dl AS (SELECT rowkey, family, qualifier, max(ts) AS del_ts FROM ed
+        |       WHERE op = 'delete'
+        |         AND (ts <= TIMESTAMP '2024-01-15 00:00:00' OR family <> 'web')
+        |       GROUP BY 1, 2, 3)
+        |SELECT p.rowkey, p.family, p.qualifier, p.ts, p.event_id, p.value
+        |FROM p LEFT JOIN dl USING (rowkey, family, qualifier)
+        |WHERE rn = 1 AND (del_ts IS NULL OR p.ts > del_ts)
+        |ORDER BY rowkey, family, qualifier""".stripMargin)),
     // VisibilityController: cells carry DNF label expressions, the scan
     // carries Authorizations(public, internal) — pure codegen'd array
     // algebra riding the scan, no shuffle, no UDF
-    "cell_visibility" -> ((s, d) => {
+    Query("cell_visibility", (s, d) => {
       val cells = Tables.eventCells(s, d).withColumn("vis",
         when(col("event_id") % 5 === 0,
           when(col("rowkey") % 2 === 0, lit(null).cast("string"))
@@ -207,7 +310,23 @@ object SparkEntry {
       graft.kv.Visibility.applyAuths(cells, "vis", Seq("public", "internal"))
         .select("rowkey", "qualifier", "ts", "vis", "value", "event_id")
         .orderBy("event_id")
-    }),
+    },
+      Oracle("WITH " + graft.core.Tables.eventCellsSql + """,
+        |v AS (SELECT *, CASE
+        |    WHEN event_id % 5 = 0 THEN (CASE WHEN rowkey % 2 = 0 THEN NULL ELSE 'admin|ops' END)
+        |    WHEN event_id % 5 = 1 THEN 'public'
+        |    WHEN event_id % 5 = 2 THEN 'internal&!embargo'
+        |    WHEN event_id % 5 = 3 THEN 'internal&embargo'
+        |    ELSE 'pii&internal' END AS vis
+        |  FROM vcells)
+        |SELECT rowkey, qualifier, ts, vis, value, event_id FROM v
+        |WHERE vis IS NULL OR vis = '' OR
+        |  len(list_filter(string_split(vis, '|'), t ->
+        |    len(list_filter(string_split(t, '&'), a ->
+        |      CASE WHEN a LIKE '!%' THEN NOT list_contains(['public','internal'], substr(a, 2))
+        |           ELSE list_contains(['public','internal'], a) END))
+        |      = len(string_split(t, '&')))) > 0
+        |ORDER BY event_id""".stripMargin)),
     // VisibilityClient admin half (addLabels/setAuths/clearAuths/
     // getAuths) beside cell_visibility's read path: a replayed op log
     // over the labels/auth tables with per-op OperationStatus outcomes
@@ -224,7 +343,7 @@ object SparkEntry {
     // — 11.5 s steady-state on the driver bench for a metadata answer.
     // Visibility.replayLocal is spec-equated to the relational
     // adminReplay/finalAuths on randomized logs (PropertySpec).
-    "visibility_labels_admin" -> ((s, d) => {
+    Query("visibility_labels_admin", (s, d) => {
       import s.implicits._
       val labels = Tables.load(s, d, "events")
         .select(col("event_type").as("label")).distinct()
@@ -249,252 +368,11 @@ object SparkEntry {
       (rep ++ held.map { case (g, l) => (9000L, "get_auths", g, l, "held") })
         .toDF("op_idx", "op", "grantee", "label", "outcome")
         .orderBy("op_idx", "grantee", "label")
-    }),
-    // AccessController read masking, the grant-table half of HBase
-    // security next to cell_visibility's label half: the user's _acl_
-    // grants broadcast beside the scan, a cell survives iff a READ
-    // grant covers it (table / family / qualifier level), deny by
-    // default — alice holds family-level web plus the act:purchase
-    // qualifier, so act:error/signup stay masked; her grant on another
-    // table and bob's grants must not leak in
-    "acl_enforce" -> ((s, d) => {
-      import s.implicits._
-      val grants = Seq[(String, Option[String], Option[String], Option[String], String)](
-        ("alice", Some("events"), Some("web"), None, "R"),
-        ("alice", Some("events"), Some("act"), Some("purchase"), "R"),
-        ("alice", Some("audit"), None, None, "R"),
-        ("bob", None, None, None, "RW")
-      ).toDF("grantee", "tbl", "family", "qualifier", "perm")
-      graft.kv.Acl.enforceRead(Tables.eventCellsTwoFamilies(s, d),
-          grants, "alice", "events")
-        .select("rowkey", "family", "qualifier", "ts", "value", "event_id")
-        .orderBy("event_id")
-    }),
-    // HBASE-7662 cell-level ACLs composed with the hierarchy: carol
-    // holds only family-level web, but every 7th cell carries a
-    // carol:R ACL tag — those act-family cells become readable via the
-    // cell grant (acl_source names which check admitted each cell);
-    // dave's cell tags must not leak in. Disjoint semi/anti broadcast
-    // joins, no dedup shuffle.
-    "cell_acl" -> ((s, d) => {
-      import s.implicits._
-      val grants = Seq[(String, Option[String], Option[String], Option[String], String)](
-        ("carol", Some("events"), Some("web"), None, "R"),
-        ("dave", Some("events"), None, None, "RW")
-      ).toDF("grantee", "tbl", "family", "qualifier", "perm")
-      val cells = Tables.eventCellsTwoFamilies(s, d)
-        .withColumn("cell_acl",
-          when(col("event_id") % 7 === 0, lit("carol:R"))
-            .when(col("event_id") % 11 === 0, lit("dave:RW"))
-            .otherwise(lit(null).cast("string")))
-      graft.kv.Acl.enforceReadCellAcls(cells, grants, "carol", "events")
-        .select("rowkey", "family", "qualifier", "ts", "value",
-          "event_id", "acl_source")
-        .orderBy("event_id", "family", "qualifier")
-    }),
-    // AccessController WRITE path (prePut/preDelete, Action.WRITE —
-    // the mutation-side gate, r14 verdict's one surface gap): a mixed
-    // put/delete batch authorized per-op by covering W grant, deny by
-    // default, per-op ACCEPT/DENY slots (the batch_partial_failure
-    // shape). alice: RW on web (covers puts, qualifier deletes AND
-    // family-wide deletes there), W on exactly act:purchase (covers
-    // only that qualifier's ops — NOT act family-wide deletes, which
-    // touch every qualifier), R-only on act (an action-specificity
-    // trap: must authorize nothing here); bob's global RW must not
-    // leak in
-    "acl_write_enforce" -> ((s, d) => {
-      import s.implicits._
-      val grants = Seq[(String, Option[String], Option[String], Option[String], String)](
-        ("alice", Some("events"), Some("web"), None, "RW"),
-        ("alice", Some("events"), Some("act"), Some("purchase"), "W"),
-        ("alice", Some("events"), Some("act"), None, "R"),
-        ("bob", None, None, None, "RW")
-      ).toDF("grantee", "tbl", "family", "qualifier", "perm")
-      val cells = Tables.eventCellsTwoFamilies(s, d)
-      val puts = cells.where(col("event_id") % 5 === 0)
-        .select((col("event_id") * 2).as("op_idx"), lit("put").as("op_type"),
-          col("family"), col("qualifier"), col("event_id"))
-      val dels = cells.where(col("event_id") % 7 === 0 &&
-          col("event_id") % 21 =!= 0)
-        .select((col("event_id") * 2 + 1).as("op_idx"),
-          lit("delete").as("op_type"),
-          col("family"), col("qualifier"), col("event_id"))
-      // family-wide deletes: ONE op per (event, family) — qualifier
-      // NULL means the op covers every qualifier in the family
-      val famDels = cells.where(col("event_id") % 21 === 0)
-        .select(col("event_id"), col("family")).distinct()
-        .select((col("event_id") * 2 + 1).as("op_idx"),
-          lit("delete_family").as("op_type"), col("family"),
-          lit(null).cast("string").as("qualifier"), col("event_id"))
-      graft.kv.Acl.enforceWrite(
-          puts.unionByName(dels).unionByName(famDels),
-          grants, "alice", "events")
-        .orderBy("op_idx", "family", "qualifier")
-    }),
-    // Get.setTimeRange(0, ts) + maxVersions(1) as a stream-wide temporal
-    // join: for each click, the same user's latest purchase at or
-    // before it — one shuffle on the key, running struct-max, never a
-    // per-key range join
-    "asof_join" -> ((s, d) => {
-      val ev = T(s, d, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id", "value")
-      graft.core.AsofJoin.asof(clicks, purchases, "user_id", "ts",
-          Seq("event_id", "value"))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("_last.ts").as("last_purchase_ts"),
-          col("_last.event_id").as("last_purchase_id"),
-          col("_last.value").as("last_purchase_value"))
-        .orderBy("event_id")
-    }),
-  )
-
-  private val scanOracles: Map[String, String] = Map(
-    "scan_range" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
-        |WHERE o_orderkey >= 1000 AND o_orderkey < 2000 ORDER BY o_orderkey""".stripMargin,
-    "scan_reversed" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey DESC LIMIT 100""".stripMargin,
-    "scan_limit" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber LIMIT 500""".stripMargin,
-    "get_point" ->
-      "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey = 42",
-    "multi_get" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        |WHERE o_orderkey IN (1,2,3,5,8,13,21,34,55,89) ORDER BY o_orderkey""".stripMargin,
-    // the Spark side semi-joins the literal key set {3i+1 : i<2000};
-    // arithmetic form of the same set
-    "multi_get_bulk" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        |WHERE o_orderkey % 3 = 1 AND o_orderkey BETWEEN 1 AND 5998
-        |ORDER BY o_orderkey""".stripMargin,
-    "multi_exists" ->
-      """SELECT p.o_orderkey,
-        |       EXISTS(SELECT 1 FROM orders o
-        |              WHERE o.o_orderkey = p.o_orderkey) AS key_exists
-        |FROM (SELECT DISTINCT 7 * i + 1 AS o_orderkey FROM range(0, 36) t(i)
-        |      UNION ALL
-        |      SELECT 1000000000000000 + i FROM range(1, 5) t(i)) p
-        |ORDER BY p.o_orderkey""".stripMargin,
-    "multi_get_bloom" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        |WHERE o_orderkey % 7 = 2 AND o_orderkey BETWEEN 2 AND 20995
-        |ORDER BY o_orderkey""".stripMargin,
-    "timeline_read" ->
-      ("WITH " + Tables.eventCellsSql + """,
-        |hz AS (SELECT max(ts) - INTERVAL 10 DAY AS h FROM vcells),
-        |vis AS (SELECT v.*, rowkey % 5 = 0 AS stale FROM vcells v, hz
-        |        WHERE NOT (rowkey % 5 = 0) OR ts <= h),
-        |r AS (SELECT rowkey, qualifier, ts, value, event_id, stale,
-        |        row_number() OVER (PARTITION BY rowkey, family, qualifier
-        |                           ORDER BY ts DESC, event_id DESC) AS rn
-        |      FROM vis)
-        |SELECT rowkey, qualifier, ts, value, event_id, stale FROM r
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin),
-    "scan_small" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
-        |WHERE o_orderkey >= 5000 ORDER BY o_orderkey LIMIT 25""".stripMargin,
-    // the lazy-CF two-phase result ≡ the single-pass filter
-    "scan_lazy_cf" ->
-      """SELECT doc_id, text, lang, source, n_chars FROM documents
-        |WHERE lang = 'en' AND n_chars > 400 ORDER BY doc_id""".stripMargin,
-    "scan_time_range" ->
-      """SELECT user_id AS rowkey, event_type AS qualifier, ts, value, event_id FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |ORDER BY event_id""".stripMargin,
-    "scan_max_versions" ->
-      """SELECT rowkey, qualifier, ts, value, event_id FROM (
-        |  SELECT user_id AS rowkey, event_type AS qualifier, ts, value, event_id,
-        |         row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn <= 2 ORDER BY rowkey, qualifier, event_id""".stripMargin,
-    "scan_batch" ->
-      ("WITH " + graft.core.Tables.customerCellsSql + """,
-        |r AS (SELECT rowkey, family, qualifier, value,
-        |        row_number() OVER (PARTITION BY rowkey ORDER BY family, qualifier) - 1 AS k
-        |      FROM cells)
-        |SELECT rowkey, family, qualifier, value,
-        |       CAST(k // 2 AS BIGINT) AS batch_idx, CAST(k % 2 AS BIGINT) AS pos_in_batch
-        |FROM r ORDER BY rowkey, batch_idx, pos_in_batch""".stripMargin),
-    "scan_family_time_range" ->
-      ("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """
-        |SELECT rowkey, family, qualifier, ts, value, event_id FROM vcells2
-        |WHERE (family = 'web' AND ts >= TIMESTAMP '2024-01-10 00:00:00'
-        |                      AND ts <  TIMESTAMP '2024-01-20 00:00:00')
-        |   OR (family = 'act' AND ts >= TIMESTAMP '2024-01-02 00:00:00'
-        |                      AND ts <  TIMESTAMP '2024-01-12 00:00:00')
-        |ORDER BY event_id""".stripMargin),
-    "scan_store_limit" ->
-      ("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
-        |r AS (SELECT rowkey, family, qualifier, ts, value, event_id,
-        |             row_number() OVER (PARTITION BY rowkey, family
-        |               ORDER BY qualifier, ts DESC, event_id DESC) AS rn
-        |      FROM vcells2)
-        |SELECT rowkey, family, qualifier, ts, value, event_id
-        |FROM r WHERE rn > 1 AND rn <= 3 ORDER BY event_id""".stripMargin),
-    "get_closest_before" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
-        |WHERE o_orderkey <= 31 ORDER BY o_orderkey DESC LIMIT 1""".stripMargin,
-    "scan_cursor" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |       CAST((rn - 1) // 7 AS BIGINT) AS page_idx
-        |FROM (SELECT o_orderkey, o_custkey, o_totalprice,
-        |             row_number() OVER (ORDER BY o_orderkey) AS rn FROM orders)
-        |WHERE rn <= 21 ORDER BY o_orderkey""".stripMargin,
-    "salted_scan" ->
-      """SELECT CAST(o_orderkey % 8 AS VARCHAR) || '-' ||
-        |         lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS salted_key,
-        |       o_orderkey, o_totalprice
-        |FROM orders WHERE o_orderkey >= 1000 AND o_orderkey < 2000
-        |ORDER BY o_orderkey""".stripMargin,
-    "scan_raw" ->
-      """SELECT user_id AS rowkey, event_type AS qualifier, ts,
-        |       CASE WHEN event_id % 7 = 0 THEN 'delete' ELSE 'put' END AS op,
-        |       value, event_id
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05 00:00:00' AND ts < TIMESTAMP '2024-01-25 00:00:00'
-        |ORDER BY event_id""".stripMargin,
-    "scan_keep_deleted" ->
-      ("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
-        |ed AS (SELECT *, CASE WHEN event_id % 7 = 0 THEN 'delete' ELSE 'put' END AS op
-        |       FROM vcells2),
-        |p AS (SELECT rowkey, family, qualifier, ts, event_id, value,
-        |        row_number() OVER (PARTITION BY rowkey, family, qualifier
-        |                           ORDER BY ts DESC, event_id DESC) AS rn
-        |      FROM ed WHERE op = 'put' AND ts <= TIMESTAMP '2024-01-15 00:00:00'),
-        |dl AS (SELECT rowkey, family, qualifier, max(ts) AS del_ts FROM ed
-        |       WHERE op = 'delete'
-        |         AND (ts <= TIMESTAMP '2024-01-15 00:00:00' OR family <> 'web')
-        |       GROUP BY 1, 2, 3)
-        |SELECT p.rowkey, p.family, p.qualifier, p.ts, p.event_id, p.value
-        |FROM p LEFT JOIN dl USING (rowkey, family, qualifier)
-        |WHERE rn = 1 AND (del_ts IS NULL OR p.ts > del_ts)
-        |ORDER BY rowkey, family, qualifier""".stripMargin),
-    "cell_visibility" ->
-      ("WITH " + graft.core.Tables.eventCellsSql + """,
-        |v AS (SELECT *, CASE
-        |    WHEN event_id % 5 = 0 THEN (CASE WHEN rowkey % 2 = 0 THEN NULL ELSE 'admin|ops' END)
-        |    WHEN event_id % 5 = 1 THEN 'public'
-        |    WHEN event_id % 5 = 2 THEN 'internal&!embargo'
-        |    WHEN event_id % 5 = 3 THEN 'internal&embargo'
-        |    ELSE 'pii&internal' END AS vis
-        |  FROM vcells)
-        |SELECT rowkey, qualifier, ts, vis, value, event_id FROM v
-        |WHERE vis IS NULL OR vis = '' OR
-        |  len(list_filter(string_split(vis, '|'), t ->
-        |    len(list_filter(string_split(t, '&'), a ->
-        |      CASE WHEN a LIKE '!%' THEN NOT list_contains(['public','internal'], substr(a, 2))
-        |           ELSE list_contains(['public','internal'], a) END))
-        |      = len(string_split(t, '&')))) > 0
-        |ORDER BY event_id""".stripMargin),
-    // the admin replay mirror: same op log from the distinct event
-    // types, same first-valid-add / first-grant min-aggregates, same
-    // VisibilityLabelsValidator alphabet (full match)
-    "visibility_labels_admin" ->
-      """WITH lbl AS (SELECT DISTINCT event_type AS label FROM events),
+    },
+      // the admin replay mirror: same op log from the distinct event
+      // types, same first-valid-add / first-grant min-aggregates, same
+      // VisibilityLabelsValidator alphabet (full match)
+      Oracle("""WITH lbl AS (SELECT DISTINCT event_type AS label FROM events),
         |u AS (SELECT CAST(unnest(range(0, 5)) AS INT) AS i),
         |ops AS (
         |  SELECT CAST(100 AS BIGINT) AS op_idx, 'add_label' AS op,
@@ -541,9 +419,28 @@ object SparkEntry {
         |           SELECT 1 FROM clro c WHERE c.outcome = 'OK'
         |             AND c.grantee = s.grantee AND c.label = s.label))
         |SELECT * FROM rep UNION ALL SELECT * FROM held
-        |ORDER BY op_idx, grantee, label""".stripMargin,
-    "acl_enforce" ->
-      ("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
+        |ORDER BY op_idx, grantee, label""".stripMargin)),
+    // AccessController read masking, the grant-table half of HBase
+    // security next to cell_visibility's label half: the user's _acl_
+    // grants broadcast beside the scan, a cell survives iff a READ
+    // grant covers it (table / family / qualifier level), deny by
+    // default — alice holds family-level web plus the act:purchase
+    // qualifier, so act:error/signup stay masked; her grant on another
+    // table and bob's grants must not leak in
+    Query("acl_enforce", (s, d) => {
+      import s.implicits._
+      val grants = Seq[(String, Option[String], Option[String], Option[String], String)](
+        ("alice", Some("events"), Some("web"), None, "R"),
+        ("alice", Some("events"), Some("act"), Some("purchase"), "R"),
+        ("alice", Some("audit"), None, None, "R"),
+        ("bob", None, None, None, "RW")
+      ).toDF("grantee", "tbl", "family", "qualifier", "perm")
+      graft.kv.Acl.enforceRead(Tables.eventCellsTwoFamilies(s, d),
+          grants, "alice", "events")
+        .select("rowkey", "family", "qualifier", "ts", "value", "event_id")
+        .orderBy("event_id")
+    },
+      Oracle("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
         |grants(grantee, tbl, family, qualifier, perm) AS (VALUES
         |  ('alice', 'events', 'web', NULL, 'R'),
         |  ('alice', 'events', 'act', 'purchase', 'R'),
@@ -555,9 +452,30 @@ object SparkEntry {
         |    AND (g.tbl IS NULL OR g.tbl = 'events')
         |    AND (g.family IS NULL OR g.family = c.family)
         |    AND (g.qualifier IS NULL OR g.qualifier = c.qualifier))
-        |ORDER BY event_id""".stripMargin),
-    "cell_acl" ->
-      ("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
+        |ORDER BY event_id""".stripMargin)),
+    // HBASE-7662 cell-level ACLs composed with the hierarchy: carol
+    // holds only family-level web, but every 7th cell carries a
+    // carol:R ACL tag — those act-family cells become readable via the
+    // cell grant (acl_source names which check admitted each cell);
+    // dave's cell tags must not leak in. Disjoint semi/anti broadcast
+    // joins, no dedup shuffle.
+    Query("cell_acl", (s, d) => {
+      import s.implicits._
+      val grants = Seq[(String, Option[String], Option[String], Option[String], String)](
+        ("carol", Some("events"), Some("web"), None, "R"),
+        ("dave", Some("events"), None, None, "RW")
+      ).toDF("grantee", "tbl", "family", "qualifier", "perm")
+      val cells = Tables.eventCellsTwoFamilies(s, d)
+        .withColumn("cell_acl",
+          when(col("event_id") % 7 === 0, lit("carol:R"))
+            .when(col("event_id") % 11 === 0, lit("dave:RW"))
+            .otherwise(lit(null).cast("string")))
+      graft.kv.Acl.enforceReadCellAcls(cells, grants, "carol", "events")
+        .select("rowkey", "family", "qualifier", "ts", "value",
+          "event_id", "acl_source")
+        .orderBy("event_id", "family", "qualifier")
+    },
+      Oracle("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
         |grants(grantee, tbl, family, qualifier, perm) AS (VALUES
         |  ('carol', 'events', 'web', NULL, 'R'),
         |  ('dave', 'events', NULL, NULL, 'RW')),
@@ -577,9 +495,47 @@ object SparkEntry {
         |SELECT rowkey, family, qualifier, ts, value, event_id,
         |       CASE WHEN hier THEN 'table' ELSE 'cell' END AS acl_source
         |FROM m WHERE hier OR cellok
-        |ORDER BY event_id, family, qualifier""".stripMargin),
-    "acl_write_enforce" ->
-      ("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
+        |ORDER BY event_id, family, qualifier""".stripMargin)),
+    // AccessController WRITE path (prePut/preDelete, Action.WRITE —
+    // the mutation-side gate, r14 verdict's one surface gap): a mixed
+    // put/delete batch authorized per-op by covering W grant, deny by
+    // default, per-op ACCEPT/DENY slots (the batch_partial_failure
+    // shape). alice: RW on web (covers puts, qualifier deletes AND
+    // family-wide deletes there), W on exactly act:purchase (covers
+    // only that qualifier's ops — NOT act family-wide deletes, which
+    // touch every qualifier), R-only on act (an action-specificity
+    // trap: must authorize nothing here); bob's global RW must not
+    // leak in
+    Query("acl_write_enforce", (s, d) => {
+      import s.implicits._
+      val grants = Seq[(String, Option[String], Option[String], Option[String], String)](
+        ("alice", Some("events"), Some("web"), None, "RW"),
+        ("alice", Some("events"), Some("act"), Some("purchase"), "W"),
+        ("alice", Some("events"), Some("act"), None, "R"),
+        ("bob", None, None, None, "RW")
+      ).toDF("grantee", "tbl", "family", "qualifier", "perm")
+      val cells = Tables.eventCellsTwoFamilies(s, d)
+      val puts = cells.where(col("event_id") % 5 === 0)
+        .select((col("event_id") * 2).as("op_idx"), lit("put").as("op_type"),
+          col("family"), col("qualifier"), col("event_id"))
+      val dels = cells.where(col("event_id") % 7 === 0 &&
+          col("event_id") % 21 =!= 0)
+        .select((col("event_id") * 2 + 1).as("op_idx"),
+          lit("delete").as("op_type"),
+          col("family"), col("qualifier"), col("event_id"))
+      // family-wide deletes: ONE op per (event, family) — qualifier
+      // NULL means the op covers every qualifier in the family
+      val famDels = cells.where(col("event_id") % 21 === 0)
+        .select(col("event_id"), col("family")).distinct()
+        .select((col("event_id") * 2 + 1).as("op_idx"),
+          lit("delete_family").as("op_type"), col("family"),
+          lit(null).cast("string").as("qualifier"), col("event_id"))
+      graft.kv.Acl.enforceWrite(
+          puts.unionByName(dels).unionByName(famDels),
+          grants, "alice", "events")
+        .orderBy("op_idx", "family", "qualifier")
+    },
+      Oracle("WITH " + graft.core.Tables.eventCellsTwoFamiliesSql + """,
         |grants(grantee, tbl, family, qualifier, perm) AS (VALUES
         |  ('alice', 'events', 'web', NULL, 'RW'),
         |  ('alice', 'events', 'act', 'purchase', 'W'),
@@ -604,13 +560,26 @@ object SparkEntry {
         |      AND (g.qualifier IS NULL OR
         |           (o.qualifier IS NOT NULL AND g.qualifier = o.qualifier)))
         |  THEN 'ACCEPT' ELSE 'DENY' END AS outcome
-        |FROM ops o ORDER BY op_idx, family, qualifier""".stripMargin),
-    // querying through the index must equal filtering the base directly
-    "secondary_index" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_custkey BETWEEN 100 AND 120 ORDER BY o_orderkey""".stripMargin,
-    "asof_join" ->
-      """WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+        |FROM ops o ORDER BY op_idx, family, qualifier""".stripMargin)),
+    // Get.setTimeRange(0, ts) + maxVersions(1) as a stream-wide temporal
+    // join: for each click, the same user's latest purchase at or
+    // before it — one shuffle on the key, running struct-max, never a
+    // per-key range join
+    Query("asof_join", (s, d) => {
+      val ev = T(s, d, "events")
+      val clicks = ev.where(col("event_type") === "click")
+        .select("event_id", "user_id", "ts")
+      val purchases = ev.where(col("event_type") === "purchase")
+        .select("user_id", "ts", "event_id", "value")
+      graft.core.AsofJoin.asof(clicks, purchases, "user_id", "ts",
+          Seq("event_id", "value"))
+        .select(col("event_id"), col("user_id"), col("ts"),
+          col("_last.ts").as("last_purchase_ts"),
+          col("_last.event_id").as("last_purchase_id"),
+          col("_last.value").as("last_purchase_value"))
+        .orderBy("event_id")
+    },
+      Oracle("""WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
         |purch AS (SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase')
         |SELECT c.event_id, c.user_id, c.ts,
         |       p.ts AS last_purchase_ts, p.event_id AS last_purchase_id,
@@ -619,158 +588,125 @@ object SparkEntry {
         |  SELECT ts, event_id, value FROM purch p
         |  WHERE p.user_id = c.user_id AND p.ts <= c.ts
         |  ORDER BY ts DESC, event_id DESC LIMIT 1) p ON true
-        |ORDER BY c.event_id""".stripMargin,
+        |ORDER BY c.event_id""".stripMargin)),
   )
+
 
   // ------------------------------------------------------------------
   // §2D aggregation coprocessor
   // ------------------------------------------------------------------
-  private val aggQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_rowcount" -> ((s, d) =>
+  private val aggQueries: Seq[Query] = Seq(
+    Query("agg_rowcount", (s, d) =>
       T(s, d, "lineitem").where(col("l_quantity") >= 25)
-        .agg(count(lit(1)).as("n_rows"))),
-    "agg_minmax" -> ((s, d) => Aggregates.minMax(T(s, d, "lineitem"), "l_extendedprice")),
-    "agg_sum_avg" -> ((s, d) => Aggregates.sumAvg(T(s, d, "lineitem"), "l_quantity")),
-    "agg_std" -> ((s, d) => Aggregates.std(T(s, d, "lineitem"), "l_quantity")),
-    "agg_median" -> ((s, d) => Aggregates.median(T(s, d, "lineitem"), "l_extendedprice")),
-    "agg_weighted_median" -> ((s, d) =>
-      Aggregates.weightedMedian(T(s, d, "lineitem"), "l_extendedprice", "l_quantity")),
-    "agg_grouped" -> ((s, d) =>
-      Aggregates.grouped(T(s, d, "lineitem"), Seq("l_returnflag", "l_linestatus"), "l_quantity")),
+        .agg(count(lit(1)).as("n_rows")),
+      Oracle("SELECT count(*) AS n_rows FROM lineitem WHERE l_quantity >= 25")),
+    Query("agg_minmax", (s, d) => Aggregates.minMax(T(s, d, "lineitem"), "l_extendedprice"),
+      Oracle("SELECT min(l_extendedprice) AS min_v, max(l_extendedprice) AS max_v FROM lineitem")),
+    Query("agg_sum_avg", (s, d) => Aggregates.sumAvg(T(s, d, "lineitem"), "l_quantity"),
+      Oracle("SELECT round(sum(l_quantity),4) AS sum_v, round(avg(l_quantity),4) AS avg_v FROM lineitem")),
+    Query("agg_std", (s, d) => Aggregates.std(T(s, d, "lineitem"), "l_quantity"),
+      Oracle("SELECT round(stddev_pop(l_quantity),4) AS std_v FROM lineitem")),
+    // the exact `percentile` is the oracle form: it buffers every value
+    // per group, correct for the DuckDB compare but not a plan to run at
+    // 100 TB, so the bench times the bounded percentile_approx path
+    Query("agg_median", (s, d) => Aggregates.median(T(s, d, "lineitem"), "l_extendedprice"),
+      Oracle("SELECT round(quantile_cont(l_extendedprice, 0.5),4) AS median_v FROM lineitem"),
+      bench = Some((s, d) => Aggregates.medianApprox(T(s, d, "lineitem"), "l_extendedprice"))),
+    Query("agg_weighted_median", (s, d) =>
+      Aggregates.weightedMedian(T(s, d, "lineitem"), "l_extendedprice", "l_quantity"),
+      Oracle("""SELECT min(l_extendedprice) AS wmedian_v FROM (
+        |  SELECT l_extendedprice,
+        |         sum(l_quantity) OVER (ORDER BY l_extendedprice ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM lineitem) t
+        |WHERE cum >= (SELECT sum(l_quantity)/2 FROM lineitem)""".stripMargin)),
+    Query("agg_grouped", (s, d) =>
+      Aggregates.grouped(T(s, d, "lineitem"), Seq("l_returnflag", "l_linestatus"), "l_quantity"),
+      Oracle("""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+        |       min(l_quantity) AS min_v, max(l_quantity) AS max_v,
+        |       round(sum(l_quantity),4) AS sum_v, round(avg(l_quantity),4) AS avg_v,
+        |       round(stddev_pop(l_quantity),4) AS std_v,
+        |       round(quantile_cont(l_quantity,0.5),4) AS median_v
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+      bench = Some((s, d) => Aggregates.groupedApprox(T(s, d, "lineitem"),
+        Seq("l_returnflag", "l_linestatus"), "l_quantity"))),
     // hierarchical totals in one pass: rollup emits (flag, status),
     // (flag, ·) and (·, ·) grand-total rows from a single codegen'd
     // aggregate — subtotals without re-scanning per level
-    "agg_rollup" -> ((s, d) =>
+    Query("agg_rollup", (s, d) =>
       T(s, d, "lineitem").rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n_rows"), round(sum(col("l_quantity")), 4).as("sum_qty"))
-        .orderBy("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus"),
+      Oracle("""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+        |       round(sum(l_quantity), 4) AS sum_qty
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
     // exact grouped distinct-count (the oracle form); the bench path
     // swaps in the HLL sketch (approx_count_distinct) — same
     // exact-vs-scale split as the median family
-    "agg_distinct" -> ((s, d) =>
+    Query("agg_distinct", (s, d) =>
       T(s, d, "lineitem").groupBy("l_returnflag")
         .agg(count_distinct(col("l_partkey")).as("n_parts"),
              count(lit(1)).as("n_rows"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      Oracle("""SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts, count(*) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+      // HLL sketch: fixed-size state per group, map-side partials — the
+      // exact form shuffles every distinct (group, value) pair
+      bench = Some((s, d) =>
+        T(s, d, "lineitem").groupBy("l_returnflag")
+          .agg(approx_count_distinct(col("l_partkey")).as("n_parts"),
+               count(lit(1)).as("n_rows"))
+          .orderBy("l_returnflag"))),
     // "top N per group" via the bounded-state TopKStruct aggregate:
     // map-side partial top-k means no row ever shuffles except the
     // k-row partial buffers — the window form (row_number over a
     // partition) sorts and shuffles every row. Top-3 orders by price
     // per order priority.
-    "agg_topk" -> ((s, d) => {
+    Query("agg_topk", (s, d) => {
       val scored = T(s, d, "orders").select(col("o_orderpriority"),
         col("o_orderkey").as("nn_id"), col("o_totalprice").as("_score"))
       graft.sim.Ann.topK(scored, "o_orderpriority", 3)
         .select(col("o_orderpriority"), col("nn_id").as("o_orderkey"),
           col("_score").as("o_totalprice"), col("rank"))
         .orderBy("o_orderpriority", "rank")
-    }),
+    },
+      Oracle("""SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
+        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
+        |         row_number() OVER (PARTITION BY o_orderpriority
+        |                            ORDER BY o_totalprice DESC, o_orderkey) AS rank
+        |  FROM orders) WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin)),
     // the hot-key escape hatch as a verified query: two-phase salted
     // aggregation (spread one hot group over 8 reducers, then merge)
     // must equal the direct aggregate — AQE rebalances skewed joins but
     // not skewed aggregations, so this is the 100 TB answer for them
-    "agg_salted" -> ((s, d) =>
+    Query("agg_salted", (s, d) =>
       graft.core.Salt.saltedAggregate(T(s, d, "lineitem"), Seq("l_returnflag"), 8,
           partials = Seq(sum(col("l_quantity")).as("s"), count(lit(1)).as("c")),
           merges = Seq(round(sum(col("s")), 4).as("sum_v"), sum(col("c")).as("n")))
-        .orderBy("l_returnflag")),
-  )
-
-  private val aggOracles: Map[String, String] = Map(
-    "agg_rowcount" -> "SELECT count(*) AS n_rows FROM lineitem WHERE l_quantity >= 25",
-    "agg_minmax" ->
-      "SELECT min(l_extendedprice) AS min_v, max(l_extendedprice) AS max_v FROM lineitem",
-    "agg_sum_avg" ->
-      "SELECT round(sum(l_quantity),4) AS sum_v, round(avg(l_quantity),4) AS avg_v FROM lineitem",
-    "agg_std" -> "SELECT round(stddev_pop(l_quantity),4) AS std_v FROM lineitem",
-    "agg_median" -> "SELECT round(quantile_cont(l_extendedprice, 0.5),4) AS median_v FROM lineitem",
-    "agg_weighted_median" ->
-      """SELECT min(l_extendedprice) AS wmedian_v FROM (
-        |  SELECT l_extendedprice,
-        |         sum(l_quantity) OVER (ORDER BY l_extendedprice ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM lineitem) t
-        |WHERE cum >= (SELECT sum(l_quantity)/2 FROM lineitem)""".stripMargin,
-    "agg_grouped" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |       min(l_quantity) AS min_v, max(l_quantity) AS max_v,
-        |       round(sum(l_quantity),4) AS sum_v, round(avg(l_quantity),4) AS avg_v,
-        |       round(stddev_pop(l_quantity),4) AS std_v,
-        |       round(quantile_cont(l_quantity,0.5),4) AS median_v
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "agg_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts, count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |       round(sum(l_quantity), 4) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "agg_topk" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_orderpriority
-        |                            ORDER BY o_totalprice DESC, o_orderkey) AS rank
-        |  FROM orders) WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin,
-    "agg_salted" ->
-      """SELECT l_returnflag, round(sum(l_quantity), 4) AS sum_v,
+        .orderBy("l_returnflag"),
+      Oracle("""SELECT l_returnflag, round(sum(l_quantity), 4) AS sum_v,
         |       CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
   )
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** Every registered query, one record each (SURVEY.md §2). */
+  val registry: Map[String, Query] = Query.index(
     scanQueries ++ aggQueries ++ graft.filters.FilterQueries.queries ++
       graft.kv.MutationQueries.queries ++ graft.analytics.AnalyticsQueries.queries ++
       graft.pipeline.PipelineQueries.queries ++ graft.core.SnapshotQueries.queries ++
-      graft.streaming.StreamQueries.queries
+      graft.streaming.StreamQueries.queries)
 
-  /** Bench-time query set: identical to `queries` except the median
-    * family runs the bounded-memory percentile_approx path (the exact
-    * `percentile` stays the oracle form — it buffers every value per
-    * group, which is correct for DuckDB comparison but not a plan you
-    * would run at 100 TB). */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ Map[String, (SparkSession, String) => DataFrame](
-      "agg_median" -> ((s, d) => Aggregates.medianApprox(T(s, d, "lineitem"), "l_extendedprice")),
-      "agg_grouped" -> ((s, d) =>
-        Aggregates.groupedApprox(T(s, d, "lineitem"),
-          Seq("l_returnflag", "l_linestatus"), "l_quantity")),
-      // HLL sketch: fixed-size state per group, map-side partials — the
-      // exact form shuffles every distinct (group, value) pair
-      "agg_distinct" -> ((s, d) =>
-        T(s, d, "lineitem").groupBy("l_returnflag")
-          .agg(approx_count_distinct(col("l_partkey")).as("n_parts"),
-               count(lit(1)).as("n_rows"))
-          .orderBy("l_returnflag")),
-      // split points need only be NEAR the quantiles, so the bench
-      // path runs the fixed-state approx_percentile sketch (the exact
-      // form buffers every key in one aggregation buffer)
-      // shared frame builders (AnalyticsQueries.*Frame): ONE body per
-      // exact/sketch pair, so the bench can't silently time a plan
-      // that drifted from the correctness-verified one
-      "region_splitter" -> ((s, d) =>
-        graft.analytics.AnalyticsQueries.regionSplitterFrame(s, d, approx = true)),
-      // same convention for split EXECUTION: daughter boundaries from
-      // the approx_percentile sketch on the bench path
-      "region_split_exec" -> ((s, d) =>
-        graft.analytics.AnalyticsQueries.regionSplitExecFrame(s, d, approx = true)),
-      // and for the profiler's ndv: HLL++ sketches replace the
-      // |cols|x expand of the exact multi-distinct (oracle keeps exact)
-      "column_profile" -> ((s, d) =>
-        graft.analytics.AnalyticsQueries.columnProfileFrame(s, d, approxNdv = true)),
-      // and for the split-POLICY midkey (one shared frame builder —
-      // AnalyticsQueries.splitPolicyFrame — so the exact/sketch pair
-      // can't hand-sync-drift)
-      "split_policy" -> ((s, d) =>
-        graft.analytics.AnalyticsQueries.splitPolicyFrame(s, d, 8, approx = true)
-          .orderBy("region")),
-      // stepping's two-scenario frame, same sketch convention (the
-      // midkey isn't selected but the stats pass still computes it)
-      "split_policy_stepping" -> ((s, d) =>
-        graft.analytics.AnalyticsQueries
-          .splitPolicySteppingScenarios(s, d, approx = true)),
-    )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.build }
+
+  /** Bench-time query set: each record's bounded-state variant where it has one. */
+  val benchQueries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.bench.getOrElse(q.build) }
+
+  /** DuckDB-runnable oracle per query (same column names, same order). */
+  val oracleSql: Map[String, String] =
+    registry.collect { case (n, Query(_, _, Oracle(sql), _)) => n -> sql }
 
   /** Resolve a caller's query-name list against `registry`, in the
     * caller's order, duplicates dropped. A typo'd OR EMPTY list fails
@@ -787,11 +723,4 @@ object SparkEntry {
         s"${unknown.sorted.mkString(", ")}")
     names.distinct.map(n => n -> registry(n))
   }
-
-  /** DuckDB-runnable oracle per query (same column names, same order). */
-  def oracleSql: Map[String, String] =
-    scanOracles ++ aggOracles ++ graft.filters.FilterQueries.oracles ++
-      graft.kv.MutationQueries.oracles ++ graft.analytics.AnalyticsQueries.oracles ++
-      graft.pipeline.PipelineQueries.oracles ++ graft.core.SnapshotQueries.oracles ++
-      graft.streaming.StreamQueries.oracles
 }

@@ -45,7 +45,7 @@ object Tools {
     * not just the plan. */
   def exportImport(df: DataFrame, pred: Column, path: String): DataFrame = {
     df.where(pred).write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    graft.core.Layout.read(df.sparkSession, path)
   }
 
   /** ImportTsv.java:79 — TSV → typed table with an explicit column

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kv.Mutations
+import graft.{Oracle, Query}
 
 /** SURVEY §2F — snapshots and region metadata as verified queries. */
 object SnapshotQueries {
@@ -84,15 +85,16 @@ object SnapshotQueries {
     Hashes.knuth(col("event_id")) +
       floor(col("value") * 100).cast("bigint") + unix_timestamp(col("ts"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "snapshot_read" -> ((s, d) =>
+  val queries: Seq[Query] = Seq(
+    Query("snapshot_read", (s, d) =>
       // the point-in-time read: v1 must be byte-identical to the original
-      Snapshots.read(s, ensureSnapshots(s, d), 1).orderBy("event_id")),
+      Snapshots.read(s, ensureSnapshots(s, d), 1).orderBy("event_id"),
+      Oracle("SELECT event_id, user_id, event_type, ts, value FROM events ORDER BY event_id")),
     // ExportSnapshot: file-level copy of the v1 snapshot dir, verified
     // by per-bucket digests over source vs export (SyncTable over the
     // two reads) — every bucket must match, proving the shipped files
     // carry the identical row set
-    "export_snapshot" -> ((s, d) => {
+    Query("export_snapshot", (s, d) => {
       val base = ensureSnapshots(s, d)
       val exp = tmp("graft_snap_export", d)
       once(exp)(Snapshots.exportSnapshot(base, 1, exp))
@@ -101,17 +103,30 @@ object SnapshotQueries {
       graft.analytics.Tools.syncTable(
           digests(Snapshots.read(s, base, 1)), digests(Snapshots.read(s, exp, 1)))
         .orderBy("bucket")
-    }),
+    },
+      // the export is a byte copy, so both sides carry the source digest
+      // and every bucket matches
+      Oracle("""WITH h AS (
+        |  SELECT user_id // 10 AS bucket,
+        |         CAST(sum(((event_id % 2147483648) * 2654435761) % 4294967296
+        |             + CAST(floor(value * 100) AS BIGINT)
+        |             + CAST(floor(epoch(ts)) AS BIGINT)) AS BIGINT) AS digest,
+        |         count(*) AS n FROM events GROUP BY 1)
+        |SELECT bucket, digest AS digest_a, n AS rows_a,
+        |       digest AS digest_b, n AS rows_b, true AS is_match
+        |FROM h ORDER BY bucket""".stripMargin)),
     // row-level diff of snapshot v1 vs the post-mutation v2: the setup
     // deleted every even-user row copy-on-write, so the diff is exactly
     // those rows, flagged removed
-    "snapshot_diff" -> ((s, d) => {
+    Query("snapshot_diff", (s, d) => {
       val base = ensureSnapshots(s, d)
       Snapshots.diff(
           Snapshots.read(s, base, 1), Snapshots.read(s, base, 2),
           "event_id", Seq("user_id", "event_type", "ts", "value"))
         .orderBy("event_id")
-    }),
+    },
+      Oracle("""SELECT event_id, 'removed' AS change FROM events
+        |WHERE user_id % 2 = 0 ORDER BY event_id""".stripMargin)),
     // In-place restoreSnapshot (RestoreSnapshotHandler.java:63): the
     // EXISTING table rolls back to the v1 snapshot, and the query is
     // the rollback AUDIT — the dual of snapshot_diff: the current
@@ -123,7 +138,7 @@ object SnapshotQueries {
     // restore itself writes v3 = snapshot content copy-on-write; the
     // spec asserts v3 equals v1 row-for-row and that a clone taken
     // from the snapshot is unaffected by the origin's rollback.
-    "restore_snapshot" -> ((s, d) => {
+    Query("restore_snapshot", (s, d) => {
       // the shared fixture resolves OUTSIDE once(): its own once()
       // would nest inside this one's bin lock (the no-nesting
       // invariant above)
@@ -156,13 +171,24 @@ object SnapshotQueries {
           Snapshots.read(s, base, 1), Snapshots.read(s, base, 2),
           "event_id", Seq("user_id", "event_type", "ts", "value"))
         .orderBy("event_id")
-    }),
+    },
+      // the rollback audit mirror: deletes resurrect, surviving %7
+      // updates revert, %9 re-inserts (ids offset 10^9) are discarded
+      Oracle("""SELECT event_id, 'resurrected' AS change FROM events
+        |WHERE user_id % 2 = 0
+        |UNION ALL
+        |SELECT event_id, 'reverted_update' FROM events
+        |WHERE user_id % 2 <> 0 AND user_id % 7 = 0
+        |UNION ALL
+        |SELECT event_id + 1000000000, 'discarded_insert' FROM events
+        |WHERE user_id % 2 <> 0 AND user_id % 9 = 0
+        |ORDER BY event_id""".stripMargin)),
     // CloneSnapshot (snapshot/CloneSnapshotProcedure): a new table
     // seeded from the v1 snapshot by FILE copy, then mutated
     // independently — diffing source v1 against the clone's own v2
     // shows EXACTLY the clone-side mutation, proving the clone is
     // copy-on-write independent of its origin
-    "snapshot_clone" -> ((s, d) => {
+    Query("snapshot_clone", (s, d) => {
       val base = ensureSnapshots(s, d)
       val cloneBase = tmp("graft_snap_clone", d)
       once(cloneBase) {
@@ -177,28 +203,49 @@ object SnapshotQueries {
           Snapshots.read(s, base, 1), Snapshots.read(s, cloneBase, 2),
           "event_id", Seq("user_id", "event_type", "ts", "value"))
         .orderBy("event_id")
-    }),
+    },
+      // the clone's only divergence from its origin is its own mutation
+      Oracle("""SELECT event_id, 'changed' AS change FROM events
+        |WHERE user_id % 5 = 0 ORDER BY event_id""".stripMargin)),
     // TableSnapshotInputFormat analogue: scan the v1 snapshot dir
     // DIRECTLY — split planning over the per-file region manifest picks
     // only the part files overlapping [3, 8), non-overlapping regions
     // never enter the read (plan-audited: inputFiles strictly shrink)
-    "snapshot_scan_direct" -> ((s, d) => {
+    Query("snapshot_scan_direct", (s, d) => {
       val base = ensureSnapshots(s, d)
       Snapshots.scanDirect(s, base, 1, "user_id", 3L, 8L).orderBy("event_id")
-    }),
+    },
+      // v1 is the events snapshot, so the direct region-file scan must
+      // equal the plain range filter over the base table
+      Oracle("""SELECT event_id, user_id, event_type, ts, value FROM events
+        |WHERE user_id >= 3 AND user_id < 8 ORDER BY event_id""".stripMargin)),
     // MultiTableSnapshotInputFormat: ONE scan over BOTH snapshot
     // versions, each contributing only its overlapping region files
     // (v2 is the post-delete state, so its half of the union is odd
     // users only) — provenance rides the snapshot name column
-    "multi_snapshot_scan" -> ((s, d) => {
+    Query("multi_snapshot_scan", (s, d) => {
       val base = ensureSnapshots(s, d)
       Snapshots.multiSnapshotScan(s,
           Seq(("v1", base, 1), ("v2", base, 2)), "user_id", 3L, 8L)
         .orderBy("snapshot", "event_id")
-    }),
-    "region_split_stats" -> ((s, d) =>
+    },
+      // v1 = the events snapshot, v2 = the copy-on-write state after
+      // deleting even users; the multi-snapshot scan is their union
+      // restricted to the key range, tagged by source snapshot
+      Oracle("""SELECT event_id, user_id, event_type, ts, value, 'v1' AS snapshot
+        |FROM events WHERE user_id >= 3 AND user_id < 8
+        |UNION ALL
+        |SELECT event_id, user_id, event_type, ts, value, 'v2' AS snapshot
+        |FROM events WHERE user_id >= 3 AND user_id < 8 AND user_id % 2 <> 0
+        |ORDER BY snapshot, event_id""".stripMargin)),
+    Query("region_split_stats", (s, d) =>
       regionStats(Tables.load(s, d, "lineitem"), "l_orderkey", 16, "l_quantity")
-        .orderBy("region")),
+        .orderBy("region"),
+      Oracle("""WITH b AS (SELECT min(l_orderkey) AS lo, max(l_orderkey) AS hi FROM lineitem)
+        |SELECT CAST(floor((l_orderkey - lo) * 16 / (hi - lo + 1)) AS BIGINT) AS region,
+        |       count(*) AS n_rows, min(l_orderkey) AS start_key, max(l_orderkey) AS end_key,
+        |       round(sum(l_quantity), 4) AS sum_v
+        |FROM lineitem, b GROUP BY 1 ORDER BY region""".stripMargin)),
     // the 100 TB fact-fact join story: both sides written bucketed on
     // the join key into the same bucket count, so the SortMergeJoin (and
     // the groupBy on the same key) run with ZERO Exchange — the
@@ -209,7 +256,7 @@ object SnapshotQueries {
     // beyond maxVersions, emitting a fresh rowkey-sorted snapshot — the
     // full storage-lifecycle composition (delete markers → TTL →
     // version GC → sorted rewrite) as one verified query.
-    "major_compaction" -> ((s, d) => {
+    Query("major_compaction", (s, d) => {
       val v = Tables.eventCells(s, d)
       // delete markers: drop qualifier 'click' for every 11th user
       val afterDelete = v.where(
@@ -226,8 +273,21 @@ object SnapshotQueries {
           "rowkey", base)
       }
       Layout.read(s, base).orderBy("event_id")
-    }),
-    "bucket_join" -> ((s, d) => {
+    },
+      Oracle("WITH " + Tables.eventCellsSql + s""",
+         |af AS (SELECT * FROM vcells WHERE NOT (rowkey % 11 = 0 AND qualifier = 'click')),
+         |ttl AS (SELECT *, row_number() OVER (PARTITION BY rowkey, family, qualifier
+         |                                     ORDER BY ts DESC, event_id DESC) AS rn
+         |        FROM af),
+         |keep1 AS (SELECT * FROM ttl
+         |          WHERE ts >= (SELECT max(ts) - INTERVAL 15 DAY FROM af) OR rn <= 1),
+         |ranked AS (SELECT rowkey, qualifier, ts, value, event_id,
+         |                  row_number() OVER (PARTITION BY rowkey, family, qualifier
+         |                                     ORDER BY ts DESC, event_id DESC) AS rn2
+         |           FROM keep1)
+         |SELECT rowkey, qualifier, ts, value, event_id FROM ranked
+         |WHERE rn2 <= 3 ORDER BY event_id""".stripMargin)),
+    Query("bucket_join", (s, d) => {
       val sfx = dirKey(d)
       val (ot, lt) = (s"orders_bkt_$sfx", s"lineitem_bkt_$sfx")
       Layout.ensureBucketed(Tables.load(s, d, "orders")
@@ -239,7 +299,11 @@ object SnapshotQueries {
         .groupBy("o_orderkey", "o_totalprice")
         .agg(count(lit(1)).as("n_items"), round(sum(col("l_quantity")), 4).as("sum_qty"))
         .orderBy("o_orderkey")
-    }),
+    },
+      Oracle("""SELECT o_orderkey, o_totalprice, count(*) AS n_items,
+        |       round(sum(l_quantity), 4) AS sum_qty
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_orderkey, o_totalprice ORDER BY o_orderkey""".stripMargin)),
     // Exchange-free AGGREGATE on the bucketed layout (the other half
     // of the co-located story bucket_join tells for joins): grouping
     // by the bucket key, the scan's hash distribution already
@@ -247,7 +311,7 @@ object SnapshotQueries {
     // (asserted in spec; the orderBy's range exchange over the result
     // is the only shuffle). At 100 TB this is the difference between
     // re-shuffling the fact table per rollup and reading it in place.
-    "bucket_agg" -> ((s, d) => {
+    Query("bucket_agg", (s, d) => {
       val sfx = dirKey(d)
       val lt = s"lineitem_bkt_$sfx"
       Layout.ensureBucketed(Tables.load(s, d, "lineitem")
@@ -257,7 +321,11 @@ object SnapshotQueries {
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("n_items"), round(sum(col("l_quantity")), 4).as("sum_qty"))
         .orderBy("l_orderkey")
-    }),
+    },
+      Oracle("""SELECT l_orderkey, count(*) AS n_items,
+        |       round(sum(l_quantity), 4) AS sum_qty
+        |FROM lineitem WHERE l_orderkey < 5000
+        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin)),
     // SnapshotInfo (hbase-server/.../snapshot/SnapshotInfo.java — the
     // admin tool answering "what does this snapshot hold, and how much
     // of it is shared?"): copy-on-write means rows unchanged between
@@ -268,7 +336,7 @@ object SnapshotQueries {
     // single row explodes into the 2-row report (no double evaluation
     // of the join subtree). Physical file counts are layout metadata,
     // spec-asserted rather than oracled.
-    "snapshot_info" -> ((s, d) => {
+    Query("snapshot_info", (s, d) => {
       val base = ensureSnapshots(s, d)
       val v1 = Snapshots.read(s, base, 1)
         .select(col("event_id"), lit(1L).as("_a"))
@@ -288,96 +356,15 @@ object SnapshotQueries {
         )).as("r"))
         .select("r.*")
         .orderBy("version")
-    }),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "snapshot_read" ->
-      "SELECT event_id, user_id, event_type, ts, value FROM events ORDER BY event_id",
-    // the export is a byte copy, so both sides carry the source digest
-    // and every bucket matches
-    "export_snapshot" ->
-      """WITH h AS (
-        |  SELECT user_id // 10 AS bucket,
-        |         CAST(sum(((event_id % 2147483648) * 2654435761) % 4294967296
-        |             + CAST(floor(value * 100) AS BIGINT)
-        |             + CAST(floor(epoch(ts)) AS BIGINT)) AS BIGINT) AS digest,
-        |         count(*) AS n FROM events GROUP BY 1)
-        |SELECT bucket, digest AS digest_a, n AS rows_a,
-        |       digest AS digest_b, n AS rows_b, true AS is_match
-        |FROM h ORDER BY bucket""".stripMargin,
-    "snapshot_diff" ->
-      """SELECT event_id, 'removed' AS change FROM events
-        |WHERE user_id % 2 = 0 ORDER BY event_id""".stripMargin,
-    // the rollback audit mirror: deletes resurrect, surviving %7
-    // updates revert, %9 re-inserts (ids offset 10^9) are discarded
-    "restore_snapshot" ->
-      """SELECT event_id, 'resurrected' AS change FROM events
-        |WHERE user_id % 2 = 0
-        |UNION ALL
-        |SELECT event_id, 'reverted_update' FROM events
-        |WHERE user_id % 2 <> 0 AND user_id % 7 = 0
-        |UNION ALL
-        |SELECT event_id + 1000000000, 'discarded_insert' FROM events
-        |WHERE user_id % 2 <> 0 AND user_id % 9 = 0
-        |ORDER BY event_id""".stripMargin,
-    // v1 is the events snapshot, so the direct region-file scan must
-    // equal the plain range filter over the base table
-    "snapshot_scan_direct" ->
-      """SELECT event_id, user_id, event_type, ts, value FROM events
-        |WHERE user_id >= 3 AND user_id < 8 ORDER BY event_id""".stripMargin,
-    // v1 = the events snapshot, v2 = the copy-on-write state after
-    // deleting even users; the multi-snapshot scan is their union
-    // restricted to the key range, tagged by source snapshot
-    "multi_snapshot_scan" ->
-      """SELECT event_id, user_id, event_type, ts, value, 'v1' AS snapshot
-        |FROM events WHERE user_id >= 3 AND user_id < 8
-        |UNION ALL
-        |SELECT event_id, user_id, event_type, ts, value, 'v2' AS snapshot
-        |FROM events WHERE user_id >= 3 AND user_id < 8 AND user_id % 2 <> 0
-        |ORDER BY snapshot, event_id""".stripMargin,
-    // the clone's only divergence from its origin is its own mutation
-    "snapshot_clone" ->
-      """SELECT event_id, 'changed' AS change FROM events
-        |WHERE user_id % 5 = 0 ORDER BY event_id""".stripMargin,
-    "region_split_stats" ->
-      """WITH b AS (SELECT min(l_orderkey) AS lo, max(l_orderkey) AS hi FROM lineitem)
-        |SELECT CAST(floor((l_orderkey - lo) * 16 / (hi - lo + 1)) AS BIGINT) AS region,
-        |       count(*) AS n_rows, min(l_orderkey) AS start_key, max(l_orderkey) AS end_key,
-        |       round(sum(l_quantity), 4) AS sum_v
-        |FROM lineitem, b GROUP BY 1 ORDER BY region""".stripMargin,
-    "bucket_join" ->
-      """SELECT o_orderkey, o_totalprice, count(*) AS n_items,
-        |       round(sum(l_quantity), 4) AS sum_qty
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderkey, o_totalprice ORDER BY o_orderkey""".stripMargin,
-    "bucket_agg" ->
-      """SELECT l_orderkey, count(*) AS n_items,
-        |       round(sum(l_quantity), 4) AS sum_qty
-        |FROM lineitem WHERE l_orderkey < 5000
-        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-    "major_compaction" ->
-      ("WITH " + Tables.eventCellsSql + s""",
-         |af AS (SELECT * FROM vcells WHERE NOT (rowkey % 11 = 0 AND qualifier = 'click')),
-         |ttl AS (SELECT *, row_number() OVER (PARTITION BY rowkey, family, qualifier
-         |                                     ORDER BY ts DESC, event_id DESC) AS rn
-         |        FROM af),
-         |keep1 AS (SELECT * FROM ttl
-         |          WHERE ts >= (SELECT max(ts) - INTERVAL 15 DAY FROM af) OR rn <= 1),
-         |ranked AS (SELECT rowkey, qualifier, ts, value, event_id,
-         |                  row_number() OVER (PARTITION BY rowkey, family, qualifier
-         |                                     ORDER BY ts DESC, event_id DESC) AS rn2
-         |           FROM keep1)
-         |SELECT rowkey, qualifier, ts, value, event_id FROM ranked
-         |WHERE rn2 <= 3 ORDER BY event_id""".stripMargin),
-    // v1 = the full events snapshot, v2 = after deleting even users,
-    // so shared = v2's rows and each side's unique count follows
-    "snapshot_info" ->
-      """WITH n AS (SELECT (SELECT count(*) FROM events) AS n1,
+    },
+      // v1 = the full events snapshot, v2 = after deleting even users,
+      // so shared = v2's rows and each side's unique count follows
+      Oracle("""WITH n AS (SELECT (SELECT count(*) FROM events) AS n1,
         |                  (SELECT count(*) FROM events WHERE user_id % 2 <> 0) AS n2)
         |SELECT 1 AS version, n1 AS n_rows, n2 AS n_shared,
         |       n1 - n2 AS n_unique FROM n
         |UNION ALL
-        |SELECT 2, n2, n2, 0 FROM n ORDER BY version""".stripMargin,
+        |SELECT 2, n2, n2, 0 FROM n ORDER BY version""".stripMargin)),
   )
+
 }

@@ -223,12 +223,13 @@ class CoreToolsSpec extends SparkSpec {
     // file read and ScaleSpike's corpus synthesis
     val allowed = Map("graft/core/Tables.scala" -> 1, "graft/core/Layout.scala" -> 1,
       "graft/ScaleSpike.scala" -> 1)
-    val call = java.util.regex.Pattern.quote("spark.read.parquet(")
+    // any receiver: `spark.`, `s.`, `df.sparkSession.` ...
+    val call = """\.read\.parquet\(""".r
     val bypass = scala(root).map { f =>
       root.toPath.relativize(f.toPath).toString ->
-        (java.nio.file.Files.readString(f.toPath).split(call, -1).length - 1)
+        call.findAllIn(java.nio.file.Files.readString(f.toPath)).size
     }.filter { case (f, n) => n > allowed.getOrElse(f, 0) }
-    assert(bypass.isEmpty, "spark.read.parquet( outside the read memo — read through " +
+    assert(bypass.isEmpty, ".read.parquet( outside the read memo — read through " +
       "Layout.read / Tables.load instead: " +
       bypass.map { case (f, n) => s"$f ($n)" }.mkString(", "))
   }

@@ -542,15 +542,6 @@ class PipelineSpec extends SparkSpec {
     assert(got(1) == ((2L, 1L, 0L)), got(1).toString)
   }
 
-  test("sharedMemoConsumers names registered queries only") {
-    // the Bench memo_setup gate reads this set; a renamed/removed
-    // query silently un-gating the prewarm must fail here
-    val unknown = graft.pipeline.PipelineQueries.sharedMemoConsumers
-      .diff(SparkEntry.queries.keySet)
-    assert(unknown.isEmpty, s"stale sharedMemoConsumers entries: $unknown")
-    assert(graft.pipeline.PipelineQueries.sharedMemoConsumers.nonEmpty)
-  }
-
   test("dedup candidate generation is bucket-join shaped: no cartesian product") {
     for (df <- Seq(
         Dedup.ngramJaccard(docs, 0.5),

@@ -3,9 +3,8 @@
 DuckDB over the sf parquet tables and compare with the Verify.scala
 parquet dumps (columns sorted by name, rows sorted, exact + tolerant
 compare reported separately). Also lists, by name, the dumped result
-directories with no oracle entry (the rows-only set), so drift between
-the query and oracle maps shows in the output; they do not affect the
-pass count or the exit code."""
+directories with no oracle entry (the queries registered `RowsOnly`);
+they do not affect the pass count or the exit code."""
 import sys, json, glob, os
 import duckdb, pandas as pd, numpy as np
 
