@@ -9,19 +9,24 @@ import graft.dedup.{MinHashSig, SimHash64}
 import graft.filters.FuzzyMatch
 import graft.sim.{TopKStruct, VecDot}
 
-/** Registers graft's native Expressions as SQL functions, so
-  * `spark.sql("... vec_dot(a, b) ...")` works exactly like the
-  * DataFrame API. Two entry points, same registrations:
+/** graft's planner extension: registers graft's native Expressions as
+  * SQL functions, so `spark.sql("... vec_dot(a, b) ...")` works exactly
+  * like the DataFrame API, and installs the [[graft.core.ParamLits]]
+  * physical rule (comparison constants become codegen parameters).
   *
-  *  - config-driven: `spark.sql.extensions=graft.GraftExtensions`
-  *    (the standard SparkSessionExtensions mechanism);
-  *  - imperative: `GraftFunctions.register(spark)` on a live session.
+  * `graft.Session.local` installs it on every session it builds; other
+  * sessions get it with `spark.sql.extensions=graft.GraftExtensions`
+  * (the standard SparkSessionExtensions mechanism).
+  * `GraftFunctions.register(spark)` registers the functions alone on a
+  * live session built elsewhere.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectColumnar(_ => graft.core.ParamLits)
+  }
 }
 
 object GraftFunctions {

@@ -13,8 +13,14 @@ object Session {
     sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)
 
   /** `local[cpus]`, shuffle partitions = cpus, UTC, UI off, codegen
-    * cache sized to the query surface, plus the `SPARK_GRAFT_CONF`
-    * extras.
+    * cache sized to the query surface, [[GraftExtensions]] installed,
+    * plus the `SPARK_GRAFT_CONF` extras.
+    *
+    * The extension puts graft's SQL functions in the session and binds
+    * filter comparison constants as codegen parameters
+    * ([[graft.core.ParamLits]]), so kv reads no longer churn the codegen
+    * cache: a Get, range or multi-get with a new key reuses the class
+    * compiled for the previous one.
     *
     * Codegen cache (r17): the default 100 entries thrash under 314
     * distinct queries (~5 codegen'd stages each), so EVERY bench pass
@@ -42,6 +48,7 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .withExtensions(new GraftExtensions)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv =>
         val i = kv.indexOf('=')

@@ -1,6 +1,6 @@
 package graft.kv
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** AccessController read-path enforcement — the grant-table half of
@@ -81,16 +81,12 @@ object Acl {
     * qualifier-level op is covered by any level down to its exact
     * qualifier, like reads.
     *
-    * Plan shape: same as [[enforceRead]] — the user's few covering
-    * grants broadcast beside the op stream (the AuthManager cache),
-    * authorization is a broadcast semi/anti pair with NO shuffle on
-    * the op side; the ACCEPT/DENY legs are disjoint by construction so
-    * the union needs no dedup. KNOWN COST (r15 advice): the semi/anti
-    * pair EVALUATES the op stream twice — fine for the metadata-sized
-    * mutation batches this models, but a file-backed op stream at
-    * scale should compute the outcome in ONE pass (broadcast LEFT join
-    * against grants pre-aggregated to per-(family, qualifier) cover
-    * flags — the aggregation is what makes one covered op one row).
+    * Plan shape: ONE pass over the op stream with NO shuffle on the op
+    * side. The user's few covering grants (the AuthManager cache) are
+    * collected into a one-row array and broadcast beside the op stream
+    * (a nested-loop join against that single row); each op row then
+    * tests `exists` over the array. A cover test that is NULL counts
+    * as not covered, exactly as in a semi/anti join.
     *
     * @param ops one row per mutation op: at least (family, qualifier)
     *            — qualifier NULL = whole-family op; all columns pass
@@ -98,15 +94,14 @@ object Acl {
   def enforceWrite(ops: DataFrame, grants: DataFrame,
                    user: String, table: String): DataFrame = {
     val g = userGrants(grants, user, table, "W")
-    val writeCover =
-      (col("_gf").isNull || col("_gf") === col("family")) &&
-        (col("_gq").isNull ||
-          (col("qualifier").isNotNull && col("_gq") === col("qualifier")))
-    val accepted = ops.join(broadcast(g), writeCover, "left_semi")
-      .withColumn("outcome", lit("ACCEPT"))
-    val denied = ops.join(broadcast(g), writeCover, "left_anti")
-      .withColumn("outcome", lit("DENY"))
-    accepted.unionByName(denied)
+      .agg(collect_list(struct(col("_gf"), col("_gq"))).as("_g"))
+    val writeCover = (gr: Column) =>
+      (gr("_gf").isNull || gr("_gf") === col("family")) &&
+        (gr("_gq").isNull ||
+          (col("qualifier").isNotNull && gr("_gq") === col("qualifier")))
+    ops.crossJoin(broadcast(g))
+      .withColumn("outcome", when(exists(col("_g"), writeCover), "ACCEPT").otherwise("DENY"))
+      .drop("_g")
   }
 
   /** Cell-level ACL read enforcement (hbase-server/.../security/access/

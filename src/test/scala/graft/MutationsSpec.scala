@@ -1092,6 +1092,28 @@ class MutationsSpec extends SparkSpec {
       ("u", Some("t"), Some("act"), Some("purchase"), "W"))) == Set(1L, 2L, 3L, 5L))
   }
 
+  test("Acl.enforceWrite reads the op stream once: one scan, no shuffle, same outcomes") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("acl_ops").toString
+    Seq((1L, "web", Option("click")), (2L, "act", Option("purchase")),
+        (3L, "act", Option("error")), (4L, "web", None), (5L, "act", None))
+      .toDF("op_idx", "family", "qualifier").write.parquet(s"$dir/ops")
+    val grants = Seq(("u", Option("t"), Option("web"), Option.empty[String], "W"),
+        ("u", Option("t"), Option("act"), Option("purchase"), "RW"))
+      .toDF("grantee", "tbl", "family", "qualifier", "perm")
+    val out = graft.kv.Acl.enforceWrite(spark.read.parquet(s"$dir/ops"), grants, "u", "t")
+    assert(out.orderBy("op_idx").select("outcome").as[String].collect().toSeq ==
+      Seq("ACCEPT", "ACCEPT", "DENY", "ACCEPT", "DENY"))
+    val plan = out.queryExecution.executedPlan
+    val opsScans = Plans.collectWithSubqueries(plan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.endsWith("/ops")) => s
+    }
+    assert(opsScans.size == 1, plan.toString)
+    assert(!plan.toString.contains("Exchange hashpartitioning"), plan.toString)
+  }
+
   test("Acl.enforceReadCellAcls: tag perms read from the SECOND field, default deny") {
     import spark.implicits._
     // the perm field is split_part(tag, ':', 2) — a multi-colon tag's
