@@ -22,6 +22,8 @@ import scala.collection.mutable
   * consumers waste class: metadata relations under several forks
   * collapse with `Tools.materializeMeta`; per-page scans with pushed
   * point/range predicates are the operation's semantics — leave them.
+  * Each scan line carries the files the last timed run read
+  * (`numFiles`), so a kv read that stops pruning region files shows.
   *
   * `--plans DIR SUFFIX` also writes the formatted plan to
   * `DIR/<query>_<SUFFIX>.txt` (the `plans/rNN/` artifacts).
@@ -84,6 +86,15 @@ object Probe extends AdaptiveSparkPlanHelper {
     val spark = Session.local(Session.cpus(32))
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
+    // the plans the timed materializations ran: their scans carry the
+    // numFiles metric, which the unexecuted df.queryExecution lacks
+    val ran = mutable.ArrayBuffer[org.apache.spark.sql.execution.QueryExecution]()
+    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = ran.synchronized(ran += qe)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    })
     def drainBus(): Unit = org.apache.spark.sql.graftbridge.ListenerBridge
       .waitUntilEmpty(spark.sparkContext)
     opts.plans.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
@@ -100,6 +111,7 @@ object Probe extends AdaptiveSparkPlanHelper {
       drainBus()
       val df = (1 to opts.repeat).map { rep =>
         log.reset()
+        ran.synchronized(ran.clear())
         // the compile COUNT, not the sampled histogram reservoir (whose
         // value sum under-reports once compiles exceed the reservoir)
         val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -134,15 +146,19 @@ object Probe extends AdaptiveSparkPlanHelper {
         df
       }.last
       val scans = collectWithSubqueries(df.queryExecution.executedPlan) {
-        case s: FileSourceScanExec =>
-          (s.relation.location.rootPaths.map(p => srcKey(p.toString)),
-            s.metadata.getOrElse("PushedFilters", "[]"))
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(p => srcKey(p.toString))
       }
-      scans.flatMap(_._1).groupBy(identity).toSeq
+      scans.flatten.groupBy(identity).toSeq
         .sortBy { case (src, n) => (-n.size, src) }
         .foreach { case (src, n) => println(f"   scans $src%-28s x${n.size}%d") }
-      scans.foreach { case (srcs, pushed) =>
-        println(s"   scan ${srcs.mkString(",")} PushedFilters: $pushed") }
+      val read = ran.synchronized(ran.toList).flatMap(qe =>
+        collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec =>
+            (s.relation.location.rootPaths.map(p => srcKey(p.toString)),
+              s.metadata.getOrElse("PushedFilters", "[]"), s.metrics("numFiles").value)
+        })
+      read.foreach { case (srcs, pushed, files) =>
+        println(s"   scan ${srcs.mkString(",")} PushedFilters: $pushed numFiles: $files") }
       opts.plans.foreach { case (dir, suffix) =>
         val path = Paths.get(dir, s"${name}_$suffix.txt")
         Files.writeString(path, df.queryExecution.explainString(FormattedMode))

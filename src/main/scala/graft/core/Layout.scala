@@ -6,9 +6,13 @@ import org.apache.spark.sql.functions._
 /** Physical layout: the HBase region model (rowkey-sorted HFiles per
   * region) re-expressed as rowkey-range-partitioned, within-partition-
   * sorted parquet. Each output file covers a disjoint key range with
-  * monotone pages, so a rowkey range predicate prunes at three levels —
-  * partition file min/max, row-group stats, page index — which is the
-  * moral equivalent of region pruning + HFile block index seeks.
+  * monotone pages, so a rowkey predicate prunes at three levels, the
+  * moral equivalent of region pruning + HFile block index seeks:
+  *  - files: [[read]] keeps each file's footer min/max per integral
+  *    column ([[RegionIndex]]), and a scan never opens a file whose
+  *    range misses its pushed key predicates;
+  *  - row groups, by their statistics;
+  *  - pages, by the page index.
   */
 object Layout {
 
@@ -23,7 +27,8 @@ object Layout {
 
   /** The parquet at `path`, resolved once per (session, path, stamp)
     * through [[Tables.readMemo]]: plans, not results — a rewrite of
-    * the path is seen by the next read because its stamp changes. */
+    * the path is seen by the next read because its stamp changes. The
+    * relation prunes files by their footer key ranges. */
   def read(spark: SparkSession, path: String): DataFrame =
     Tables.read(spark, path, "Layout.read: parquet")
 
@@ -204,73 +209,67 @@ object Snapshots {
       .select(col(keyCol), col("change"))
   }
 
-  /** The snapshot's region manifest: per part-file key-range stats
-    * (start/end key + row count). [[Layout.writeSorted]] range-
-    * partitions on the rowkey, so each part file IS a region — disjoint
-    * key range, sorted within — and this table is the split table
-    * TableSnapshotInputFormat derives from the snapshot manifest
-    * (hbase-server/.../mapreduce/TableSnapshotInputFormat.java:86,
-    * one split per region with its key range). Built from a single-
-    * column pass over the snapshot (only `keyCol` is read — column
-    * pruning keeps it at one thin column even when the snapshot is
-    * wide); at real scale a pipeline persists this at snapshot-write
-    * time exactly like the reference's manifest. */
+  /** The snapshot's region manifest: one row per non-empty part file
+    * with its key range and row count (file, start_key, end_key,
+    * n_rows). [[Layout.writeSorted]] range-partitions on the rowkey, so
+    * each part file IS a region — disjoint key range, sorted within —
+    * and this table is the split table TableSnapshotInputFormat derives
+    * from the snapshot manifest (hbase-server/.../mapreduce/
+    * TableSnapshotInputFormat.java:86, one split per region with its
+    * key range). A driver-local view, no Spark job: the ranges and row
+    * counts are the footer statistics [[Tables.read]] keeps once per
+    * version ([[Region]]), the same once-per-open read the reference
+    * makes of its persisted manifest. start_key/end_key are NULL when
+    * every key in the file is NULL, or when its footer carries no key
+    * statistics. */
   def regionManifest(spark: SparkSession, base: String, version: Int,
                      keyCol: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val regions = keyed(spark, base, version, keyCol)._2
+    val rows = regions.filter(_.rows > 0).sortBy(_.file.getPath.toString).map { r =>
+      val s = r.spans.get(keyCol).filter(_.nonEmpty)
+      Row(r.file.getPath.toUri.toString, s.map(x => Long.box(x.lo)).orNull,
+        s.map(x => Long.box(x.hi)).orNull, r.rows)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("file", StringType, nullable = false),
+      StructField("start_key", LongType), StructField("end_key", LongType),
+      StructField("n_rows", LongType, nullable = false))))
+  }
+
+  /** A version's read and its footer regions, after checking `keyCol`
+    * is an integral column: a string rowkey has no numeric range
+    * semantics here at all. The check matches simpleString names
+    * (tinyint/smallint, not the Scala-side byte/short), so Byte and
+    * Short keys pass. */
+  private def keyed(spark: SparkSession, base: String, version: Int,
+                    keyCol: String): (DataFrame, Seq[Region]) = {
     val src = read(spark, base, version)
-    // integral keys only, widened to bigint: the manifest's consumers
-    // (scanDirect's collect) read start/end as Long — an IntegerType
-    // rowkey would ClassCastException at SCAN time, far from the
-    // write that fixed the type (r12 core review); a string rowkey
-    // has no numeric range semantics here at all
-    // simpleString vocabulary: tinyint/smallint, NOT the Scala-side
-    // byte/short names — the old allowlist could never match a
-    // ByteType/ShortType rowkey and rejected the very keys the bigint
-    // widening below exists to carry (r12 core review)
     val kt = src.schema(keyCol).dataType
     require(Seq("tinyint", "smallint", "int", "bigint").contains(kt.simpleString),
       s"regionManifest needs an integral key column; '$keyCol' is $kt")
-    src
-      .select(input_file_name().as("file"), col(keyCol).cast("bigint").as(keyCol))
-      .groupBy("file")
-      .agg(min(col(keyCol)).as("start_key"), max(col(keyCol)).as("end_key"),
-        count(lit(1)).as("n_rows"))
+    (src, Region.of(src)._3.regions.values.toSeq)
   }
 
   /** TableSnapshotInputFormat-style DIRECT snapshot scan: read the
     * snapshot's files with no serving table in the path, touching ONLY
     * the region files whose key range overlaps `[lo, hi)`. The file
-    * pick is driver-side over the manifest's #regions rows — the same
-    * O(regions) work the reference's getSplits does when it turns the
-    * snapshot manifest into splits; the data itself never routes
-    * through a scan of non-overlapping regions (they are absent from
-    * the read, not filtered after it). The residual in-file predicate
-    * still pushes to parquet for the boundary regions. */
-  // manifest rows memoized per (session, version path, stamp, keyCol)
-  // — the read memo's key (Tables.stampKey): recomputing the manifest,
-  // a full thin-column scan + shuffle, on EVERY direct-scan call
-  // charged the "pruned" read more IO than an unpruned one (the
-  // reference persists the manifest at snapshot-write time). Any
-  // rewrite of the version — in process or not, filling an empty one
-  // included — writes fresh part-file names, so it changes the stamp
-  // and the next scan rebuilds. Past the cap the memo resets.
-  private val manifests = new java.util.concurrent.ConcurrentHashMap[
-    (Tables.LoadKey, String), Array[(String, Long, Long)]]()
-
+    * pick is driver-side over the version's footer ranges, which
+    * [[Tables.read]] resolved once per version — the same O(regions)
+    * work the reference's getSplits does when it turns the snapshot
+    * manifest into splits; non-overlapping regions are absent from the
+    * read (`inputFiles` shrinks), not filtered after it. The residual
+    * in-file predicate still pushes to parquet for the boundary
+    * regions. A file whose footer has no key statistics is kept. */
   def scanDirect(spark: SparkSession, base: String, version: Int,
                  keyCol: String, lo: Long, hi: Long): DataFrame = {
     require(hi >= lo, s"bad range [$lo, $hi)")
-    val key = (Tables.stampKey(spark, "Snapshots.scanDirect: snapshot",
-      path(base, version)), keyCol)
-    if (manifests.size >= Tables.memoCap) manifests.clear()
-    val picked = manifests.computeIfAbsent(key, _ =>
-      regionManifest(spark, base, version, keyCol)
-        .select("file", "start_key", "end_key").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
-      .filter { case (_, s0, e0) => s0 < hi && e0 >= lo }.map(_._1)
-    val pred = col(keyCol) >= lo && col(keyCol) < hi
-    if (picked.isEmpty) read(spark, base, version).where(lit(false))
-    else spark.read.parquet(picked.toIndexedSeq: _*).where(pred)
+    val (src, regions) = keyed(spark, base, version, keyCol)
+    def overlaps(r: Region): Boolean =
+      r.rows > 0 && r.spans.get(keyCol).forall(s => s.nonEmpty && s.lo < hi && s.hi >= lo)
+    if (!regions.exists(overlaps)) src.where(lit(false))
+    else Region.restrict(src, overlaps).where(col(keyCol) >= lo && col(keyCol) < hi)
   }
 
   /** MultiTableSnapshotInputFormat (hbase-server/.../mapreduce/
@@ -284,7 +283,7 @@ object Snapshots {
     * name).
     *
     * Scale shape: split pruning is driver-side over each snapshot's
-    * #regions-row manifest (exactly the reference's getSplits cost);
+    * footer ranges (exactly the reference's getSplits cost);
     * the union is a no-shuffle concatenation of pruned scans, and the
     * residual key predicate still pushes into every parquet leaf. */
   def multiSnapshotScan(spark: SparkSession,

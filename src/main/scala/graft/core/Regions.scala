@@ -1,0 +1,176 @@
+package graft.core
+
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnPath, ParquetMetadata}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.types._
+
+/** One part file as its parquet footer describes it: the file, its row
+  * count, and the signed [lo, hi] of each integral column's non-null
+  * values. HBase keeps the same per-store-file [firstKey, lastKey] from
+  * the HFile trailer and skips every file that cannot hold the row
+  * (StoreFile.Reader.passesKeyRangeFilter). A column is absent from
+  * `spans` when some row group carries no usable statistics for it;
+  * then nothing is known and every predicate on it keeps the file. */
+private[graft] final case class Region(file: FileStatus, rows: Long,
+                                       spans: Map[String, Region.Span]) {
+  import Region._
+
+  /** Whether some row of this file can satisfy `p`. False only when an
+    * `=`, `<`, `<=`, `>`, `>=`, `In` or `InSet` of an integral column
+    * against integral literals, under And/Or, excludes the column's
+    * whole range; every other predicate keeps the file. */
+  def mayHold(p: Expression): Boolean = p match {
+    case And(l, r) => mayHold(l) && mayHold(r)
+    case Or(l, r) => mayHold(l) || mayHold(r)
+    case EqualTo(Key(s), Lit(v)) => s.holds(v)
+    case EqualTo(Lit(v), Key(s)) => s.holds(v)
+    case LessThan(Key(s), Lit(v)) => s.nonEmpty && s.lo < v
+    case LessThan(Lit(v), Key(s)) => s.nonEmpty && s.hi > v
+    case LessThanOrEqual(Key(s), Lit(v)) => s.nonEmpty && s.lo <= v
+    case LessThanOrEqual(Lit(v), Key(s)) => s.nonEmpty && s.hi >= v
+    case GreaterThan(Key(s), Lit(v)) => s.nonEmpty && s.hi > v
+    case GreaterThan(Lit(v), Key(s)) => s.nonEmpty && s.lo < v
+    case GreaterThanOrEqual(Key(s), Lit(v)) => s.nonEmpty && s.hi >= v
+    case GreaterThanOrEqual(Lit(v), Key(s)) => s.nonEmpty && s.lo <= v
+    case In(Key(s), list) if list.forall(Lit.unapply(_).isDefined) =>
+      list.flatMap(Lit.unapply).exists(s.holds)
+    // InSet holds boxed values of the column's type; a NULL member
+    // matches no row
+    case InSet(Key(s), set) =>
+      set.exists(v => v != null && s.holds(v.asInstanceOf[Number].longValue))
+    case _ => true
+  }
+
+  private object Key {
+    def unapply(e: Expression): Option[Span] = e match {
+      case a: AttributeReference if integral(a.dataType) => spans.get(a.name)
+      case _ => None
+    }
+  }
+}
+
+private[graft] object Region {
+  /** The non-null values of one column lie in [lo, hi]; lo > hi when
+    * the file holds none (no rows, or every value NULL). */
+  final case class Span(lo: Long, hi: Long) {
+    def nonEmpty: Boolean = lo <= hi
+    def holds(v: Long): Boolean = lo <= v && v <= hi
+    def union(o: Span): Span = Span(math.min(lo, o.lo), math.max(hi, o.hi))
+  }
+  val NoValues: Span = Span(Long.MaxValue, Long.MinValue)
+
+  private def integral(t: DataType): Boolean =
+    t == ByteType || t == ShortType || t == IntegerType || t == LongType
+
+  private object Lit {
+    def unapply(e: Expression): Option[Long] = e match {
+      case Literal(v: Number, t) if integral(t) => Some(v.longValue)
+      case _ => None
+    }
+  }
+
+  /** The region of `file` from its `footer`, with spans for the
+    * integral columns of `schema` stored as signed INT32/INT64 (no
+    * unsigned annotation: their min/max would not order as Spark's
+    * signed values do). */
+  def apply(file: FileStatus, footer: ParquetMetadata, schema: StructType): Region = {
+    val blocks = footer.getBlocks.asScala.toSeq
+    val fileSchema = footer.getFileMetaData.getSchema
+    val spans = schema.fields.iterator
+      .filter(f => integral(f.dataType) && signedInt(fileSchema, f.name))
+      .flatMap(f => span(blocks, ColumnPath.get(f.name)).map(f.name -> _))
+      .toMap
+    Region(file, blocks.map(_.getRowCount).sum, spans)
+  }
+
+  private def signedInt(s: MessageType, name: String): Boolean =
+    s.containsField(name) && {
+      val t = s.getType(s.getFieldIndex(name))
+      t.isPrimitive && {
+        val p = t.asPrimitiveType
+        (p.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
+          p.getPrimitiveTypeName == PrimitiveTypeName.INT64) &&
+          (p.getLogicalTypeAnnotation match {
+            case null => true
+            case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+            case _ => false
+          })
+      }
+    }
+
+  /** The union of the row groups' [min, max] for `column`; None when a
+    * non-empty row group has no statistics for it, or NULL-count-only
+    * statistics that do not cover every row. */
+  private def span(blocks: Seq[BlockMetaData], column: ColumnPath): Option[Span] =
+    blocks.filter(_.getRowCount > 0).foldLeft(Option(NoValues)) { (acc, b) =>
+      acc.flatMap { s =>
+        b.getColumns.asScala.find(_.getPath == column).map(_.getStatistics).flatMap { st =>
+          if (st == null || st.isEmpty) None
+          else if (st.hasNonNullValue) Some(s.union(Span(
+            st.genericGetMin.asInstanceOf[Number].longValue,
+            st.genericGetMax.asInstanceOf[Number].longValue)))
+          else if (st.isNumNullsSet && st.getNumNulls == b.getRowCount) Some(s)
+          else None
+        }
+      }
+    }
+
+  /** The memo'd relation under a [[Tables.read]] result and its index. */
+  def of(df: DataFrame): (LogicalRelation, HadoopFsRelation, RegionIndex) =
+    df.queryExecution.analyzed.collectFirst {
+      case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) if h.location.isInstanceOf[RegionIndex] =>
+        (lr, h, h.location.asInstanceOf[RegionIndex])
+    }.getOrElse(throw new IllegalArgumentException(
+      "not a region-indexed read: resolve it through Tables.read / Layout.read"))
+
+  /** A fresh relation over the files of the [[Tables.read]] result `df`
+    * that `keep` selects — a driver-local view of the same index: no
+    * listing, no footer read, and `inputFiles` shrinks to the pick. */
+  def restrict(df: DataFrame, keep: Region => Boolean): DataFrame = {
+    val (lr, h, index) = of(df)
+    val view = index.restrict(index.regions.collect { case (p, r) if keep(r) => p }.toSet)
+    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(df.sparkSession,
+      lr.copy(relation = h.copy(location = view)(h.sparkSession)).newInstance())
+  }
+}
+
+/** A file index that drops, per scan, every file whose footer key
+  * ranges ([[Region.mayHold]]) cannot satisfy the scan's pushed data
+  * filters. Listing, partitioning and refresh are `inner`'s; files the
+  * footer pass never saw are always kept. `only`, when set, is a fixed
+  * file subset (a split pick). Equality is by root paths, as
+  * InMemoryFileIndex's is, so `sameResult` and exchange reuse treat two
+  * reads of one path as the same relation. */
+private[graft] final class RegionIndex(inner: FileIndex, val regions: Map[Path, Region],
+                                       only: Option[Set[Path]] = None) extends FileIndex {
+  override def rootPaths: Seq[Path] = only.fold(inner.rootPaths)(_.toSeq.sortBy(_.toString))
+
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    inner.listFiles(partitionFilters, dataFilters).map(d => d.copy(files = d.files.filter { f =>
+      only.forall(_(f.getPath)) &&
+        regions.get(f.getPath).forall(r => dataFilters.forall(r.mayHold))
+    }))
+
+  override def inputFiles: Array[String] =
+    only.fold(inner.inputFiles)(_.toArray.map(_.toUri.toString).sorted)
+  override def refresh(): Unit = inner.refresh()
+  override def sizeInBytes: Long =
+    only.fold(inner.sizeInBytes)(_.toSeq.flatMap(regions.get).map(_.file.getLen).sum)
+  override def partitionSchema: StructType = inner.partitionSchema
+  override def metadataOpsTimeNs: Option[Long] = inner.metadataOpsTimeNs
+
+  def restrict(files: Set[Path]): RegionIndex = new RegionIndex(inner, regions, Some(files))
+
+  override def equals(other: Any): Boolean = other match {
+    case r: RegionIndex => rootPaths.toSet == r.rootPaths.toSet
+    case _ => false
+  }
+  override def hashCode: Int = rootPaths.toSet.hashCode
+}

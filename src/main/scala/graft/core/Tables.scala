@@ -1,5 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,60 +16,33 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Whether the parquet at `path` (a single file or a directory of
-    * part files) encodes its `ts` column as TIMESTAMP(NANOS) — read
-    * from footers with ParquetFileReader, driver-side, no Spark plan
-    * and no session-conf round-trip (a temporary session-wide
-    * nanosAsLong flag was visible to concurrent unrelated loads). */
-  private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    def footerIsNanos(file: Path): Boolean = {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      try {
-        import org.apache.parquet.schema.LogicalTypeAnnotation
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        // getFieldIndex form sidesteps MessageType's varargs getType
-        // overload (ambiguous vs GroupType's single-String one in Scala)
-        schema.getType(schema.getFieldIndex("ts"))
-          .getLogicalTypeAnnotation match {
+  /** Whether the events parquet at `path` encodes its `ts` column as
+    * TIMESTAMP(NANOS), read from the footers [[loadFresh]] already holds
+    * (no Spark plan, and no session-conf round-trip: a temporary
+    * session-wide nanosAsLong flag was visible to concurrent unrelated
+    * loads). Every file must agree: a dir holding two data generations
+    * fails, naming the first file and the first one that disagrees. */
+  private def tsIsNanos(path: String, footers: Seq[(FileStatus, ParquetMetadata)]): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    def nanos(m: ParquetMetadata): Boolean = {
+      val schema = m.getFileMetaData.getSchema
+      // getFieldIndex form sidesteps MessageType's varargs getType
+      // overload (ambiguous vs GroupType's single-String one in Scala)
+      schema.containsField("ts") &&
+        (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
           case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
             t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
           case _ => false
-        }
-      } finally reader.close()
+        })
     }
-    if (fs.getFileStatus(p).isDirectory) {
-      // FILES only: a partitioned/nested layout would hand
-      // ParquetFileReader a subdirectory and fail obscurely — name the
-      // layout problem instead
-      val entries = fs.listStatus(p).filter(_.isFile).map(_.getPath)
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .sortBy(_.getName)
-      if (entries.isEmpty) throw new IllegalStateException(
-        s"tsIsNanos: no data FILES directly under $path — " +
-          "nested/partitioned parquet layouts need a flat events dir " +
-          "(one generation of part files)")
-      // mixed-generation guard: one footer per write job. Spark names
-      // part files part-NNNNN-<job uuid>-cNNN, and two jobs' files
-      // interleave lexicographically, so no fixed pair of endpoints
-      // speaks for the dir. A file with no job uuid is its own group.
-      // Runs on a memo miss only: |jobs| footer reads per stamp.
-      val jobUuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
-      val probes = entries.groupBy(f => jobUuid.findFirstIn(f.getName).getOrElse(f.getName))
-        .values.map(_.head).toSeq.sortBy(_.getName)
-        .map(f => f -> footerIsNanos(f))
-      probes.find(_._2 != probes.head._2).foreach { case (f, _) =>
-        throw new IllegalStateException(
-          s"tsIsNanos: mixed ts encodings under $path — " +
-            s"${probes.head._1.getName} and ${f.getName} disagree " +
-            "on TIMESTAMP(NANOS); regenerate the dir as one generation")
-      }
-      probes.head._2
-    } else footerIsNanos(p)
+    val probes = footers.map { case (f, m) => f.getPath -> nanos(m) }
+    probes.find(_._2 != probes.head._2).foreach { case (f, _) =>
+      throw new IllegalStateException(
+        s"tsIsNanos: mixed ts encodings under $path — " +
+          s"${probes.head._1.getName} and ${f.getName} disagree " +
+          "on TIMESTAMP(NANOS); regenerate the dir as one generation")
+    }
+    probes.head._2
   }
 
   /** Session-scoped PLAN memo — the one reader of every parquet path
@@ -74,7 +51,8 @@ object Tables {
     * fresh `spark.read.parquet` relists the path and runs schema
     * inference (a one-task Spark job reading a footer) per call; HBase
     * opens a store file's reader once per region open, and this is the
-    * same once-per-version resolution. Invariants:
+    * same once-per-version resolution ([[loadFresh]]: one listing and
+    * one driver-side footer read per file, no Spark job). Invariants:
     *  - plans, not results: the memo holds the resolved DataFrame, and
     *    every action against it still scans parquet;
     *  - stamp-keyed: the key is (session, path, [[pathStamp]]), and
@@ -98,7 +76,6 @@ object Tables {
     * missing path fails naming `what` and the path (a raw Hadoop
     * FileNotFoundException names neither). */
   private def pathStamp(spark: SparkSession, what: String, path: String): String = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val root = try fs.getFileStatus(p) catch {
@@ -115,7 +92,7 @@ object Tables {
       scala.util.hashing.MurmurHash3.seqHash(files.map(_.getPath.toString).sorted)
   }
 
-  private[graft] def stampKey(spark: SparkSession, what: String, path: String): LoadKey =
+  private def stampKey(spark: SparkSession, what: String, path: String): LoadKey =
     LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark),
       path, pathStamp(spark, what, path))
 
@@ -130,7 +107,7 @@ object Tables {
       readMemo.keySet().removeIf(k =>
         k.session == key.session && k.path == path && k.stamp != key.stamp)
       if (readMemo.size >= memoCap) readMemo.clear()
-      readMemo.computeIfAbsent(key, _ => loadFresh(spark, path, events))
+      readMemo.computeIfAbsent(key, _ => loadFresh(spark, path, what, events))
     }
   }
 
@@ -138,7 +115,14 @@ object Tables {
     read(spark, s"$sfDir/$name.parquet", s"Tables.load: table '$name'",
       events = name == "events")
 
-  /** events.parquet has shipped with two ts encodings across data
+  /** Resolve the parquet at `path` with no Spark job: list it as
+    * `spark.read.parquet` would, read every data file's footer once on
+    * the driver, and build the relation over a [[RegionIndex]] of the
+    * footers' key ranges, so a scan whose pushed filters miss a file's
+    * range never opens it. The schema is the one Spark's non-merging
+    * inference derives, from the first data file by path.
+    *
+    * events.parquet has shipped with two ts encodings across data
     * generations: TIMESTAMP(NANOS) (which Spark's vectorized reader
     * rejects — read nanos as long, integer-div to µs; exact, the
     * generator emits µs precision and the DuckDB oracle also truncates
@@ -147,13 +131,37 @@ object Tables {
     * way normalize to TimestampType (LTZ): watermarks reject
     * TIMESTAMP_NTZ, and the UTC session timezone makes the NTZ→LTZ
     * cast wall-clock exact. */
-  private def loadFresh(spark: SparkSession, path: String, events: Boolean): DataFrame = {
-    val nanos = events && tsIsNanos(spark, path)
+  @annotation.nowarn("cat=deprecation")
+  private def loadFresh(spark: SparkSession, path: String, what: String,
+                        events: Boolean): DataFrame = {
+    import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val listing = new InMemoryFileIndex(spark,
+      Seq(root.getFileSystem(conf).makeQualified(root)), Map.empty, None)
+    // readFooter(conf, status, …), not ParquetFileReader.open(
+    // HadoopInputFile…): 64 warmed footers on a 4-core host took 40-80
+    // ms this way and 0.9-1.0 s that way
+    val footers = listing.allFiles().filter(_.getLen > 0).sortBy(_.getPath.toString).map { f =>
+      f -> (try ParquetFileReader.readFooter(conf, f, ParquetMetadataConverter.NO_FILTER)
+      catch { case e: Exception => throw new IllegalStateException(
+        s"$what: unreadable parquet footer ${f.getPath}", e) })
+    }
+    if (footers.isEmpty) throw new IllegalArgumentException(
+      s"$what: no parquet data files under $path")
+    val nanos = events && tsIsNanos(path, footers)
     // NANOS generation: the flag must be set AND stay set — the scan
-    // consults it again at execution. Other NANOS parquet in the
-    // session reads as long too; a constant "true" never races.
+    // consults it again at execution, and the schema conversion below
+    // reads it. Other NANOS parquet in the session reads as long too;
+    // a constant "true" never races.
     if (nanos) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path)
+    val schema = org.apache.spark.sql.graftbridge.ParquetBridge
+      .dataSchema(spark, footers.head._1.getPath, footers.head._2)
+    val regions = footers.map { case (f, m) => f.getPath -> Region(f, m, schema) }.toMap
+    val relation = HadoopFsRelation(new RegionIndex(listing, regions),
+      listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)
+    val df = org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark, LogicalRelation(relation))
     if (nanos) df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else if (events &&
       df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)

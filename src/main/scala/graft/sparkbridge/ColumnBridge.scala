@@ -127,3 +127,25 @@ object PlanBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 }
+
+/** Spark's parquet footer helpers for graft's read memo, which reads
+  * each part file's footer once on the driver (graft.core.Tables.read)
+  * instead of running Spark's one-task schema-inference job. */
+object ParquetBridge {
+  import org.apache.hadoop.fs.Path
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.metadata.ParquetMetadata
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  /** The data schema a non-merging `spark.read.parquet` infers from
+    * this footer: the Spark schema the writer stored in the footer, or
+    * else the session-configured footer conversion — then widened to
+    * nullable, as DataSource does for every file source. */
+  def dataSchema(spark: org.apache.spark.sql.SparkSession, file: Path,
+                 footer: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+      .asNullable
+}
