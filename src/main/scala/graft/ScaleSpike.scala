@@ -227,8 +227,9 @@ object ScaleSpike {
       graft.pipeline.PipelineQueries.resetShared()
       val t0 = System.nanoTime()
       // same action as Bench, CONSTRUCTION INCLUDED: several closures
-      // do O(N) eager driver-side setup (ensureBucketed writes, index
-      // ensures, snapshot ingests) — building the frame outside the
+      // do O(N) eager driver-side setup (the graft.core.Once builds:
+      // ensureBucketed writes, Indexes.ensure dirs and snapshot
+      // ingests) — building the frame outside the
       // window would hide a superlinear regression living in setup
       // from the exact tool built to catch superlinear scaling. The
       // noop write is Bench's action: full materialization, so a

@@ -26,10 +26,6 @@ object AnalyticsQueries {
       .select(col("peer_id"), to_timestamp(col("_wm")).as("replicated_upto"))
   }
 
-  /** Per-sfDir temp path — THE shared helper (SnapshotQueries.tmp). */
-  private def tmp(name: String, sfDir: String): String =
-    graft.core.SnapshotQueries.tmp(name, sfDir)
-
   /** The deliberately corrupted META catalog hbck_region_chain AND
     * hbck_repair_plan both run against (audit and fix must see the
     * SAME defects): 16 uniform regions over the orders keyspace with
@@ -204,7 +200,7 @@ object AnalyticsQueries {
     Query("export_import", (s, d) =>
       Tools.exportImport(
           Tables.load(s, d, "orders"), col("o_totalprice") > 400000,
-          tmp("graft_export_import", d))
+          graft.core.Indexes.ensure(s, d, "export_import")(_ => ()))
         .select("o_orderkey", "o_orderstatus", "o_totalprice").orderBy("o_orderkey"),
       Oracle("""SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
         |WHERE o_totalprice > 400000 ORDER BY o_orderkey""".stripMargin)),

@@ -32,33 +32,25 @@ object Layout {
   def read(spark: SparkSession, path: String): DataFrame =
     Tables.read(spark, path, "Layout.read: parquet")
 
-  /** Bucket `df` unless this JVM already holds `table`. Bucketing is
-    * ingest-time work done once; the recurring operation a bucketed
+  /** Bucket `df` unless this context already holds `table`. Bucketing
+    * is ingest-time work done once; the recurring operation a bucketed
     * layout exists FOR is the exchange-free join/agg on top of it — so
     * repeated calls (e.g. a benchmark's warmup + timed pass) must not
-    * re-pay the write. A fresh JVM has an empty in-memory catalog and
-    * always rewrites, so stale on-disk leftovers are never trusted. */
-  private val bucketing =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    * re-pay the write. Built through [[Once]], keyed by TABLE, not
+    * (session, table): spark.newSession() shares the catalog and the
+    * warehouse location, so per-session keys would let two sessions
+    * run DROP/delete/create concurrently on the SAME path. The catalog
+    * check covers a table dropped out-of-band; a stopped context's
+    * entries are swept, so a restarted context (a fresh in-memory
+    * catalog) rewrites rather than trusting stale on-disk leftovers. */
+  private val bucketed = new Once[Unit]
 
   def ensureBucketed(df: => DataFrame, keyCol: String, buckets: Int, table: String)
                     (spark: SparkSession): Unit =
-    // computeIfAbsent, not bare check-then-act: two threads racing the
-    // same table (bucket_join and bucket_agg share lineitem_bkt) would
-    // both see tableExists=false and concurrently DROP/delete/create —
-    // the same once-per-JVM discipline as Indexes.ensure. The catalog
-    // check stays inside for the leaf-write case of a table dropped
-    // out-of-band; a thrown write caches nothing. Keyed by TABLE, not
-    // (session, table): spark.newSession() shares the catalog and the
-    // warehouse location, so per-session keys let two sessions run
-    // DROP/delete/create concurrently on the SAME path — the exact
-    // corruption race the map exists to close (r12 core review).
-    bucketing.computeIfAbsent(table,
-      _ => {
-        if (!spark.catalog.tableExists(table))
-          writeBucketed(df, keyCol, buckets, table)
-        java.lang.Boolean.TRUE
-      })
+    bucketed(spark, table) {
+      if (!spark.catalog.tableExists(table))
+        writeBucketed(df, keyCol, buckets, table)
+    }
 
   /** Write as a bucketed+sorted catalog table: both sides of a future
     * equi-join bucketed by the same key into the same bucket count
@@ -117,50 +109,42 @@ object Layout {
   }
 }
 
-/** Ensure-once side artifacts (secondary-index tables). HBase
-  * applications maintain index tables at INGEST time (each Put writes
-  * the base row and its index row); serving-time reads only consume
-  * them. Building the index inside a read query both times a write in
-  * a read and rebuilds per invocation — this registry keys each build
-  * on (session, source dir, name) so it runs once per JVM/session,
-  * exactly like [[Layout.ensureBucketed]] for bucketed layouts. */
+/** Ensure-once side artifacts: secondary-index tables, snapshot
+  * fixtures, import sources. HBase applications write these at INGEST
+  * time (each Put writes the base row and its index row); serving-time
+  * reads only consume them. Building one inside a read query both
+  * times a write in a read and rebuilds per invocation — so each build
+  * runs once per (session, source dir, name) through [[Once]], the
+  * same registry [[Layout.ensureBucketed]] uses for bucketed layouts. */
 object Indexes {
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val dirs = new Once[String]
 
-  /** Path of the `name` index over source `dir`, building it via
-    * `build(targetDir)` only on first request for this session. A
-    * failed build deletes its partial output and caches nothing, so
-    * the next request retries cleanly. (The build runs inside the
-    * map's per-bin lock — ensure-ONCE is the point; concurrent callers
-    * of the same index must wait for it, and index builds are rare
-    * ingest-time events, not a serving-path contention source.
-    * NO-NESTING INVARIANT, as with SnapshotQueries.once: a build that
-    * itself calls ensure() for another index can corrupt or deadlock
-    * the map — every current builder is a leaf write; keep it so.) */
+  /** Path of the `name` artifact over source `dir`, building it via
+    * `build(targetDir)` only on first request for this session. The
+    * target is a fresh dir deleted at JVM exit; a failed build deletes
+    * its partial output and caches nothing, so the next request
+    * retries cleanly. A build may itself ensure another artifact. */
   def ensure(spark: SparkSession, dir: String, name: String)
             (build: String => Unit): String =
-    built.computeIfAbsent(
-      s"${org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)}|$dir|$name",
-      _ => {
-        val target = java.nio.file.Files.createTempDirectory(s"graft_idx_$name")
-        try { build(target.toString); target.toString }
-        catch { case e: Throwable =>
-          // clean through the SAME filesystem the builders write: a
-          // scheme-less path resolves against the Hadoop DEFAULT FS,
-          // so off-local the former java.nio walk cleaned an empty
-          // LOCAL twin and left the partial parquet orphaned forever
-          // (fresh random name per retry — the copyVersionDir
-          // FS-abstraction class). A cleanup failure is SUPPRESSED
-          // onto the build error, never replacing it.
-          try {
-            val tp = new org.apache.hadoop.fs.Path(target.toString)
-            val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(tp)) fs.delete(tp, true)
-            java.nio.file.Files.deleteIfExists(target)
-          } catch { case c: Throwable => e.addSuppressed(c) }
-          throw e
-        }
-      })
+    dirs(spark,
+      s"${org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)}|$dir|$name") {
+      val target = org.apache.spark.sql.graftbridge.TempDirBridge.create(s"graft_idx_$name")
+      try { build(target); target }
+      catch { case e: Throwable =>
+        // clean through the SAME filesystem the builders write: a
+        // scheme-less path resolves against the Hadoop DEFAULT FS, so
+        // off-local a java.nio walk would clean an empty LOCAL twin and
+        // leave the partial parquet orphaned. A cleanup failure is
+        // SUPPRESSED onto the build error, never replacing it.
+        try {
+          val tp = new org.apache.hadoop.fs.Path(target)
+          val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (fs.exists(tp)) fs.delete(tp, true)
+          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(target))
+        } catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+      }
+    }
 }
 
 /** Snapshots (HBase admin snapshots / MultiTableSnapshotInputFormat):

@@ -8,44 +8,14 @@ import graft.{Oracle, Query}
 /** SURVEY §2F — snapshots and region metadata as verified queries. */
 object SnapshotQueries {
 
-  /** Collision-safe per-dataset suffix: 32-bit String.hashCode has
-    * collisions among ordinary path strings, and a collision would
-    * silently serve one dataset's snapshot/bucket artifacts to the
-    * other (same once()-guard, same table name). 64 md5 bits keep the
-    * suffix identifier-safe and collision odds negligible. */
+  /** Collision-safe per-dataset suffix for the bucketed table names:
+    * 32-bit String.hashCode has collisions among ordinary path
+    * strings, and a collision would silently serve one dataset's
+    * bucketed table to the other. 64 md5 bits keep the suffix
+    * identifier-safe and collision odds negligible. */
   private[graft] def dirKey(sfDir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-
-  /** Per-sfDir temp path (concurrent runs over different SFs isolate).
-    * private[graft]: AnalyticsQueries shares THIS helper — its former
-    * byte-identical copy had to be hand-synced through the r10 dirKey
-    * fix, which is the evidence duplication costs. */
-  private[graft] def tmp(name: String, sfDir: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/" + name + "_" +
-      dirKey(sfDir)
-
-  /** Setup-once guard: snapshot/bucket layouts are written once per JVM
-    * per input dir — the verified operator is the READ/JOIN over the
-    * layout, and re-paying the ingest write on every (warmup + timed)
-    * invocation times the wrong thing. Per-JVM, so a fresh process never
-    * trusts stale on-disk leftovers from an earlier run. */
-  private val prepared =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  /** NO-NESTING INVARIANT: `setup` runs INSIDE computeIfAbsent, which
-    * holds the map bin lock for the (multi-second) ingest — a setup
-    * that itself calls once() for another key throws
-    * IllegalStateException or deadlocks, and unrelated keys hashing to
-    * the same bin block behind it. Every current setup is a leaf
-    * (plain writes); keep it that way, or switch to the per-key-future
-    * shape (putIfAbsent of a lazy holder) before composing setups.
-    * The lock-held form is kept deliberately: it preserves
-    * throw-caches-nothing atomically, with no half-registered state. */
-  private def once(key: String)(setup: => Unit): Unit =
-    // computeIfAbsent, NOT add-then-run: a THROWN setup must cache
-    // nothing, or every later call in the JVM reads a missing/partial
-    // layout (the same failed-build discipline as Indexes.ensure)
-    prepared.computeIfAbsent(key, _ => { setup; java.lang.Boolean.TRUE })
 
   /** Per-region stats: regions = n equal key ranges (the split table)
     * — the total-order bucketing from analytics.Tools with a payload
@@ -57,13 +27,14 @@ object SnapshotQueries {
       .withColumnRenamed("min_key", "start_key")
       .withColumnRenamed("max_key", "end_key")
 
-  /** Snapshot base for `sfDir`, written once per JVM: v1 = the events
-    * snapshot; v2 = post-mutation state written copy-on-write. Shared
-    * by snapshot_read and export_snapshot (whichever runs first pays
-    * the ingest). */
-  private def ensureSnapshots(s: SparkSession, d: String): String = {
-    val base = tmp("graft_snapshots", d)
-    once(base) {
+  /** Snapshot base for `sfDir`, written once per session through
+    * [[Indexes.ensure]]: the verified operator is the READ over the
+    * layout, and re-paying the ingest write on every (warmup + timed)
+    * invocation times the wrong thing. v1 = the events snapshot; v2 =
+    * post-mutation state written copy-on-write. Shared by every
+    * snapshot query (whichever runs first pays the ingest). */
+  private def ensureSnapshots(s: SparkSession, d: String): String =
+    Indexes.ensure(s, d, "snapshots") { base =>
       val ev = Tables.load(s, d, "events")
         .select("event_id", "user_id", "event_type", "ts", "value")
       Snapshots.write(ev, "user_id", base, 1)
@@ -74,8 +45,6 @@ object SnapshotQueries {
       // the delete_rows query, not this fixture
       Snapshots.write(ev.where(col("user_id") % 2 =!= 0), "user_id", base, 2)
     }
-    base
-  }
 
   /** Engine-portable per-row digest for the events snapshot: Knuth hash
     * of the (unique) event_id plus value cents plus epoch seconds —
@@ -96,8 +65,7 @@ object SnapshotQueries {
     // carry the identical row set
     Query("export_snapshot", (s, d) => {
       val base = ensureSnapshots(s, d)
-      val exp = tmp("graft_snap_export", d)
-      once(exp)(Snapshots.exportSnapshot(base, 1, exp))
+      val exp = Indexes.ensure(s, d, "snap_export")(Snapshots.exportSnapshot(base, 1, _))
       def digests(df: DataFrame) =
         graft.analytics.Tools.hashTable(df, "user_id", eventRowHash, 10L)
       graft.analytics.Tools.syncTable(
@@ -139,16 +107,11 @@ object SnapshotQueries {
     // spec asserts v3 equals v1 row-for-row and that a clone taken
     // from the snapshot is unaffected by the origin's rollback.
     Query("restore_snapshot", (s, d) => {
-      // the shared fixture resolves OUTSIDE once(): its own once()
-      // would nest inside this one's bin lock (the no-nesting
-      // invariant above)
-      val src = ensureSnapshots(s, d)
-      val base = tmp("graft_snap_restore", d)
-      once(base) {
+      val base = Indexes.ensure(s, d, "snap_restore") { base =>
         // v1 is byte-equivalent to the shared fixture's v1 — a file
         // copy, not a second multi-second Spark ingest of the same
         // rows (the snapshot_clone pattern)
-        Snapshots.exportSnapshot(src, 1, base)
+        Snapshots.exportSnapshot(ensureSnapshots(s, d), 1, base)
         val ev = Tables.load(s, d, "events")
           .select("event_id", "user_id", "event_type", "ts", "value")
         val survivors = ev.where(col("user_id") % 2 =!= 0)
@@ -190,8 +153,7 @@ object SnapshotQueries {
     // copy-on-write independent of its origin
     Query("snapshot_clone", (s, d) => {
       val base = ensureSnapshots(s, d)
-      val cloneBase = tmp("graft_snap_clone", d)
-      once(cloneBase) {
+      val cloneBase = Indexes.ensure(s, d, "snap_clone") { cloneBase =>
         Snapshots.exportSnapshot(base, 1, cloneBase)
         val mutated = Snapshots.read(s, cloneBase, 1)
           .withColumn("value",
@@ -263,11 +225,7 @@ object SnapshotQueries {
         !(pmod(col("rowkey"), lit(11)) === 0 && col("qualifier") === "click"))
       val afterTtl = Mutations.ttlExpireMinVersions(afterDelete, "15 DAYS", minVersions = 1)
       val kept = graft.kv.Scans.maxVersions(afterTtl, 3)
-      val base = tmp("graft_compact", d)
-      // once(): every other layout write here is guarded — an
-      // unguarded overwrite lets concurrent runs over the same sfDir
-      // delete the directory under each other's reads
-      once(base) {
+      val base = Indexes.ensure(s, d, "compaction") { base =>
         Layout.writeSorted(
           kept.select("rowkey", "qualifier", "ts", "value", "event_id"),
           "rowkey", base)

@@ -60,11 +60,13 @@ object Tables {
     *    restore, exportSnapshot, an out-of-process writer) changes the
     *    stamp, so the next read resolves afresh; a new stamp evicts the
     *    path's older stamps in that session;
+    *  - the key also carries the `events` flag, so a raw read of an
+    *    events.parquet path (un-normalized ts) never serves [[load]];
     *  - bounded: each commit is a new version path that same-path
     *    eviction never reaches, so past [[memoCap]] entries the memo
     *    resets, and dead sessions are swept. */
   private[graft] final case class LoadKey(session: String, path: String,
-                                         stamp: String)
+                                         stamp: String, events: Boolean)
   private[graft] val readMemo =
     new java.util.concurrent.ConcurrentHashMap[LoadKey, DataFrame]()
   private[graft] val memoCap = 256
@@ -92,16 +94,17 @@ object Tables {
       scala.util.hashing.MurmurHash3.seqHash(files.map(_.getPath.toString).sorted)
   }
 
-  private def stampKey(spark: SparkSession, what: String, path: String): LoadKey =
+  private def stampKey(spark: SparkSession, what: String, path: String,
+                       events: Boolean): LoadKey =
     LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark),
-      path, pathStamp(spark, what, path))
+      path, pathStamp(spark, what, path), events)
 
   /** The memoized plan of the parquet at `path` (see [[readMemo]]);
     * `events` applies the events table's ts normalization. */
   private[graft] def read(spark: SparkSession, path: String, what: String,
                           events: Boolean = false): DataFrame = {
     readMemo.entrySet().removeIf(_.getValue.sparkSession.sparkContext.isStopped)
-    val key = stampKey(spark, what, path)
+    val key = stampKey(spark, what, path, events)
     val hit = readMemo.get(key)
     if (hit != null) hit else {
       readMemo.keySet().removeIf(k =>

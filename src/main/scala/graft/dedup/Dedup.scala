@@ -930,7 +930,7 @@ object Dedup {
     // so an unpinned lineage re-evaluates ~3^rounds times (the
     // connectedComponents / pagerank discipline). CONTRACT: the final
     // pin is returned LIVE for the caller to consume — route it
-    // through a pin-owning memo (PipelineQueries.memoizedPinned) or
+    // through a pin-owning memo (PipelineQueries.memoized) or
     // free it after collecting, as connectedComponents' callers do.
     // Intermediate pins are freed even when a round throws.
     val edges = undirected(pairs, "src", "dst", dedup = true)

@@ -35,57 +35,19 @@ object PipelineQueries {
     * join; memoize the pinned result per (session, dir) instead — the
     * single-JVM stand-in for the shingle/pair tables a corpus-scale
     * pipeline materializes once per snapshot and feeds to every
-    * consumer. Keyed by `sessionUUID` (stable, unique per session —
-    * identityHashCode can collide after GC) so checkpoints never leak
-    * across sessions (a localCheckpoint dies with its context). */
-  /** One memo slot: the BUILD (a distributed checkpoint job) runs
-    * under the holder's own monitor, NOT inside ConcurrentHashMap's
-    * bin lock — computeIfAbsent only constructs this cheap shell.
-    * Before r12 the full build ran inside computeIfAbsent, so a
-    * builder that touched another memoized table re-entered the map
-    * under a bin lock (IllegalStateException or deadlock — a hazard
-    * three call sites policed by comment alone), and unrelated keys
-    * sharing a hash bin stalled behind multi-second shingle builds.
-    * Same-key circularity still deadlocks — that is a genuine cycle.
-    * The session rides along so sweeps can drop never-forced holders
-    * of dead sessions without forcing a build on a stopped context. */
-  private final class MemoSlot(val session: SparkSession,
-                               build: () => DataFrame) {
-    private var built: Option[DataFrame] = None
-    def df: DataFrame = synchronized {
-      built.getOrElse { val d = build(); built = Some(d); d }
-    }
-    def peek: Option[DataFrame] = synchronized(built)
-  }
-
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, MemoSlot]()
+    * consumer. Each build returns a PINNED frame (a `localCheckpoint`
+    * it takes itself, or a builder's own final pin, or a driver-local
+    * relation), so [[resetShared]] can free it. Keyed by `sessionUUID`
+    * (stable, unique per session — identityHashCode can collide after
+    * GC) so checkpoints never leak across sessions (a localCheckpoint
+    * dies with its context, and [[graft.core.Once]] sweeps its entry). */
+  private val memos = new graft.core.Once[DataFrame]
   private def memoized(s: SparkSession, d: String, what: String)
-                      (build: => DataFrame): DataFrame = {
-    sweepDead()
-    memo.computeIfAbsent(memoKey(s, d, what),
-      _ => new MemoSlot(s, () => build.localCheckpoint())).df
-  }
-
-  /** Drop entries whose SparkContext has stopped: their checkpoint
-    * blocks died with the context, but the map entry would otherwise
-    * retain the dead session object for the JVM's life (a slow leak in
-    * a service hosting many short-lived sessions). */
-  private def sweepDead(): Unit =
-    memo.entrySet().removeIf(e => e.getValue.session.sparkContext.isStopped)
+                      (build: => DataFrame): DataFrame =
+    memos(s, memoKey(s, d, what))(build)
 
   private def memoKey(s: SparkSession, d: String, what: String): String =
     s"${org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(s)}|$d|$what"
-
-  /** [[memoized]] for builders whose result is ALREADY pinned (e.g.
-    * [[Dedup.connectedComponents]] returns its final checkpointed label
-    * generation) — re-checkpointing would copy the blocks and orphan
-    * the inner pin. */
-  private def memoizedPinned(s: SparkSession, d: String, what: String)
-                            (build: => DataFrame): DataFrame = {
-    sweepDead()
-    memo.computeIfAbsent(memoKey(s, d, what),
-      _ => new MemoSlot(s, () => build)).df
-  }
 
   /** Drop every memoized table, RELEASING its checkpoint blocks —
     * clearing the map alone strands the blocks in the block manager
@@ -96,27 +58,18 @@ object PipelineQueries {
     * line via [[prewarmShared]] (r9; first-consumer attribution made
     * per-query numbers move with registration order) — not inherit it
     * from the warmup pass, otherwise the dedup family times a cache
-    * probe instead of the operator. */
+    * probe instead of the operator. Callers must not run this
+    * concurrently with an executing consumer (freeing pins under a
+    * running job is a use-after-free by definition) — Bench calls it
+    * between passes only. */
   def resetShared(): Unit = {
     import org.apache.spark.sql.graftbridge.CheckpointBridge
-    // remove-then-free PER ENTRY, not free-all-then-clear: an entry
-    // inserted between the two bulk steps would be cleared without
-    // freeing its blocks (the r4 leak re-opened), and one dead-session
-    // entry throwing mid-loop would abort the rest unfreed. Callers
-    // must still not run this concurrently with an executing consumer
-    // (freeing pins under a running job is a use-after-free by
-    // definition) — Bench calls it between passes only.
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val slot = it.next().getValue
-      it.remove()
-      // free only FORCED slots (peek, never df): forcing a build here
-      // just to free it would run a checkpoint job on the reset path
-      slot.peek.foreach { df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          try CheckpointBridge.free(df)
-          catch { case _: Throwable => () } // best-effort hygiene
-      }
+    // drain removes each entry before its release and frees only BUILT
+    // entries: a never-forced one is dropped with no checkpoint job
+    memos.drain { df =>
+      if (!df.sparkSession.sparkContext.isStopped)
+        try CheckpointBridge.free(df)
+        catch { case _: Throwable => () } // best-effort hygiene
     }
   }
 
@@ -129,7 +82,7 @@ object PipelineQueries {
     // pin (decontaminate's explode+hash: measured a 2.1 s single-task
     // job) inherited the single partition
     memoized(s, d, "shingles")(
-      Dedup.shingles(graft.core.Par.spread(docs(s, d), "doc_id")))
+      Dedup.shingles(graft.core.Par.spread(docs(s, d), "doc_id")).localCheckpoint())
 
   /** The MULTI-consumer shared memos, in build order, by their memo
     * key. Bench charges their builds to an explicit `memo_setup` line
@@ -150,7 +103,7 @@ object PipelineQueries {
     * consumer list is kept by hand. */
   def builtShared(s: SparkSession, d: String): Seq[String] =
     sharedMemos.map(_._1).filter { what =>
-      Option(memo.get(memoKey(s, d, what))).exists(_.peek.nonEmpty)
+      memos.peek(memoKey(s, d, what)).nonEmpty
     }
 
   /** Rebuild `names` (from [[builtShared]]) through their accessors,
@@ -291,27 +244,26 @@ object PipelineQueries {
     // times IN ONE PLAN (Catalyst does no cross-subtree CSE), so the
     // unpinned form re-ran the explode+md5+distinct shuffle per
     // reference and again per sibling query. Dependency resolved
-    // BEFORE the builder (kept for clarity; since the r12 MemoSlot
-    // builds run outside the map's bin lock, cross-key nesting is
-    // safe — only a same-key cycle would deadlock).
+    // BEFORE the builder for clarity (a build may nest another key's).
     val sh = shingleTab(s, d)
     val dd = docs(s, d).select("doc_id", "source")
     memoized(s, d, "presence_pairs")(
       sh.join(dd, "doc_id")
         .select(col("source"), explode(col("shs")).as("_sh"))
         .select(col("source"), xxhash64(col("_sh")).as("g"))
-        .distinct())
+        .distinct()
+        .localCheckpoint())
   }
 
   /** Capped-ngram near-dup pairs with the registered parameters
     * (threshold 0.5, maxDf 8, minShared 2). Dependencies resolved
-    * before the builder for clarity (cross-key nesting is safe since
-    * the r12 MemoSlot — builds run outside the map's bin lock). */
+    * before the builder for clarity. */
   private def ngramPairs(s: SparkSession, d: String): DataFrame = {
     val sh = shingleTab(s, d)
     memoized(s, d, "ngram_pairs")(
       Dedup.ngramJaccard(docs(s, d), 0.5, pruneUnique = false,
-        maxDf = Some(8), minShared = 2, shingleTable = Some(sh)))
+        maxDf = Some(8), minShared = 2, shingleTable = Some(sh))
+        .localCheckpoint())
   }
 
   /** (doc_id, cluster) component labels over [[ngramPairs]]. Pinned by
@@ -319,7 +271,7 @@ object PipelineQueries {
     * final generation (and frees every superseded round itself). */
   private def ngramClusters(s: SparkSession, d: String): DataFrame = {
     val pairs = ngramPairs(s, d)
-    memoizedPinned(s, d, "ngram_clusters")(
+    memoized(s, d, "ngram_clusters")(
       Dedup.connectedComponents(pairs)
         .select(col("id").as("doc_id"), col("lbl").as("cluster")))
   }
@@ -330,15 +282,15 @@ object PipelineQueries {
     * subtree (centroids + assignment + scoring = 3× in the IVF path,
     * the r4 14-second query). */
   private def quantEmb(s: SparkSession, d: String): DataFrame =
-    memoized(s, d, "quant_emb")(graft.sim.Quantize.quantized(emb(s, d)))
+    memoized(s, d, "quant_emb")(graft.sim.Quantize.quantized(emb(s, d)).localCheckpoint())
 
   /** The trained BPE merge table (8 rules), collapsed to a DRIVER-LOCAL
     * relation and shared — the trained-model collect pattern: a
     * pipeline trains the tokenizer once per corpus snapshot and every
-    * apply consumes the same rules. memoizedPinned because a
+    * apply consumes the same rules. No localCheckpoint: a
     * driver-local DF has no checkpoint blocks to pin or free. */
   private def bpeRules(s: SparkSession, d: String): DataFrame =
-    memoizedPinned(s, d, "bpe_rules") {
+    memoized(s, d, "bpe_rules") {
       val trained = TextOps.bpeTrain(docs(s, d), 8)
       s.createDataFrame(
         java.util.Arrays.asList(trained.collect(): _*), trained.schema)
@@ -455,7 +407,7 @@ object PipelineQueries {
       // (one per session, released by resetShared) — the bare call
       // would localCheckpoint a fresh copy per invocation that
       // nothing ever frees (the r4 block-manager accumulation mode)
-      val sh = memoized(s, d, "contain_shingles")(Dedup.shingles(aug))
+      val sh = memoized(s, d, "contain_shingles")(Dedup.shingles(aug).localCheckpoint())
       Dedup.ngramContainment(aug, 0.9, shingleTable = Some(sh))
         .orderBy("i", "j")
     },
@@ -704,13 +656,13 @@ object PipelineQueries {
     // rounds over the ngram pair graph (ties to the smallest label —
     // set-deterministic). The oracle unrolls both rounds.
     Query("label_propagation", (s, d) => {
-      // memoizedPinned: labelPropagation returns its final pinned
+      // no localCheckpoint: labelPropagation returns its final pinned
       // frontier generation (per-round checkpoint discipline) — route
       // it through the session memo so resetShared frees the pin.
       // The ngramPairs dependency resolves BEFORE the builder for
-      // clarity (cross-key nesting is safe since the r12 MemoSlot).
+      // clarity.
       val pairs = ngramPairs(s, d).select("i", "j")
-      memoizedPinned(s, d, "label_prop") {
+      memoized(s, d, "label_prop") {
         val seeds = docs(s, d).where(col("doc_id") % 3 === 0)
           .select(col("doc_id").as("node"), col("lang").as("label"))
         Dedup.labelPropagation(pairs, seeds, rounds = 2)
@@ -1029,11 +981,11 @@ object PipelineQueries {
     // exemplar kept per group. FULL oracle since r9 (micro-unit
     // kmeans + recursive-CTE closure); recall additionally spec-proved
     Query("dedup_semantic", (s, d) => {
-      // memoizedPinned: semanticDedup pins its kmeans assignment and
+      // no localCheckpoint: semanticDedup pins its kmeans assignment and
       // the CC label generation inside the returned plan — the memo
       // makes resetShared's CheckpointBridge.free walk them, instead
       // of a fresh pair of pinned tables leaking per invocation
-      memoizedPinned(s, d, "semantic_dedup")(
+      memoized(s, d, "semantic_dedup")(
           Ann.semanticDedup(twinEmb(s, d), iters = 2, threshold = 0.95))
         .orderBy("vec_id")
     },
@@ -1897,7 +1849,8 @@ object PipelineQueries {
         MM.frameSample(MM.synthesizeVideo(aug), every = 1)
           .groupBy("doc_id")
           .agg(array_sort(array_distinct(collect_list(col("fp").cast("string"))))
-            .as("shs")))
+            .as("shs"))
+          .localCheckpoint())
       Dedup.ngramJaccard(aug, 0.8, pruneUnique = false, maxDf = Some(8),
           minShared = 2, shingleTable = Some(fpSets))
         .orderBy("i", "j")

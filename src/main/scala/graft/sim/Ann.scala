@@ -614,7 +614,7 @@ object Ann {
     * connectedComponents' final label generation). CheckpointBridge
     * .free walks the plan and releases every reachable pin, so either
     * route the result through a pin-owning memo
-    * (PipelineQueries.memoizedPinned + resetShared — the registered
+    * (PipelineQueries.memoized + resetShared — the registered
     * query's path) or call free(result) once consumed. */
   def semanticDedup(vectors: DataFrame, k: Int = 0, iters: Int = 2,
                     threshold: Double = 0.95): DataFrame = {

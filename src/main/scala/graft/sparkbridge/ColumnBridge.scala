@@ -128,6 +128,16 @@ object PlanBridge {
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 }
 
+/** JVM-lifetime scratch dirs for graft's build-once registry
+  * (graft.core.Indexes.ensure), made by Spark's own `createTempDir`
+  * (private[spark]): a fresh `<prefix>-<uuid>` dir under
+  * java.io.tmpdir, registered with Spark's shutdown hook, which
+  * deletes it when the JVM exits. */
+object TempDirBridge {
+  def create(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
+}
+
 /** Spark's parquet footer helpers for graft's read memo, which reads
   * each part file's footer once on the driver (graft.core.Tables.read)
   * instead of running Spark's one-task schema-inference job. */

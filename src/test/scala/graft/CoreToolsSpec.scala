@@ -233,4 +233,43 @@ class CoreToolsSpec extends SparkSpec {
       "Layout.read / Tables.load instead: " +
       bypass.map { case (f, n) => s"$f ($n)" }.mkString(", "))
   }
+
+  test("no hand-rolled build-once map outside graft.core.Once and the read memo") {
+    import java.io.File
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    def scala(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    // Once's holder install and Tables.read's stamp-keyed plan memo
+    val allowed = Map("graft/core/Once.scala" -> 1, "graft/core/Tables.scala" -> 1)
+    val call = """computeIfAbsent\(""".r
+    val extra = scala(root).map { f =>
+      root.toPath.relativize(f.toPath).toString ->
+        call.findAllIn(java.nio.file.Files.readString(f.toPath)).size
+    }.filter { case (f, n) => n > allowed.getOrElse(f, 0) }
+    assert(extra.isEmpty, "computeIfAbsent( outside graft.core.Once — build once " +
+      "through a Once instance (or Indexes.ensure for a dir) instead: " +
+      extra.map { case (f, n) => s"$f ($n)" }.mkString(", "))
+  }
+
+  test("read memo: a raw read of events.parquet never serves Tables.load(events)") {
+    import java.nio.file.{Files, Paths}
+    // a temp COPY: other specs read the shared events path
+    val dir = Files.createTempDirectory("graft_events_flag").toFile
+    try {
+      Files.copy(Paths.get(s"$sfDir/events.parquet"),
+        dir.toPath.resolve("events.parquet"))
+      val raw = graft.core.Layout.read(spark, s"${dir.getPath}/events.parquet")
+      assert(raw.schema("ts").dataType == TimestampNTZType, raw.schema("ts"))
+      val ev = graft.core.Tables.load(spark, dir.getPath, "events")
+      assert(ev.schema("ts").dataType == TimestampType,
+        s"Tables.load served the raw plan: ${ev.schema("ts")}")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
+  }
 }
