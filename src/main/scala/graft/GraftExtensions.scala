@@ -12,7 +12,9 @@ import graft.sim.{TopKStruct, VecDot}
 /** graft's planner extension: registers graft's native Expressions as
   * SQL functions, so `spark.sql("... vec_dot(a, b) ...")` works exactly
   * like the DataFrame API, and installs the [[graft.core.ParamLits]]
-  * physical rule (comparison constants become codegen parameters).
+  * physical rule (comparison constants become codegen parameters) and
+  * the [[graft.core.ExpandMergeDelta]] optimizer rule (a mutation's
+  * merge node becomes its anti-join ∪ rows plan).
   *
   * `graft.Session.local` installs it on every session it builds; other
   * sessions get it with `spark.sql.extensions=graft.GraftExtensions`
@@ -26,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     ext.injectColumnar(_ => graft.core.ParamLits)
+    ext.injectOptimizerRule(_ => graft.core.ExpandMergeDelta)
   }
 }
 

@@ -16,20 +16,25 @@ import org.apache.spark.sql.types._
   * the HFile trailer and skips every file that cannot hold the row
   * (StoreFile.Reader.passesKeyRangeFilter). A column is absent from
   * `spans` when some row group carries no usable statistics for it;
-  * then nothing is known and every predicate on it keeps the file. */
+  * then nothing is known and every predicate on it keeps the file.
+  * `points`, in a delta version's relation ([[Deltas]]), narrows which
+  * single values of the key column a visible row of the file can hold. */
 private[graft] final case class Region(file: FileStatus, rows: Long,
-                                       spans: Map[String, Region.Span]) {
+                                       spans: Map[String, Region.Span],
+                                       points: Option[Region.Points] = None) {
   import Region._
 
   /** Whether some row of this file can satisfy `p`. False only when an
     * `=`, `<`, `<=`, `>`, `>=`, `In` or `InSet` of an integral column
     * against integral literals, under And/Or, excludes the column's
-    * whole range; every other predicate keeps the file. */
+    * whole range, or, for `=`/`In`/`InSet` on the key column of
+    * `points`, every listed value; every other predicate keeps the
+    * file. */
   def mayHold(p: Expression): Boolean = p match {
     case And(l, r) => mayHold(l) && mayHold(r)
     case Or(l, r) => mayHold(l) || mayHold(r)
-    case EqualTo(Key(s), Lit(v)) => s.holds(v)
-    case EqualTo(Lit(v), Key(s)) => s.holds(v)
+    case EqualTo(a @ Key(s), Lit(v)) => s.holds(v) && admits(a, v)
+    case EqualTo(Lit(v), a @ Key(s)) => s.holds(v) && admits(a, v)
     case LessThan(Key(s), Lit(v)) => s.nonEmpty && s.lo < v
     case LessThan(Lit(v), Key(s)) => s.nonEmpty && s.hi > v
     case LessThanOrEqual(Key(s), Lit(v)) => s.nonEmpty && s.lo <= v
@@ -38,14 +43,19 @@ private[graft] final case class Region(file: FileStatus, rows: Long,
     case GreaterThan(Lit(v), Key(s)) => s.nonEmpty && s.lo < v
     case GreaterThanOrEqual(Key(s), Lit(v)) => s.nonEmpty && s.hi >= v
     case GreaterThanOrEqual(Lit(v), Key(s)) => s.nonEmpty && s.lo <= v
-    case In(Key(s), list) if list.forall(Lit.unapply(_).isDefined) =>
-      list.flatMap(Lit.unapply).exists(s.holds)
+    case In(a @ Key(s), list) if list.forall(Lit.unapply(_).isDefined) =>
+      list.flatMap(Lit.unapply).exists(v => s.holds(v) && admits(a, v))
     // InSet holds boxed values of the column's type; a NULL member
     // matches no row
-    case InSet(Key(s), set) =>
-      set.exists(v => v != null && s.holds(v.asInstanceOf[Number].longValue))
+    case InSet(a @ Key(s), set) => set.exists(v => v != null && {
+      val l = v.asInstanceOf[Number].longValue
+      s.holds(l) && admits(a, l)
+    })
     case _ => true
   }
+
+  private def admits(a: Expression, v: Long): Boolean =
+    points.forall(p => p.column != a.asInstanceOf[AttributeReference].name || p.admits(v))
 
   private object Key {
     def unapply(e: Expression): Option[Span] = e match {
@@ -65,7 +75,14 @@ private[graft] object Region {
   }
   val NoValues: Span = Span(Long.MaxValue, Long.MinValue)
 
-  private def integral(t: DataType): Boolean =
+  /** A visible row of the file holds a value v of `column` only when
+    * `keys` contains v (`member`: the delta file) or does not (a base
+    * file, whose rows for delta keys the visibility filter hides). */
+  final case class Points(column: String, keys: DeltaKeys, member: Boolean) {
+    def admits(v: Long): Boolean = keys.contains(v) == member
+  }
+
+  def integral(t: DataType): Boolean =
     t == ByteType || t == ShortType || t == IntegerType || t == LongType
 
   private object Lit {
@@ -131,12 +148,15 @@ private[graft] object Region {
 
   /** A fresh relation over the files of the [[Tables.read]] result `df`
     * that `keep` selects — a driver-local view of the same index: no
-    * listing, no footer read, and `inputFiles` shrinks to the pick. */
+    * listing, no footer read, and `inputFiles` shrinks to the pick. A
+    * delta version's view keeps its visibility filter. */
   def restrict(df: DataFrame, keep: Region => Boolean): DataFrame = {
     val (lr, h, index) = of(df)
     val view = index.restrict(index.regions.collect { case (p, r) if keep(r) => p }.toSet)
+    val fresh = lr.copy(relation = h.copy(location = view)(h.sparkSession)).newInstance()
     org.apache.spark.sql.graftbridge.PlanBridge.ofRows(df.sparkSession,
-      lr.copy(relation = h.copy(location = view)(h.sparkSession)).newInstance())
+      index.delta.fold[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan](fresh)(
+        Deltas.visible(fresh, _)))
   }
 }
 
@@ -144,11 +164,13 @@ private[graft] object Region {
   * ranges ([[Region.mayHold]]) cannot satisfy the scan's pushed data
   * filters. Listing, partitioning and refresh are `inner`'s; files the
   * footer pass never saw are always kept. `only`, when set, is a fixed
-  * file subset (a split pick). Equality is by root paths, as
-  * InMemoryFileIndex's is, so `sameResult` and exchange reuse treat two
-  * reads of one path as the same relation. */
+  * file subset (a split pick); `delta` is set on a delta version's
+  * relation. Equality is by root paths, as InMemoryFileIndex's is, so
+  * `sameResult` and exchange reuse treat two reads of one path as the
+  * same relation. */
 private[graft] final class RegionIndex(inner: FileIndex, val regions: Map[Path, Region],
-                                       only: Option[Set[Path]] = None) extends FileIndex {
+                                       only: Option[Set[Path]] = None,
+                                       val delta: Option[DeltaInfo] = None) extends FileIndex {
   override def rootPaths: Seq[Path] = only.fold(inner.rootPaths)(_.toSeq.sortBy(_.toString))
 
   override def listFiles(partitionFilters: Seq[Expression],
@@ -166,7 +188,7 @@ private[graft] final class RegionIndex(inner: FileIndex, val regions: Map[Path, 
   override def partitionSchema: StructType = inner.partitionSchema
   override def metadataOpsTimeNs: Option[Long] = inner.metadataOpsTimeNs
 
-  def restrict(files: Set[Path]): RegionIndex = new RegionIndex(inner, regions, Some(files))
+  def restrict(files: Set[Path]): RegionIndex = new RegionIndex(inner, regions, Some(files), delta)
 
   override def equals(other: Any): Boolean = other match {
     case r: RegionIndex => rootPaths.toSet == r.rootPaths.toSet

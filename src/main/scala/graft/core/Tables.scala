@@ -55,7 +55,7 @@ object Tables {
     * one driver-side footer read per file, no Spark job). Invariants:
     *  - plans, not results: the memo holds the resolved DataFrame, and
     *    every action against it still scans parquet;
-    *  - stamp-keyed: the key is (session, path, [[pathStamp]]), and
+    *  - stamp-keyed: the key is (session, path, [[listStamp]]), and
     *    every rewrite of a path (Snapshots.write over a version,
     *    restore, exportSnapshot, an out-of-process writer) changes the
     *    stamp, so the next read resolves afresh; a new stamp evicts the
@@ -73,11 +73,12 @@ object Tables {
 
   /** Generation stamp of a path: (count, newest mtime, total length,
     * hash of the sorted names) over every file below it, or of the
-    * file itself. Spark writes fresh random part-file names per job,
-    * so the names catch a same-size rewrite inside one mtime tick. A
-    * missing path fails naming `what` and the path (a raw Hadoop
-    * FileNotFoundException names neither). */
-  private def pathStamp(spark: SparkSession, what: String, path: String): String = {
+    * file itself, and the files. Spark writes fresh random part-file
+    * names per job, so the names catch a same-size rewrite inside one
+    * mtime tick. A missing path fails naming `what` and the path (a raw
+    * Hadoop FileNotFoundException names neither). */
+  private[graft] def listStamp(spark: SparkSession, what: String,
+                               path: String): (String, Seq[FileStatus]) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val root = try fs.getFileStatus(p) catch {
@@ -89,28 +90,32 @@ object Tables {
     def below(st: FileStatus): Seq[FileStatus] =
       if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(below) else Seq(st)
     val files = below(root)
-    s"${files.length}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
+    (s"${files.length}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
       s"${files.map(_.getLen).sum}:" +
-      scala.util.hashing.MurmurHash3.seqHash(files.map(_.getPath.toString).sorted)
+      scala.util.hashing.MurmurHash3.seqHash(files.map(_.getPath.toString).sorted), files)
   }
 
-  private def stampKey(spark: SparkSession, what: String, path: String,
-                       events: Boolean): LoadKey =
-    LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark),
-      path, pathStamp(spark, what, path), events)
-
   /** The memoized plan of the parquet at `path` (see [[readMemo]]);
-    * `events` applies the events table's ts normalization. */
+    * `events` applies the events table's ts normalization. A delta
+    * snapshot version ([[Deltas]]) is stamped with its base's stamp
+    * too, so a rewrite of the base is seen by the next read. A miss
+    * loads outside the map: a delta's load reads its base through this
+    * memo. */
   private[graft] def read(spark: SparkSession, path: String, what: String,
                           events: Boolean = false): DataFrame = {
     readMemo.entrySet().removeIf(_.getValue.sparkSession.sparkContext.isStopped)
-    val key = stampKey(spark, what, path, events)
+    val (own, files) = listStamp(spark, what, path)
+    val delta = Deltas.baseOf(files)
+    val key = LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark), path,
+      delta.fold(own)(b => s"$own|${Deltas.baseStamp(spark, what, path, b)}"), events)
     val hit = readMemo.get(key)
     if (hit != null) hit else {
       readMemo.keySet().removeIf(k =>
         k.session == key.session && k.path == path && k.stamp != key.stamp)
       if (readMemo.size >= memoCap) readMemo.clear()
-      readMemo.computeIfAbsent(key, _ => loadFresh(spark, path, what, events))
+      val fresh = delta.fold(loadFresh(spark, path, what, events))(Deltas.resolve(spark, path, what, _))
+      val won = readMemo.putIfAbsent(key, fresh)
+      if (won == null) fresh else won
     }
   }
 
@@ -161,6 +166,9 @@ object Tables {
     if (nanos) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = org.apache.spark.sql.graftbridge.ParquetBridge
       .dataSchema(spark, footers.head._1.getPath, footers.head._2)
+    if (schema.fieldNames.contains(Deltas.OpCol)) throw new IllegalStateException(
+      s"$what: $path holds a delta file but no ${Deltas.Marker}<base> marker, " +
+        "so its delta commit did not finish; rewrite the version")
     val regions = footers.map { case (f, m) => f.getPath -> Region(f, m, schema) }.toMap
     val relation = HadoopFsRelation(new RegionIndex(listing, regions),
       listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)

@@ -3,16 +3,25 @@ package graft.kv
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.MergeDelta
 
 /** Spark-native batch re-expression of HBase's mutation surface
   * (hbase-client/.../client/{Put,Delete,Increment,Append}.java,
   * HTable.checkAndPut, BufferedMutator.java).
   *
   * HBase mutates in place (memstore + WAL); an analytics engine on
-  * immutable parquet instead produces a NEW snapshot version per batch
-  * (copy-on-write). Every op below is a pure DataFrame → DataFrame
-  * transform built from joins/windows — distributed, no driver loops —
-  * and writing the result sorted by rowkey yields the next snapshot.
+  * immutable parquet instead produces a NEW snapshot version per batch.
+  * Every op below is a pure DataFrame → DataFrame transform built from
+  * joins/windows — distributed, no driver loops.
+  *
+  * The row ops (put, deleteRows, checkAndPut, checkAndPutAbsent,
+  * checkAndDelete, mutateRow, checkAndMutateRow and the ops built on
+  * them) compute only K, the keys that lose their row, and R, the rows
+  * that become current, and return one [[graft.core.MergeDelta]] of
+  * base anti-join K ∪ R. Spark runs exactly that plan; committed with
+  * `Snapshots.write` over the read of an earlier snapshot version, the
+  * batch is merge-on-read, as HBase flushes a memstore: the next
+  * version stores only what changed, and reads merge it by key.
   */
 object Mutations {
 
@@ -36,8 +45,7 @@ object Mutations {
       firstWins = false, msg = "put: duplicate put key ",
       advice = " in a batch with no versionCol to order the upsert — " +
         "pass versionCol (last write wins) or de-duplicate the batch")
-    base.join(resolved.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-      .unionByName(resolved)
+    MergeDelta.of(base, Some(resolved.select(col(keyCol)).distinct()), Some(resolved), keyCol)
   }
 
   /** ONE copy of duplicate-put-key resolution, shared by [[put]]
@@ -89,7 +97,7 @@ object Mutations {
 
   /** Delete (row-level): anti-join on the delete key set. */
   def deleteRows(base: DataFrame, keys: DataFrame, keyCol: String): DataFrame =
-    base.join(keys.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+    MergeDelta.of(base, Some(keys.select(col(keyCol)).distinct()), None, keyCol)
 
   /** BulkDeleteEndpoint, ROW type (hbase-examples/.../coprocessor/
     * example/BulkDeleteEndpoint.java): delete every row with ANY cell
@@ -213,7 +221,7 @@ object Mutations {
         "pass versionCol (first op wins) or de-duplicate the batch")
     val applicable =
       resolved.join(base.select(col(keyCol)), Seq(keyCol), "left_anti")
-    base.unionByName(applicable)
+    MergeDelta.of(base, None, Some(applicable), keyCol)
   }
 
   /** checkAndDelete (HTable.checkAndDelete) — delete each keyed row only
@@ -223,7 +231,7 @@ object Mutations {
                      check: Column): DataFrame = {
     val passKeys = base.where(check).select(col(keyCol))
       .join(delKeys.select(col(keyCol)).distinct(), Seq(keyCol), "leftsemi")
-    base.join(passKeys, Seq(keyCol), "left_anti")
+    MergeDelta.of(base, Some(passKeys), None, keyCol)
   }
 
   /** mutateRow (HTable.mutateRow) — atomic per-row batch of puts and

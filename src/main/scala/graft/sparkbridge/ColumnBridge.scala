@@ -74,6 +74,14 @@ object SessionBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
 
+  /** Whether the session's optimizer runs `rule` among its
+    * extension-injected operator optimization rules. */
+  def hasOptimizerRule(spark: SparkSession,
+      rule: org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.optimizer.extendedOperatorOptimizationRules.contains(rule)
+
   /** The managed location the catalog would assign `table` — respects
     * the session's CURRENT database (a hardcoded <warehouse>/<table>
     * guess is wrong outside `default`, e.g. <warehouse>/x.db/<table>). */
@@ -140,7 +148,9 @@ object TempDirBridge {
 
 /** Spark's parquet footer helpers for graft's read memo, which reads
   * each part file's footer once on the driver (graft.core.Tables.read)
-  * instead of running Spark's one-task schema-inference job. */
+  * instead of running Spark's one-task schema-inference job, and its
+  * file writer for a delta commit (graft.core.Deltas), whose rows are
+  * already on the driver. */
 object ParquetBridge {
   import org.apache.hadoop.fs.Path
   import org.apache.parquet.hadoop.Footer
@@ -158,4 +168,25 @@ object ParquetBridge {
       new ParquetToSparkSchemaConverter(
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
       .asNullable
+
+  /** Write `rows` of `schema`, in order, as one parquet file under the
+    * existing dir `dir`, on the driver: the writer a Spark write task
+    * runs, with the session's parquet settings plus `options`, and no
+    * job. For a few thousand rows already on the driver. */
+  def writeFile(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+                rows: Iterator[org.apache.spark.sql.Row], dir: String,
+                options: Map[String, String]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val job = Job.getInstance(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConfWithOptions(options))
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, options, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val file = new Path(dir, s"part-00000-${java.util.UUID.randomUUID}${factory.getFileExtension(ctx)}")
+    val writer = factory.newInstance(file.toString, schema, ctx)
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    finally writer.close()
+  }
 }

@@ -26,7 +26,7 @@ class CoreToolsSpec extends SparkSpec {
 
   test("Tables.load(events): NTZ generation normalizes to LTZ via the footer probe, dir layout") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ntz_events").toFile
+    val dir = TempDirs.create("graft_ntz_events").toFile
     try {
       // an NTZ-generation events table written as a DIRECTORY of part
       // files — exercises the probe's one-footer-from-a-dir path
@@ -54,7 +54,7 @@ class CoreToolsSpec extends SparkSpec {
   }
 
   test("ScaleSpike: a filtered run deletes (not skips) a stale wrong-multiplier table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spike").toFile
+    val dir = TempDirs.create("graft_spike").toFile
     def stamp(t: String): Option[String] = {
       val f = new java.io.File(dir, s"$t.parquet/_SPIKE_COPIES")
       if (f.exists()) Some(new String(
@@ -143,7 +143,7 @@ class CoreToolsSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     // a temp COPY of read-only testdata in a partitioned (k=v/) layout:
     // the table dir's only direct child is a directory
-    val dir = Files.createTempDirectory("graft_load_memo").toFile
+    val dir = TempDirs.create("graft_load_memo").toFile
     try {
       val part = new java.io.File(dir, "t.parquet/k=1")
       part.mkdirs()
@@ -178,7 +178,7 @@ class CoreToolsSpec extends SparkSpec {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixed_events").toFile
+    val dir = TempDirs.create("graft_mixed_events").toFile
     val events = new java.io.File(dir, "events.parquet")
     events.mkdirs()
     def write(name: String, unit: String): Unit = {
@@ -256,7 +256,7 @@ class CoreToolsSpec extends SparkSpec {
   test("read memo: a raw read of events.parquet never serves Tables.load(events)") {
     import java.nio.file.{Files, Paths}
     // a temp COPY: other specs read the shared events path
-    val dir = Files.createTempDirectory("graft_events_flag").toFile
+    val dir = TempDirs.create("graft_events_flag").toFile
     try {
       Files.copy(Paths.get(s"$sfDir/events.parquet"),
         dir.toPath.resolve("events.parquet"))

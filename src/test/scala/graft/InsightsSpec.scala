@@ -975,7 +975,7 @@ class InsightsSpec extends SparkSpec {
     // PERMISSIVE silently NULL-padded a malformed bigint field — the
     // scaladoc promises parse-time enforcement (ImportTsv's
     // BadTsvLineException surfaces bad lines)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsv_bad")
+    val dir = TempDirs.create("graft_tsv_bad")
     java.nio.file.Files.writeString(dir.resolve("bad.tsv"), "1\tok\nabc\tbroken\n")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),

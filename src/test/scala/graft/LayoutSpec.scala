@@ -7,7 +7,7 @@ import graft.core.{Layout, Snapshots, Tables}
 class LayoutSpec extends SparkSpec {
 
   test("sorted layout: rowkey predicate reaches the parquet scan (region pruning)") {
-    val dir = Files.createTempDirectory("graft_layout").toString
+    val dir = TempDirs.create("graft_layout").toString
     Layout.writeSorted(Tables.load(spark, sfDir, "orders"), "o_orderkey", dir, buckets = 4)
     val scan = Layout.read(spark, dir)
       .where(col("o_orderkey") >= 1000 && col("o_orderkey") < 2000)
@@ -64,7 +64,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshot versions are immutable point-in-time reads") {
-    val dir = Files.createTempDirectory("graft_snap").toString
+    val dir = TempDirs.create("graft_snap").toString
     val v1 = Tables.load(spark, sfDir, "orders").select("o_orderkey", "o_totalprice")
     Snapshots.write(v1, "o_orderkey", dir, 1)
     Snapshots.write(v1.where(col("o_orderkey") % 2 === 0), "o_orderkey", dir, 2)
@@ -74,7 +74,7 @@ class LayoutSpec extends SparkSpec {
 
   test("scanDirect manifest memo is evicted when its version is rewritten") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_memo").toString
+    val dir = TempDirs.create("graft_memo").toString
     val v1 = (1L to 100L).map(k => (k, k * 2)).toDF("k", "v")
     Snapshots.write(v1, "k", dir, 1)
     // prime the memo: this caches v=1's part-file manifest
@@ -98,7 +98,7 @@ class LayoutSpec extends SparkSpec {
     // existence probe must REBUILD, not FileNotFound, and not return a
     // wrong empty pick when the new data lives in a key range the old
     // regions never covered.
-    val dir = Files.createTempDirectory("graft_heal").toString
+    val dir = TempDirs.create("graft_heal").toString
     val v1 = (1L to 100L).map(k => (k, k * 2)).toDF("k", "v")
     Snapshots.write(v1, "k", dir, 1)
     // prime the memo
@@ -123,7 +123,7 @@ class LayoutSpec extends SparkSpec {
     // an empty manifest has no file paths to probe, so the existence
     // check can never detect an out-of-process fill — a previously
     // empty version returned a wrong empty result forever
-    val dir = Files.createTempDirectory("graft_emptymemo").toString
+    val dir = TempDirs.create("graft_emptymemo").toString
     val empty = Seq.empty[(Long, Long)].toDF("k", "v")
     Snapshots.write(empty, "k", dir, 1)
     assert(Snapshots.scanDirect(spark, dir, 1, "k", 0L, 100L).count() == 0L)
@@ -145,14 +145,14 @@ class LayoutSpec extends SparkSpec {
 
   test("scanDirect widens integral keys and rejects string keys loudly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_intkey").toString
+    val dir = TempDirs.create("graft_intkey").toString
     // IntegerType rowkey: the manifest collect reads Longs — the cast
     // inside regionManifest must widen, not ClassCastException at scan
     val v = (1 to 50).map(k => (k, s"r$k")).toDF("k", "v")
     Snapshots.write(v, "k", dir, 1)
     assert(Snapshots.scanDirect(spark, dir, 1, "k", 10L, 20L).count() == 10L)
     // a string rowkey has no numeric range semantics — named refusal
-    val sdir = Files.createTempDirectory("graft_strkey").toString
+    val sdir = TempDirs.create("graft_strkey").toString
     Snapshots.write(v.withColumn("k", concat(lit("k"), col("k"))), "k", sdir, 1)
     val e = intercept[IllegalArgumentException](
       Snapshots.scanDirect(spark, sdir, 1, "k", 10L, 20L).count())
@@ -198,7 +198,7 @@ class LayoutSpec extends SparkSpec {
 
   test("restore rolls the table back to the snapshot; clones are unaffected") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_restore").toString
+    val dir = TempDirs.create("graft_restore").toString
     val snap = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "name", "v")
     Snapshots.write(snap, "k", dir, 1)
@@ -208,7 +208,7 @@ class LayoutSpec extends SparkSpec {
       .toDF("k", "name", "v")
     Snapshots.write(current, "k", dir, 2)
     // a clone taken from the snapshot BEFORE the rollback
-    val cloneDir = Files.createTempDirectory("graft_restore_clone").toString
+    val cloneDir = TempDirs.create("graft_restore_clone").toString
     Snapshots.exportSnapshot(dir, 1, cloneDir)
     // the in-place rollback: v3 becomes the serving state
     Snapshots.restore(dir, 1, 3)
@@ -244,7 +244,7 @@ class LayoutSpec extends SparkSpec {
 
   test("snapshot read memo: a second read of one version is the same plan and starts no job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val dir = Files.createTempDirectory("graft_readmemo").toString
+    val dir = TempDirs.create("graft_readmemo").toString
     Snapshots.write(kv(1L to 50L, 2), "k", dir, 1)
     val group = "graft-read-memo-spec"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -275,7 +275,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshot read memo: Snapshots.write over the same version is seen by the next read") {
-    val dir = Files.createTempDirectory("graft_readmemo_write").toString
+    val dir = TempDirs.create("graft_readmemo_write").toString
     Snapshots.write(kv(1L to 50L, 2), "k", dir, 1)
     assert(Snapshots.read(spark, dir, 1).count() == 50L)
     Snapshots.write(kv(100L to 119L, 3), "k", dir, 1)
@@ -283,7 +283,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshot read memo: Snapshots.restore into a slot is seen by the next read") {
-    val dir = Files.createTempDirectory("graft_readmemo_restore").toString
+    val dir = TempDirs.create("graft_readmemo_restore").toString
     Snapshots.write(kv(1L to 10L, 2), "k", dir, 1)
     Snapshots.write(kv(20L to 40L, 5), "k", dir, 2)
     assert(Snapshots.read(spark, dir, 2).count() == 21L)
@@ -292,7 +292,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshot read memo: a bare Layout.writeSorted behind the memo is seen by the next read") {
-    val dir = Files.createTempDirectory("graft_readmemo_behind").toString
+    val dir = TempDirs.create("graft_readmemo_behind").toString
     Snapshots.write(kv(1L to 30L, 2), "k", dir, 1)
     assert(Snapshots.read(spark, dir, 1).count() == 30L)
     // no Snapshots entry point runs: the in-JVM stand-in for another
@@ -302,7 +302,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshot read memo: older versions read the same rows after newer commits") {
-    val dir = Files.createTempDirectory("graft_readmemo_old").toString
+    val dir = TempDirs.create("graft_readmemo_old").toString
     Snapshots.write(kv(1L to 40L, 2), "k", dir, 1)
     val v1 = rows(Snapshots.read(spark, dir, 1))
     Snapshots.write(kv(1L to 40L, 3), "k", dir, 2)
@@ -313,7 +313,7 @@ class LayoutSpec extends SparkSpec {
 
   test("read memo stamp: a same-size rewrite inside one mtime tick restamps by file name") {
     import java.nio.file.{Paths, attribute}
-    val dir = Files.createTempDirectory("graft_stamp_names")
+    val dir = TempDirs.create("graft_stamp_names")
     val a = dir.resolve("part-a.parquet")
     Files.copy(Paths.get(s"$sfDir/region.parquet"), a)
     val before = Layout.read(spark, dir.toString)
@@ -329,7 +329,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("read memo is capped at Tables.memoCap entries") {
-    val dir = Files.createTempDirectory("graft_memo_cap")
+    val dir = TempDirs.create("graft_memo_cap")
     val src = java.nio.file.Paths.get(s"$sfDir/region.parquet")
     val paths = (0 to Tables.memoCap).map { i =>
       Files.copy(src, dir.resolve(s"r$i.parquet")).toString
@@ -339,5 +339,106 @@ class LayoutSpec extends SparkSpec {
       s"memo holds ${Tables.readMemo.size} plans past the cap ${Tables.memoCap}")
     val last = Layout.read(spark, paths.last)
     assert(Layout.read(spark, paths.last) eq last)
+  }
+
+  // admin ops on merge-on-read versions: each delta version is checked
+  // against a twin snapshot whose every version is a full write of the
+  // same contents
+  private def isDelta(base: String, v: Int): Boolean =
+    new java.io.File(Snapshots.path(base, v)).listFiles()
+      .exists(_.getName.startsWith(graft.core.Deltas.Marker))
+
+  /** v1 = keys 1..400 in full; v2 puts 10 keys (a delta), v3 deletes 8
+    * (a delta, 18 keys), v4 puts 12 more (30 keys, past the 400/16 = 25
+    * bound: a compaction) and v5 deletes 5 (a delta over v4). Returns the
+    * merge-on-read base and its full-write twin. */
+  private def deltaTwins(name: String): (String, String) = {
+    import spark.implicits._
+    import graft.kv.Mutations
+    val mor = TempDirs.create(s"graft_${name}_mor").toString
+    val full = TempDirs.create(s"graft_${name}_full").toString
+    val v1 = (1L to 400L).map(k => (k, s"v$k", k * 0.5)).toDF("k", "name", "v")
+    Snapshots.write(v1, "k", mor, 1)
+    Snapshots.write(v1, "k", full, 1)
+    val puts1 = ((5L to 50L by 5) :+ 900L).map(k => (k, s"p$k", -1.0)).toDF("k", "name", "v")
+    val dels1 = Seq(3L, 4L, 5L, 6L, 100L, 101L, 102L, 950L).toDF("k")
+    val puts2 = (300L to 311L).map(k => (k, s"q$k", 2.0)).toDF("k", "name", "v")
+    val dels2 = Seq(1L, 2L, 303L, 304L, 399L).toDF("k")
+    val ops: Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = Seq(
+      Mutations.put(_, puts1, "k"), Mutations.deleteRows(_, dels1, "k"),
+      Mutations.put(_, puts2, "k"), Mutations.deleteRows(_, dels2, "k"))
+    ops.zipWithIndex.foreach { case (op, i) =>
+      Snapshots.write(op(Snapshots.read(spark, mor, i + 1)), "k", mor, i + 2)
+      Layout.writeSorted(op(Snapshots.read(spark, full, i + 1)), "k", Snapshots.path(full, i + 2))
+    }
+    assert(Seq(2, 3, 4, 5).map(isDelta(mor, _)) == Seq(true, true, false, true))
+    assert((2 to 5).forall(!isDelta(full, _)))
+    (mor, full)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("scanDirect and multiSnapshotScan read delta versions as their full twins") {
+    val (mor, full) = deltaTwins("direct")
+    for (v <- 1 to 5; (lo, hi) <- Seq((0L, 1000L), (1L, 7L), (40L, 120L), (300L, 306L), (900L, 901L))) {
+      assert(sortedRows(Snapshots.scanDirect(spark, mor, v, "k", lo, hi)) ==
+        sortedRows(Snapshots.scanDirect(spark, full, v, "k", lo, hi)), s"v$v [$lo, $hi)")
+    }
+    val scans = (b: String) => Seq(("a", b, 2), ("b", b, 3), ("c", b, 5))
+    assert(sortedRows(Snapshots.multiSnapshotScan(spark, scans(mor), "k", 2L, 320L)) ==
+      sortedRows(Snapshots.multiSnapshotScan(spark, scans(full), "k", 2L, 320L)))
+  }
+
+  test("regionManifest of a delta version lists its base's regions and its delta file") {
+    val (mor, _) = deltaTwins("manifest")
+    def manifest(v: Int) = Snapshots.regionManifest(spark, mor, v, "k").collect().toSeq
+      .map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2)), r.getLong(3)))
+    // v3 = v1's region files, shadowed rows counted, plus one delta
+    // file whose range and count cover its 10 puts and 8 tombstones
+    // (key 5 was put, then deleted)
+    val (base, delta) = manifest(3).partition(!_._1.contains("/v=3/"))
+    assert(base == manifest(1))
+    assert(delta.map(r => (r._2, r._3, r._4)) == Seq((Some(3L), Some(950L), 18L)), delta)
+    // v5 = the compacted v4's regions plus a 5-key delta
+    val (base5, delta5) = manifest(5).partition(!_._1.contains("/v=5/"))
+    assert(base5 == manifest(4))
+    assert(delta5.map(r => (r._2, r._3, r._4)) == Seq((Some(1L), Some(399L), 5L)), delta5)
+  }
+
+  test("exportSnapshot of a delta version reads the same after the source base is deleted") {
+    val (mor, full) = deltaTwins("export")
+    val target = TempDirs.create("graft_export_delta").toString
+    Snapshots.exportSnapshot(mor, 3, target)
+    Snapshots.exportSnapshot(mor, 4, target)
+    assert(!isDelta(target, 3))
+    val want = sortedRows(Snapshots.read(spark, full, 3))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(Snapshots.path(mor, 1)))
+    assert(sortedRows(Snapshots.read(spark, target, 3)) == want)
+    assert(sortedRows(Snapshots.read(spark, target, 4)) == sortedRows(Snapshots.read(spark, full, 4)))
+  }
+
+  test("restore to and from delta versions, diff and restoreAudit agree with full writes") {
+    val (mor, full) = deltaTwins("restore_delta")
+    // to a delta version (the copy stays a delta of v1), and from one
+    // (the current v5 is a delta) back to the full v1, across the v4
+    // compaction
+    for (b <- Seq(mor, full)) {
+      Snapshots.restore(b, 3, 6)
+      Snapshots.restore(b, 1, 7)
+    }
+    assert(isDelta(mor, 6))
+    for (v <- Seq(6, 7))
+      assert(sortedRows(Snapshots.read(spark, mor, v)) == sortedRows(Snapshots.read(spark, full, v)))
+    assert(sortedRows(Snapshots.read(spark, mor, 6)) == sortedRows(Snapshots.read(spark, mor, 3)))
+    for ((a, c) <- Seq((1, 3), (2, 5), (3, 4), (5, 6))) {
+      def diffs(b: String) = sortedRows(Snapshots.diff(Snapshots.read(spark, b, a),
+        Snapshots.read(spark, b, c), "k", Seq("name", "v")))
+      def audits(b: String) = sortedRows(Snapshots.restoreAudit(Snapshots.read(spark, b, a),
+        Snapshots.read(spark, b, c), "k", Seq("name", "v")))
+      assert(diffs(mor) == diffs(full), s"diff v$a v$c")
+      assert(audits(mor) == audits(full), s"restoreAudit v$a v$c")
+      assert(diffs(mor).nonEmpty)
+    }
   }
 }

@@ -1,0 +1,212 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.core.{Deltas, Layout, Snapshots, Tables}
+import graft.kv.{Mutations, Scans}
+
+/** Merge-on-read commits ([[graft.core.Deltas]]): a row op committed
+  * over an earlier version writes a delta, and every version reads the
+  * same as a driver model of the ops and as the same contents written
+  * in full. */
+class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val schemaOf = (kt: DataType) => StructType(Seq(
+    StructField("k", kt), StructField("s", StringType), StructField("x", DoubleType)))
+
+  private def isDelta(base: String, v: Int): Boolean =
+    new java.io.File(Snapshots.path(base, v)).listFiles().exists(_.getName.startsWith(Deltas.Marker))
+
+  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** Every file of a version dir with its length and mtime. */
+  private def listing(base: String, v: Int): Seq[(String, Long, Long)] =
+    new java.io.File(Snapshots.path(base, v)).listFiles().toSeq
+      .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1)
+
+  /** Jobs started while `body` runs, counted by job group. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "graft-merge-on-read-spec"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "merge-on-read spec")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A random sequence of `commits` row ops over a base of `n` keyed
+    * rows (Long extremes included when the key is a long) plus three
+    * NULL-key rows, checked after every commit against a driver model
+    * and a full write of the same plan; afterwards every older version
+    * must still list the same files and read the same rows. */
+  private def differential(kt: DataType, seed: Long, n: Int, commits: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
+    val base = TempDirs.create(s"graft_mor_${kt.simpleString}").toString
+    val fullBase = TempDirs.create(s"graft_mor_full_${kt.simpleString}").toString
+    def key(l: Long): Any = if (kt == IntegerType) l.toInt else l
+    val extremes =
+      if (kt == LongType) Seq(Long.MinValue, Long.MaxValue)
+      else Seq(Int.MinValue.toLong, Int.MaxValue.toLong)
+    val pool = (extremes ++ (1 to n * 2).map(_ => (rnd.nextInt(200000) - 100000).toLong)).distinct
+    val model = scala.collection.mutable.Map[Long, (String, Double)]()
+    pool.take(n).foreach(k => model(k) = (s"b$k", rnd.nextDouble()))
+    val nulls = Seq(Row(null, "n1", 0.9), Row(null, "n2", 0.1), Row(null, "n3", 0.6))
+    def df(rows: Seq[Row], schema: StructType = schemaOf(kt)) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def rowOf(k: Long, v: (String, Double)) = Row(key(k), v._1, v._2)
+    def modelRows: Seq[String] =
+      (model.toSeq.map { case (k, v) => rowOf(k, v) } ++ nulls).map(_.toString).sorted
+    Snapshots.write(df(model.toSeq.map { case (k, v) => rowOf(k, v) } ++ nulls), "k", base, 1)
+    val deleted = scala.collection.mutable.Set[Long]()
+    def pick(m: Int): Seq[Long] = {
+      // present keys, absent keys, and keys deleted earlier (re-puts)
+      val present = rnd.shuffle(model.keys.toSeq).take(m)
+      val absent = rnd.shuffle(pool.filterNot(model.contains)).take(m / 3 + 1)
+      val again = rnd.shuffle(deleted.toSeq).take(2)
+      (present ++ absent ++ again).distinct
+    }
+    val check: Column = col("x") > 0.5
+    def passes(k: Long) = model.get(k).exists(_._2 > 0.5)
+    val kinds = Seq("put", "deleteRows", "checkAndPut", "checkAndPutAbsent",
+      "checkAndDelete", "mutateRow", "checkAndMutateRow")
+    val history = scala.collection.mutable.ArrayBuffer[(Int, Seq[(String, Long, Long)], Seq[String])]()
+    var deltas = 0
+    var compactions = 0
+    (1 to commits).foreach { v =>
+      val kind = kinds((v - 1) % kinds.size)
+      val puts = pick(6 + rnd.nextInt(8)).map(k => k -> (s"p$v-$k", rnd.nextDouble()))
+      val dels = pick(3 + rnd.nextInt(5))
+      val putDf = df(puts.map { case (k, p) => rowOf(k, p) })
+      val delDf = df(dels.map(k => Row(key(k))), StructType(Seq(StructField("k", kt))))
+      val cur = Snapshots.read(spark, base, v)
+      val next = kind match {
+        case "put" => Mutations.put(cur, putDf, "k")
+        case "deleteRows" => Mutations.deleteRows(cur, delDf, "k")
+        case "checkAndPut" => Mutations.checkAndPut(cur, putDf, "k", check)
+        case "checkAndPutAbsent" => Mutations.checkAndPutAbsent(cur, putDf, "k")
+        case "checkAndDelete" => Mutations.checkAndDelete(cur, delDf, "k", check)
+        case "mutateRow" => Mutations.mutateRow(cur, putDf, delDf, "k")
+        case "checkAndMutateRow" => Mutations.checkAndMutateRow(cur, putDf, delDf, "k", check)
+      }
+      kind match {
+        case "put" => puts.foreach { case (k, p) => model(k) = p }
+        case "deleteRows" => dels.foreach(model.remove)
+        case "checkAndPut" => puts.foreach { case (k, p) => if (passes(k)) model(k) = p }
+        case "checkAndPutAbsent" => puts.foreach { case (k, p) => if (!model.contains(k)) model(k) = p }
+        case "checkAndDelete" => dels.filter(passes).foreach(model.remove)
+        case "mutateRow" =>
+          dels.foreach(model.remove)
+          puts.foreach { case (k, p) => if (!dels.contains(k)) model(k) = p }
+        case "checkAndMutateRow" =>
+          val pass = (puts.map(_._1) ++ dels).filter(passes).toSet
+          dels.filter(pass).foreach(model.remove)
+          puts.foreach { case (k, p) => if (pass(k) && !dels.contains(k)) model(k) = p }
+      }
+      deleted ++= dels.filterNot(model.contains)
+      Snapshots.write(next, "k", base, v + 1)
+      Layout.writeSorted(next, "k", Snapshots.path(fullBase, v + 1))
+      val got = sorted(Snapshots.read(spark, base, v + 1))
+      assert(got == modelRows, s"v${v + 1} ($kind) differs from the model")
+      assert(got == sorted(spark.read.parquet(Snapshots.path(fullBase, v + 1))),
+        s"v${v + 1} ($kind) differs from the same plan written in full")
+      if (isDelta(base, v + 1)) deltas += 1
+      else if (v > 1 && isDelta(base, v)) compactions += 1
+      history += ((v + 1, listing(base, v + 1), got))
+    }
+    assert(deltas >= commits / 2, s"only $deltas of $commits commits wrote a delta")
+    assert(compactions >= 1, "no commit compacted past the delta bound")
+    history.foreach { case (v, files, rows) =>
+      assert(listing(base, v) == files, s"v$v's files changed")
+      Tables.readMemo.keySet().removeIf(_.path == Snapshots.path(base, v))
+      assert(sorted(Snapshots.read(spark, base, v)) == rows, s"v$v's rows changed")
+    }
+  }
+
+  test("seeded random row-op sequences over a long key read as the model and as a full write") {
+    differential(LongType, seed = 8101L, n = 1200, commits = 35)
+  }
+
+  test("seeded random row-op sequences over an int key read as the model and as a full write") {
+    differential(IntegerType, seed = 8102L, n = 900, commits = 30)
+  }
+
+  test("a non-integral key or a commit into another base writes in full") {
+    import spark.implicits._
+    val a = TempDirs.create("graft_mor_strkey").toString
+    Snapshots.write(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), "k", a, 1)
+    Snapshots.write(Mutations.put(Snapshots.read(spark, a, 1), Seq(("c", 3L)).toDF("k", "v"), "k"),
+      "k", a, 2)
+    assert(!isDelta(a, 2))
+    assert(sorted(Snapshots.read(spark, a, 2)) == Seq("[a,1]", "[b,2]", "[c,3]"))
+
+    val x = TempDirs.create("graft_mor_x").toString
+    val y = TempDirs.create("graft_mor_y").toString
+    Snapshots.write((1L to 64L).map(k => (k, k)).toDF("k", "v"), "k", x, 1)
+    val next = Mutations.put(Snapshots.read(spark, x, 1), Seq((5L, 50L)).toDF("k", "v"), "k")
+    Snapshots.write(next, "k", y, 2)
+    assert(!isDelta(y, 2))
+    Snapshots.write(next, "k", x, 2)
+    assert(isDelta(x, 2))
+    assert(sorted(Snapshots.read(spark, y, 2)) == sorted(Snapshots.read(spark, x, 2)))
+  }
+
+  test("a new delta version resolves with no Spark job, and a Get reads one file through one scan") {
+    import spark.implicits._
+    val base = TempDirs.create("graft_mor_get").toString
+    Layout.writeSorted((0L until 4096L).map(k => (k, s"v$k")).toDF("k", "s"), "k",
+      Snapshots.path(base, 1), buckets = 16)
+    Snapshots.write(Mutations.put(Snapshots.read(spark, base, 1),
+      Seq((7L, "put"), (9999L, "new")).toDF("k", "s"), "k"), "k", base, 2)
+    assert(isDelta(base, 2))
+    Tables.readMemo.keySet().removeIf(_.path == Snapshots.path(base, 2))
+    var v2: DataFrame = null
+    assert(jobsIn { v2 = Snapshots.read(spark, base, 2) } == 0)
+    def get(k: Long): (Seq[String], Long, Int) = {
+      val df = Scans.get(v2, "k", k, Seq("k", "s"))
+      val rows = df.collect().map(_.toString).toSeq
+      val plan = df.queryExecution.executedPlan
+      val scans = collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
+      (rows, scans.map(_.metrics("numFiles").value).sum, scans.size)
+    }
+    assert(get(7L) == ((Seq("[7,put]"), 1L, 1)), "a Get of a delta key")
+    assert(get(9999L) == ((Seq("[9999,new]"), 1L, 1)), "a Get of a key only the delta holds")
+    assert(get(100L) == ((Seq("[100,v100]"), 1L, 1)), "a Get of a base key")
+    assert(get(5000L) == ((Nil, 0L, 1)), "a Get of an absent key")
+    // a batch that changes nothing commits an empty delta
+    Snapshots.write(Mutations.checkAndPut(Snapshots.read(spark, base, 1),
+      Seq((8L, "x")).toDF("k", "s"), "k", col("s") === "no such value"), "k", base, 3)
+    assert(isDelta(base, 3))
+    assert(sorted(Snapshots.read(spark, base, 3)) == sorted(Snapshots.read(spark, base, 1)))
+  }
+
+  test("a delta version whose base was rewritten or deleted fails naming both") {
+    import spark.implicits._
+    for (how <- Seq("rewritten", "deleted")) {
+      val base = TempDirs.create(s"graft_mor_stale_$how").toString
+      Snapshots.write((1L to 64L).map(k => (k, k)).toDF("k", "v"), "k", base, 1)
+      Snapshots.write(Mutations.deleteRows(Snapshots.read(spark, base, 1), Seq(3L).toDF("k"), "k"),
+        "k", base, 2)
+      assert(isDelta(base, 2))
+      assert(Snapshots.read(spark, base, 2).count() == 63L)
+      if (how == "rewritten") Snapshots.write((1L to 64L).map(k => (k, -k)).toDF("k", "v"), "k", base, 1)
+      else org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(Snapshots.path(base, 1)))
+      val e = intercept[IllegalStateException](Snapshots.read(spark, base, 2).collect())
+      assert(e.getMessage.contains(Snapshots.path(base, 2)), e.getMessage)
+      assert(e.getMessage.contains(Snapshots.path(base, 1)), e.getMessage)
+      assert(e.getMessage.contains(if (how == "rewritten") "rewritten" else "missing"), e.getMessage)
+    }
+  }
+}

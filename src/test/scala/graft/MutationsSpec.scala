@@ -1096,7 +1096,7 @@ class MutationsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     object Plans extends AdaptiveSparkPlanHelper
-    val dir = java.nio.file.Files.createTempDirectory("acl_ops").toString
+    val dir = TempDirs.create("acl_ops").toString
     Seq((1L, "web", Option("click")), (2L, "act", Option("purchase")),
         (3L, "act", Option("error")), (4L, "web", None), (5L, "act", None))
       .toDF("op_idx", "family", "qualifier").write.parquet(s"$dir/ops")

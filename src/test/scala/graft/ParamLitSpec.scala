@@ -40,7 +40,7 @@ class ParamLitSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   private lazy val extremesPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("paramlit").toString
+    val dir = TempDirs.create("paramlit").toString
     val d0 = Date.valueOf("0001-01-01")
     val d1 = Date.valueOf("9999-12-31")
     val t0 = Timestamp.valueOf("0001-01-01 00:00:00")
@@ -125,7 +125,7 @@ class ParamLitSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("the scan keeps the real literal: same PushedFilters and numOutputRows as the rule-off plan") {
-    val dir = java.nio.file.Files.createTempDirectory("paramlit_scan").toString
+    val dir = TempDirs.create("paramlit_scan").toString
     Layout.writeSorted(spark.range(0, 20000).toDF("k").withColumn("v", col("k") * 3),
       "k", s"$dir/t")
     def run(s: SparkSession, p: Column): (String, Long, Seq[String]) = {
@@ -171,7 +171,7 @@ class ParamLitSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("codegen guard: 90 kv reads with distinct keys compile at most 3 classes") {
-    val dir = java.nio.file.Files.createTempDirectory("paramlit_kv").toString
+    val dir = TempDirs.create("paramlit_kv").toString
     Layout.writeSorted(spark.range(0, 50000).toDF("o_orderkey")
       .withColumn("o_custkey", col("o_orderkey") % 977)
       .withColumn("o_totalprice", col("o_orderkey") * 1.25), "o_orderkey", s"$dir/orders")

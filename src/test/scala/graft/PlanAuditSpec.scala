@@ -803,7 +803,7 @@ class PlanAuditSpec extends SparkSpec {
   test("scanDirect: split planning excludes non-overlapping region files") {
     import spark.implicits._
     import graft.core.Snapshots
-    val base = java.nio.file.Files.createTempDirectory("graft_snap_direct").toString
+    val base = TempDirs.create("graft_snap_direct").toString
     val df = (0L until 800L).map(k => (k, s"v$k")).toDF("rowkey", "v")
     Snapshots.write(df, "rowkey", base, 1)
     val full = Snapshots.read(spark, base, 1)
@@ -824,7 +824,7 @@ class PlanAuditSpec extends SparkSpec {
   test("multiSnapshotScan: files come from BOTH v-dirs, each pruned to its overlap") {
     import spark.implicits._
     import graft.core.Snapshots
-    val base = java.nio.file.Files.createTempDirectory("graft_snap_multi").toString
+    val base = TempDirs.create("graft_snap_multi").toString
     val df = (0L until 800L).map(k => (k, s"v$k")).toDF("rowkey", "v")
     Snapshots.write(df, "rowkey", base, 1)
     Snapshots.write(df.where($"rowkey" % 2 === 1), "rowkey", base, 2)

@@ -40,7 +40,7 @@ class RegionPruneSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val cols = Seq("k", "s", "d", "ts", "dec")
 
   test("a Get, a multiGet, a range and a small scan open exactly the overlapping region files") {
-    val base = Files.createTempDirectory("graft_regions").toFile
+    val base = TempDirs.create("graft_regions").toFile
     try {
       import spark.implicits._
       // even keys (odd ones are absent, some between two regions), the
@@ -116,7 +116,7 @@ class RegionPruneSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("an empty version and an IntegerType key read only what can hold the key") {
-    val base = Files.createTempDirectory("graft_regions_small").toFile
+    val base = TempDirs.create("graft_regions_small").toFile
     try {
       import spark.implicits._
       Snapshots.write(Seq.empty[(Long, String)].toDF("k", "v"), "k", base.getPath, 1)
@@ -185,7 +185,7 @@ class RegionPruneSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(tables.length >= 10, tables.mkString(","))
     tables.foreach(t => resolvesLikeSpark(s"$sfDir/$t", events = t == "events.parquet"))
 
-    val base = Files.createTempDirectory("graft_regions_resolve").toFile
+    val base = TempDirs.create("graft_regions_resolve").toFile
     val nanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
     try {
       import spark.implicits._

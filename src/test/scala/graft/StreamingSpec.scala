@@ -27,7 +27,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming sessionization: closed sessions match batch sessions exactly") {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "value")
-    val dir = Files.createTempDirectory("graft_sess_src").toString
+    val dir = TempDirs.create("graft_sess_src").toString
     // stage the replay files in EVENT-TIME order (range partition on ts,
     // files listed in path order) so nothing arrives behind the
     // watermark — append mode DROPS late rows, and a random replay
@@ -77,7 +77,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming windowed counters converge to the batch answer") {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_stream_src").toString
+    val dir = TempDirs.create("graft_stream_src").toString
     // stage the stream as parquet files; the file source replays them
     // incrementally (maxFilesPerTrigger=1 → several micro-batches)
     events.repartition(4).write.mode("overwrite").parquet(dir)
@@ -110,7 +110,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val ev = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_ssjoin_src").toString
+    val dir = TempDirs.create("graft_ssjoin_src").toString
     // event-time-ordered replay (the sessionize discipline): append
     // mode drops rows behind the watermark
     ev.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSpec {
     val dims = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
       .where(col("user_id") =!= 7)
-    val dir = Files.createTempDirectory("graft_enrich_src").toString
+    val dir = TempDirs.create("graft_enrich_src").toString
     events.repartition(4).write.mode("overwrite").parquet(dir)
     val streamed = spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
@@ -177,9 +177,9 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch maintains a copy-on-write counter table equal to the batch answer") {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "event_type", "value")
-    val srcDir = Files.createTempDirectory("graft_table_src").toString
+    val srcDir = TempDirs.create("graft_table_src").toString
     events.repartition(4).write.mode("overwrite").parquet(srcDir)
-    val counterDir = Files.createTempDirectory("graft_counter_tbl").toString + "/t"
+    val counterDir = TempDirs.create("graft_counter_tbl").toString + "/t"
     val streamed = spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val q = StreamOps.maintainCounterTable(streamed, counterDir).start()
@@ -197,7 +197,7 @@ class StreamingSpec extends SparkSpec {
 
   test("maintainGuard: replay of a committed version skips the rewrite; fresh checkpoint over an older table refuses") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_guard_tbl").toString + "/t"
+    val dir = TempDirs.create("graft_guard_tbl").toString + "/t"
     // plant a complete v=3 snapshot
     import spark.implicits._
     graft.core.Snapshots.write(Seq(("a", 1L)).toDF("k", "n"), "k", dir, 3)
@@ -216,7 +216,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("previous stream"), e.getMessage)
     // no table yet: batch 0 writes
-    val fresh = Files.createTempDirectory("graft_guard_fresh").toString + "/t"
+    val fresh = TempDirs.create("graft_guard_fresh").toString + "/t"
     var wrote = false
     StreamOps.maintainGuard(spark, fresh, 0L) { _ => wrote = true }
     assert(wrote)
@@ -224,7 +224,7 @@ class StreamingSpec extends SparkSpec {
 
   test("maintainGuard: query-id marker closes the max==batchId fresh-checkpoint hole") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_guard_qid").toString + "/t"
+    val dir = TempDirs.create("graft_guard_qid").toString + "/t"
     val key = "sql.streaming.queryId"
     try {
       // stream q1 commits ONLY v=0, branding the table
@@ -257,7 +257,7 @@ class StreamingSpec extends SparkSpec {
   test("maintained tables: stray version-like dirs ignored, GC keeps the newest") {
     import java.nio.file.Files
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_guard_gc").toString + "/t"
+    val dir = TempDirs.create("graft_guard_gc").toString + "/t"
     (0 to 3).foreach(v => graft.core.Snapshots.write(
       Seq(("a", v.toLong)).toDF("k", "n"), "k", dir, v))
     // a manual backup copy with its own _SUCCESS is NOT a version —
@@ -286,7 +286,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup drops duplicate payloads across micro-batches, bounded state") {
     val events = Tables.load(spark, sfDir, "events").select("event_id", "ts", "props")
-    val dir = Files.createTempDirectory("graft_dedup_src").toString
+    val dir = TempDirs.create("graft_dedup_src").toString
     events.repartition(4).write.mode("overwrite").parquet(dir)
     val streamed = spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
@@ -314,7 +314,7 @@ class StreamingSpec extends SparkSpec {
     val edits = Tables.eventCells(spark, sfDir)
       .withColumn("op", when(col("event_id") % 7 === 0, "delete").otherwise("put"))
       .select("rowkey", "qualifier", "ts", "value", "event_id", "op")
-    val dir = Files.createTempDirectory("graft_repl_src").toString
+    val dir = TempDirs.create("graft_repl_src").toString
     // plain repartition = random file order: edits ship OUT of commit
     // order across micro-batches, exactly what HBase replication permits
     edits.repartition(4).write.mode("overwrite").parquet(dir)
@@ -367,7 +367,7 @@ class StreamingSpec extends SparkSpec {
         null.asInstanceOf[String]),
       (4L, java.sql.Timestamp.valueOf("2024-01-01 00:03:00"),
         null.asInstanceOf[String])).toDF("event_id", "ts", "props")
-    val dir = Files.createTempDirectory("graft_dedup_null").toString
+    val dir = TempDirs.create("graft_dedup_null").toString
     rows.coalesce(1).write.mode("overwrite").parquet(dir)
     val streamed = spark.readStream.schema(rows.schema).parquet(dir)
     val q = StreamOps.streamingDedup(streamed, "props", "ts", "90 days")
@@ -397,7 +397,7 @@ class StreamingSpec extends SparkSpec {
       (3L, "q", java.sql.Timestamp.valueOf("2024-01-01 00:00:04"),
         null.asInstanceOf[java.lang.Double], 4L, "put"))
       .toDF("rowkey", "qualifier", "ts", "value", "event_id", "op")
-    val dir = Files.createTempDirectory("graft_repl_null").toString
+    val dir = TempDirs.create("graft_repl_null").toString
     edits.coalesce(1).write.mode("overwrite").parquet(dir)
     val streamed = spark.readStream.schema(edits.schema).parquet(dir)
     val q = StreamOps.replicateWal(streamed)
@@ -418,7 +418,7 @@ class StreamingSpec extends SparkSpec {
   test("flatMapGroupsWithState running counters converge to batch totals") {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_state_src").toString
+    val dir = TempDirs.create("graft_state_src").toString
     events.repartition(4).write.mode("overwrite").parquet(dir)
 
     val streamed = spark.readStream.schema(events.schema)
@@ -452,7 +452,7 @@ class StreamingSpec extends SparkSpec {
     val nWindows = events
       .select(col("user_id"), date_trunc("DAY", col("ts")).as("w"))
       .distinct().count()
-    val dir = Files.createTempDirectory("graft_quota_evict_src").toString
+    val dir = TempDirs.create("graft_quota_evict_src").toString
     // event-time-ordered replay (the sessionize spec's technique) so the
     // watermark actually advances past old windows and fires timeouts
     events.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
@@ -481,7 +481,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming top-k converges to the batch per-window ranking") {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "event_type")
-    val dir = Files.createTempDirectory("graft_topk_src").toString
+    val dir = TempDirs.create("graft_topk_src").toString
     events.repartition(4).write.mode("overwrite").parquet(dir)
 
     val streamed = spark.readStream.schema(events.schema)
@@ -518,7 +518,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming quota converges to the batch throttle report across micro-batches") {
     val limit = 3L
     val events = Tables.load(spark, sfDir, "events").select("user_id", "ts")
-    val dir = Files.createTempDirectory("graft_quota_src").toString
+    val dir = TempDirs.create("graft_quota_src").toString
     events.repartition(4).write.mode("overwrite").parquet(dir)
 
     val streamed = spark.readStream.schema(events.schema)
@@ -553,12 +553,12 @@ class StreamingSpec extends SparkSpec {
   test("streaming SCD2 maintenance converges to the batch build under shuffled batches") {
     val cells = Tables.eventCells(spark, sfDir)
       .select("rowkey", "qualifier", "ts", "value", "event_id")
-    val srcDir = Files.createTempDirectory("graft_scd2_src").toString
+    val srcDir = TempDirs.create("graft_scd2_src").toString
     // repartition(5) gives 5 files = 5 micro-batches in arbitrary
     // order: versions of one key land across batches out of ts order,
     // exercising the splice-and-clip re-window
     cells.repartition(5).write.mode("overwrite").parquet(srcDir)
-    val dimDir = Files.createTempDirectory("graft_scd2_tbl").toString + "/t"
+    val dimDir = TempDirs.create("graft_scd2_tbl").toString + "/t"
     val streamed = spark.readStream.schema(cells.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val q = StreamOps.maintainScd2Table(streamed, dimDir,
@@ -582,7 +582,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming LSH candidates preserve batch-bucket connectivity under shuffled arrival") {
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_lsh_src").toString
+    val dir = TempDirs.create("graft_lsh_src").toString
     // plain repartition = shuffled arrival order across micro-batches
     docs.repartition(4).write.mode("overwrite").parquet(dir)
     val streamed = spark.readStream.schema(docs.schema)
@@ -623,7 +623,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming LSH idleTimeout bounds state: cold buckets evict, pairs stay real") {
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_lsh_ttl_src").toString
+    val dir = TempDirs.create("graft_lsh_ttl_src").toString
     docs.repartition(4).write.mode("overwrite").parquet(dir)
     val streamed = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
