@@ -11,10 +11,14 @@ import graft.sim.{TopKStruct, VecDot}
 
 /** graft's planner extension: registers graft's native Expressions as
   * SQL functions, so `spark.sql("... vec_dot(a, b) ...")` works exactly
-  * like the DataFrame API, and installs the [[graft.core.ParamLits]]
-  * physical rule (comparison constants become codegen parameters) and
-  * the [[graft.core.ExpandMergeDelta]] optimizer rule (a mutation's
-  * merge node becomes its anti-join ∪ rows plan).
+  * like the DataFrame API, and installs three rules:
+  *  - [[graft.core.ParamLits]], physical: comparison constants become
+  *    codegen parameters;
+  *  - [[graft.core.Fetch]], physical, after it: a collect of a small
+  *    scan pipeline (a Get, multiGet, range or small scan over a few
+  *    MB of region files) runs on the calling thread, with no job;
+  *  - [[graft.core.ExpandMergeDelta]], optimizer: a mutation's merge
+  *    node becomes its anti-join ∪ rows plan.
   *
   * `graft.Session.local` installs it on every session it builds; other
   * sessions get it with `spark.sql.extensions=graft.GraftExtensions`
@@ -28,6 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     ext.injectColumnar(_ => graft.core.ParamLits)
+    ext.injectColumnar(_ => graft.core.Fetch)
     ext.injectOptimizerRule(_ => graft.core.ExpandMergeDelta)
   }
 }

@@ -17,7 +17,11 @@ object Scans {
     * [start, stop) exclusive-stop. Sort-free: an HBase scanner returns
     * key order because the storage is sorted — with Layout.writeSorted
     * parquet the same holds per file; a global presentation sort
-    * belongs to the consumer (the verify harness adds one), not here. */
+    * belongs to the consumer (the verify harness adds one), not here.
+    * Region-pruned to the files whose key ranges meet [start, stop) and
+    * page-index-pruned within them; a collect over at most 2 MB of
+    * such files, in at most 4 partitions, runs in-thread with no Spark
+    * job ([[graft.core.Fetch]]). */
   def range(df: DataFrame, keyCol: String, start: Long, stop: Long,
             projection: Seq[String]): DataFrame =
     df.where(col(keyCol) >= start && col(keyCol) < stop)
@@ -31,9 +35,12 @@ object Scans {
     * `key >= start` range with a row LIMIT that must plan as
     * TakeOrderedAndProject — per-partition top-n + an n-row merge at
     * the driver, never a global sort or an iterative scanner
-    * (plan-asserted in the spec). At 100 TB the parquet min/max
-    * pruning plays the pread role: only the row groups at the start
-    * key are touched, everything else is skipped metadata-side. */
+    * (plan-asserted in the spec). At 100 TB region pruning plays the
+    * pread role: only the files at or past the start key are opened,
+    * and the page index prunes within them. When those files total at
+    * most 2 MB in at most 4 partitions, the per-partition top-n and the
+    * merge both run in-thread on the driver, with no Spark job
+    * ([[graft.core.Fetch]]). */
   def small(df: DataFrame, keyCol: String, start: Long, limit: Int,
             projection: Seq[String]): DataFrame = {
     require(limit >= 1 && limit <= 10000,
@@ -103,7 +110,10 @@ object Scans {
   }
 
   /** Get — single-row point read. With rowkey-sorted parquet this is a
-    * min/max-pruned scan touching one row group. */
+    * region-pruned scan (one file, by the footers' key ranges) that
+    * decodes one page (page-index pruning); when that file is within
+    * 2 MB, its collect runs in-thread with no Spark job
+    * ([[graft.core.Fetch]]). */
   def get(df: DataFrame, keyCol: String, key: Long,
           projection: Seq[String]): DataFrame =
     df.where(col(keyCol) === key).select(projection.map(col): _*)
@@ -111,7 +121,11 @@ object Scans {
   /** HTable.get(List[Get]) — batched point reads. An IN-list stays a
     * pushed-down predicate up to `inListThreshold` keys; past that the
     * predicate stops being scan-prunable (and the task binary bloats
-    * with literals), so the batch switches to [[multiGetBulk]]. */
+    * with literals), so the batch switches to [[multiGetBulk]]. The
+    * IN-list form opens only the region files that can hold a key,
+    * prunes pages by the page index, and collects in-thread with no
+    * Spark job while those files total at most 2 MB in at most 4
+    * partitions ([[graft.core.Fetch]]). */
   def multiGet(df: DataFrame, keyCol: String, keys: Seq[Long],
                projection: Seq[String], inListThreshold: Int = 1000): DataFrame =
     if (keys.size <= inListThreshold)

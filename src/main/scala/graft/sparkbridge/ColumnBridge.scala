@@ -146,6 +146,59 @@ object TempDirBridge {
     org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
 }
 
+/** One RDD partition run on the calling thread as a task of its own
+  * (graft.core.FetchExec, the in-thread fetch of a small read): the
+  * task setup and teardown `Task.run` and the executor do around
+  * `rdd.iterator`, minus the scheduler. Task attempt ids count up from
+  * Long.MinValue, so they never meet the scheduler's ids (from 0) or
+  * the block manager's negative sentinels (-1, -1024). */
+object FetchBridge {
+  import java.util.concurrent.atomic.AtomicLong
+  import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
+  import org.apache.spark.executor.TaskMetrics
+  import org.apache.spark.memory.TaskMemoryManager
+  import org.apache.spark.rdd.{InputFileBlockHolder, RDD}
+
+  private val attempts = new AtomicLong(Long.MinValue)
+
+  /** `f` over partition `index` of `rdd`, on this thread, inside a task
+    * context with that partition id, its own task memory and the
+    * thread's local properties (the SQL confs the action propagated),
+    * registered with the block manager (a broadcast read takes a block
+    * lock in the task's name). On success or failure, the task is
+    * marked complete, which closes its readers; then its memory is
+    * freed, its block locks are released and the context is unset. */
+  def runPartition[T, U](rdd: RDD[T], index: Int)(f: Iterator[T] => U): U = {
+    val env = SparkEnv.get
+    val attempt = attempts.getAndIncrement()
+    val memory = new TaskMemoryManager(env.memoryManager, attempt)
+    val ctx = new TaskContextImpl(-1, 0, index, attempt, 0, rdd.partitions.length, memory,
+      org.apache.spark.util.Utils.cloneProperties(rdd.sparkContext.getLocalProperties),
+      env.metricsSystem, TaskMetrics.empty, 1, Map.empty)
+    env.blockManager.registerTask(attempt)
+    try {
+      TaskContext.setTaskContext(ctx)
+      InputFileBlockHolder.initialize()
+      val out = try f(rdd.iterator(rdd.partitions(index), ctx)) catch {
+        case e: Throwable =>
+          try ctx.markTaskFailed(e) catch { case t: Throwable => e.addSuppressed(t) }
+          try ctx.markTaskCompleted(Some(e)) catch { case t: Throwable => e.addSuppressed(t) }
+          throw e
+      }
+      ctx.markTaskCompleted(None)
+      out
+    } finally {
+      try {
+        memory.cleanUpAllAllocatedMemory()
+        env.blockManager.releaseAllLocksForTask(attempt)
+      } finally {
+        TaskContext.unset()
+        InputFileBlockHolder.unset()
+      }
+    }
+  }
+}
+
 /** Spark's parquet footer helpers for graft's read memo, which reads
   * each part file's footer once on the driver (graft.core.Tables.read)
   * instead of running Spark's one-task schema-inference job, and its

@@ -253,6 +253,26 @@ class CoreToolsSpec extends SparkSpec {
       extra.map { case (f, n) => s"$f ($n)" }.mkString(", "))
   }
 
+  test("task-context setup only in the graftbridge file") {
+    import java.io.File
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    def scala(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    // FetchBridge.runPartition, the one place a partition runs as a task
+    // outside the scheduler, and the one place its teardown is kept
+    val bridge = "graft/sparkbridge/ColumnBridge.scala"
+    val call = """TaskContextImpl|setTaskContext|registerTask""".r
+    val outside = scala(root).map { f =>
+      root.toPath.relativize(f.toPath).toString ->
+        call.findAllIn(java.nio.file.Files.readString(f.toPath)).toSeq.distinct
+    }.filter { case (f, names) => names.nonEmpty && f != bridge }
+    assert(outside.isEmpty, "task-context setup outside graftbridge.FetchBridge — " +
+      "run the partition through FetchBridge.runPartition instead: " +
+      outside.map { case (f, n) => s"$f (${n.mkString(", ")})" }.mkString("; "))
+  }
+
   test("read memo: a raw read of events.parquet never serves Tables.load(events)") {
     import java.nio.file.{Files, Paths}
     // a temp COPY: other specs read the shared events path

@@ -243,35 +243,16 @@ class LayoutSpec extends SparkSpec {
     df.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   test("snapshot read memo: a second read of one version is the same plan and starts no job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = TempDirs.create("graft_readmemo").toString
     Snapshots.write(kv(1L to 50L, 2), "k", dir, 1)
-    val group = "graft-read-memo-spec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-          e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    def jobsIn(body: => Unit): Int = {
-      jobs.set(0)
-      sc.setJobGroup(group, "read memo spec")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-      jobs.get
-    }
-    sc.addSparkListener(listener)
-    try {
-      // control: an unmemoized read runs its schema-inference job, so
-      // the listener does see read-time jobs
-      assert(jobsIn(spark.read.parquet(Snapshots.path(dir, 1))) > 0)
-      val first = Snapshots.read(spark, dir, 1)
-      var second: org.apache.spark.sql.DataFrame = null
-      val n = jobsIn { second = Snapshots.read(spark, dir, 1) }
-      assert(second eq first, "second read of an unchanged version re-resolved")
-      assert(n == 0, s"memoized snapshot read started $n jobs")
-    } finally sc.removeSparkListener(listener)
+    // control: an unmemoized read runs its schema-inference job, so
+    // the listener does see read-time jobs
+    assert(jobsIn(spark.read.parquet(Snapshots.path(dir, 1))) > 0)
+    val first = Snapshots.read(spark, dir, 1)
+    var second: org.apache.spark.sql.DataFrame = null
+    val n = jobsIn { second = Snapshots.read(spark, dir, 1) }
+    assert(second eq first, "second read of an unchanged version re-resolved")
+    assert(n == 0, s"memoized snapshot read started $n jobs")
   }
 
   test("snapshot read memo: Snapshots.write over the same version is seen by the next read") {

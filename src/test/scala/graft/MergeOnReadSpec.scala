@@ -27,26 +27,6 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     new java.io.File(Snapshots.path(base, v)).listFiles().toSeq
       .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1)
 
-  /** Jobs started while `body` runs, counted by job group. */
-  private def jobsIn(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = "graft-merge-on-read-spec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-          e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "merge-on-read spec")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A random sequence of `commits` row ops over a base of `n` keyed
     * rows (Long extremes included when the key is a long) plus three
     * NULL-key rows, checked after every commit against a driver model

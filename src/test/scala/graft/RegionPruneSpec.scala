@@ -142,26 +142,6 @@ class RegionPruneSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally rm(base)
   }
 
-  /** Jobs started while `body` runs, counted by job group. */
-  private def jobsIn(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = "graft-region-resolve-spec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-          e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "region resolve spec")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A memo miss on `path`: no Spark job, and Spark's own inferred
     * schema for the relation under the (for events, ts-normalized)
     * read. The memo key does not carry `events`, so the entry made here
