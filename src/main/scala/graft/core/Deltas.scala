@@ -4,12 +4,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, Distinct, Filter, LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, Distinct, Filter, LocalRelation, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -51,6 +51,18 @@ private[graft] object MergeDelta {
     else PlanBridge.ofRows(spark, MergeDelta(merged.queryExecution.analyzed, keyCol,
       base.queryExecution.analyzed, keys.map(_.queryExecution.analyzed),
       rows.map(_.queryExecution.analyzed)))
+  }
+}
+
+/** A batch of client rows: a DataFrame whose optimized plan is a
+  * `LocalRelation`, as every `createDataFrame`/`toDF` batch of driver
+  * rows is. Its rows are already on the driver, so reading them starts
+  * no Spark job; `Mutations` validates, key-joins and CAS-checks such a
+  * batch there, and [[Deltas.commit]] reads it without a job. */
+private[graft] object ClientRows {
+  def unapply(df: DataFrame): Option[LocalRelation] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation if !l.isStreaming => Some(l)
+    case _ => None
   }
 }
 
@@ -193,7 +205,7 @@ private[graft] object Deltas {
   def resolve(spark: SparkSession, path: String, what: String, b: Int): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = Tables.fileSystem(spark, dir)
     val bDir = baseDir(path, b)
     val meta = readMeta(fs, new Path(dir, s"$Marker$b"))
     val now = baseStamp(spark, what, path, b)
@@ -240,14 +252,20 @@ private[graft] object Deltas {
   /** Commit `df` as version `version` of snapshot `base` as a delta, if
     * it is a chain of [[MergeDelta]]s on `keyCol` over the memo'd read of
     * an earlier version of `base` (full or delta), with an integral key
-    * and the same column types throughout. One collect evaluates each
-    * step's keys and rows against stored state, beside the parent's
-    * delta rows; the driver folds them, in step order, into the new
-    * cumulative delta and writes it, with no further job, as one sorted
-    * file plus the marker, all inside `Snapshots.path(base, version)`:
-    * no older version changes. False, with nothing written, when the
-    * caller must write the version in full: not such a chain, a NULL or
-    * repeated key among a step's rows, or a delta past [[maxKeys]] (the
+    * and the same column types throughout. The steps' keys and rows
+    * are evaluated against stored state, beside the parent's delta
+    * rows: each part that is client rows ([[ClientRows]]), and the
+    * parent's delta file, by a Dataset collect of its own, which starts
+    * no job (a `LocalTableScan`; one small scan that [[Fetch]] reads
+    * in-thread); the parts of table-derived batches by one union
+    * collect, one job. The driver folds them, in step order, into the
+    * new cumulative delta and writes it, with no further job, as one
+    * sorted file plus the marker, all inside `Snapshots.path(base,
+    * version)`: no older version changes. A client-row put, deleteRows
+    * or mutateRow over a small parent therefore commits with no Spark
+    * job. False, with nothing written, when the caller must write the
+    * version in full: not such a chain, a NULL or repeated key among a
+    * step's rows, or a part or delta past [[maxKeys]] (the
     * compaction). */
   def commit(df: DataFrame, keyCol: String, base: String, version: Int): Boolean = {
     val spark = df.sparkSession
@@ -266,7 +284,7 @@ private[graft] object Deltas {
         m.keys.forall(sameTypes(_, Seq(keyCol))) && m.rows.forall(sameTypes(_, schema.fieldNames.toSeq))) &&
         fold(spark, p, u, Snapshots.path(base, u), steps, keyCol, schema).exists { case (rows, keys, b, bDir) =>
           val out = new Path(Snapshots.path(base, version))
-          val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+          val fs = Tables.fileSystem(spark, out)
           val bStamp = Tables.listStamp(spark, "Snapshots.write", bDir)._1
           if (fs.exists(out)) fs.delete(out, true)
           fs.mkdirs(out)
@@ -291,7 +309,7 @@ private[graft] object Deltas {
       dir.getName match {
         case VersionDir(u) if u.toInt < version =>
           val p = new Path(Snapshots.path(base, u.toInt))
-          val qualified = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p)
+          val qualified = Tables.fileSystem(spark, p).makeQualified(p)
           if (qualified != dir) None
           else Some(Snapshots.read(spark, base, u.toInt) -> u.toInt)
             .filter(_._1.queryExecution.analyzed eq bottom)
@@ -314,14 +332,21 @@ private[graft] object Deltas {
       case None => (u, pDir, index.regions.values.map(_.rows).sum)
     }
     val cap = maxKeys(bRows)
+    val names = schema.fieldNames.toSeq
+    // every part as the delta's columns plus OpCol and Part; a
+    // tombstone's payload is NULL
+    def tombstones(k: DataFrame, part: Int) = k.select(names.map(n =>
+      if (n == keyCol) quoted(n) else lit(null).cast(schema(n).dataType).as(n)) :+
+      lit(false).as(OpCol) :+ lit(part).as(Part): _*)
+    def rows(r: DataFrame, op: Column, part: Int) =
+      r.select(names.map(quoted) :+ op.as(OpCol) :+ lit(part).as(Part): _*)
+    def ofPlan(plan: LogicalPlan) = PlanBridge.ofRows(spark, plan)
     // the parent's delta file alone, OpCol included
     val parentRows = index.delta.map { d =>
-      PlanBridge.ofRows(spark, lr.copy(relation =
-        h.copy(location = index.restrict(Set(d.file)))(h.sparkSession)).newInstance())
-        .withColumn(Part, lit(0))
+      rows(ofPlan(lr.copy(relation =
+        h.copy(location = index.restrict(Set(d.file)))(h.sparkSession)).newInstance()), col(OpCol), 0)
     }
-    def ofPlan(plan: LogicalPlan) = PlanBridge.ofRows(spark, plan)
-    val parts = parentRows.toSeq ++ steps.zipWithIndex.flatMap { case (m, i) =>
+    val stepParts = steps.zipWithIndex.flatMap { case (m, i) =>
       // the fold dedups keys itself, so a Distinct over them is dropped;
       // a put's keys are its rows' keys, which its rows replace anyway
       m.keys.map {
@@ -331,35 +356,35 @@ private[graft] object Deltas {
       }.filter {
         case Project(Seq(a: Attribute), c) => !(a.name == keyCol && m.rows.exists(c.fastEquals))
         case _ => true
-      }.map(k => ofPlan(k).select(quoted(keyCol), lit(false).as(OpCol), lit(2 * i + 1).as(Part))) ++
-        m.rows.map(r => ofPlan(r).select(schema.fieldNames.toSeq.map(quoted) :+
-          lit(true).as(OpCol) :+ lit(2 * i + 2).as(Part): _*))
+      }.map(k => tombstones(ofPlan(k), 2 * i + 1)) ++
+        m.rows.map(r => rows(ofPlan(r), lit(true), 2 * i + 2))
     }
-    val chunks =
-      if (parts.isEmpty) Array.empty[Array[Row]]
-      else parts.reduce(_.unionByName(_, allowMissingColumns = true)).rdd
-        .mapPartitions(it => Iterator(it.take(cap.toInt + 1).toArray)).collect()
-    val all = chunks.flatten
-    if (chunks.exists(_.length > cap)) None else {
+    // Client rows (a LocalTableScan) and the parent's delta file (one
+    // scan, which Fetch reads in-thread when small) are read one
+    // collect each, with no job; parts of table-derived batches in one
+    // union collect, one job. At most cap + 1 rows of each part, or of
+    // each partition of the union, reach the driver: a part of more
+    // than cap rows compacts.
+    val (driver, derived) = stepParts.partition(ClientRows.unapply(_).isDefined)
+    val n = cap.toInt + 1
+    val got = (parentRows.toSeq ++ driver).flatMap(_.limit(n).collect()) ++
+      derived.reduceOption(_.unionByName(_)).toSeq.flatMap { u =>
+        u.mapPartitions((it: Iterator[Row]) => it.take(n))(Encoders.row(u.schema)).collect()
+      }
+    val (k, op, part) = (schema.fieldIndex(keyCol), names.length, names.length + 1)
+    val byPart = got.groupBy(_.getInt(part))
+    if (byPart.values.exists(_.length > cap)) None else {
       val delta = new java.util.TreeMap[java.lang.Long, Row]()
-      val ok = all.isEmpty || {
-        val at = all.head.schema.fieldNames.zipWithIndex.toMap
-        val (k, op, part) = (at(keyCol), at(OpCol), at(Part))
-        val got = all.sortBy(_.getInt(part))
-        def payload(r: Row, put: Boolean): Row =
-          Row.fromSeq(schema.fieldNames.toSeq.map(n => if (put) r.get(at(n)) else null).updated(
-            schema.fieldIndex(keyCol), r.get(k)) :+ put)
-        val seen = scala.collection.mutable.HashSet[(Int, Long)]()
-        got.forall { r =>
-          val step = r.getInt(part)
+      val seen = scala.collection.mutable.HashSet[(Int, Long)]()
+      val ok = byPart.toSeq.sortBy(_._1).forall { case (step, partRows) =>
+        partRows.forall { r =>
           r.get(k) match {
             // a NULL key matches no row: a step's keys drop none, its rows may not hold one
             case null => step % 2 == 1
             case key: Number =>
               val kl = key.longValue
-              if (step == 0) { delta.put(kl, payload(r, r.getBoolean(op))); true }
-              else if (step % 2 == 1) { delta.put(kl, payload(r, put = false)); true }
-              else seen.add((step, kl)) && { delta.put(kl, payload(r, put = true)); true }
+              (step % 2 == 1 || step == 0 || seen.add((step, kl))) &&
+                { delta.put(kl, Row.fromSeq(r.toSeq.take(op + 1))); true }
           }
         }
       }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -71,6 +71,20 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[LoadKey, DataFrame]()
   private[graft] val memoCap = 256
 
+  private val fileSystems = new Once[FileSystem]
+
+  /** The FileSystem that holds `p`, resolved once per (session,
+    * filesystem URI): `sessionState.newHadoopConf()` copies the
+    * session's whole Hadoop conf, and every read and commit resolves a
+    * FileSystem for two or three paths. Hadoop's own FileSystem cache
+    * keeps the instance a conf first built for a URI, so reuse changes
+    * nothing but the copies. */
+  private[graft] def fileSystem(spark: SparkSession, p: Path): FileSystem = {
+    val u = p.toUri
+    fileSystems(spark, s"${org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)}|" +
+      s"${u.getScheme}|${u.getAuthority}")(p.getFileSystem(spark.sessionState.newHadoopConf()))
+  }
+
   /** Generation stamp of a path: (count, newest mtime, total length,
     * hash of the sorted names) over every file below it, or of the
     * file itself, and the files. Spark writes fresh random part-file
@@ -80,7 +94,7 @@ object Tables {
   private[graft] def listStamp(spark: SparkSession, what: String,
                                path: String): (String, Seq[FileStatus]) = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, p)
     val root = try fs.getFileStatus(p) catch {
       case e: java.io.FileNotFoundException => throw new IllegalArgumentException(
         s"$what not found at $path", e)

@@ -1,9 +1,14 @@
 package graft.kv
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Literal, RaiseError}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.MergeDelta
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{DataType, StringType}
+import graft.core.{ClientRows, MergeDelta, Region}
 
 /** Spark-native batch re-expression of HBase's mutation surface
   * (hbase-client/.../client/{Put,Delete,Increment,Append}.java,
@@ -22,8 +27,85 @@ import graft.core.MergeDelta
   * `Snapshots.write` over the read of an earlier snapshot version, the
   * batch is merge-on-read, as HBase flushes a memstore: the next
   * version stores only what changed, and reads merge it by key.
+  *
+  * Client batches. HBase's client sends a Put or Delete batch as one
+  * RPC, and `checkAndPut`/`checkAndDelete` read, check and write only
+  * the named rows. A batch of client rows ([[graft.core.ClientRows]]:
+  * a `createDataFrame`/`toDF` batch, whose optimized plan is a
+  * `LocalRelation`) keyed by an integral or string column stays on the
+  * driver for the whole commit:
+  *  - duplicate and NULL put keys (no `versionCol`) are refused over
+  *    the batch's keys when the mutation is built, with the messages
+  *    and the exception the distributed guard raises in a task, as
+  *    HBase's client validates a `Put` before sending it;
+  *  - the CAS kinds evaluate their check when the mutation is built,
+  *    as HBase's `checkAndPut` is a synchronous call: one collect of
+  *    the base rows of the batch's keys that pass it (one job, or none
+  *    when `graft.core.Fetch` reads the pruned files in-thread), then
+  *    the applicable rows are a driver-side filter of the batch;
+  *  - `mutateRow`'s puts-minus-deletes is a driver-side filter.
+  * Committed with `Snapshots.write`, put, deleteRows and mutateRow of
+  * such a batch start no Spark job, and the CAS kinds one. A batch
+  * derived from a table, or keyed by another type, or whose key type
+  * differs from the base's, keeps the distributed plans below,
+  * unchanged. No conf picks the path: the batch's plan does.
   */
 object Mutations {
+
+  /** A client batch keyed by `keyCol`, read on the driver: each row's
+    * key in batch order, as a Scala value (NULL as null). Keys are
+    * integral or string, whose driver-side equality is the key join's. */
+  private final class Batch(spark: SparkSession, rel: LocalRelation, at: Int) {
+    val keyType: DataType = rel.output(at).dataType
+    val keys: Seq[Any] = {
+      val toScala = CatalystTypeConverters.createToScalaConverter(keyType)
+      rel.data.map(r => if (r.isNullAt(at)) null else toScala(r.get(at, keyType)))
+    }
+    /** The distinct non-NULL keys: a NULL key joins no row. */
+    def keySet: Set[Any] = keys.filter(_ != null).toSet
+    /** The rows whose key `keep` holds, as a new client batch. */
+    def where(keep: Any => Boolean): DataFrame =
+      PlanBridge.ofRows(spark, LocalRelation(rel.output.map(_.newInstance()),
+        rel.data.zip(keys).collect { case (r, k) if keep(k) => r }))
+  }
+
+  private object Batch {
+    def apply(df: DataFrame, keyCol: String): Option[Batch] = df match {
+      case ClientRows(rel) =>
+        val resolver = df.sparkSession.sessionState.conf.resolver
+        val at = rel.output.indexWhere(a => resolver(a.name, keyCol))
+        if (at < 0) None
+        else Some(rel.output(at).dataType)
+          .filter(t => Region.integral(t) || t == StringType)
+          .map(_ => new Batch(df.sparkSession, rel, at))
+      case _ => None
+    }
+
+    /** `df` as a client batch whose key type is `base`'s, for a driver
+      * key join against `base`. */
+    def against(base: DataFrame, df: DataFrame, keyCol: String): Option[Batch] =
+      apply(df, keyCol).filter(sameKey(base, keyCol))
+
+    /** Whether `b`'s key type is `base`'s. */
+    def sameKey(base: DataFrame, keyCol: String)(b: Batch): Boolean = {
+      val resolver = base.sparkSession.sessionState.conf.resolver
+      base.schema.find(f => resolver(f.name, keyCol)).exists(_.dataType == b.keyType)
+    }
+  }
+
+  /** The keys of `keys` whose current `base` row satisfies `check`,
+    * collected now: one read of the base rows of those keys alone. */
+  private def keysWhere(base: DataFrame, keyCol: String, keys: Set[Any],
+                        check: Column): Set[Any] =
+    if (keys.isEmpty) Set.empty
+    else base.where(col(keyCol).isin(keys.toSeq: _*) && check).select(col(keyCol))
+      .collect().map(_.get(0)).toSet
+
+  /** Throw, from the driver, what `raise_error(msg)` throws in a task. */
+  private def raiseNow(msg: String): Nothing = {
+    new RaiseError(Literal(msg)).eval()
+    throw new IllegalStateException(msg) // not reached: RaiseError always throws
+  }
 
   /** Batch Put = upsert: rows in `puts` replace same-key rows in `base`,
     * new keys are inserted. Anti-join keeps the untouched base rows;
@@ -57,7 +139,10 @@ object Mutations {
     * duplicate — ENFORCED, not assumed, via one count-window on the
     * puts side (the small batch side by premise). The two call sites
     * were hand-synced ~20-line copies differing only in sort direction
-    * and message (r12 kv review — the drift trap). */
+    * and message (r12 kv review — the drift trap). A client batch with
+    * no `versionCol` is checked on the driver instead, now: the same
+    * NULL then duplicate refusal, the same messages, and the batch
+    * itself returned. */
   private def resolveDuplicateKeys(puts: DataFrame, keyCol: String,
       versionCol: Option[String], tieBreakers: Seq[String],
       firstWins: Boolean, msg: String, advice: String): DataFrame = {
@@ -72,12 +157,11 @@ object Mutations {
     // caller-name-only prefix (r15 advice): the duplicate-key `msg`
     // says "duplicate put key", which misdescribes a NULL-key failure
     val caller = msg.takeWhile(_ != ':')
-    val guarded = puts.withColumn(keyCol,
-      when(col(keyCol).isNull,
-        raise_error(lit(s"$caller: NULL put key — a NULL-key put row " +
-          "is unreachable by every key join (deletes, CAS) and would " +
-          "accumulate per batch; fix the put batch upstream")))
-        .otherwise(col(keyCol)))
+    val nullKey = s"$caller: NULL put key — a NULL-key put row " +
+      "is unreachable by every key join (deletes, CAS) and would " +
+      "accumulate per batch; fix the put batch upstream"
+    def guarded = puts.withColumn(keyCol,
+      when(col(keyCol).isNull, raise_error(lit(nullKey))).otherwise(col(keyCol)))
     versionCol match {
       case Some(v) =>
         val ord = (v +: tieBreakers)
@@ -85,13 +169,20 @@ object Mutations {
         val w = Window.partitionBy(keyCol).orderBy(ord: _*)
         guarded.withColumn("_pv", row_number().over(w))
           .where(col("_pv") === 1).drop("_pv")
-      case None =>
-        val w = Window.partitionBy(keyCol)
-        guarded.withColumn("_pn", count(lit(1)).over(w))
-          .where(assert_true(col("_pn") <= 1,
-            concat(lit(msg), col(keyCol).cast("string"), lit(advice)))
-            .isNull)
-          .drop("_pn")
+      case None => Batch(puts, keyCol) match {
+        case Some(b) =>
+          if (b.keys.contains(null)) raiseNow(nullKey)
+          val seen = scala.collection.mutable.HashSet[Any]()
+          b.keys.find(k => !seen.add(k)).foreach(k => raiseNow(s"$msg$k$advice"))
+          puts
+        case None =>
+          val w = Window.partitionBy(keyCol)
+          guarded.withColumn("_pn", count(lit(1)).over(w))
+            .where(assert_true(col("_pn") <= 1,
+              concat(lit(msg), col(keyCol).cast("string"), lit(advice)))
+              .isNull)
+            .drop("_pn")
+      }
     }
   }
 
@@ -183,12 +274,16 @@ object Mutations {
     * `versionCol`/`tieBreakers` forward to [[put]]'s last-write-wins
     * duplicate resolution — without the forwarding, a duplicate-keyed
     * CAS batch died with put()'s error telling the caller to pass a
-    * parameter this signature didn't have (r12 kv review). */
+    * parameter this signature didn't have (r12 kv review). For a
+    * client batch the check runs now, over the base rows of the
+    * batch's keys, and the semi-join is a driver-side filter. */
   def checkAndPut(base: DataFrame, puts: DataFrame, keyCol: String,
                   check: Column, versionCol: Option[String] = None,
                   tieBreakers: Seq[String] = Nil): DataFrame = {
-    val passKeys = base.where(check).select(col(keyCol))
-    val applicable = puts.join(passKeys, Seq(keyCol), "leftsemi")
+    val applicable = Batch.against(base, puts, keyCol) match {
+      case Some(b) => b.where(keysWhere(base, keyCol, b.keySet, check))
+      case None => puts.join(base.where(check).select(col(keyCol)), Seq(keyCol), "leftsemi")
+    }
     put(base, applicable, keyCol, versionCol, tieBreakers)
   }
 
@@ -209,7 +304,9 @@ object Mutations {
     * exists to protect). One anti-join gates the puts, then a plain union —
     * no second anti-join: applicable keys are disjoint from base BY
     * CONSTRUCTION, so routing through put() would re-prove it with a
-    * redundant join and extra base key scans. */
+    * redundant join and extra base key scans. For a client batch the
+    * key checks run now and the anti-join is a driver-side filter over
+    * the base keys the batch names. */
   def checkAndPutAbsent(base: DataFrame, puts: DataFrame, keyCol: String,
                         versionCol: Option[String] = None,
                         tieBreakers: Seq[String] = Nil): DataFrame = {
@@ -219,32 +316,52 @@ object Mutations {
       firstWins = true, msg = "checkAndPutAbsent: duplicate put key ",
       advice = " in a batch with no versionCol to order the CAS — " +
         "pass versionCol (first op wins) or de-duplicate the batch")
-    val applicable =
-      resolved.join(base.select(col(keyCol)), Seq(keyCol), "left_anti")
+    val applicable = Batch.against(base, resolved, keyCol) match {
+      case Some(b) =>
+        val present = keysWhere(base, keyCol, b.keySet, lit(true))
+        b.where(k => !present(k))
+      case None => resolved.join(base.select(col(keyCol)), Seq(keyCol), "left_anti")
+    }
     MergeDelta.of(base, None, Some(applicable), keyCol)
   }
 
   /** checkAndDelete (HTable.checkAndDelete) — delete each keyed row only
     * where its CURRENT state satisfies `check`; rows failing the check
-    * (or not keyed for deletion) survive. */
+    * (or not keyed for deletion) survive. For a client batch the check
+    * runs now, over the base rows of the batch's keys. */
   def checkAndDelete(base: DataFrame, delKeys: DataFrame, keyCol: String,
-                     check: Column): DataFrame = {
-    val passKeys = base.where(check).select(col(keyCol))
-      .join(delKeys.select(col(keyCol)).distinct(), Seq(keyCol), "leftsemi")
-    MergeDelta.of(base, Some(passKeys), None, keyCol)
-  }
+                     check: Column): DataFrame =
+    Batch.against(base, delKeys, keyCol) match {
+      case Some(b) => deleteRows(base, b.where(keysWhere(base, keyCol, b.keySet, check)), keyCol)
+      case None =>
+        val passKeys = base.where(check).select(col(keyCol))
+          .join(delKeys.select(col(keyCol)).distinct(), Seq(keyCol), "leftsemi")
+        MergeDelta.of(base, Some(passKeys), None, keyCol)
+    }
 
   /** mutateRow (HTable.mutateRow) — atomic per-row batch of puts and
     * deletes: deletes win over puts for the same key (HBase applies the
     * row mutations as one unit; a delete of the row removes it whatever
     * else the batch holds). One pass: delete first, then upsert the
-    * puts not targeted by a delete. */
+    * puts not targeted by a delete; for two client batches the puts
+    * not targeted are a driver-side filter. */
   def mutateRow(base: DataFrame, puts: DataFrame, delKeys: DataFrame,
                 keyCol: String): DataFrame = {
-    val survivingPuts = puts.join(delKeys.select(col(keyCol)).distinct(),
-      Seq(keyCol), "left_anti")
+    val survivingPuts = clientPair(puts, delKeys, keyCol) match {
+      case Some((p, d)) =>
+        val dels = d.keySet
+        p.where(k => !dels(k))
+      case None => puts.join(delKeys.select(col(keyCol)).distinct(),
+        Seq(keyCol), "left_anti")
+    }
     put(deleteRows(base, delKeys, keyCol), survivingPuts, keyCol)
   }
+
+  /** `puts` and `delKeys` as client batches of one key type. */
+  private def clientPair(puts: DataFrame, delKeys: DataFrame,
+                         keyCol: String): Option[(Batch, Batch)] =
+    for (p <- Batch(puts, keyCol); d <- Batch(delKeys, keyCol) if p.keyType == d.keyType)
+      yield (p, d)
 
   /** checkAndMutate with a RowMutations payload (HTable.java:1343):
     * the CAS guard of [[checkAndPut]] composed with [[mutateRow]]'s
@@ -253,14 +370,21 @@ object Mutations {
     * key is dropped: neither its puts nor its deletes touch the row.
     * One passing-key semi-join gates both mutation legs, then the
     * normal atomic batch applies; the guard is evaluated against
-    * stored state only, never against the incoming mutations. */
+    * stored state only, never against the incoming mutations. For
+    * client batches the guard runs now, in one read of the base rows
+    * of both legs' keys. */
   def checkAndMutateRow(base: DataFrame, puts: DataFrame, delKeys: DataFrame,
-                        keyCol: String, check: Column): DataFrame = {
-    val passKeys = base.where(check).select(col(keyCol))
-    val guardedPuts = puts.join(passKeys, Seq(keyCol), "leftsemi")
-    val guardedDels = delKeys.join(passKeys, Seq(keyCol), "leftsemi")
-    mutateRow(base, guardedPuts, guardedDels, keyCol)
-  }
+                        keyCol: String, check: Column): DataFrame =
+    clientPair(puts, delKeys, keyCol).filter(pd => Batch.sameKey(base, keyCol)(pd._1)) match {
+      case Some((p, d)) =>
+        val pass = keysWhere(base, keyCol, p.keySet ++ d.keySet, check)
+        mutateRow(base, p.where(pass), d.where(pass), keyCol)
+      case None =>
+        val passKeys = base.where(check).select(col(keyCol))
+        val guardedPuts = puts.join(passKeys, Seq(keyCol), "leftsemi")
+        val guardedDels = delKeys.join(passKeys, Seq(keyCol), "leftsemi")
+        mutateRow(base, guardedPuts, guardedDels, keyCol)
+    }
 
   /** MultiRowMutationEndpoint (hbase-server/.../coprocessor/
     * MultiRowMutationEndpoint.java): an atomic batch spanning SEVERAL

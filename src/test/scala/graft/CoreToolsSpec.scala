@@ -234,6 +234,16 @@ class CoreToolsSpec extends SparkSpec {
       bypass.map { case (f, n) => s"$f ($n)" }.mkString(", "))
   }
 
+  test("the delta commit reads through Dataset collects, never an RDD") {
+    // an RDD action bypasses graft.core.Fetch and always starts a job,
+    // where a Dataset collect of client rows or of one small delta file
+    // starts none
+    val f = new java.io.File("src/main/scala/graft/core/Deltas.scala")
+    assert(f.isFile, s"no source at ${f.getAbsolutePath}")
+    val calls = """\.rdd\b""".r.findAllIn(java.nio.file.Files.readString(f.toPath)).size
+    assert(calls == 0, s"Deltas.scala calls .rdd $calls times — collect a Dataset instead")
+  }
+
   test("no hand-rolled build-once map outside graft.core.Once and the read memo") {
     import java.io.File
     val root = new File("src/main/scala")
