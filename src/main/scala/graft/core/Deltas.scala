@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * operator optimization, so, like [[Pin]], the node costs nothing and
   * changes no plan. `base`, `keys` and `rows` are the analyzed inputs,
   * kept beside the plan rather than in it, for [[Snapshots.write]]: a
-  * node over a snapshot read commits as a delta ([[Deltas.commit]]),
+  * node over a snapshot read commits as a tier ([[Deltas.commit]]),
   * which evaluates `keys` and `rows` instead of the whole table.
   *
   * The ops that build it keep two invariants: `rows` holds at most one
@@ -72,26 +72,61 @@ private[graft] object ExpandMergeDelta extends Rule[LogicalPlan] {
     plan.transformUp { case m: MergeDelta => m.child }
 }
 
-/** The sorted keys of one delta version. Equal by `tag` (the version
-  * dir and its base's stamp), so two reads of one version are the same
-  * relation to `sameResult`; prints as its size, not its keys. */
-private[graft] final class DeltaKeys(val sorted: Array[Long], val tag: String) extends Serializable {
+/** The keys of one tiered version: every key some tier of its chain
+  * holds, sorted, with the id of the newest tier that holds it. Equal
+  * by `tag` (the version dir and the stamps it was resolved at), so
+  * two reads of one version are the same relation to `sameResult`;
+  * prints as its size, not its keys. */
+private[graft] final class TierKeys(val sorted: Array[Long], val newest: Array[Int],
+                                    val tag: String) extends Serializable {
   def contains(v: Long): Boolean = java.util.Arrays.binarySearch(sorted, v) >= 0
+  /** The id of the newest tier holding `v`; 0, which no tier has, when none does. */
+  def newestOf(v: Long): Int = {
+    val i = java.util.Arrays.binarySearch(sorted, v)
+    if (i >= 0) newest(i) else 0
+  }
   override def equals(o: Any): Boolean = o match {
-    case d: DeltaKeys => d.tag == tag
+    case d: TierKeys => d.tag == tag
     case _ => false
   }
   override def hashCode: Int = tag.hashCode
-  override def toString: String = s"${sorted.length} delta keys"
+  override def toString: String = s"${sorted.length} tier keys"
 }
 
-/** The visibility filter of a delta version's one relation: a delta
-  * row (`op` non-NULL) is visible when it is a put, a base row (`op`
-  * NULL, the column is absent from base files) when its key is not in
-  * the delta. A NULL-key base row is visible, as the anti-join keeps
-  * it. The key set is a codegen reference, so the generated code does
-  * not depend on the version. */
-private[graft] case class DeltaVisible(key: Expression, op: Expression, keys: DeltaKeys)
+private[graft] object TierKeys {
+  /** The keys of `tiers`, each an id and its sorted keys, oldest
+    * first: a newer tier's id wins a key both hold. */
+  def of(tiers: Seq[(Int, Array[Long])], tag: String): TierKeys = {
+    var keys = Array.emptyLongArray
+    var ids = Array.emptyIntArray
+    tiers.foreach { case (id, ks) =>
+      val ok = new Array[Long](keys.length + ks.length)
+      val oi = new Array[Int](ok.length)
+      var (i, j, o) = (0, 0, 0)
+      while (i < keys.length || j < ks.length) {
+        if (j == ks.length || (i < keys.length && keys(i) < ks(j))) {
+          ok(o) = keys(i); oi(o) = ids(i); i += 1
+        } else {
+          if (i < keys.length && keys(i) == ks(j)) i += 1
+          ok(o) = ks(j); oi(o) = id; j += 1
+        }
+        o += 1
+      }
+      keys = java.util.Arrays.copyOf(ok, o)
+      ids = java.util.Arrays.copyOf(oi, o)
+    }
+    new TierKeys(keys, ids, tag)
+  }
+}
+
+/** The visibility filter of a tiered version's one relation. A tier
+  * row (`op` non-NULL: the tier id, negated for a tombstone) is visible
+  * when it is a put and its tier is the newest holding its key; a base
+  * row (`op` NULL, the column is absent from base files) when no tier
+  * holds its key. A NULL-key base row is visible, as the anti-join
+  * keeps it. The keys are a codegen reference, so the generated code
+  * does not depend on the version. */
+private[graft] case class DeltaVisible(key: Expression, op: Expression, keys: TierKeys)
     extends BinaryExpression {
   override def left: Expression = key
   override def right: Expression = op
@@ -100,146 +135,326 @@ private[graft] case class DeltaVisible(key: Expression, op: Expression, keys: De
   override def prettyName: String = "delta_visible"
   override def eval(input: InternalRow): Any = {
     val o = op.eval(input)
-    if (o != null) o else {
-      val k = key.eval(input)
-      k == null || !keys.contains(k.asInstanceOf[Number].longValue)
+    val k = key.eval(input)
+    if (o == null) k == null || !keys.contains(k.asInstanceOf[Number].longValue)
+    else {
+      val id = o.asInstanceOf[Int]
+      id > 0 && k != null && keys.newestOf(k.asInstanceOf[Number].longValue) == id
     }
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("deltaKeys", keys)
+    val ref = ctx.addReferenceObj("tierKeys", keys)
     val k = key.genCode(ctx)
     val o = op.genCode(ctx)
     ev.copy(code = code"""
       |${o.code}
-      |boolean ${ev.value} = ${o.value};
-      |if (${o.isNull}) {
-      |  ${k.code}
-      |  ${ev.value} = ${k.isNull} || !$ref.contains((long) ${k.value});
-      |}""".stripMargin, isNull = FalseLiteral)
+      |${k.code}
+      |boolean ${ev.value} = ${o.isNull}
+      |  ? ${k.isNull} || !$ref.contains((long) ${k.value})
+      |  : ${o.value} > 0 && !${k.isNull} && $ref.newestOf((long) ${k.value}) == ${o.value};""".stripMargin,
+      isNull = FalseLiteral)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DeltaVisible =
     copy(key = l, op = r)
 }
 
-/** What a delta version's relation carries beyond its files: its dir,
-  * its base version's dir and version, the key column and delta keys,
-  * and the delta file. */
+/** One tier file of a tiered version's chain: the version dir that
+  * holds it (None for a file the committing version is writing), the
+  * file, its tier id, the dir's stamp, its bytes, and its keys, sorted,
+  * each marked put or tombstone. */
+private[graft] final case class Tier(version: Option[Int], file: Path, id: Int, stamp: String,
+                                     bytes: Long, keys: Array[Long], puts: Array[Boolean])
+
+/** What a tiered version's relation carries beyond its files: its dir,
+  * its base version's dir and version, the key column, the tier keys,
+  * and its chain of tiers, oldest first. */
 private[graft] final case class DeltaInfo(dir: Path, baseDir: String, baseVersion: Int,
-                                          keyCol: String, keys: DeltaKeys, file: Path)
+                                          keyCol: String, keys: TierKeys, tiers: Seq[Tier])
 
 /** Merge-on-read snapshot versions, after HBase's memstore flush plus
-  * compaction. A commit of a [[MergeDelta]] over version u of a
-  * snapshot writes version v as a DELTA: one sorted parquet file
-  * holding every row changed since the last full version b (a put row,
-  * or a tombstone for a removed key), with an [[OpCol]] column that
-  * says which, plus a marker file `_graft_delta_of_v<b>` holding the
-  * key column, b's stamp at commit and the sorted delta keys. Each
-  * delta is cumulative over b, so a read merges two layers, never a
-  * chain. Past [[maxKeys]] the commit compacts: it writes v in full,
-  * and the next delta starts over v.
+  * store-file compaction. A commit of a [[MergeDelta]] over version u
+  * of a snapshot writes version v as a TIERED version: one new tier, a
+  * key-sorted parquet file of the batch's own changed rows (a put row,
+  * or a tombstone for a removed key), as HBase flushes a memstore into
+  * a new store file. Its [[OpCol]] column holds the tier id, negated
+  * for a tombstone. Ids grow by one per commit over a chain, so they
+  * order tiers newest-last, and a file keeps its ids when `restore`
+  * copies its dir. The version's marker `_graft_delta_of_v<b>` names
+  * the last full version b and the CHAIN: every tier the version reads,
+  * oldest first, each a file in this dir or in an older version dir of
+  * the same snapshot. So a newer version reads older version dirs, and
+  * rewriting or deleting any of them fails the next read of every
+  * version whose chain names it, naming both dirs. The marker also
+  * holds the key column, b's stamp, each named dir's stamp, and the
+  * keys of this dir's own tier files only, so it grows with the batch,
+  * not with the commits since b. It is written under a hidden name and
+  * renamed into place just before `_SUCCESS`.
   *
-  * A delta version resolves, with no Spark job, to one relation over
-  * b's region files plus the delta file, under one [[DeltaVisible]]
-  * filter; b's footers come from its memo'd read, so only the delta's
-  * footer is new. The delta file's region admits only its own keys to
-  * `=`/`In`, and every base file's region only the keys outside the
-  * delta, so a Get opens one file as on a full version. */
+  * After writing its tier, a commit applies HBase's exploring ratio
+  * rule ([[select]]) to the chain's tier sizes. When a window of
+  * tiers qualifies, a MINOR compaction merges it, newest tier winning a
+  * key, into one file in v's dir, under the id of the window's newest
+  * tier. A ratio-bound window rewrites each key O(log n) times over n
+  * commits. Past [[maxKeys]] tier rows in the chain a MAJOR compaction
+  * writes v in full, and the next commit starts a new chain over v.
+  *
+  * A tiered version resolves, with no Spark job, to one relation over
+  * b's region files plus the chain's tier files, under one
+  * [[DeltaVisible]] filter. b's footers come from its memo'd read and
+  * each tier's footer and keys from a per-file cache, so a new version
+  * reads only its own files' footers. Every base file's region admits
+  * to `=`/`In` only the keys no tier holds, and a tier file's region
+  * only the keys whose newest visible put it holds, so a Get opens one
+  * file as on a full version; a key range admits a tier file only when
+  * one of those keys lies in it. */
 private[graft] object Deltas {
   val OpCol = "_graft_op"
   val Marker = "_graft_delta_of_v"
+  private val Pending = "_graft_pending_marker"
   private val Part = "_graft_part"
 
-  /** The delta bound, in keys, over a base of `baseRows` rows: 1/16 of
-    * its footer row count, so a read scans at most 1/16 more rows than
-    * the base, and never more than 2^20 keys, so the key set each read
-    * holds on the driver stays small at any table size. */
+  /** The bound on a chain's tier rows over a base of `baseRows` rows:
+    * 1/16 of its footer row count, so a read scans at most 1/16 more
+    * rows than the base, and never more than 2^20 keys, so the tier
+    * keys each read holds on the driver stay small at any table size. */
   def maxKeys(baseRows: Long): Long = math.min(baseRows / 16, 1L << 20)
 
-  /** The base version named by a version dir's marker, if it is a delta. */
+  /** The exploring rule's window bounds and ratio: HBase's defaults
+    * (`hbase.hstore.compaction.min`, `.max`, `.ratio`). */
+  val MinTiers = 3
+  val MaxTiers = 10
+  val Ratio = 1.2
+
+  /** HBase's ExploringCompactionPolicy over seq-ordered file `sizes`:
+    * the contiguous window of [[MinTiers]] to [[MaxTiers]] files in
+    * which every file is at most [[Ratio]] times the rest of the
+    * window, with the most files, then the fewest bytes, then the
+    * earliest start, as (start, length); the same pick as
+    * [[graft.analytics.Tools.compactionSelect]]. The ratio test is
+    * exact decimal arithmetic, as that query's SQL literal is. */
+  def window(sizes: Seq[Long]): Option[(Int, Int)] = {
+    val r = BigDecimal(Ratio)
+    val fits = for {
+      len <- MinTiers to MaxTiers
+      s <- 0 to sizes.length - len
+      w = sizes.slice(s, s + len)
+      if w.forall(x => BigDecimal(x) <= r * (w.sum - x))
+    } yield (s, len, w.sum)
+    fits.minByOption { case (s, len, tot) => (-len, tot, s) }.map { case (s, len, _) => (s, len) }
+  }
+
+  /** The tiers a commit merges: the ratio [[window]], or, when the
+    * chain holds more than [[MaxTiers]] tiers and no window fits,
+    * the [[MaxTiers]] contiguous tiers with the fewest bytes (HBase's
+    * selection for a store that might be stuck). */
+  def select(sizes: Seq[Long]): Option[(Int, Int)] =
+    window(sizes).orElse(
+      if (sizes.length <= MaxTiers) None
+      else Some((0 to sizes.length - MaxTiers).minBy(s => (sizes.slice(s, s + MaxTiers).sum, s)) -> MaxTiers))
+
+  /** The base version named by a version dir's marker, if it is tiered. */
   def baseOf(files: Seq[FileStatus]): Option[Int] =
     files.map(_.getPath.getName).collectFirst {
       case n if n.startsWith(Marker) => n.drop(Marker.length).toInt
     }
 
-  def baseDir(deltaDir: String, b: Int): String =
-    Snapshots.path(new Path(deltaDir).getParent.toString, b)
+  /** Version dir `w` of the snapshot that holds version dir `dir`. */
+  private def sibling(dir: String, w: Int): String =
+    Snapshots.path(new Path(dir).getParent.toString, w)
 
   /** The stamp of delta version `path`'s base `b`; a missing base fails
     * naming the delta version, the base and the cause. */
-  def baseStamp(spark: SparkSession, what: String, path: String, b: Int): String = {
-    val dir = baseDir(path, b)
-    try Tables.listStamp(spark, what, dir)._1 catch {
+  private def baseStamp(spark: SparkSession, what: String, path: String, b: Int): String =
+    listed(spark, what, path, sibling(path, b), "base version")._1
+
+  /** The listing of version dir `dir`, which version `path` reads; a
+    * missing dir fails naming both. */
+  private def listed(spark: SparkSession, what: String, path: String, dir: String,
+                     role: String): (String, Seq[FileStatus]) =
+    try Tables.listStamp(spark, what, dir) catch {
       case e: IllegalArgumentException if e.getCause.isInstanceOf[java.io.FileNotFoundException] =>
-        throw new IllegalStateException(s"$what: delta version $path reads base version " +
+        throw new IllegalStateException(s"$what: delta version $path reads $role " +
           s"$dir, which is missing (deleted after the delta was committed)", e)
     }
-  }
 
-  private final case class Meta(keyCol: String, baseStamp: String, keys: Array[Long])
+  /** One chain entry of a marker: a tier file, in version dir
+    * `version` (None: the marker's own dir), its tier id, and the dir's
+    * stamp at commit (empty for the own dir). */
+  private final case class Ref(version: Option[Int], file: String, id: Int, stamp: String)
+  private final case class Meta(keyCol: String, baseStamp: String, chain: Seq[Ref],
+                                own: Map[String, (Array[Long], Array[Boolean])])
 
+  /** Publish `m` as `dir`'s marker: written under a hidden name, then
+    * renamed into place, so a reader sees a whole marker or none. */
   private def writeMeta(fs: FileSystem, dir: Path, b: Int, m: Meta): Unit = {
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      fs.create(new Path(dir, s"$Marker$b"), true)))
+    val pending = new Path(dir, Pending)
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(fs.create(pending, true)))
     try {
       out.writeUTF(m.keyCol)
       out.writeUTF(m.baseStamp)
-      out.writeInt(m.keys.length)
-      m.keys.foreach(out.writeLong)
+      out.writeInt(m.chain.length)
+      m.chain.foreach { r =>
+        out.writeBoolean(r.version.isDefined)
+        r.version.foreach(out.writeInt)
+        out.writeUTF(r.file)
+        out.writeInt(r.id)
+        out.writeUTF(r.stamp)
+      }
+      out.writeInt(m.own.size)
+      m.own.foreach { case (file, (keys, puts)) =>
+        out.writeUTF(file)
+        out.writeInt(keys.length)
+        keys.foreach(out.writeLong)
+        puts.foreach(out.writeBoolean)
+      }
     } finally out.close()
+    if (!fs.rename(pending, new Path(dir, s"$Marker$b")))
+      throw new java.io.IOException(s"could not publish the marker of $dir")
   }
 
-  private def readMeta(fs: FileSystem, file: Path): Meta = {
+  private def readMeta(fs: FileSystem, what: String, file: Path): Meta = {
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(file)))
     try {
       val keyCol = in.readUTF()
       val stamp = in.readUTF()
-      Meta(keyCol, stamp, Array.fill(in.readInt())(in.readLong()))
+      val chain = Seq.fill(in.readInt()) {
+        val version = if (in.readBoolean()) Some(in.readInt()) else None
+        Ref(version, in.readUTF(), in.readInt(), in.readUTF())
+      }
+      val own = Seq.fill(in.readInt()) {
+        val file = in.readUTF()
+        val n = in.readInt()
+        val keys = Array.fill(n)(in.readLong())
+        file -> (keys, Array.fill(n)(in.readBoolean()))
+      }.toMap
+      Meta(keyCol, stamp, chain, own)
+    } catch {
+      case e @ (_: java.io.IOException | _: NegativeArraySizeException) =>
+        val dir = file.getParent
+        throw new IllegalStateException(s"$what: table ${dir.getParent}: version dir $dir: " +
+          s"marker ${file.getName} is truncated or corrupt; rewrite the version", e)
     } finally in.close()
   }
 
-  /** The relation of delta version `path` over base version `b` (see
-    * the object doc). Fails, naming the version, when its base was
-    * rewritten since the commit, or when the dir is not one delta file
-    * over a full base of the same columns. */
+  /** Per-file memos of markers and tier footers, keyed by path, length
+    * and mtime: a commit reads its parent's tiers from them and writes
+    * only its own, and a file rewritten in place gets a new key. Past
+    * [[CacheCap]] entries a memo resets. */
+  private val CacheCap = 4096
+  private val metas = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
+  private val footers = new java.util.concurrent.ConcurrentHashMap[String, (Region, StructType)]()
+
+  private def cached[V](memo: java.util.concurrent.ConcurrentHashMap[String, V], f: FileStatus)
+                       (build: => V): V = {
+    val key = s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
+    val hit = memo.get(key)
+    if (hit != null) hit else {
+      val v = build
+      if (memo.size >= CacheCap) memo.clear()
+      memo.put(key, v)
+      v
+    }
+  }
+
+  /** The marker of version dir `dir`, among its listing `files`. */
+  private def meta(spark: SparkSession, what: String, dir: String, files: Seq[FileStatus], b: Int): Meta =
+    files.find(_.getPath.getName == s"$Marker$b") match {
+      case Some(f) => cached(metas, f)(readMeta(Tables.fileSystem(spark, f.getPath), what, f.getPath))
+      case None => throw new IllegalStateException(
+        s"$what: version dir $dir, named by a tiered version's chain, holds no $Marker$b marker")
+    }
+
+  /** What a read of tiered version `path` (listing `files`, base `b`)
+    * depends on beyond its own dir, as one stamp: its base's stamp, and
+    * the length and mtime of each tier file it reads in another dir. A
+    * rewrite of such a dir replaces its files, so it changes the stamp,
+    * and the next read resolves, where [[resolve]] checks each dir
+    * whole. One stat per tier file, where a dir listing stats each of
+    * its files. */
+  def stamp(spark: SparkSession, what: String, path: String, files: Seq[FileStatus], b: Int): String = {
+    val fs = Tables.fileSystem(spark, new Path(path))
+    (baseStamp(spark, what, path, b) +: meta(spark, what, path, files, b).chain.collect {
+      case Ref(Some(w), file, _, _) =>
+        try {
+          val f = fs.getFileStatus(new Path(sibling(path, w), file))
+          s"${f.getLen}:${f.getModificationTime}"
+        } catch { case _: java.io.FileNotFoundException => "missing" }
+    }).mkString("|")
+  }
+
+  private val VersionDir = "v=(-?\\d+)".r
+
+  /** The relation of tiered version `path` over base version `b` (see
+    * the object doc). Fails, naming the version and the other dir,
+    * when its base or a dir of its chain was rewritten since the
+    * commit, and, naming the version, when it is not tier files over a
+    * full base of the same columns. */
   @annotation.nowarn("cat=deprecation")
   def resolve(spark: SparkSession, path: String, what: String, b: Int): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(path)
-    val fs = Tables.fileSystem(spark, dir)
-    val bDir = baseDir(path, b)
-    val meta = readMeta(fs, new Path(dir, s"$Marker$b"))
+    val fs = Tables.fileSystem(spark, new Path(path))
+    val dir = fs.makeQualified(new Path(path))
+    val own = dir.getName match {
+      case VersionDir(v) => v.toInt
+      case _ => throw new IllegalStateException(s"$what: delta version $path is not a v=<n> snapshot dir")
+    }
+    val (ownStamp, ownFiles) = Tables.listStamp(spark, what, path)
+    val m = meta(spark, what, path, ownFiles, b)
+    val bDir = sibling(path, b)
     val now = baseStamp(spark, what, path, b)
-    if (now != meta.baseStamp) throw new IllegalStateException(
+    if (now != m.baseStamp) throw new IllegalStateException(
       s"$what: delta version $path reads base version $bDir, which was rewritten " +
-        s"after the delta was committed (base stamp ${meta.baseStamp}, now $now)")
+        s"after the delta was committed (base stamp ${m.baseStamp}, now $now)")
+    // every other dir of the chain, as it was at commit
+    val dirs = m.chain.flatMap(r => r.version.map(_ -> r.stamp)).distinct.map { case (w, was) =>
+      val wDir = sibling(path, w)
+      val (st, files) = listed(spark, what, path, wDir, "tier dir")
+      if (st != was) throw new IllegalStateException(
+        s"$what: delta version $path reads tier dir $wDir, which was rewritten " +
+          s"after the delta was committed (stamp $was, now $st)")
+      w -> (st, files)
+    }.toMap + (own -> (ownStamp, ownFiles))
     val (_, bh, bIndex) = Region.of(Tables.read(spark, bDir, what))
     if (bIndex.delta.nonEmpty) throw new IllegalStateException(
       s"$what: delta version $path names $bDir as its base, which is itself a delta")
-    val listing = new InMemoryFileIndex(spark, bIndex.rootPaths :+ fs.makeQualified(dir),
-      Map.empty, None)
-    val file = listing.allFiles().filter(f => f.getLen > 0 && !bIndex.regions.contains(f.getPath)) match {
-      case Seq(f) => f
-      case fs => throw new IllegalStateException(
-        s"$what: delta version $path holds ${fs.length} delta files, want 1")
+    val schema = bh.dataSchema.add(OpCol, IntegerType)
+    val tiers = m.chain.map { r =>
+      val w = r.version.getOrElse(own)
+      val (st, files) = dirs(w)
+      val wDir = sibling(path, w)
+      val f = files.find(_.getPath.getName == r.file).getOrElse(throw new IllegalStateException(
+        s"$what: delta version $path reads tier file ${r.file} in $wDir, which holds no such file"))
+      val (keys, puts) = (if (w == own) m else meta(spark, what, wDir, files, b)).own.getOrElse(r.file,
+        throw new IllegalStateException(s"$what: the marker of $wDir lists no keys of its tier file ${r.file}"))
+      val (region, fileSchema) = cached(footers, f) {
+        val footer = try ParquetFileReader.readFooter(spark.sessionState.newHadoopConf(), f,
+          ParquetMetadataConverter.NO_FILTER) catch { case e: Exception => throw new IllegalStateException(
+            s"$what: unreadable parquet footer ${f.getPath}", e) }
+        val s = ParquetBridge.dataSchema(spark, f.getPath, footer)
+        (Region(f, footer, s), s)
+      }
+      if (fileSchema != schema) throw new IllegalStateException(
+        s"$what: delta version $path has tier columns ${fileSchema.simpleString} in ${f.getPath}, " +
+          s"base version $bDir ${bh.dataSchema.simpleString}")
+      (Tier(Some(w), f.getPath, r.id, st, f.getLen, keys, puts), region)
     }
-    val footer = try ParquetFileReader.readFooter(conf, file, ParquetMetadataConverter.NO_FILTER)
-      catch { case e: Exception => throw new IllegalStateException(
-        s"$what: unreadable parquet footer ${file.getPath}", e) }
-    val schema = ParquetBridge.dataSchema(spark, file.getPath, footer)
-    if (schema != bh.dataSchema.add(OpCol, BooleanType)) throw new IllegalStateException(
-      s"$what: delta version $path has columns ${schema.simpleString}, " +
-        s"base version $bDir ${bh.dataSchema.simpleString}")
-    val keys = new DeltaKeys(meta.keys, s"${fs.makeQualified(dir)}|${meta.baseStamp}")
-    def points(member: Boolean) = Some(Region.Points(meta.keyCol, keys, member))
-    val regions = bIndex.regions.map { case (p, r) => p -> r.copy(points = points(false)) } +
-      (file.getPath -> Region(file, footer, schema).copy(points = points(true)))
-    val info = DeltaInfo(fs.makeQualified(dir), bDir, b, meta.keyCol, keys, file.getPath)
+    val keys = TierKeys.of(tiers.map { case (t, _) => t.id -> t.keys }, s"$dir|$ownStamp|${m.baseStamp}")
+    val tierRegions = tiers.map { case (t, region) =>
+      val visible = t.keys.indices.collect {
+        case i if t.puts(i) && keys.newestOf(t.keys(i)) == t.id => t.keys(i)
+      }.toArray
+      t.file -> region.copy(points = Some(Region.Points(m.keyCol, keys, Some(visible))))
+    }.toMap
+    val listing = new InMemoryFileIndex(spark, bIndex.rootPaths ++ tiers.map(_._1.file), Map.empty, None)
+    val regions = bIndex.regions.map { case (p, r) =>
+      p -> r.copy(points = Some(Region.Points(m.keyCol, keys, None)))
+    } ++ tierRegions
+    val info = DeltaInfo(dir, bDir, b, m.keyCol, keys, tiers.map(_._1))
     val relation = HadoopFsRelation(new RegionIndex(listing, regions, delta = Some(info)),
       listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)
     PlanBridge.ofRows(spark, visible(LogicalRelation(relation), info))
   }
 
-  /** `lr` under the delta's visibility filter, without [[OpCol]]. */
+  /** `lr` under the tiers' visibility filter, without [[OpCol]]. */
   def visible(lr: LogicalRelation, info: DeltaInfo): LogicalPlan = {
     val (op, cols) = lr.output.partition(_.name == OpCol)
     val key = cols.find(_.name == info.keyCol).getOrElse(throw new IllegalStateException(
@@ -249,24 +464,25 @@ private[graft] object Deltas {
 
   private def quoted(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
-  /** Commit `df` as version `version` of snapshot `base` as a delta, if
-    * it is a chain of [[MergeDelta]]s on `keyCol` over the memo'd read of
-    * an earlier version of `base` (full or delta), with an integral key
-    * and the same column types throughout. The steps' keys and rows
-    * are evaluated against stored state, beside the parent's delta
-    * rows: each part that is client rows ([[ClientRows]]), and the
-    * parent's delta file, by a Dataset collect of its own, which starts
-    * no job (a `LocalTableScan`; one small scan that [[Fetch]] reads
-    * in-thread); the parts of table-derived batches by one union
-    * collect, one job. The driver folds them, in step order, into the
-    * new cumulative delta and writes it, with no further job, as one
-    * sorted file plus the marker, all inside `Snapshots.path(base,
-    * version)`: no older version changes. A client-row put, deleteRows
-    * or mutateRow over a small parent therefore commits with no Spark
-    * job. False, with nothing written, when the caller must write the
+  /** Commit `df` as version `version` of snapshot `base` as a tiered
+    * version, if it is a chain of [[MergeDelta]]s on `keyCol` over the
+    * memo'd read of an earlier version of `base` (full or tiered), with
+    * an integral key and the same column types throughout. Only the
+    * steps' keys and rows are evaluated: each part that is client rows
+    * ([[ClientRows]]) by a Dataset collect of its own, which starts no
+    * job (a `LocalTableScan`), the parts of table-derived batches by
+    * one union collect, one job. The driver folds them, in step order,
+    * into the new tier and writes it, with no further job, as one
+    * sorted file inside `Snapshots.path(base, version)`: no older
+    * version changes. Then a minor compaction ([[select]]) may merge a
+    * window of the chain into one more file there, reading the window's
+    * older tier files with one Dataset collect (one small scan that
+    * [[Fetch]] reads in-thread). The marker goes last. A client-row
+    * put, deleteRows or mutateRow therefore commits with no Spark job.
+    * False, with nothing written, when the caller must write the
     * version in full: not such a chain, a NULL or repeated key among a
-    * step's rows, or a part or delta past [[maxKeys]] (the
-    * compaction). */
+    * step's rows, or more than [[maxKeys]] tier rows in the chain (the
+    * major compaction). */
   def commit(df: DataFrame, keyCol: String, base: String, version: Int): Boolean = {
     val spark = df.sparkSession
     def unwind(p: LogicalPlan, steps: List[MergeDelta]): (LogicalPlan, List[MergeDelta]) = p match {
@@ -280,24 +496,65 @@ private[graft] object Deltas {
       val kt = schema.find(_.name == keyCol).map(_.dataType)
       def sameTypes(plan: LogicalPlan, names: Seq[String]): Boolean = names.forall(n =>
         plan.schema.find(_.name == n).map(_.dataType) == schema.find(_.name == n).map(_.dataType))
-      kt.exists(Region.integral) && steps.forall(m =>
+      val index = Region.of(p)._3
+      val chain = index.delta.fold(Seq.empty[Tier])(_.tiers)
+      val tierFiles = chain.map(_.file).toSet
+      val bRows = index.regions.collect { case (f, r) if !tierFiles(f) => r.rows }.sum
+      val room = maxKeys(bRows) - chain.map(_.keys.length.toLong).sum
+      kt.exists(Region.integral) && room >= 0 && steps.forall(m =>
         m.keys.forall(sameTypes(_, Seq(keyCol))) && m.rows.forall(sameTypes(_, schema.fieldNames.toSeq))) &&
-        fold(spark, p, u, Snapshots.path(base, u), steps, keyCol, schema).exists { case (rows, keys, b, bDir) =>
+        fold(spark, steps, keyCol, schema, room).exists { batch =>
+          val (b, bDir) = index.delta.fold((u, Snapshots.path(base, u)))(d => (d.baseVersion, d.baseDir))
+          val bStamp = Tables.listStamp(spark, "Snapshots.write", bDir)._1
           val out = new Path(Snapshots.path(base, version))
           val fs = Tables.fileSystem(spark, out)
-          val bStamp = Tables.listStamp(spark, "Snapshots.write", bDir)._1
           if (fs.exists(out)) fs.delete(out, true)
           fs.mkdirs(out)
-          ParquetBridge.writeFile(spark, schema.add(OpCol, BooleanType), rows.iterator, out.toString,
-            Map(Layout.PageRowsOption -> Layout.PageRows.toString))
-          writeMeta(fs, out, b, Meta(keyCol, bStamp, keys))
+          val at = schema.fieldIndex(keyCol)
+          def write(rows: Seq[Row], id: Int): Tier = {
+            val file = ParquetBridge.writeFile(spark, schema.add(OpCol, IntegerType),
+              rows.iterator.map(r => Row.fromSeq(r.toSeq.init :+ (if (r.getBoolean(schema.length)) id else -id))),
+              out.toString, Map(Layout.PageRowsOption -> Layout.PageRows.toString))
+            Tier(None, file, id, "", fs.getFileStatus(file).getLen,
+              rows.map(_.get(at).asInstanceOf[Number].longValue).toArray,
+              rows.map(_.getBoolean(schema.length)).toArray)
+          }
+          val fresh = write(batch, chain.lastOption.fold(1)(_.id + 1))
+          val tiers = chain :+ fresh
+          val merged = select(tiers.map(_.bytes)).fold(tiers) { case (s, n) =>
+            val window = tiers.slice(s, s + n)
+            val read = tierRows(p, window.filter(_.version.isDefined).map(_.file).toSet)
+            // oldest first, so the newest tier's row of a key wins
+            val rows = new java.util.TreeMap[java.lang.Long, Row]()
+            window.foreach { t =>
+              (if (t.version.isEmpty) batch else read.getOrElse(t.id, Nil))
+                .foreach(r => rows.put(r.get(at).asInstanceOf[Number].longValue, r))
+            }
+            val into = write(rows.values().asScala.toSeq, window.last.id)
+            if (s + n == tiers.length) fs.delete(fresh.file, false)
+            tiers.take(s) ++ (into +: tiers.drop(s + n))
+          }
+          val own = merged.filter(_.version.isEmpty)
+          writeMeta(fs, out, b, Meta(keyCol, bStamp,
+            merged.map(t => Ref(t.version, t.file.getName, t.id, t.stamp)),
+            own.map(t => t.file.getName -> (t.keys, t.puts)).toMap))
           fs.create(new Path(out, "_SUCCESS"), true).close()
           true
         }
     }
   }
 
-  private val VersionDir = "v=(\\d+)".r
+  /** The rows of tier `files` of parent read `p`, by tier id, each with
+    * a put flag in place of [[OpCol]]: one Dataset collect of the raw
+    * files, one small scan that [[Fetch]] reads in-thread. */
+  private def tierRows(p: DataFrame, files: Set[Path]): Map[Int, Seq[Row]] = {
+    val (lr, h, index) = Region.of(p)
+    val raw = PlanBridge.ofRows(p.sparkSession,
+      lr.copy(relation = h.copy(location = index.restrict(files))(h.sparkSession)).newInstance())
+    val op = raw.schema.fieldIndex(OpCol)
+    raw.collect().toSeq.groupBy(r => math.abs(r.getInt(op)))
+      .map { case (id, rows) => id -> rows.map(r => Row.fromSeq(r.toSeq.updated(op, r.getInt(op) > 0))) }
+  }
 
   /** The memo'd read of version u < `version` of `base` that `bottom`
     * is, and u. */
@@ -318,34 +575,20 @@ private[graft] object Deltas {
     }
   }
 
-  /** The new cumulative delta over parent read `p` of version `u` in
-    * dir `pDir`: its rows in key order, its sorted keys, and its base
-    * version and dir; None past the bound or when a step's rows break
-    * the [[MergeDelta]] invariants. */
-  private def fold(spark: SparkSession, p: DataFrame, u: Int, pDir: String,
-                   steps: List[MergeDelta], keyCol: String, schema: StructType)
-      : Option[(Seq[Row], Array[Long], Int, String)] = {
-    val (lr, h, index) = Region.of(p)
-    val (b, bDir, bRows) = index.delta match {
-      case Some(d) => (d.baseVersion, d.baseDir,
-        index.regions.collect { case (f, r) if f != d.file => r.rows }.sum)
-      case None => (u, pDir, index.regions.values.map(_.rows).sum)
-    }
-    val cap = maxKeys(bRows)
+  /** The new tier of `steps`: its rows in key order, each the columns
+    * of `schema` plus a put flag (a tombstone's payload is NULL); None
+    * past `room` rows or when a step's rows break the [[MergeDelta]]
+    * invariants. */
+  private def fold(spark: SparkSession, steps: List[MergeDelta], keyCol: String,
+                   schema: StructType, room: Long): Option[Seq[Row]] = {
     val names = schema.fieldNames.toSeq
-    // every part as the delta's columns plus OpCol and Part; a
-    // tombstone's payload is NULL
+    // every part as the tier's columns plus the put flag and Part
     def tombstones(k: DataFrame, part: Int) = k.select(names.map(n =>
       if (n == keyCol) quoted(n) else lit(null).cast(schema(n).dataType).as(n)) :+
       lit(false).as(OpCol) :+ lit(part).as(Part): _*)
-    def rows(r: DataFrame, op: Column, part: Int) =
-      r.select(names.map(quoted) :+ op.as(OpCol) :+ lit(part).as(Part): _*)
+    def rows(r: DataFrame, part: Int) =
+      r.select(names.map(quoted) :+ lit(true).as(OpCol) :+ lit(part).as(Part): _*)
     def ofPlan(plan: LogicalPlan) = PlanBridge.ofRows(spark, plan)
-    // the parent's delta file alone, OpCol included
-    val parentRows = index.delta.map { d =>
-      rows(ofPlan(lr.copy(relation =
-        h.copy(location = index.restrict(Set(d.file)))(h.sparkSession)).newInstance()), col(OpCol), 0)
-    }
     val stepParts = steps.zipWithIndex.flatMap { case (m, i) =>
       // the fold dedups keys itself, so a Distinct over them is dropped;
       // a put's keys are its rows' keys, which its rows replace anyway
@@ -357,24 +600,23 @@ private[graft] object Deltas {
         case Project(Seq(a: Attribute), c) => !(a.name == keyCol && m.rows.exists(c.fastEquals))
         case _ => true
       }.map(k => tombstones(ofPlan(k), 2 * i + 1)) ++
-        m.rows.map(r => rows(ofPlan(r), lit(true), 2 * i + 2))
+        m.rows.map(r => rows(ofPlan(r), 2 * i + 2))
     }
-    // Client rows (a LocalTableScan) and the parent's delta file (one
-    // scan, which Fetch reads in-thread when small) are read one
-    // collect each, with no job; parts of table-derived batches in one
-    // union collect, one job. At most cap + 1 rows of each part, or of
-    // each partition of the union, reach the driver: a part of more
-    // than cap rows compacts.
+    // Client rows (a LocalTableScan) are read one collect each, with no
+    // job; parts of table-derived batches in one union collect, one
+    // job. At most room + 1 rows of each part, or of each partition of
+    // the union, reach the driver: a part of more than room rows
+    // compacts.
     val (driver, derived) = stepParts.partition(ClientRows.unapply(_).isDefined)
-    val n = cap.toInt + 1
-    val got = (parentRows.toSeq ++ driver).flatMap(_.limit(n).collect()) ++
+    val n = room.toInt + 1
+    val got = driver.flatMap(_.limit(n).collect()) ++
       derived.reduceOption(_.unionByName(_)).toSeq.flatMap { u =>
         u.mapPartitions((it: Iterator[Row]) => it.take(n))(Encoders.row(u.schema)).collect()
       }
     val (k, op, part) = (schema.fieldIndex(keyCol), names.length, names.length + 1)
     val byPart = got.groupBy(_.getInt(part))
-    if (byPart.values.exists(_.length > cap)) None else {
-      val delta = new java.util.TreeMap[java.lang.Long, Row]()
+    if (byPart.values.exists(_.length > room)) None else {
+      val tier = new java.util.TreeMap[java.lang.Long, Row]()
       val seen = scala.collection.mutable.HashSet[(Int, Long)]()
       val ok = byPart.toSeq.sortBy(_._1).forall { case (step, partRows) =>
         partRows.forall { r =>
@@ -383,14 +625,12 @@ private[graft] object Deltas {
             case null => step % 2 == 1
             case key: Number =>
               val kl = key.longValue
-              (step % 2 == 1 || step == 0 || seen.add((step, kl))) &&
-                { delta.put(kl, Row.fromSeq(r.toSeq.take(op + 1))); true }
+              (step % 2 == 1 || seen.add((step, kl))) &&
+                { tier.put(kl, Row.fromSeq(r.toSeq.take(op + 1))); true }
           }
         }
       }
-      if (!ok || delta.size > cap) None
-      else Some((delta.values().asScala.toSeq,
-        delta.keySet().toArray.map(_.asInstanceOf[java.lang.Long].longValue), b, bDir))
+      if (!ok || tier.size > room) None else Some(tier.values().asScala.toSeq)
     }
   }
 }

@@ -161,20 +161,27 @@ object Indexes {
   * never touch previous ones — so old snapshots stay readable
   * byte-for-byte, which is the property snapshot_read verifies.
   *
-  * A version is FULL (every row, [[Layout.writeSorted]]) or a DELTA
-  * (merge-on-read, [[Deltas]]): the rows changed since the last full
-  * version, which it names, and that every read of it merges by key.
-  * Reading a delta version whose base was since rewritten or deleted
-  * fails, naming both.
+  * A version is FULL (every row, [[Layout.writeSorted]]) or TIERED
+  * (merge-on-read, [[Deltas]]): its own commit's changed rows as one
+  * tier file, plus a chain naming the last full version and the older
+  * tiers it reads, which every read merges by key, newest tier first.
+  * Tiers live in the dirs of the versions that wrote them, so a newer
+  * version reads older version dirs: never delete or rewrite a version
+  * dir that a newer version's chain names. Reading a tiered version
+  * whose base or chain dir was since rewritten or deleted fails,
+  * naming both dirs. Commits merge tiers by HBase's exploring ratio
+  * rule (a minor compaction, in the committing version's dir) and
+  * write in full past [[Deltas.maxKeys]] tier rows (a major one).
   */
 object Snapshots {
   def path(base: String, version: Int): String = s"$base/v=$version"
 
   /** Write `df` as version `version` of `base`. A [[graft.kv.Mutations]]
     * row op over the read of an earlier version of `base` (the
-    * [[MergeDelta]] chain, integral key) commits as a delta, within
-    * [[Deltas.maxKeys]] of its base; every other write, a compaction
-    * past that bound included, is a full sorted write. */
+    * [[MergeDelta]] chain, integral key) commits as a new tier, while
+    * its chain holds at most [[Deltas.maxKeys]] tier rows; every other
+    * write, a major compaction past that bound included, is a full
+    * sorted write. */
   def write(df: DataFrame, keyCol: String, base: String, version: Int): Unit =
     if (!Deltas.commit(df, keyCol, base, version))
       Layout.writeSorted(df, keyCol, path(base, version))
@@ -224,10 +231,10 @@ object Snapshots {
     * version ([[Region]]), the same once-per-open read the reference
     * makes of its persisted manifest. start_key/end_key are NULL when
     * every key in the file is NULL, or when its footer carries no key
-    * statistics. A delta version lists its base version's region files,
-    * with their footer row counts (rows the delta shadows included),
-    * and its delta file, whose range and count cover its put rows and
-    * tombstones. */
+    * statistics. A tiered version lists its base version's region
+    * files, with their footer row counts (rows the tiers shadow
+    * included), and each tier file of its chain, oldest first, whose
+    * range and count cover that tier's own put rows and tombstones. */
   def regionManifest(spark: SparkSession, base: String, version: Int,
                      keyCol: String): DataFrame = {
     import org.apache.spark.sql.Row
@@ -308,8 +315,9 @@ object Snapshots {
     * receiving side verifies integrity). Here: a byte-level copy of the
     * version directory; verification is the caller composing per-bucket
     * digests over source and export (see the export_snapshot query).
-    * A delta version exports self-contained: its rows are written in
-    * full at the target, which never reads the source's base. */
+    * A tiered version exports self-contained: its rows are written in
+    * full at the target, which never reads the source's base or tier
+    * dirs. */
   def exportSnapshot(base: String, version: Int, targetBase: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val dir = path(base, version)
@@ -335,8 +343,10 @@ object Snapshots {
     * (including the pre-restore current state) stay readable, which
     * is what lets [[restoreAudit]] price exactly what the rollback
     * discarded, and keeps clones taken from the snapshot independent
-    * of the restore (the spec's clone-unaffected contract). A delta
-    * snapshot restores as the same delta over the same base. */
+    * of the restore (the spec's clone-unaffected contract). A tiered
+    * snapshot restores as the same tiers over the same base: its own
+    * tier files are copied with their tier ids, and its chain still
+    * names the older tier dirs. */
   def restore(base: String, snapshotVersion: Int, newCurrentVersion: Int): Unit = {
     require(newCurrentVersion > snapshotVersion,
       s"restore writes a NEW current version (got v$newCurrentVersion " +

@@ -17,12 +17,19 @@ import org.apache.spark.sql.types._
   * (StoreFile.Reader.passesKeyRangeFilter). A column is absent from
   * `spans` when some row group carries no usable statistics for it;
   * then nothing is known and every predicate on it keeps the file.
-  * `points`, in a delta version's relation ([[Deltas]]), narrows which
-  * single values of the key column a visible row of the file can hold. */
+  * `points`, in a tiered version's relation ([[Deltas]]), narrows which
+  * values of the key column a visible row of the file can hold. */
 private[graft] final case class Region(file: FileStatus, rows: Long,
                                        spans: Map[String, Region.Span],
                                        points: Option[Region.Points] = None) {
   import Region._
+
+  /** Whether some row of this file can satisfy every conjunct of
+    * `filters`: each one [[mayHold]], and the key-column range they
+    * bound together holds a key `points` admits. */
+  def mayHoldAll(filters: Seq[Expression]): Boolean =
+    filters.forall(mayHold) &&
+      points.forall(p => keyRange(filters, p.column).forall { case (lo, hi) => p.admitsRange(lo, hi) })
 
   /** Whether some row of this file can satisfy `p`. False only when an
     * `=`, `<`, `<=`, `>`, `>=`, `In` or `InSet` of an integral column
@@ -57,6 +64,39 @@ private[graft] final case class Region(file: FileStatus, rows: Long,
   private def admits(a: Expression, v: Long): Boolean =
     points.forall(p => p.column != a.asInstanceOf[AttributeReference].name || p.admits(v))
 
+  /** The [lo, hi] that the top-level conjuncts of `filters` bound
+    * `column` to, when one of them bounds it; lo > hi when they
+    * exclude every value. */
+  private def keyRange(filters: Seq[Expression], column: String): Option[(Long, Long)] = {
+    object Col {
+      def unapply(e: Expression): Boolean = e match {
+        case a: AttributeReference => a.name == column && integral(a.dataType)
+        case _ => false
+      }
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    // x < v is x <= v - 1, and x > v is x >= v + 1; no value is below
+    // Long.MinValue or above Long.MaxValue
+    def below(v: Long) = if (v == Long.MinValue) (Long.MaxValue, Long.MinValue) else (Long.MinValue, v - 1)
+    def above(v: Long) = if (v == Long.MaxValue) (Long.MaxValue, Long.MinValue) else (v + 1, Long.MaxValue)
+    val bounds = filters.flatMap(conjuncts).collect {
+      case EqualTo(Col(), Lit(v)) => (v, v)
+      case EqualTo(Lit(v), Col()) => (v, v)
+      case LessThan(Col(), Lit(v)) => below(v)
+      case GreaterThan(Lit(v), Col()) => below(v)
+      case LessThanOrEqual(Col(), Lit(v)) => (Long.MinValue, v)
+      case GreaterThanOrEqual(Lit(v), Col()) => (Long.MinValue, v)
+      case GreaterThan(Col(), Lit(v)) => above(v)
+      case LessThan(Lit(v), Col()) => above(v)
+      case GreaterThanOrEqual(Col(), Lit(v)) => (v, Long.MaxValue)
+      case LessThanOrEqual(Lit(v), Col()) => (v, Long.MaxValue)
+    }
+    bounds.reduceOption((a, b) => (math.max(a._1, b._1), math.min(a._2, b._2)))
+  }
+
   private object Key {
     def unapply(e: Expression): Option[Span] = e match {
       case a: AttributeReference if integral(a.dataType) => spans.get(a.name)
@@ -75,11 +115,21 @@ private[graft] object Region {
   }
   val NoValues: Span = Span(Long.MaxValue, Long.MinValue)
 
-  /** A visible row of the file holds a value v of `column` only when
-    * `keys` contains v (`member`: the delta file) or does not (a base
-    * file, whose rows for delta keys the visibility filter hides). */
-  final case class Points(column: String, keys: DeltaKeys, member: Boolean) {
-    def admits(v: Long): Boolean = keys.contains(v) == member
+  /** Which values of `column` a visible row of the file can hold. A
+    * base file (`visible` None) holds visible rows only for keys in no
+    * tier of `keys`, whose other rows the visibility filter hides; a
+    * tier file only for `visible`, the sorted put keys whose newest
+    * tier it is. */
+  final case class Points(column: String, keys: TierKeys, visible: Option[Array[Long]]) {
+    def admits(v: Long): Boolean =
+      visible.fold(!keys.contains(v))(java.util.Arrays.binarySearch(_, v) >= 0)
+    /** Whether a value in [lo, hi] may be visible: always for a base
+      * file; for a tier file, when one of its visible keys lies there. */
+    def admitsRange(lo: Long, hi: Long): Boolean = visible.forall { vs =>
+      val i = java.util.Arrays.binarySearch(vs, lo)
+      val at = if (i >= 0) i else -i - 1
+      lo <= hi && at < vs.length && vs(at) <= hi
+    }
   }
 
   def integral(t: DataType): Boolean =
@@ -164,7 +214,7 @@ private[graft] object Region {
   * ranges ([[Region.mayHold]]) cannot satisfy the scan's pushed data
   * filters. Listing, partitioning and refresh are `inner`'s; files the
   * footer pass never saw are always kept. `only`, when set, is a fixed
-  * file subset (a split pick); `delta` is set on a delta version's
+  * file subset (a split pick); `delta` is set on a tiered version's
   * relation. Equality is by root paths, as InMemoryFileIndex's is, so
   * `sameResult` and exchange reuse treat two reads of one path as the
   * same relation. */
@@ -177,7 +227,7 @@ private[graft] final class RegionIndex(inner: FileIndex, val regions: Map[Path, 
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
     inner.listFiles(partitionFilters, dataFilters).map(d => d.copy(files = d.files.filter { f =>
       only.forall(_(f.getPath)) &&
-        regions.get(f.getPath).forall(r => dataFilters.forall(r.mayHold))
+        regions.get(f.getPath).forall(_.mayHoldAll(dataFilters))
     }))
 
   override def inputFiles: Array[String] =

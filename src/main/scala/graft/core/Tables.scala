@@ -110,18 +110,19 @@ object Tables {
   }
 
   /** The memoized plan of the parquet at `path` (see [[readMemo]]);
-    * `events` applies the events table's ts normalization. A delta
-    * snapshot version ([[Deltas]]) is stamped with its base's stamp
-    * too, so a rewrite of the base is seen by the next read. A miss
-    * loads outside the map: a delta's load reads its base through this
-    * memo. */
+    * `events` applies the events table's ts normalization. A tiered
+    * snapshot version ([[Deltas]]) is stamped with its base's stamp and
+    * the length and mtime of each tier file it reads in another version
+    * dir too ([[Deltas.stamp]]), so a rewrite of any of those dirs is
+    * seen by the next read. A miss loads outside the map: a tiered
+    * version's load reads its base through this memo. */
   private[graft] def read(spark: SparkSession, path: String, what: String,
                           events: Boolean = false): DataFrame = {
     readMemo.entrySet().removeIf(_.getValue.sparkSession.sparkContext.isStopped)
     val (own, files) = listStamp(spark, what, path)
     val delta = Deltas.baseOf(files)
     val key = LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark), path,
-      delta.fold(own)(b => s"$own|${Deltas.baseStamp(spark, what, path, b)}"), events)
+      delta.fold(own)(b => s"$own|${Deltas.stamp(spark, what, path, files, b)}"), events)
     val hit = readMemo.get(key)
     if (hit != null) hit else {
       readMemo.keySet().removeIf(k =>

@@ -225,10 +225,11 @@ object ParquetBridge {
   /** Write `rows` of `schema`, in order, as one parquet file under the
     * existing dir `dir`, on the driver: the writer a Spark write task
     * runs, with the session's parquet settings plus `options`, and no
-    * job. For a few thousand rows already on the driver. */
+    * job. For a few thousand rows already on the driver. Returns the
+    * written file. */
   def writeFile(spark: org.apache.spark.sql.SparkSession, schema: StructType,
                 rows: Iterator[org.apache.spark.sql.Row], dir: String,
-                options: Map[String, String]): Unit = {
+                options: Map[String, String]): Path = {
     import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
     import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
     val job = Job.getInstance(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -241,5 +242,6 @@ object ParquetBridge {
     val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
     try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
     finally writer.close()
+    file
   }
 }

@@ -329,10 +329,10 @@ class LayoutSpec extends SparkSpec {
     new java.io.File(Snapshots.path(base, v)).listFiles()
       .exists(_.getName.startsWith(graft.core.Deltas.Marker))
 
-  /** v1 = keys 1..400 in full; v2 puts 10 keys (a delta), v3 deletes 8
-    * (a delta, 18 keys), v4 puts 12 more (30 keys, past the 400/16 = 25
-    * bound: a compaction) and v5 deletes 5 (a delta over v4). Returns the
-    * merge-on-read base and its full-write twin. */
+  /** v1 = keys 1..400 in full; v2 puts 11 keys (a tier), v3 deletes 8
+    * (a second tier, 19 tier rows), v4 puts 12 more (31 tier rows, past
+    * the 400/16 = 25 bound: a compaction) and v5 deletes 5 (a tier over
+    * v4). Returns the merge-on-read base and its full-write twin. */
   private def deltaTwins(name: String): (String, String) = {
     import spark.implicits._
     import graft.kv.Mutations
@@ -375,12 +375,12 @@ class LayoutSpec extends SparkSpec {
     val (mor, _) = deltaTwins("manifest")
     def manifest(v: Int) = Snapshots.regionManifest(spark, mor, v, "k").collect().toSeq
       .map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2)), r.getLong(3)))
-    // v3 = v1's region files, shadowed rows counted, plus one delta
-    // file whose range and count cover its 10 puts and 8 tombstones
-    // (key 5 was put, then deleted)
-    val (base, delta) = manifest(3).partition(!_._1.contains("/v=3/"))
+    // v3 = v1's region files, shadowed rows counted, plus two tiers:
+    // v2's 11 puts and v3's own 8 tombstones, each file's range and
+    // count its own batch's
+    val (base, tiers) = manifest(3).partition(_._1.contains("/v=1/"))
     assert(base == manifest(1))
-    assert(delta.map(r => (r._2, r._3, r._4)) == Seq((Some(3L), Some(950L), 18L)), delta)
+    assert(tiers.map(r => (r._2, r._3, r._4)) == Seq((Some(5L), Some(900L), 11L), (Some(3L), Some(950L), 8L)), tiers)
     // v5 = the compacted v4's regions plus a 5-key delta
     val (base5, delta5) = manifest(5).partition(!_._1.contains("/v=5/"))
     assert(base5 == manifest(4))

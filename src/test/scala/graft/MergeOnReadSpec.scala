@@ -27,12 +27,19 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     new java.io.File(Snapshots.path(base, v)).listFiles().toSeq
       .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1)
 
+  /** The tiers of version `v`'s chain; 0 for a full version. */
+  private def chain(base: String, v: Int): Int =
+    graft.core.Region.of(Snapshots.read(spark, base, v))._3.delta.fold(0)(_.tiers.size)
+
   /** A random sequence of `commits` row ops over a base of `n` keyed
     * rows (Long extremes included when the key is a long) plus three
     * NULL-key rows, checked after every commit against a driver model
-    * and a full write of the same plan; afterwards every older version
-    * must still list the same files and read the same rows. */
-  private def differential(kt: DataType, seed: Long, n: Int, commits: Int): Unit = {
+    * and a full write of the same plan, with one older version reread
+    * in turn; no version's chain may hold more than 10 tiers.
+    * Afterwards every older version must still list the same files
+    * and read the same rows. Returns the minor and the major
+    * compactions seen. */
+  private def differential(kt: DataType, seed: Long, n: Int, commits: Int): (Int, Int) = {
     val rnd = new scala.util.Random(seed)
     val base = TempDirs.create(s"graft_mor_${kt.simpleString}").toString
     val fullBase = TempDirs.create(s"graft_mor_full_${kt.simpleString}").toString
@@ -65,6 +72,7 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val history = scala.collection.mutable.ArrayBuffer[(Int, Seq[(String, Long, Long)], Seq[String])]()
     var deltas = 0
     var compactions = 0
+    var minors = 0
     (1 to commits).foreach { v =>
       val kind = kinds((v - 1) % kinds.size)
       val puts = pick(6 + rnd.nextInt(8)).map(k => k -> (s"p$v-$k", rnd.nextDouble()))
@@ -104,7 +112,12 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         s"v${v + 1} ($kind) differs from the same plan written in full")
       if (isDelta(base, v + 1)) deltas += 1
       else if (v > 1 && isDelta(base, v)) compactions += 1
+      val tiers = chain(base, v + 1)
+      assert(tiers <= 10, s"v${v + 1}'s chain holds $tiers tiers")
+      if (isDelta(base, v + 1) && isDelta(base, v) && tiers <= chain(base, v)) minors += 1
       history += ((v + 1, listing(base, v + 1), got))
+      val (old, _, oldRows) = history(v % history.size)
+      assert(sorted(Snapshots.read(spark, base, old)) == oldRows, s"v$old's rows changed by v${v + 1}")
     }
     assert(deltas >= commits / 2, s"only $deltas of $commits commits wrote a delta")
     assert(compactions >= 1, "no commit compacted past the delta bound")
@@ -113,6 +126,7 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Tables.readMemo.keySet().removeIf(_.path == Snapshots.path(base, v))
       assert(sorted(Snapshots.read(spark, base, v)) == rows, s"v$v's rows changed")
     }
+    (minors, compactions)
   }
 
   test("seeded random row-op sequences over a long key read as the model and as a full write") {
@@ -121,6 +135,136 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("seeded random row-op sequences over an int key read as the model and as a full write") {
     differential(IntegerType, seed = 8102L, n = 900, commits = 30)
+  }
+
+  test("a hundred seeded commits over tiers merge by the ratio rule and compact in full, reading as the model") {
+    val (minors, majors) = differential(LongType, seed = 8103L, n = 4000, commits = 110)
+    assert(minors >= 1, "no commit merged tiers")
+    assert(majors >= 1, "no commit compacted in full")
+  }
+
+  test("the tier window is Tools.compactionSelect's pick on seeded random size lists") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(8104L)
+    val lists = (0 until 240).map { _ =>
+      val n = rnd.nextInt(14)
+      // small sizes tie often; tier-like sizes mix a fixed cost with growth
+      if (rnd.nextBoolean()) Seq.fill(n)(1L + rnd.nextInt(12))
+      else Seq.fill(n)(2000L + (rnd.nextInt(4000) * math.pow(2.5, rnd.nextInt(4))).toLong)
+    }
+    val files = lists.zipWithIndex.flatMap { case (sizes, r) =>
+      sizes.zipWithIndex.map { case (sz, i) => (r, i.toLong, sz) }
+    }
+    val picked = graft.analytics.Tools.compactionSelect(files.toDF("region", "seq", "size"),
+      minFiles = Deltas.MinTiers, maxFiles = Deltas.MaxTiers, ratio = Deltas.Ratio)
+      .select("region", "first_seq", "n_files").as[(Int, Long, Long)].collect()
+      .map { case (r, s, n) => r -> (s.toInt, n.toInt) }.toMap
+    lists.zipWithIndex.foreach { case (sizes, r) =>
+      assert(Deltas.window(sizes) == picked.get(r), s"sizes $sizes")
+    }
+    assert(picked.size >= 100, s"only ${picked.size} lists had a window")
+    // past 10 tiers with no window, the 10 contiguous tiers of fewest bytes
+    val stuck = Seq(90000L, 30000L, 10000L, 4000L, 1500L, 600L, 250L, 100L, 40L, 16L, 7L, 3L)
+    assert(Deltas.window(stuck).isEmpty)
+    assert(Deltas.select(stuck) == Some((2, 10)))
+    assert(Deltas.select(stuck.take(10)).isEmpty)
+  }
+
+  /** A snapshot whose v4 reads three tiers the ratio rule leaves apart:
+    * v1 holds 16000 even keys (0 to 31998) in 8 region files; v2 puts
+    * 400 keys from 10000 with long payloads, v3 60 from 20000, and v4
+    * puts 31001 and 31003 and deletes 500 and 502. Returns the
+    * snapshot and v4's rows as a model. */
+  private def threeTiers(name: String): (String, Map[Long, String]) = {
+    import spark.implicits._
+    val base = TempDirs.create(s"graft_tiers_$name").toString
+    val model = scala.collection.mutable.Map[Long, String]()
+    (0L until 32000L by 2).foreach(k => model(k) = s"b$k")
+    Layout.writeSorted(model.toSeq.toDF("k", "s"), "k", Snapshots.path(base, 1), buckets = 8)
+    def put(v: Int, rows: Seq[(Long, String)]): Unit = {
+      Snapshots.write(Mutations.put(Snapshots.read(spark, base, v - 1), rows.toDF("k", "s"), "k"), "k", base, v)
+      model ++= rows
+    }
+    put(2, (0L until 400L).map(i => (10000L + 2 * i) -> java.util.UUID.nameUUIDFromBytes(Array(i.toByte, (i >> 8).toByte)).toString * 2))
+    put(3, (0L until 60L).map(i => (20000L + 2 * i) -> s"t$i"))
+    Snapshots.write(Mutations.mutateRow(Snapshots.read(spark, base, 3), Seq(31001L -> "a", 31003L -> "c").toDF("k", "s"),
+      Seq(500L, 502L).toDF("k"), "k"), "k", base, 4)
+    model ++= Seq(31001L -> "a", 31003L -> "c")
+    model --= Seq(500L, 502L)
+    assert(chain(base, 4) == 3, s"v4 reads ${chain(base, 4)} tiers")
+    (base, model.toMap)
+  }
+
+  /** Rows, files read and scans of `df`'s collect. */
+  private def scanned(df: DataFrame): (Seq[String], Long, Int) = {
+    val rows = df.collect().map(_.toString).toSeq.sorted
+    val scans = collectWithSubqueries(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    (rows, scans.map(_.metrics("numFiles").value).sum, scans.size)
+  }
+
+  test("over three tiers a Get reads one file, a range opens only the tiers it holds keys of, and resolving starts no job") {
+    val (base, model) = threeTiers("reads")
+    Tables.readMemo.keySet().removeIf(_.path == Snapshots.path(base, 4))
+    var v4: DataFrame = null
+    assert(jobsIn { v4 = Snapshots.read(spark, base, 4) } == 0)
+    def row(k: Long) = model.get(k).map(s => s"[$k,$s]").toSeq
+    for (k <- Seq(10002L, 20004L, 31001L, 4000L))
+      assert(scanned(Scans.get(v4, "k", k, Seq("k", "s"))) == ((row(k), 1L, 1)), s"a Get of $k")
+    for (k <- Seq(500L, 40001L))
+      assert(scanned(Scans.get(v4, "k", k, Seq("k", "s"))) == ((Nil, 0L, 1)), s"a Get of $k")
+    val v1 = Snapshots.read(spark, base, 1)
+    def range(lo: Long, hi: Long) = model.toSeq.filter(kv => kv._1 >= lo && kv._1 < hi).sortBy(_._1)
+      .map { case (k, s) => s"[$k,$s]" }.sorted
+    // [1000, 3000) holds no tier key, [10000, 10100) v2's, [0, 1000) v4's tombstones only
+    for (((lo, hi), tiers) <- Seq(((1000L, 3000L), 0L), ((10000L, 10100L), 1L), ((0L, 1000L), 0L),
+                                  ((19990L, 20010L), 1L), ((9000L, 32000L), 3L))) {
+      val (rows, files, _) = scanned(Scans.range(v4, "k", lo, hi, Seq("k", "s")))
+      assert(rows == range(lo, hi), s"range [$lo, $hi)")
+      assert(files == scanned(Scans.range(v1, "k", lo, hi, Seq("k", "s")))._2 + tiers, s"files of [$lo, $hi)")
+    }
+    // concurrent in-thread reads of one Dataset, as FetchSpec's
+    val df = Scans.range(v4, "k", 9000L, 21000L, Seq("k", "s"))
+    val want = range(9000L, 21000L)
+    assert(jobsIn(df.collect()) == 0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val wrong = (0 until 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Int] {
+          override def call(): Int = (0 until 10).count(_ => df.collect().map(_.toString).toSeq.sorted != want)
+        })
+      }.map(_.get()).sum
+      assert(wrong == 0, s"$wrong of 40 concurrent collects read other rows")
+    } finally pool.shutdown()
+  }
+
+  test("a tiered version whose middle tier dir was rewritten or deleted fails naming both") {
+    import spark.implicits._
+    for (how <- Seq("rewritten", "deleted")) {
+      val (base, model) = threeTiers(how)
+      assert(Snapshots.read(spark, base, 4).count() == model.size.toLong)
+      if (how == "rewritten") Snapshots.write(Seq((1L, "x")).toDF("k", "s"), "k", base, 3)
+      else org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(Snapshots.path(base, 3)))
+      val e = intercept[IllegalStateException](Snapshots.read(spark, base, 4).collect())
+      assert(e.getMessage.contains(Snapshots.path(base, 4)), e.getMessage)
+      assert(e.getMessage.contains(Snapshots.path(base, 3)), e.getMessage)
+      assert(e.getMessage.contains(if (how == "rewritten") "rewritten" else "missing"), e.getMessage)
+    }
+  }
+
+  test("a truncated marker fails naming the table, the version dir and the marker") {
+    import spark.implicits._
+    val base = TempDirs.create("graft_mor_marker").toString
+    Snapshots.write((1L to 64L).map(k => (k, k)).toDF("k", "v"), "k", base, 1)
+    Snapshots.write(Mutations.deleteRows(Snapshots.read(spark, base, 1), Seq(3L).toDF("k"), "k"), "k", base, 2)
+    val dir = new java.io.File(Snapshots.path(base, 2))
+    assert(!dir.listFiles().exists(_.getName.contains("pending")), "an unpublished marker is left")
+    val marker = new java.io.File(dir, s"${Deltas.Marker}1")
+    val bytes = java.nio.file.Files.readAllBytes(marker.toPath)
+    java.nio.file.Files.write(marker.toPath, bytes.take(bytes.length / 2))
+    new java.io.File(dir, s".${marker.getName}.crc").delete()
+    val e = intercept[IllegalStateException](Snapshots.read(spark, base, 2).collect())
+    for (name <- Seq(base, Snapshots.path(base, 2), marker.getName))
+      assert(e.getMessage.contains(name), e.getMessage)
   }
 
   test("a non-integral key or a commit into another base writes in full") {
