@@ -2,8 +2,6 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryExpression, Expression}
@@ -11,10 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, Distinct, Filter, LocalRelation, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ParquetBridge, PlanBridge, SessionBridge}
+import org.apache.spark.sql.graftbridge.{ListingBridge, ParquetBridge, PlanBridge, SessionBridge}
 import org.apache.spark.sql.types._
 
 /** One row-level mutation of `base`, as HBase applies a batch: every
@@ -160,10 +158,10 @@ private[graft] case class DeltaVisible(key: Expression, op: Expression, keys: Ti
 
 /** One tier file of a tiered version's chain: the version dir that
   * holds it (None for a file the committing version is writing), the
-  * file, its tier id, the dir's stamp, its bytes, and its keys, sorted,
-  * each marked put or tombstone. */
-private[graft] final case class Tier(version: Option[Int], file: Path, id: Int, stamp: String,
-                                     bytes: Long, keys: Array[Long], puts: Array[Boolean])
+  * file, its tier id, its bytes and mtime, and its keys, sorted, each
+  * marked put or tombstone. */
+private[graft] final case class Tier(version: Option[Int], file: Path, id: Int, bytes: Long,
+                                     mtime: Long, keys: Array[Long], puts: Array[Boolean])
 
 /** What a tiered version's relation carries beyond its files: its dir,
   * its base version's dir and version, the key column, the tier keys,
@@ -182,13 +180,13 @@ private[graft] final case class DeltaInfo(dir: Path, baseDir: String, baseVersio
   * copies its dir. The version's marker `_graft_delta_of_v<b>` names
   * the last full version b and the CHAIN: every tier the version reads,
   * oldest first, each a file in this dir or in an older version dir of
-  * the same snapshot. So a newer version reads older version dirs, and
-  * rewriting or deleting any of them fails the next read of every
-  * version whose chain names it, naming both dirs. The marker also
-  * holds the key column, b's stamp, each named dir's stamp, and the
-  * keys of this dir's own tier files only, so it grows with the batch,
-  * not with the commits since b. It is written under a hidden name and
-  * renamed into place just before `_SUCCESS`.
+  * the same snapshot, with its length and mtime at commit. So a newer
+  * version reads older version dirs, and rewriting or deleting any of
+  * them fails the next read of every version whose chain names it,
+  * naming both dirs ([[check]]). The marker also holds the key column,
+  * b's stamp, and the keys of this dir's own tier files only, so it
+  * grows with the batch, not with the commits since b. It is written
+  * under a hidden name and renamed into place just before `_SUCCESS`.
   *
   * After writing its tier, a commit applies HBase's exploring ratio
   * rule ([[select]]) to the chain's tier sizes. When a window of
@@ -198,11 +196,14 @@ private[graft] final case class DeltaInfo(dir: Path, baseDir: String, baseVersio
   * commits. Past [[maxKeys]] tier rows in the chain a MAJOR compaction
   * writes v in full, and the next commit starts a new chain over v.
   *
-  * A tiered version resolves, with no Spark job, to one relation over
-  * b's region files plus the chain's tier files, under one
-  * [[DeltaVisible]] filter. b's footers come from its memo'd read and
-  * each tier's footer and keys from a per-file cache, so a new version
-  * reads only its own files' footers. Every base file's region admits
+  * Every read of a tiered version lists its own dir and b's, and stats
+  * each chain file in another dir ([[check]]); a read-memo miss then
+  * resolves, with no Spark job and no further listing ([[resolve]]), to
+  * one relation over b's region files plus the chain's tier files,
+  * under one [[DeltaVisible]] filter. b's relation comes from the read
+  * memo, and each tier's footer and each marker from the per-file memo
+  * ([[Tables.perFile]]), so a new version reads only its own files'
+  * footers and its own marker. Every base file's region admits
   * to `=`/`In` only the keys no tier holds, and a tier file's region
   * only the keys whose newest visible put it holds, so a Get opens one
   * file as on a full version; a key range admits a tier file only when
@@ -262,26 +263,11 @@ private[graft] object Deltas {
   private def sibling(dir: String, w: Int): String =
     Snapshots.path(new Path(dir).getParent.toString, w)
 
-  /** The stamp of delta version `path`'s base `b`; a missing base fails
-    * naming the delta version, the base and the cause. */
-  private def baseStamp(spark: SparkSession, what: String, path: String, b: Int): String =
-    listed(spark, what, path, sibling(path, b), "base version")._1
-
-  /** The listing of version dir `dir`, which version `path` reads; a
-    * missing dir fails naming both. */
-  private def listed(spark: SparkSession, what: String, path: String, dir: String,
-                     role: String): (String, Seq[FileStatus]) =
-    try Tables.listStamp(spark, what, dir) catch {
-      case e: IllegalArgumentException if e.getCause.isInstanceOf[java.io.FileNotFoundException] =>
-        throw new IllegalStateException(s"$what: delta version $path reads $role " +
-          s"$dir, which is missing (deleted after the delta was committed)", e)
-    }
-
   /** One chain entry of a marker: a tier file, in version dir
-    * `version` (None: the marker's own dir), its tier id, and the dir's
-    * stamp at commit (empty for the own dir). */
-  private final case class Ref(version: Option[Int], file: String, id: Int, stamp: String)
-  private final case class Meta(keyCol: String, baseStamp: String, chain: Seq[Ref],
+    * `version` (None: the marker's own dir), its tier id, and its
+    * length and mtime at commit. */
+  private[graft] final case class Ref(version: Option[Int], file: String, id: Int, bytes: Long, mtime: Long)
+  private[graft] final case class Meta(keyCol: String, baseStamp: String, chain: Seq[Ref],
                                 own: Map[String, (Array[Long], Array[Boolean])])
 
   /** Publish `m` as `dir`'s marker: written under a hidden name, then
@@ -298,7 +284,8 @@ private[graft] object Deltas {
         r.version.foreach(out.writeInt)
         out.writeUTF(r.file)
         out.writeInt(r.id)
-        out.writeUTF(r.stamp)
+        out.writeLong(r.bytes)
+        out.writeLong(r.mtime)
       }
       out.writeInt(m.own.size)
       m.own.foreach { case (file, (keys, puts)) =>
@@ -312,143 +299,152 @@ private[graft] object Deltas {
       throw new java.io.IOException(s"could not publish the marker of $dir")
   }
 
-  private def readMeta(fs: FileSystem, what: String, file: Path): Meta = {
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(file)))
+  /** The marker `f`, read whole; every count in it is checked against
+    * the bytes left, so a damaged one fails as corrupt before anything
+    * is allocated for it. */
+  private def readMeta(fs: FileSystem, what: String, f: FileStatus): Meta = {
+    val file = f.getPath
     try {
+      val bytes = new Array[Byte](f.getLen.toInt)
+      val stream = fs.open(file)
+      try stream.readFully(0L, bytes) finally stream.close()
+      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+      // a count of entries that take at least `least` bytes each
+      def count(least: Int): Int = {
+        val n = in.readInt()
+        if (n < 0 || n.toLong * least > in.available()) throw new java.io.IOException(
+          s"count $n past the end of the marker")
+        n
+      }
       val keyCol = in.readUTF()
       val stamp = in.readUTF()
-      val chain = Seq.fill(in.readInt()) {
+      val chain = Seq.fill(count(23)) {
         val version = if (in.readBoolean()) Some(in.readInt()) else None
-        Ref(version, in.readUTF(), in.readInt(), in.readUTF())
+        Ref(version, in.readUTF(), in.readInt(), in.readLong(), in.readLong())
       }
-      val own = Seq.fill(in.readInt()) {
+      val own = Seq.fill(count(6)) {
         val file = in.readUTF()
-        val n = in.readInt()
+        val n = count(9)
         val keys = Array.fill(n)(in.readLong())
         file -> (keys, Array.fill(n)(in.readBoolean()))
       }.toMap
       Meta(keyCol, stamp, chain, own)
     } catch {
-      case e @ (_: java.io.IOException | _: NegativeArraySizeException) =>
+      case e: java.io.IOException =>
         val dir = file.getParent
         throw new IllegalStateException(s"$what: table ${dir.getParent}: version dir $dir: " +
           s"marker ${file.getName} is truncated or corrupt; rewrite the version", e)
-    } finally in.close()
-  }
-
-  /** Per-file memos of markers and tier footers, keyed by path, length
-    * and mtime: a commit reads its parent's tiers from them and writes
-    * only its own, and a file rewritten in place gets a new key. Past
-    * [[CacheCap]] entries a memo resets. */
-  private val CacheCap = 4096
-  private val metas = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
-  private val footers = new java.util.concurrent.ConcurrentHashMap[String, (Region, StructType)]()
-
-  private def cached[V](memo: java.util.concurrent.ConcurrentHashMap[String, V], f: FileStatus)
-                       (build: => V): V = {
-    val key = s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
-    val hit = memo.get(key)
-    if (hit != null) hit else {
-      val v = build
-      if (memo.size >= CacheCap) memo.clear()
-      memo.put(key, v)
-      v
     }
   }
 
-  /** The marker of version dir `dir`, among its listing `files`. */
-  private def meta(spark: SparkSession, what: String, dir: String, files: Seq[FileStatus], b: Int): Meta =
-    files.find(_.getPath.getName == s"$Marker$b") match {
-      case Some(f) => cached(metas, f)(readMeta(Tables.fileSystem(spark, f.getPath), what, f.getPath))
-      case None => throw new IllegalStateException(
-        s"$what: version dir $dir, named by a tiered version's chain, holds no $Marker$b marker")
-    }
+  /** The `_graft_delta_of_v<b>` marker of version dir `dir`, found as
+    * `marker`, through the per-file memo ([[Tables.perFile]]). */
+  private def meta(spark: SparkSession, what: String, dir: String, marker: Option[FileStatus],
+                   b: Int): Meta = marker match {
+    case Some(f) => Tables.perFile(f)(readMeta(Tables.fileSystem(spark, f.getPath), what, f))
+    case None => throw new IllegalStateException(
+      s"$what: version dir $dir, named by a tiered version's chain, holds no $Marker$b marker")
+  }
 
-  /** What a read of tiered version `path` (listing `files`, base `b`)
-    * depends on beyond its own dir, as one stamp: its base's stamp, and
-    * the length and mtime of each tier file it reads in another dir. A
-    * rewrite of such a dir replaces its files, so it changes the stamp,
-    * and the next read resolves, where [[resolve]] checks each dir
-    * whole. One stat per tier file, where a dir listing stats each of
-    * its files. */
-  def stamp(spark: SparkSession, what: String, path: String, files: Seq[FileStatus], b: Int): String = {
+  /** Tiered version `dir` as [[check]] found it: its marker, base `b`,
+    * the base's dir, stamp and listing, and the status of each file the
+    * chain may name, by (version dir, None for its own, file name). */
+  private[graft] final case class Checked(meta: Meta, b: Int, baseDir: String, baseStamp: String,
+                                          baseFiles: Seq[FileStatus], files: Map[(Option[Int], String), FileStatus])
+
+  private def stat(fs: FileSystem, p: Path): Option[FileStatus] =
+    try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
+
+  /** The one check of tiered version `path` (listing `files`, base
+    * `b`), run by [[Tables.read]] on every read, memo hit or miss: the
+    * base must list at the stamp the marker recorded, and not be tiered
+    * itself; each tier file the chain names in another version dir must
+    * have the length and mtime the marker recorded. A rewrite of the
+    * base or of a chain dir replaces those files, so it fails the next
+    * read of every version that reads them, naming both dirs. Costs the
+    * base listing and one stat per such file. */
+  def check(spark: SparkSession, what: String, path: String, files: Seq[FileStatus], b: Int): Checked = {
+    val m = meta(spark, what, path, files.find(_.getPath.getName == s"$Marker$b"), b)
+    val bDir = sibling(path, b)
+    val (now, bFiles) = try Tables.listStamp(spark, what, bDir) catch {
+      case e: IllegalArgumentException if e.getCause.isInstanceOf[java.io.FileNotFoundException] =>
+        throw missing(what, path, "base version", bDir, e)
+    }
+    if (now != m.baseStamp) throw new IllegalStateException(
+      s"$what: delta version $path reads base version $bDir, which was rewritten " +
+        s"after the delta was committed (base stamp ${m.baseStamp}, now $now)")
+    if (baseOf(bFiles).nonEmpty) throw new IllegalStateException(
+      s"$what: delta version $path names $bDir as its base, which is itself a delta")
     val fs = Tables.fileSystem(spark, new Path(path))
-    (baseStamp(spark, what, path, b) +: meta(spark, what, path, files, b).chain.collect {
-      case Ref(Some(w), file, _, _) =>
-        try {
-          val f = fs.getFileStatus(new Path(sibling(path, w), file))
-          s"${f.getLen}:${f.getModificationTime}"
-        } catch { case _: java.io.FileNotFoundException => "missing" }
-    }).mkString("|")
+    val others = m.chain.collect { case Ref(Some(w), file, _, bytes, mtime) =>
+      val wDir = sibling(path, w)
+      val f = stat(fs, new Path(wDir, file))
+      if (f.isEmpty && stat(fs, new Path(wDir)).isEmpty) throw missing(what, path, "tier dir", wDir, null)
+      val st = f.fold("missing")(f => s"${f.getLen}:${f.getModificationTime}")
+      if (st != s"$bytes:$mtime") throw new IllegalStateException(
+        s"$what: delta version $path reads tier dir $wDir, which was rewritten " +
+          s"after the delta was committed (tier file $file: stamp $bytes:$mtime, now $st)")
+      (Some(w), file) -> f.get
+    }
+    Checked(m, b, bDir, now, bFiles, (files.map(f => (None, f.getPath.getName) -> f) ++ others).toMap)
   }
+
+  private def missing(what: String, path: String, role: String, dir: String,
+                      cause: Exception): IllegalStateException =
+    new IllegalStateException(s"$what: delta version $path reads $role " +
+      s"$dir, which is missing (deleted after the delta was committed)", cause)
 
   private val VersionDir = "v=(-?\\d+)".r
 
-  /** The relation of tiered version `path` over base version `b` (see
-    * the object doc). Fails, naming the version and the other dir,
-    * when its base or a dir of its chain was rewritten since the
-    * commit, and, naming the version, when it is not tier files over a
-    * full base of the same columns. */
-  @annotation.nowarn("cat=deprecation")
-  def resolve(spark: SparkSession, path: String, what: String, b: Int): DataFrame = {
+  /** The relation of tiered version `path`, listed at `stamp` and
+    * checked as `c` (see the object doc): no dir is listed again. The base's relation comes through the read memo from the
+    * check's listing, each tier's footer through [[Tables.footer]], and
+    * the file index is built from the listings in hand. Fails, naming
+    * the version, when it is not tier files over a full base of the
+    * same columns. */
+  def resolve(spark: SparkSession, path: String, what: String, stamp: String, c: Checked): DataFrame = {
     val fs = Tables.fileSystem(spark, new Path(path))
     val dir = fs.makeQualified(new Path(path))
     val own = dir.getName match {
       case VersionDir(v) => v.toInt
       case _ => throw new IllegalStateException(s"$what: delta version $path is not a v=<n> snapshot dir")
     }
-    val (ownStamp, ownFiles) = Tables.listStamp(spark, what, path)
-    val m = meta(spark, what, path, ownFiles, b)
-    val bDir = sibling(path, b)
-    val now = baseStamp(spark, what, path, b)
-    if (now != m.baseStamp) throw new IllegalStateException(
-      s"$what: delta version $path reads base version $bDir, which was rewritten " +
-        s"after the delta was committed (base stamp ${m.baseStamp}, now $now)")
-    // every other dir of the chain, as it was at commit
-    val dirs = m.chain.flatMap(r => r.version.map(_ -> r.stamp)).distinct.map { case (w, was) =>
-      val wDir = sibling(path, w)
-      val (st, files) = listed(spark, what, path, wDir, "tier dir")
-      if (st != was) throw new IllegalStateException(
-        s"$what: delta version $path reads tier dir $wDir, which was rewritten " +
-          s"after the delta was committed (stamp $was, now $st)")
-      w -> (st, files)
-    }.toMap + (own -> (ownStamp, ownFiles))
-    val (_, bh, bIndex) = Region.of(Tables.read(spark, bDir, what))
-    if (bIndex.delta.nonEmpty) throw new IllegalStateException(
-      s"$what: delta version $path names $bDir as its base, which is itself a delta")
+    val m = c.meta
+    val (_, bh, bIndex) = Region.of(Tables.readListed(spark, c.baseDir, what, events = false,
+      (c.baseStamp, c.baseFiles)))
     val schema = bh.dataSchema.add(OpCol, IntegerType)
+    // each other chain dir's marker holds the keys of that dir's tiers
+    val metas = m.chain.flatMap(_.version).distinct.map { w =>
+      w -> meta(spark, what, sibling(path, w), stat(fs, new Path(sibling(path, w), s"$Marker${c.b}")), c.b)
+    }.toMap
     val tiers = m.chain.map { r =>
       val w = r.version.getOrElse(own)
-      val (st, files) = dirs(w)
       val wDir = sibling(path, w)
-      val f = files.find(_.getPath.getName == r.file).getOrElse(throw new IllegalStateException(
-        s"$what: delta version $path reads tier file ${r.file} in $wDir, which holds no such file"))
-      val (keys, puts) = (if (w == own) m else meta(spark, what, wDir, files, b)).own.getOrElse(r.file,
+      val f = c.files.getOrElse(r.version -> r.file,
+        throw new IllegalStateException(
+          s"$what: delta version $path reads tier file ${r.file} in $wDir, which holds no such file"))
+      val (keys, puts) = r.version.fold(m)(metas).own.getOrElse(r.file,
         throw new IllegalStateException(s"$what: the marker of $wDir lists no keys of its tier file ${r.file}"))
-      val (region, fileSchema) = cached(footers, f) {
-        val footer = try ParquetFileReader.readFooter(spark.sessionState.newHadoopConf(), f,
-          ParquetMetadataConverter.NO_FILTER) catch { case e: Exception => throw new IllegalStateException(
-            s"$what: unreadable parquet footer ${f.getPath}", e) }
-        val s = ParquetBridge.dataSchema(spark, f.getPath, footer)
-        (Region(f, footer, s), s)
-      }
+      val footer = Tables.footer(spark, what, f)
+      val fileSchema = ParquetBridge.dataSchema(spark, f.getPath, footer.schema, footer.stored)
       if (fileSchema != schema) throw new IllegalStateException(
         s"$what: delta version $path has tier columns ${fileSchema.simpleString} in ${f.getPath}, " +
-          s"base version $bDir ${bh.dataSchema.simpleString}")
-      (Tier(Some(w), f.getPath, r.id, st, f.getLen, keys, puts), region)
+          s"base version ${c.baseDir} ${bh.dataSchema.simpleString}")
+      (Tier(Some(w), f.getPath, r.id, f.getLen, f.getModificationTime, keys, puts), footer.region)
     }
-    val keys = TierKeys.of(tiers.map { case (t, _) => t.id -> t.keys }, s"$dir|$ownStamp|${m.baseStamp}")
+    val keys = TierKeys.of(tiers.map { case (t, _) => t.id -> t.keys }, s"$dir|$stamp|${m.baseStamp}")
     val tierRegions = tiers.map { case (t, region) =>
       val visible = t.keys.indices.collect {
         case i if t.puts(i) && keys.newestOf(t.keys(i)) == t.id => t.keys(i)
       }.toArray
       t.file -> region.copy(points = Some(Region.Points(m.keyCol, keys, Some(visible))))
     }.toMap
-    val listing = new InMemoryFileIndex(spark, bIndex.rootPaths ++ tiers.map(_._1.file), Map.empty, None)
+    val listing = ListingBridge.fileIndex(spark, bIndex.rootPaths.map(_ -> c.baseFiles) ++
+      tiers.map { case (t, region) => t.file -> Seq(region.file) })
     val regions = bIndex.regions.map { case (p, r) =>
       p -> r.copy(points = Some(Region.Points(m.keyCol, keys, None)))
     } ++ tierRegions
-    val info = DeltaInfo(dir, bDir, b, m.keyCol, keys, tiers.map(_._1))
+    val info = DeltaInfo(dir, c.baseDir, c.b, m.keyCol, keys, tiers.map(_._1))
     val relation = HadoopFsRelation(new RegionIndex(listing, regions, delta = Some(info)),
       listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)
     PlanBridge.ofRows(spark, visible(LogicalRelation(relation), info))
@@ -515,7 +511,8 @@ private[graft] object Deltas {
             val file = ParquetBridge.writeFile(spark, schema.add(OpCol, IntegerType),
               rows.iterator.map(r => Row.fromSeq(r.toSeq.init :+ (if (r.getBoolean(schema.length)) id else -id))),
               out.toString, Map(Layout.PageRowsOption -> Layout.PageRows.toString))
-            Tier(None, file, id, "", fs.getFileStatus(file).getLen,
+            val st = fs.getFileStatus(file)
+            Tier(None, file, id, st.getLen, st.getModificationTime,
               rows.map(_.get(at).asInstanceOf[Number].longValue).toArray,
               rows.map(_.getBoolean(schema.length)).toArray)
           }
@@ -536,7 +533,7 @@ private[graft] object Deltas {
           }
           val own = merged.filter(_.version.isEmpty)
           writeMeta(fs, out, b, Meta(keyCol, bStamp,
-            merged.map(t => Ref(t.version, t.file.getName, t.id, t.stamp)),
+            merged.map(t => Ref(t.version, t.file.getName, t.id, t.bytes, t.mtime)),
             own.map(t => t.file.getName -> (t.keys, t.puts)).toMap))
           fs.create(new Path(out, "_SUCCESS"), true).close()
           true

@@ -167,11 +167,14 @@ object Indexes {
   * tiers it reads, which every read merges by key, newest tier first.
   * Tiers live in the dirs of the versions that wrote them, so a newer
   * version reads older version dirs: never delete or rewrite a version
-  * dir that a newer version's chain names. Reading a tiered version
-  * whose base or chain dir was since rewritten or deleted fails,
-  * naming both dirs. Commits merge tiers by HBase's exploring ratio
-  * rule (a minor compaction, in the committing version's dir) and
-  * write in full past [[Deltas.maxKeys]] tier rows (a major one).
+  * dir that a newer version's chain names. Every read of a tiered
+  * version checks its base's listing and each tier file it reads in an
+  * older dir against its marker ([[Deltas.check]]), so reading one
+  * whose base or chain dir was since rewritten or deleted fails, naming
+  * both dirs; a read lists no chain dir. Commits merge tiers by
+  * HBase's exploring ratio rule (a minor compaction, in the committing
+  * version's dir) and write in full past [[Deltas.maxKeys]] tier rows
+  * (a major one).
   */
 object Snapshots {
   def path(base: String, version: Int): String = s"$base/v=$version"

@@ -3,7 +3,7 @@ package graft.core
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnPath, ParquetMetadata}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
@@ -143,32 +143,29 @@ private[graft] object Region {
   }
 
   /** The region of `file` from its `footer`, with spans for the
-    * integral columns of `schema` stored as signed INT32/INT64 (no
-    * unsigned annotation: their min/max would not order as Spark's
-    * signed values do). */
-  def apply(file: FileStatus, footer: ParquetMetadata, schema: StructType): Region = {
+    * top-level columns stored as signed INT32/INT64 (no unsigned
+    * annotation: their min/max would not order as Spark's signed
+    * values do). An integral Spark column gets a span exactly when it
+    * is stored so, and no other column's span is ever consulted. */
+  def apply(file: FileStatus, footer: ParquetMetadata): Region = {
     val blocks = footer.getBlocks.asScala.toSeq
-    val fileSchema = footer.getFileMetaData.getSchema
-    val spans = schema.fields.iterator
-      .filter(f => integral(f.dataType) && signedInt(fileSchema, f.name))
-      .flatMap(f => span(blocks, ColumnPath.get(f.name)).map(f.name -> _))
+    val spans = footer.getFileMetaData.getSchema.getFields.asScala.iterator
+      .filter(signedInt)
+      .flatMap(f => span(blocks, ColumnPath.get(f.getName)).map(f.getName -> _))
       .toMap
     Region(file, blocks.map(_.getRowCount).sum, spans)
   }
 
-  private def signedInt(s: MessageType, name: String): Boolean =
-    s.containsField(name) && {
-      val t = s.getType(s.getFieldIndex(name))
-      t.isPrimitive && {
-        val p = t.asPrimitiveType
-        (p.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
-          p.getPrimitiveTypeName == PrimitiveTypeName.INT64) &&
-          (p.getLogicalTypeAnnotation match {
-            case null => true
-            case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-            case _ => false
-          })
-      }
+  private def signedInt(t: Type): Boolean =
+    t.isPrimitive && {
+      val p = t.asPrimitiveType
+      (p.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
+        p.getPrimitiveTypeName == PrimitiveTypeName.INT64) &&
+        (p.getLogicalTypeAnnotation match {
+          case null => true
+          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+          case _ => false
+        })
     }
 
   /** The union of the row groups' [min, max] for `column`; None when a
@@ -191,8 +188,7 @@ private[graft] object Region {
   /** The memo'd relation under a [[Tables.read]] result and its index. */
   def of(df: DataFrame): (LogicalRelation, HadoopFsRelation, RegionIndex) =
     df.queryExecution.analyzed.collectFirst {
-      case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) if h.location.isInstanceOf[RegionIndex] =>
-        (lr, h, h.location.asInstanceOf[RegionIndex])
+      case lr @ LogicalRelation(h @ HadoopFsRelation(r: RegionIndex, _, _, _, _, _), _, _, _, _) => (lr, h, r)
     }.getOrElse(throw new IllegalArgumentException(
       "not a region-indexed read: resolve it through Tables.read / Layout.read"))
 

@@ -3,9 +3,12 @@ package graft.core
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ListingBridge, ParquetBridge, PlanBridge, SessionBridge}
+import org.apache.spark.sql.types.TimestampNTZType
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables, plus the
   * KV "cell view" that re-expresses HBase's data model
@@ -22,27 +25,13 @@ object Tables {
     * session-wide nanosAsLong flag was visible to concurrent unrelated
     * loads). Every file must agree: a dir holding two data generations
     * fails, naming the first file and the first one that disagrees. */
-  private def tsIsNanos(path: String, footers: Seq[(FileStatus, ParquetMetadata)]): Boolean = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    def nanos(m: ParquetMetadata): Boolean = {
-      val schema = m.getFileMetaData.getSchema
-      // getFieldIndex form sidesteps MessageType's varargs getType
-      // overload (ambiguous vs GroupType's single-String one in Scala)
-      schema.containsField("ts") &&
-        (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-          case _ => false
-        })
+  private def tsIsNanos(path: String, footers: Seq[Footer]): Boolean = {
+    footers.find(_.tsNanos != footers.head.tsNanos).foreach { f =>
+      throw new IllegalStateException(s"tsIsNanos: mixed ts encodings under $path — " +
+        s"${footers.head.region.file.getPath.getName} and ${f.region.file.getPath.getName} disagree " +
+        "on TIMESTAMP(NANOS); regenerate the dir as one generation")
     }
-    val probes = footers.map { case (f, m) => f.getPath -> nanos(m) }
-    probes.find(_._2 != probes.head._2).foreach { case (f, _) =>
-      throw new IllegalStateException(
-        s"tsIsNanos: mixed ts encodings under $path — " +
-          s"${probes.head._1.getName} and ${f.getName} disagree " +
-          "on TIMESTAMP(NANOS); regenerate the dir as one generation")
-    }
-    probes.head._2
+    footers.head.tsNanos
   }
 
   /** Session-scoped PLAN memo — the one reader of every parquet path
@@ -51,15 +40,18 @@ object Tables {
     * fresh `spark.read.parquet` relists the path and runs schema
     * inference (a one-task Spark job reading a footer) per call; HBase
     * opens a store file's reader once per region open, and this is the
-    * same once-per-version resolution ([[loadFresh]]: one listing and
-    * one driver-side footer read per file, no Spark job). Invariants:
+    * same once-per-version resolution ([[read]]: one listing, footers
+    * through the per-file memo [[footer]], no Spark job). Invariants:
     *  - plans, not results: the memo holds the resolved DataFrame, and
     *    every action against it still scans parquet;
-    *  - stamp-keyed: the key is (session, path, [[listStamp]]), and
-    *    every rewrite of a path (Snapshots.write over a version,
-    *    restore, exportSnapshot, an out-of-process writer) changes the
-    *    stamp, so the next read resolves afresh; a new stamp evicts the
-    *    path's older stamps in that session;
+    *  - stamp-keyed: the key is (session, path, [[listStamp]] of the
+    *    path), for full and tiered versions alike, and every rewrite of
+    *    a path (Snapshots.write over a version, restore,
+    *    exportSnapshot, an out-of-process writer) changes the stamp, so
+    *    the next read resolves afresh; a new stamp evicts the path's
+    *    older stamps in that session. What a tiered version reads in
+    *    other dirs is not in the key: [[Deltas.check]] verifies it on
+    *    every read, hit or miss;
     *  - the key also carries the `events` flag, so a raw read of an
     *    events.parquet path (un-normalized ts) never serves [[load]];
     *  - bounded: each commit is a new version path that same-path
@@ -81,16 +73,17 @@ object Tables {
     * nothing but the copies. */
   private[graft] def fileSystem(spark: SparkSession, p: Path): FileSystem = {
     val u = p.toUri
-    fileSystems(spark, s"${org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)}|" +
-      s"${u.getScheme}|${u.getAuthority}")(p.getFileSystem(spark.sessionState.newHadoopConf()))
+    fileSystems(spark, s"${SessionBridge.sessionUUID(spark)}|${u.getScheme}|${u.getAuthority}")(
+      p.getFileSystem(spark.sessionState.newHadoopConf()))
   }
 
   /** Generation stamp of a path: (count, newest mtime, total length,
     * hash of the sorted names) over every file below it, or of the
-    * file itself, and the files. Spark writes fresh random part-file
-    * names per job, so the names catch a same-size rewrite inside one
-    * mtime tick. A missing path fails naming `what` and the path (a raw
-    * Hadoop FileNotFoundException names neither). */
+    * file itself, and the files, in the order Spark's listing finds
+    * them (a dir's files before its subdirs'). Spark writes fresh random
+    * part-file names per job, so the names catch a same-size rewrite
+    * inside one mtime tick. A missing path fails naming `what` and the
+    * path (a raw Hadoop FileNotFoundException names neither). */
   private[graft] def listStamp(spark: SparkSession, what: String,
                                path: String): (String, Seq[FileStatus]) = {
     val p = new Path(path)
@@ -101,8 +94,10 @@ object Tables {
     }
     // listStatus, not listFiles: a LocatedFileStatus copies owner and
     // permissions, which the local FS reads by forking a shell per file
-    def below(st: FileStatus): Seq[FileStatus] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(below) else Seq(st)
+    def below(st: FileStatus): Seq[FileStatus] = if (!st.isDirectory) Seq(st) else {
+      val (dirs, files) = fs.listStatus(st.getPath).toSeq.partition(_.isDirectory)
+      files ++ dirs.flatMap(below)
+    }
     val files = below(root)
     (s"${files.length}:${files.map(_.getModificationTime).foldLeft(0L)(math.max)}:" +
       s"${files.map(_.getLen).sum}:" +
@@ -110,25 +105,32 @@ object Tables {
   }
 
   /** The memoized plan of the parquet at `path` (see [[readMemo]]);
-    * `events` applies the events table's ts normalization. A tiered
-    * snapshot version ([[Deltas]]) is stamped with its base's stamp and
-    * the length and mtime of each tier file it reads in another version
-    * dir too ([[Deltas.stamp]]), so a rewrite of any of those dirs is
-    * seen by the next read. A miss loads outside the map: a tiered
-    * version's load reads its base through this memo. */
+    * `events` applies the events table's ts normalization. */
   private[graft] def read(spark: SparkSession, path: String, what: String,
-                          events: Boolean = false): DataFrame = {
+                          events: Boolean = false): DataFrame =
+    readListed(spark, path, what, events, listStamp(spark, what, path))
+
+  /** [[read]] from `listing`, the [[listStamp]] of `path` already in
+    * hand: the one place a version is resolved. A tiered version
+    * ([[Deltas]]) is checked first, on every read ([[Deltas.check]]: its
+    * base and the tier files it reads in other dirs against its
+    * marker). A miss builds the plan from the listing, with no second
+    * listing: a full version through [[loadFresh]], a tiered one
+    * through [[Deltas.resolve]], which reads its base through here from
+    * the check's listing. So a miss loads outside the map. */
+  private[graft] def readListed(spark: SparkSession, path: String, what: String, events: Boolean,
+                                listing: (String, Seq[FileStatus])): DataFrame = {
+    val (stamp, files) = listing
+    val tiered = Deltas.baseOf(files).map(Deltas.check(spark, what, path, files, _))
     readMemo.entrySet().removeIf(_.getValue.sparkSession.sparkContext.isStopped)
-    val (own, files) = listStamp(spark, what, path)
-    val delta = Deltas.baseOf(files)
-    val key = LoadKey(org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark), path,
-      delta.fold(own)(b => s"$own|${Deltas.stamp(spark, what, path, files, b)}"), events)
+    val key = LoadKey(SessionBridge.sessionUUID(spark), path, stamp, events)
     val hit = readMemo.get(key)
     if (hit != null) hit else {
       readMemo.keySet().removeIf(k =>
         k.session == key.session && k.path == path && k.stamp != key.stamp)
       if (readMemo.size >= memoCap) readMemo.clear()
-      val fresh = delta.fold(loadFresh(spark, path, what, events))(Deltas.resolve(spark, path, what, _))
+      val fresh = tiered.fold(loadFresh(spark, path, what, events, files))(
+        Deltas.resolve(spark, path, what, stamp, _))
       val won = readMemo.putIfAbsent(key, fresh)
       if (won == null) fresh else won
     }
@@ -138,9 +140,57 @@ object Tables {
     read(spark, s"$sfDir/$name.parquet", s"Tables.load: table '$name'",
       events = name == "events")
 
-  /** Resolve the parquet at `path` with no Spark job: list it as
-    * `spark.read.parquet` would, read every data file's footer once on
-    * the driver, and build the relation over a [[RegionIndex]] of the
+  /** What a read keeps of one parquet file's footer: its [[Region]]
+    * and its parquet schema with the Spark schema its writer stored,
+    * not the row groups' column metadata. The Spark schema of the file
+    * (`ParquetBridge.dataSchema`) is derived per read, never kept: a
+    * TIMESTAMP(NANOS) file converts only once [[loadFresh]] has set
+    * `nanosAsLong`. */
+  private[graft] final case class Footer(region: Region, schema: MessageType, stored: Option[String]) {
+    /** Whether its `ts` column is TIMESTAMP(NANOS). The getFieldIndex
+      * form sidesteps MessageType's varargs getType overload (ambiguous
+      * vs GroupType's single-String one in Scala). */
+    def tsNanos: Boolean = schema.containsField("ts") &&
+      (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      })
+  }
+
+  /** Per-file memo of what graft derives from one file's bytes: a
+    * parquet [[Footer]], or a tiered version's marker ([[Deltas]]).
+    * Keyed by path, length and mtime, so a file rewritten in place gets
+    * a new key; a path holds one kind of file, so a key's value is
+    * always what that kind's reader built. Past [[fileMemoCap]]
+    * entries it resets. */
+  private val fileMemo = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), AnyRef]()
+  private val fileMemoCap = 4096
+
+  private[graft] def perFile[V <: AnyRef](f: FileStatus)(build: => V): V = {
+    val key = (f.getPath.toString, f.getLen, f.getModificationTime)
+    Option(fileMemo.get(key)).getOrElse {
+      val v = build
+      if (fileMemo.size >= fileMemoCap) fileMemo.clear()
+      fileMemo.put(key, v)
+      v
+    }.asInstanceOf[V]
+  }
+
+  /** The footer of parquet file `f`, read once per (path, length,
+    * mtime) on the driver. `readFooter(conf, status, …)`, not
+    * `ParquetFileReader.open(HadoopInputFile…)`: 64 warmed footers on a
+    * 4-core host took 40-80 ms this way and 0.9-1.0 s that way. */
+  @annotation.nowarn("cat=deprecation")
+  private[graft] def footer(spark: SparkSession, what: String, f: FileStatus): Footer = perFile(f) {
+    val m = try ParquetFileReader.readFooter(fileSystem(spark, f.getPath).getConf, f,
+      ParquetMetadataConverter.NO_FILTER) catch { case e: Exception => throw new IllegalStateException(
+        s"$what: unreadable parquet footer ${f.getPath}", e) }
+    Footer(Region(f, m), m.getFileMetaData.getSchema, ParquetBridge.storedSchema(m))
+  }
+
+  /** Resolve the parquet at `path`, listed as `files`, with no Spark
+    * job and no second listing: read every data file's footer through
+    * [[footer]], and build the relation over a [[RegionIndex]] of the
     * footers' key ranges, so a scan whose pushed filters miss a file's
     * range never opens it. The schema is the one Spark's non-merging
     * inference derives, from the first data file by path.
@@ -154,44 +204,31 @@ object Tables {
     * way normalize to TimestampType (LTZ): watermarks reject
     * TIMESTAMP_NTZ, and the UTC session timezone makes the NTZ→LTZ
     * cast wall-clock exact. */
-  @annotation.nowarn("cat=deprecation")
   private def loadFresh(spark: SparkSession, path: String, what: String,
-                        events: Boolean): DataFrame = {
-    import org.apache.spark.sql.execution.datasources._
+                        events: Boolean, files: Seq[FileStatus]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
-    val listing = new InMemoryFileIndex(spark,
-      Seq(root.getFileSystem(conf).makeQualified(root)), Map.empty, None)
-    // readFooter(conf, status, …), not ParquetFileReader.open(
-    // HadoopInputFile…): 64 warmed footers on a 4-core host took 40-80
-    // ms this way and 0.9-1.0 s that way
-    val footers = listing.allFiles().filter(_.getLen > 0).sortBy(_.getPath.toString).map { f =>
-      f -> (try ParquetFileReader.readFooter(conf, f, ParquetMetadataConverter.NO_FILTER)
-      catch { case e: Exception => throw new IllegalStateException(
-        s"$what: unreadable parquet footer ${f.getPath}", e) })
-    }
+    val listing = ListingBridge.fileIndex(spark, Seq(fileSystem(spark, root).makeQualified(root) -> files))
+    val footers = listing.allFiles().filter(_.getLen > 0).sortBy(_.getPath.toString)
+      .map(f => f.getPath -> footer(spark, what, f))
     if (footers.isEmpty) throw new IllegalArgumentException(
       s"$what: no parquet data files under $path")
-    val nanos = events && tsIsNanos(path, footers)
+    val nanos = events && tsIsNanos(path, footers.map(_._2))
     // NANOS generation: the flag must be set AND stay set — the scan
     // consults it again at execution, and the schema conversion below
     // reads it. Other NANOS parquet in the session reads as long too;
     // a constant "true" never races.
     if (nanos) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = org.apache.spark.sql.graftbridge.ParquetBridge
-      .dataSchema(spark, footers.head._1.getPath, footers.head._2)
+    val schema = ParquetBridge.dataSchema(spark, footers.head._1, footers.head._2.schema, footers.head._2.stored)
     if (schema.fieldNames.contains(Deltas.OpCol)) throw new IllegalStateException(
       s"$what: $path holds a delta file but no ${Deltas.Marker}<base> marker, " +
         "so its delta commit did not finish; rewrite the version")
-    val regions = footers.map { case (f, m) => f.getPath -> Region(f, m, schema) }.toMap
-    val relation = HadoopFsRelation(new RegionIndex(listing, regions),
+    val relation = HadoopFsRelation(
+      new RegionIndex(listing, footers.map { case (p, f) => p -> f.region }.toMap),
       listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)
-    val df = org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark, LogicalRelation(relation))
+    val df = PlanBridge.ofRows(spark, LogicalRelation(relation))
     if (nanos) df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else if (events &&
-      df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
-      df.withColumn("ts", col("ts").cast("timestamp"))
+    else if (events && df.schema("ts").dataType == TimestampNTZType) df.withColumn("ts", col("ts").cast("timestamp"))
     else df
   }
 

@@ -6,20 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native codegen'd dot product over array<float> / array<double>.
-  *
-  * Semantics: sequential left fold in double precision,
-  * acc += (double)a[i] * (double)b[i] — exactly the fold DuckDB's
-  * `list_dot_product(CAST(x AS DOUBLE[]), ...)` evaluates, so oracle
-  * comparisons are bit-identical.
-  *
-  * Exists because the composable form
-  * `aggregate(zip_with(a, b, ...), 0D, ...)` allocates an intermediate
-  * array per pair and boxes through the higher-order-function
-  * machinery — at candidate-pair volume (every ANN/near-dup join) that
-  * overhead dominates the actual math by ~50×. This is the "custom
-  * Expression for the hot path" escape hatch: one tight loop inside
-  * whole-stage codegen, no allocation.
+/** A native codegen'd fold over two array<float> / array<double>: a
+  * sequential left fold in double precision, acc += term(a[i], b[i])
+  * with each element widened to double, in index order — one tight
+  * loop inside whole-stage codegen, no allocation. Each subclass
+  * supplies only its term, once for the interpreted path ([[term]])
+  * and once as Java ([[termCode]]).
   *
   * Malformed-input semantics (identical in interpreted and codegen
   * paths — the registered corpora never produce either case, so
@@ -32,10 +24,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *    reads); the interpreted path guards explicitly so both paths
   *    agree instead of NPE-ing on the generic-array fallback.
   */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
+abstract class VecFold extends BinaryExpression {
+
+  /** The fold's term for one pair of elements. */
+  protected def term(l: Double, r: Double): Double
+
+  /** Java statements adding the term of doubles `l` and `r` to `acc`. */
+  protected def termCode(ctx: CodegenContext, acc: String, l: String, r: String): String
 
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "vec_dot"
   override def nullable: Boolean = true // mismatched lengths yield NULL
 
   private def isFloat(e: Expression): Boolean =
@@ -51,7 +48,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"vec_dot needs array<float|double>, got ${left.dataType}, ${right.dataType}")
+        s"$prettyName needs array<float|double>, got ${left.dataType}, ${right.dataType}")
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -65,7 +62,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     val lf = isFloat(left); val rf = isFloat(right)
     var acc = 0.0
     var i = 0
-    while (i < n) { acc += get(x, lf, i) * get(y, rf, i); i += 1 }
+    while (i < n) { acc += term(get(x, lf, i), get(y, rf, i)); i += 1 }
     acc
   }
 
@@ -85,14 +82,32 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
          |  for (int $i = 0; $i < $n; $i++) {
          |    double l$i = $a.isNullAt($i) ? 0.0 : (double)$a.$lGet($i);
          |    double r$i = $b.isNullAt($i) ? 0.0 : (double)$b.$rGet($i);
-         |    $acc += l$i * r$i;
+         |    ${termCode(ctx, acc, s"l$i", s"r$i")}
          |  }
          |  ${ev.value} = $acc;
          |}
        """.stripMargin
     })
   }
+}
 
+/** Native codegen'd dot product over array<float> / array<double>: the
+  * [[VecFold]] of acc += (double)a[i] * (double)b[i] — exactly the fold
+  * DuckDB's `list_dot_product(CAST(x AS DOUBLE[]), ...)` evaluates, so
+  * oracle comparisons are bit-identical.
+  *
+  * Exists because the composable form
+  * `aggregate(zip_with(a, b, ...), 0D, ...)` allocates an intermediate
+  * array per pair and boxes through the higher-order-function
+  * machinery — at candidate-pair volume (every ANN/near-dup join) that
+  * overhead dominates the actual math by ~50×. This is the "custom
+  * Expression for the hot path" escape hatch.
+  */
+case class VecDot(left: Expression, right: Expression) extends VecFold {
+  override def prettyName: String = "vec_dot"
+  override protected def term(l: Double, r: Double): Double = l * r
+  override protected def termCode(ctx: CodegenContext, acc: String, l: String, r: String): String =
+    s"$acc += $l * $r;"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)

@@ -1,18 +1,14 @@
 package graft.sim
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 
 /** Native codegen'd squared L2 distance over array<float|double> —
   * [[VecDot]]'s sibling for the distance hot paths (PQ code
   * assignment encodes the FULL corpus m times per search).
   *
-  * Semantics: sequential left fold in double precision,
-  * acc += ((double)a[i] − (double)b[i])², term by term in index
-  * order — EXACTLY the
+  * The [[VecFold]] of acc += ((double)a[i] − (double)b[i])², term by
+  * term in index order — EXACTLY the
   * `aggregate(zip_with(a, b, (x, y) -> (x−y)·(x−y)), 0D, +)` fold it
   * replaces and the DuckDB list-comprehension mirror evaluates, so
   * every oracle comparison stays bit-identical (the expanded form
@@ -22,77 +18,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Exists for the same reason as VecDot: the composable HOF form
   * allocates an intermediate array and boxes per pair — at
-  * corpus×codebook volume that overhead dominates the math. Same
-  * malformed-input conventions as VecDot (length mismatch → NULL,
-  * null element → 0 contribution; registered corpora produce
-  * neither). */
-case class VecL2Sq(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
+  * corpus×codebook volume that overhead dominates the math. */
+case class VecL2Sq(left: Expression, right: Expression) extends VecFold {
   override def prettyName: String = "vec_l2sq"
-  override def nullable: Boolean = true // mismatched lengths yield NULL
-
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression) = e.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"vec_l2sq needs array<float|double>, got ${left.dataType}, ${right.dataType}")
+  override protected def term(l: Double, r: Double): Double = {
+    val diff = l - r
+    diff * diff
   }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    def get(d: ArrayData, fl: Boolean, j: Int): Double =
-      if (d.isNullAt(j)) 0.0
-      else if (fl) d.getFloat(j).toDouble else d.getDouble(j)
-    val lf = isFloat(left); val rf = isFloat(right)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val diff = get(x, lf, i) - get(y, rf, i)
-      acc += diff * diff
-      i += 1
-    }
-    acc
+  override protected def termCode(ctx: CodegenContext, acc: String, l: String, r: String): String = {
+    val diff = ctx.freshName("diff")
+    s"""double $diff = $l - $r;
+       |    $acc += $diff * $diff;""".stripMargin
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val diff = ctx.freshName("diff")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double l$i = $a.isNullAt($i) ? 0.0 : (double)$a.$lGet($i);
-         |    double r$i = $b.isNullAt($i) ? 0.0 : (double)$b.$rGet($i);
-         |    double $diff = l$i - r$i;
-         |    $acc += $diff * $diff;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecL2Sq =
     copy(left = newLeft, right = newRight)

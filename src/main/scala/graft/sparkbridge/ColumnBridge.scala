@@ -205,6 +205,7 @@ object FetchBridge {
   * file writer for a delta commit (graft.core.Deltas), whose rows are
   * already on the driver. */
 object ParquetBridge {
+  import scala.jdk.CollectionConverters._
   import org.apache.hadoop.fs.Path
   import org.apache.parquet.hadoop.Footer
   import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -212,15 +213,25 @@ object ParquetBridge {
   import org.apache.spark.sql.types.StructType
 
   /** The data schema a non-merging `spark.read.parquet` infers from
-    * this footer: the Spark schema the writer stored in the footer, or
-    * else the session-configured footer conversion — then widened to
+    * a footer kept as its parquet `schema` and the Spark schema its
+    * writer `stored`, if any: the stored one, or else the
+    * session-configured conversion of `schema` — then widened to
     * nullable, as DataSource does for every file source. */
   def dataSchema(spark: org.apache.spark.sql.SparkSession, file: Path,
-                 footer: ParquetMetadata): StructType =
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+                 schema: org.apache.parquet.schema.MessageType, stored: Option[String]): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, new ParquetMetadata(
+      new org.apache.parquet.hadoop.metadata.FileMetaData(schema, stored.map(StoredSchemaKey -> _).toMap.asJava, null),
+      java.util.Collections.emptyList())),
       new ParquetToSparkSchemaConverter(
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
       .asNullable
+
+  /** The footer key under which Spark's writer stores the row schema. */
+  def storedSchema(footer: ParquetMetadata): Option[String] =
+    Option(footer.getFileMetaData.getKeyValueMetaData.get(StoredSchemaKey))
+
+  private val StoredSchemaKey =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport.SPARK_METADATA_KEY
 
   /** Write `rows` of `schema`, in order, as one parquet file under the
     * existing dir `dir`, on the driver: the writer a Spark write task
@@ -243,5 +254,32 @@ object ParquetBridge {
     try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
     finally writer.close()
     file
+  }
+}
+
+/** File indexes for graft.core.Tables.read, built from a listing it
+  * already holds instead of listing again. */
+object ListingBridge {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
+
+  /** An `InMemoryFileIndex` over `roots`, each with the files listed
+    * below it, that lists nothing itself: it holds the files Spark's
+    * own listing would keep (Spark's hidden-file rule: no name on the
+    * way down starts with `_`, a partition dir `_k=v` and `_metadata`
+    * files aside, or `.`, and no `._COPYING_` file), so partition
+    * discovery runs as usual, and it lists afresh only after a
+    * refresh. */
+  def fileIndex(spark: org.apache.spark.sql.SparkSession,
+                roots: Seq[(Path, Seq[FileStatus])]): InMemoryFileIndex = {
+    val leaves = roots.map { case (root, files) => root -> files.filterNot(f =>
+      org.apache.spark.util.HadoopFSUtils.shouldFilterOutPath(f.getPath.toString.stripPrefix(root.toString)))
+      .toArray }.toMap
+    new InMemoryFileIndex(spark, roots.map(_._1), Map.empty, None, new FileStatusCache {
+      @volatile private var held = leaves
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = held.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = held = Map.empty
+    })
   }
 }

@@ -302,4 +302,40 @@ class CoreToolsSpec extends SparkSpec {
       rm(dir)
     }
   }
+
+  /** Each scala file under src/main/scala, by its path below that dir,
+    * with the number of matches of `re` in it. */
+  private def matchesPerFile(re: scala.util.matching.Regex): Seq[(String, Int)] = {
+    import java.io.File
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    def scala(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    scala(root).map { f =>
+      root.toPath.relativize(f.toPath).toString -> re.findAllIn(java.nio.file.Files.readString(f.toPath)).size
+    }
+  }
+
+  test("parquet footers are read only in Tables.scala, through its per-file memo") {
+    val outside = matchesPerFile("""readFooter\(""".r).filter { case (f, n) => n > 0 && f != "graft/core/Tables.scala" }
+    assert(outside.isEmpty, "readFooter( outside graft/core/Tables.scala — read footers " +
+      "through Tables.footer instead: " + outside.map { case (f, n) => s"$f ($n)" }.mkString(", "))
+  }
+
+  test("Deltas takes its Hadoop conf from Tables.fileSystem, never a per-call copy") {
+    val copies = matchesPerFile("""newHadoopConf\(\)""".r).toMap.getOrElse("graft/core/Deltas.scala", -1)
+    assert(copies == 0, s"graft/core/Deltas.scala calls newHadoopConf() $copies times")
+  }
+
+  test("no concurrent map outside Once, the read and file memos, and StreamOps' key set") {
+    val allowed = Map("graft/core/Once.scala" -> 1, "graft/core/Tables.scala" -> 2,
+      "graft/streaming/StreamOps.scala" -> 1)
+    val extra = matchesPerFile(
+      """new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b|ConcurrentHashMap\.newKeySet""".r)
+      .filter { case (f, n) => n > allowed.getOrElse(f, 0) }
+    assert(extra.isEmpty, "a ConcurrentHashMap outside the allowed memos — build once through " +
+      "graft.core.Once, or memo a file's bytes through Tables.perFile: " +
+      extra.map { case (f, n) => s"$f ($n)" }.mkString(", "))
+  }
 }

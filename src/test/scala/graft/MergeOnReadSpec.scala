@@ -333,4 +333,85 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(e.getMessage.contains(if (how == "rewritten") "rewritten" else "missing"), e.getMessage)
     }
   }
+
+  test("a tiered version's first read lists its own dir and its base once each and no chain dir; a memo hit makes the check's calls only") {
+    import spark.implicits._
+    val base = CountingFs.dir(spark, "graft_mor_count")
+    Layout.writeSorted((0L until 32000L by 2).map(k => (k, s"b$k")).toDF("k", "s"), "k",
+      Snapshots.path(base, 1), buckets = 8)
+    def put(v: Int, rows: Seq[(Long, String)]): Unit =
+      Snapshots.write(Mutations.put(Snapshots.read(spark, base, v - 1), rows.toDF("k", "s"), "k"), "k", base, v)
+    put(2, (0L until 400L).map(i => (10000L + 2 * i) ->
+      (java.util.UUID.nameUUIDFromBytes(Array(i.toByte, (i >> 8).toByte)).toString * 2)))
+    put(3, (0L until 60L).map(i => (20000L + 2 * i) -> s"t$i"))
+    put(4, Seq(31001L -> "a", 31003L -> "c"))
+    val tiers = graft.core.Region.of(Snapshots.read(spark, base, 4))._3.delta.get.tiers
+    assert(tiers.map(_.version) == Seq(Some(2), Some(3), Some(4)), tiers)
+    def dir(v: Int) = new org.apache.hadoop.fs.Path(Snapshots.path(base, v)).toUri.getPath
+    val chainFiles = tiers.filter(_.version != Some(4)).map(_.file.toUri.getPath)
+    // drop v4 and its base from the read memo: the first read resolves both
+    Tables.readMemo.keySet().removeIf(k => k.path == Snapshots.path(base, 4) || k.path == Snapshots.path(base, 1))
+    var first: DataFrame = null
+    val (jobs, calls) = CountingFs.during(jobsIn { first = Snapshots.read(spark, base, 4) })
+    def count(cs: Seq[(String, String)], op: String, path: String) = cs.count(_ == (op -> path))
+    assert(jobs == 0, "the first read started a Spark job")
+    assert(count(calls, "list", dir(4)) <= 1 && count(calls, "list", dir(1)) <= 1, calls)
+    for (v <- Seq(2, 3)) assert(count(calls, "list", dir(v)) <= 1, calls)
+    for (f <- chainFiles) assert(count(calls, "stat", f) <= 1, calls)
+    // a hit makes only the check's calls: the own listing, the base
+    // listing and one stat per chain file in another dir
+    var hit: DataFrame = null
+    val (hitJobs, hitCalls) = CountingFs.during(jobsIn { hit = Snapshots.read(spark, base, 4) })
+    assert(hitJobs == 0, "the memo-hit read started a Spark job")
+    assert(hit eq first, "the second read was not a memo hit")
+    assert(hitCalls.size <= 4 + chainFiles.size, hitCalls)
+    assert(hitCalls.forall(_._1 != "open"), hitCalls)
+    assert(hit.count() == 16002L)
+  }
+
+  test("a chain tier file rewritten in place fails the next read naming both dirs, memo hit or miss") {
+    val (base, model) = threeTiers("inplace")
+    val v4 = Snapshots.read(spark, base, 4)
+    assert(v4.count() == model.size.toLong)
+    val tiers = graft.core.Region.of(v4)._3.delta.get.tiers
+    val mid = new java.io.File(tiers.find(_.version == Some(3)).get.file.toUri.getPath)
+    val other = new java.io.File(tiers.find(_.version == Some(2)).get.file.toUri.getPath)
+    java.nio.file.Files.write(mid.toPath, java.nio.file.Files.readAllBytes(other.toPath))
+    new java.io.File(mid.getParentFile, s".${mid.getName}.crc").delete()
+    for (drop <- Seq(false, true)) {
+      if (drop) Tables.readMemo.keySet().removeIf(_.path == Snapshots.path(base, 4))
+      val e = intercept[IllegalStateException](Snapshots.read(spark, base, 4).collect())
+      for (name <- Seq(Snapshots.path(base, 4), Snapshots.path(base, 3), "rewritten"))
+        assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
+
+  test("a marker whose key count runs past its end fails as corrupt, naming the table, the version dir and the marker") {
+    import spark.implicits._
+    val base = TempDirs.create("graft_mor_count_field").toString
+    Snapshots.write((1L to 64L).map(k => (k, k)).toDF("k", "v"), "k", base, 1)
+    Snapshots.write(Mutations.deleteRows(Snapshots.read(spark, base, 1), Seq(3L).toDF("k"), "k"), "k", base, 2)
+    val dir = new java.io.File(Snapshots.path(base, 2))
+    val marker = new java.io.File(dir, s"${Deltas.Marker}1")
+    val bytes = java.nio.file.Files.readAllBytes(marker.toPath)
+    // the leading fields, as the reader takes them, up to the first own file's key count
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    in.readUTF()
+    in.readUTF()
+    (0 until in.readInt()).foreach { _ =>
+      if (in.readBoolean()) in.readInt()
+      in.readUTF()
+      in.readInt()
+      in.readLong()
+      in.readLong()
+    }
+    assert(in.readInt() >= 1, "the marker lists no own tier file")
+    in.readUTF()
+    java.nio.ByteBuffer.wrap(bytes).putInt(bytes.length - in.available(), Int.MaxValue)
+    java.nio.file.Files.write(marker.toPath, bytes)
+    new java.io.File(dir, s".${marker.getName}.crc").delete()
+    val e = intercept[IllegalStateException](Snapshots.read(spark, base, 2).collect())
+    for (name <- Seq(base, Snapshots.path(base, 2), marker.getName))
+      assert(e.getMessage.contains(name), e.getMessage)
+  }
 }
