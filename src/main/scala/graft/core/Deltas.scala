@@ -164,9 +164,9 @@ private[graft] final case class Tier(version: Option[Int], file: Path, id: Int, 
                                      mtime: Long, keys: Array[Long], puts: Array[Boolean])
 
 /** What a tiered version's relation carries beyond its files: its dir,
-  * its base version's dir and version, the key column, the tier keys,
-  * and its chain of tiers, oldest first. */
-private[graft] final case class DeltaInfo(dir: Path, baseDir: String, baseVersion: Int,
+  * its base version and the base stamp its check saw, the key column,
+  * the tier keys, and its chain of tiers, oldest first. */
+private[graft] final case class DeltaInfo(dir: Path, baseVersion: Int, baseStamp: String,
                                           keyCol: String, keys: TierKeys, tiers: Seq[Tier])
 
 /** Merge-on-read snapshot versions, after HBase's memstore flush plus
@@ -207,7 +207,14 @@ private[graft] final case class DeltaInfo(dir: Path, baseDir: String, baseVersio
   * to `=`/`In` only the keys no tier holds, and a tier file's region
   * only the keys whose newest visible put it holds, so a Get opens one
   * file as on a full version; a key range admits a tier file only when
-  * one of those keys lies in it. */
+  * one of those keys lies in it.
+  *
+  * A commit lists no dir and resolves no version: it builds on the read
+  * its mutation was given, found by its [[Tables.readMemo]] entry, and
+  * its marker records what that read saw: u's stamp for a full u, else
+  * u's base stamp and chain files as u's check found them. So a parent
+  * rewritten between its read and the commit fails the new version's
+  * first read, naming both dirs, and is never merged silently. */
 private[graft] object Deltas {
   val OpCol = "_graft_op"
   val Marker = "_graft_delta_of_v"
@@ -396,6 +403,12 @@ private[graft] object Deltas {
 
   private val VersionDir = "v=(-?\\d+)".r
 
+  /** n, when `dir` is named v=<n>, as a snapshot version dir is. */
+  private def versionOf(dir: Path): Option[Int] = dir.getName match {
+    case VersionDir(v) => Some(v.toInt)
+    case _ => None
+  }
+
   /** The relation of tiered version `path`, listed at `stamp` and
     * checked as `c` (see the object doc): no dir is listed again. The base's relation comes through the read memo from the
     * check's listing, each tier's footer through [[Tables.footer]], and
@@ -405,10 +418,8 @@ private[graft] object Deltas {
   def resolve(spark: SparkSession, path: String, what: String, stamp: String, c: Checked): DataFrame = {
     val fs = Tables.fileSystem(spark, new Path(path))
     val dir = fs.makeQualified(new Path(path))
-    val own = dir.getName match {
-      case VersionDir(v) => v.toInt
-      case _ => throw new IllegalStateException(s"$what: delta version $path is not a v=<n> snapshot dir")
-    }
+    val own = versionOf(dir).getOrElse(
+      throw new IllegalStateException(s"$what: delta version $path is not a v=<n> snapshot dir"))
     val m = c.meta
     val (_, bh, bIndex) = Region.of(Tables.readListed(spark, c.baseDir, what, events = false,
       (c.baseStamp, c.baseFiles)))
@@ -444,7 +455,7 @@ private[graft] object Deltas {
     val regions = bIndex.regions.map { case (p, r) =>
       p -> r.copy(points = Some(Region.Points(m.keyCol, keys, None)))
     } ++ tierRegions
-    val info = DeltaInfo(dir, c.baseDir, c.b, m.keyCol, keys, tiers.map(_._1))
+    val info = DeltaInfo(dir, c.b, c.baseStamp, m.keyCol, keys, tiers.map(_._1))
     val relation = HadoopFsRelation(new RegionIndex(listing, regions, delta = Some(info)),
       listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)
     PlanBridge.ofRows(spark, visible(LogicalRelation(relation), info))
@@ -462,11 +473,14 @@ private[graft] object Deltas {
 
   /** Commit `df` as version `version` of snapshot `base` as a tiered
     * version, if it is a chain of [[MergeDelta]]s on `keyCol` over the
-    * memo'd read of an earlier version of `base` (full or tiered), with
-    * an integral key and the same column types throughout. Only the
-    * steps' keys and rows are evaluated: each part that is client rows
-    * ([[ClientRows]]) by a Dataset collect of its own, which starts no
-    * job (a `LocalTableScan`), the parts of table-derived batches by
+    * memo'd read of an earlier version u of `base` (full or tiered), with
+    * an integral key and the same column types throughout. u's dir,
+    * stamp, base and chain come from that read's memo key and relation,
+    * with no file-system call, and the marker records them as the read
+    * saw them (see the object doc). Only the steps' keys and rows are
+    * evaluated: each part that is client rows ([[ClientRows]]) by a
+    * Dataset collect of its own, which starts no job (a
+    * `LocalTableScan`), the parts of table-derived batches by
     * one union collect, one job. The driver folds them, in step order,
     * into the new tier and writes it, with no further job, as one
     * sorted file inside `Snapshots.path(base, version)`: no older
@@ -486,8 +500,18 @@ private[graft] object Deltas {
       case other => (other, steps)
     }
     val (bottom, steps) = unwind(df.queryExecution.analyzed, Nil)
-    val parent = if (steps.isEmpty) None else parentRead(spark, bottom, base, version)
-    parent.exists { case (p, u) =>
+    // the parent is the read `bottom` is: its read-memo key says where
+    // and at what stamp it was read, with no file-system call
+    val session = SessionBridge.sessionUUID(spark)
+    val parent = if (steps.isEmpty) None else Tables.readMemo.asScala.collectFirst {
+      case (k, p) if k.session == session && !k.events && (p.queryExecution.analyzed eq bottom) => (k, p)
+    }.flatMap { case (k, p) =>
+      val dir = new Path(k.path)
+      def qualified(q: Path) = Tables.fileSystem(spark, q).makeQualified(q)
+      versionOf(dir).filter(u => u < version && qualified(dir) == qualified(new Path(Snapshots.path(base, u))))
+        .map(u => (p, u, k.stamp))
+    }
+    parent.exists { case (p, u, stamp) =>
       val schema = p.schema
       val kt = schema.find(_.name == keyCol).map(_.dataType)
       def sameTypes(plan: LogicalPlan, names: Seq[String]): Boolean = names.forall(n =>
@@ -500,8 +524,9 @@ private[graft] object Deltas {
       kt.exists(Region.integral) && room >= 0 && steps.forall(m =>
         m.keys.forall(sameTypes(_, Seq(keyCol))) && m.rows.forall(sameTypes(_, schema.fieldNames.toSeq))) &&
         fold(spark, steps, keyCol, schema, room).exists { batch =>
-          val (b, bDir) = index.delta.fold((u, Snapshots.path(base, u)))(d => (d.baseVersion, d.baseDir))
-          val bStamp = Tables.listStamp(spark, "Snapshots.write", bDir)._1
+          // what the tier is computed against: a full parent at its
+          // read's stamp, a tiered one's base at the stamp its check saw
+          val (b, bStamp) = index.delta.fold((u, stamp))(d => (d.baseVersion, d.baseStamp))
           val out = new Path(Snapshots.path(base, version))
           val fs = Tables.fileSystem(spark, out)
           if (fs.exists(out)) fs.delete(out, true)
@@ -551,25 +576,6 @@ private[graft] object Deltas {
     val op = raw.schema.fieldIndex(OpCol)
     raw.collect().toSeq.groupBy(r => math.abs(r.getInt(op)))
       .map { case (id, rows) => id -> rows.map(r => Row.fromSeq(r.toSeq.updated(op, r.getInt(op) > 0))) }
-  }
-
-  /** The memo'd read of version u < `version` of `base` that `bottom`
-    * is, and u. */
-  private def parentRead(spark: SparkSession, bottom: LogicalPlan, base: String,
-                         version: Int): Option[(DataFrame, Int)] = {
-    bottom.collectFirst {
-      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
-    }.collect { case r: RegionIndex => r.delta.fold(r.rootPaths.head)(_.dir) }.flatMap { dir =>
-      dir.getName match {
-        case VersionDir(u) if u.toInt < version =>
-          val p = new Path(Snapshots.path(base, u.toInt))
-          val qualified = Tables.fileSystem(spark, p).makeQualified(p)
-          if (qualified != dir) None
-          else Some(Snapshots.read(spark, base, u.toInt) -> u.toInt)
-            .filter(_._1.queryExecution.analyzed eq bottom)
-        case _ => None
-      }
-    }
   }
 
   /** The new tier of `steps`: its rows in key order, each the columns

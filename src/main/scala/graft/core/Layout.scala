@@ -171,8 +171,10 @@ object Indexes {
   * version checks its base's listing and each tier file it reads in an
   * older dir against its marker ([[Deltas.check]]), so reading one
   * whose base or chain dir was since rewritten or deleted fails, naming
-  * both dirs; a read lists no chain dir. Commits merge tiers by
-  * HBase's exploring ratio rule (a minor compaction, in the committing
+  * both dirs; a read lists no chain dir. A commit lists nothing: it
+  * builds on the read its mutation was given, and records the stamps
+  * that read saw ([[Deltas.commit]]). Commits merge tiers by HBase's
+  * exploring ratio rule (a minor compaction, in the committing
   * version's dir) and write in full past [[Deltas.maxKeys]] tier rows
   * (a major one).
   */
@@ -318,17 +320,16 @@ object Snapshots {
     * receiving side verifies integrity). Here: a byte-level copy of the
     * version directory; verification is the caller composing per-bucket
     * digests over source and export (see the export_snapshot query).
-    * A tiered version exports self-contained: its rows are written in
-    * full at the target, which never reads the source's base or tier
-    * dirs. */
+    * The version is read once, and that read decides: a full version's
+    * dir is copied, and a tiered version exports self-contained, its
+    * rows written in full at the target, which never reads the source's
+    * base or tier dirs. */
   def exportSnapshot(base: String, version: Int, targetBase: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val dir = path(base, version)
-    if (Deltas.baseOf(Tables.listStamp(spark, "exportSnapshot", dir)._2).isEmpty)
-      copyVersionDir(dir, path(targetBase, version))
-    else {
-      val src = read(spark, base, version)
-      Layout.writeSorted(src, Region.of(src)._3.delta.get.keyCol, path(targetBase, version))
+    val spark = SparkSession.active
+    val src = read(spark, base, version)
+    Region.of(src)._3.delta match {
+      case None => copyVersionDir(spark, path(base, version), path(targetBase, version))
+      case Some(d) => Layout.writeSorted(src, d.keyCol, path(targetBase, version))
     }
   }
 
@@ -354,7 +355,7 @@ object Snapshots {
     require(newCurrentVersion > snapshotVersion,
       s"restore writes a NEW current version (got v$newCurrentVersion " +
         s"over snapshot v$snapshotVersion)")
-    copyVersionDir(path(base, snapshotVersion), path(base, newCurrentVersion))
+    copyVersionDir(SparkSession.active, path(base, snapshotVersion), path(base, newCurrentVersion))
   }
 
   /** The rollback audit — the dual of [[diff]]: given the snapshot
@@ -373,29 +374,27 @@ object Snapshots {
       onlyInA = "resurrected", onlyInB = "discarded_insert",
       changed = "reverted_update")
 
-  /** Byte-level copy of one snapshot version directory, at the SAME
-    * filesystem abstraction the snapshot writes use (Hadoop FS — a
-    * java.nio walk would silently look at the LOCAL path while
-    * Snapshots.write landed on the session's default FS, e.g. HDFS/S3
-    * on a real cluster; writeBucketed already bridges the same way).
-    * REPLACES the destination: snapshot part files carry fresh random
-    * names per write, so merging into stale leftovers from an earlier
-    * process would silently double the data. */
-  private def copyVersionDir(srcPath: String, dstPath: String): Unit = {
+  /** Byte-level copy of one snapshot version directory, through the
+    * FileSystems every snapshot read and write uses
+    * ([[Tables.fileSystem]]: a java.nio walk would silently look at the
+    * LOCAL path while Snapshots.write landed on the session's default
+    * FS, e.g. HDFS/S3 on a real cluster). REPLACES the destination:
+    * snapshot part files carry fresh random names per write, so merging
+    * into stale leftovers from an earlier process would silently double
+    * the data. */
+  private def copyVersionDir(spark: SparkSession, srcPath: String, dstPath: String): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path => HPath}
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
     val src = new HPath(srcPath)
     val dst = new HPath(dstPath)
     // each side resolves its OWN FileSystem: exportSnapshot's whole
     // point is shipping to another cluster, and resolving the
     // destination through the source's FS threw "Wrong FS" the moment
-    // the schemes differed (r12 core review)
-    val srcFs = src.getFileSystem(conf)
-    val dstFs = dst.getFileSystem(conf)
+    // the schemes differed
+    val srcFs = Tables.fileSystem(spark, src)
+    val dstFs = Tables.fileSystem(spark, dst)
     if (dstFs.exists(dst)) dstFs.delete(dst, true)
     dstFs.mkdirs(dst.getParent)
-    if (!FileUtil.copy(srcFs, src, dstFs, dst, false, true, conf))
+    if (!FileUtil.copy(srcFs, src, dstFs, dst, false, true, dstFs.getConf))
       throw new java.io.IOException(s"copy $srcPath -> $dstPath failed")
   }
 }

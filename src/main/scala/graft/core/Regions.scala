@@ -32,77 +32,32 @@ private[graft] final case class Region(file: FileStatus, rows: Long,
       points.forall(p => keyRange(filters, p.column).forall { case (lo, hi) => p.admitsRange(lo, hi) })
 
   /** Whether some row of this file can satisfy `p`. False only when an
-    * `=`, `<`, `<=`, `>`, `>=`, `In` or `InSet` of an integral column
-    * against integral literals, under And/Or, excludes the column's
-    * whole range, or, for `=`/`In`/`InSet` on the key column of
-    * `points`, every listed value; every other predicate keeps the
-    * file. */
+    * `=`, `<`, `<=`, `>`, `>=` ([[Bound]]), `In` or `InSet` of an
+    * integral column against integral literals, under And/Or, excludes
+    * the column's whole span or, on the key column of `points`, admits
+    * only single values `points` does not; every other predicate keeps
+    * the file. */
   def mayHold(p: Expression): Boolean = p match {
     case And(l, r) => mayHold(l) && mayHold(r)
     case Or(l, r) => mayHold(l) || mayHold(r)
-    case EqualTo(a @ Key(s), Lit(v)) => s.holds(v) && admits(a, v)
-    case EqualTo(Lit(v), a @ Key(s)) => s.holds(v) && admits(a, v)
-    case LessThan(Key(s), Lit(v)) => s.nonEmpty && s.lo < v
-    case LessThan(Lit(v), Key(s)) => s.nonEmpty && s.hi > v
-    case LessThanOrEqual(Key(s), Lit(v)) => s.nonEmpty && s.lo <= v
-    case LessThanOrEqual(Lit(v), Key(s)) => s.nonEmpty && s.hi >= v
-    case GreaterThan(Key(s), Lit(v)) => s.nonEmpty && s.hi > v
-    case GreaterThan(Lit(v), Key(s)) => s.nonEmpty && s.lo < v
-    case GreaterThanOrEqual(Key(s), Lit(v)) => s.nonEmpty && s.hi >= v
-    case GreaterThanOrEqual(Lit(v), Key(s)) => s.nonEmpty && s.lo <= v
-    case In(a @ Key(s), list) if list.forall(Lit.unapply(_).isDefined) =>
-      list.flatMap(Lit.unapply).exists(v => s.holds(v) && admits(a, v))
+    case Bound(a, lo, hi) => meets(a, lo, hi)
+    case In(Col(a), list) if list.forall(Lit.unapply(_).isDefined) =>
+      list.flatMap(Lit.unapply).exists(v => meets(a, v, v))
     // InSet holds boxed values of the column's type; a NULL member
     // matches no row
-    case InSet(a @ Key(s), set) => set.exists(v => v != null && {
+    case InSet(Col(a), set) => set.exists(v => v != null && {
       val l = v.asInstanceOf[Number].longValue
-      s.holds(l) && admits(a, l)
+      meets(a, l, l)
     })
     case _ => true
   }
 
-  private def admits(a: Expression, v: Long): Boolean =
-    points.forall(p => p.column != a.asInstanceOf[AttributeReference].name || p.admits(v))
-
-  /** The [lo, hi] that the top-level conjuncts of `filters` bound
-    * `column` to, when one of them bounds it; lo > hi when they
-    * exclude every value. */
-  private def keyRange(filters: Seq[Expression], column: String): Option[(Long, Long)] = {
-    object Col {
-      def unapply(e: Expression): Boolean = e match {
-        case a: AttributeReference => a.name == column && integral(a.dataType)
-        case _ => false
-      }
-    }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    // x < v is x <= v - 1, and x > v is x >= v + 1; no value is below
-    // Long.MinValue or above Long.MaxValue
-    def below(v: Long) = if (v == Long.MinValue) (Long.MaxValue, Long.MinValue) else (Long.MinValue, v - 1)
-    def above(v: Long) = if (v == Long.MaxValue) (Long.MaxValue, Long.MinValue) else (v + 1, Long.MaxValue)
-    val bounds = filters.flatMap(conjuncts).collect {
-      case EqualTo(Col(), Lit(v)) => (v, v)
-      case EqualTo(Lit(v), Col()) => (v, v)
-      case LessThan(Col(), Lit(v)) => below(v)
-      case GreaterThan(Lit(v), Col()) => below(v)
-      case LessThanOrEqual(Col(), Lit(v)) => (Long.MinValue, v)
-      case GreaterThanOrEqual(Lit(v), Col()) => (Long.MinValue, v)
-      case GreaterThan(Col(), Lit(v)) => above(v)
-      case LessThan(Lit(v), Col()) => above(v)
-      case GreaterThanOrEqual(Col(), Lit(v)) => (v, Long.MaxValue)
-      case LessThanOrEqual(Lit(v), Col()) => (v, Long.MaxValue)
-    }
-    bounds.reduceOption((a, b) => (math.max(a._1, b._1), math.min(a._2, b._2)))
-  }
-
-  private object Key {
-    def unapply(e: Expression): Option[Span] = e match {
-      case a: AttributeReference if integral(a.dataType) => spans.get(a.name)
-      case _ => None
-    }
-  }
+  /** Whether a value of `a` in [lo, hi] can be in this file: it must
+    * lie in `a`'s span, and a single value must be one `points` admits;
+    * always, when nothing is known of `a`. */
+  private def meets(a: AttributeReference, lo: Long, hi: Long): Boolean =
+    spans.get(a.name).forall(s => math.max(s.lo, lo) <= math.min(s.hi, hi) &&
+      (lo < hi || points.forall(p => p.column != a.name || p.admits(lo))))
 }
 
 private[graft] object Region {
@@ -110,7 +65,6 @@ private[graft] object Region {
     * the file holds none (no rows, or every value NULL). */
   final case class Span(lo: Long, hi: Long) {
     def nonEmpty: Boolean = lo <= hi
-    def holds(v: Long): Boolean = lo <= v && v <= hi
     def union(o: Span): Span = Span(math.min(lo, o.lo), math.max(hi, o.hi))
   }
   val NoValues: Span = Span(Long.MaxValue, Long.MinValue)
@@ -140,6 +94,50 @@ private[graft] object Region {
       case Literal(v: Number, t) if integral(t) => Some(v.longValue)
       case _ => None
     }
+  }
+
+  private object Col {
+    def unapply(e: Expression): Option[AttributeReference] = e match {
+      case a: AttributeReference if integral(a.dataType) => Some(a)
+      case _ => None
+    }
+  }
+
+  /** A comparison of an integral column `a` with an integral literal,
+    * either side, as (a, lo, hi): the values of `a` that satisfy it are
+    * exactly [lo, hi], lo > hi when none does. */
+  object Bound {
+    // x < v is x <= v - 1, and x > v is x >= v + 1; no value is below
+    // Long.MinValue or above Long.MaxValue
+    private def below(a: AttributeReference, v: Long) =
+      if (v == Long.MinValue) (a, Long.MaxValue, Long.MinValue) else (a, Long.MinValue, v - 1)
+    private def above(a: AttributeReference, v: Long) =
+      if (v == Long.MaxValue) (a, Long.MaxValue, Long.MinValue) else (a, v + 1, Long.MaxValue)
+    def unapply(e: Expression): Option[(AttributeReference, Long, Long)] = e match {
+      case EqualTo(Col(a), Lit(v)) => Some((a, v, v))
+      case EqualTo(Lit(v), Col(a)) => Some((a, v, v))
+      case LessThan(Col(a), Lit(v)) => Some(below(a, v))
+      case GreaterThan(Lit(v), Col(a)) => Some(below(a, v))
+      case LessThanOrEqual(Col(a), Lit(v)) => Some((a, Long.MinValue, v))
+      case GreaterThanOrEqual(Lit(v), Col(a)) => Some((a, Long.MinValue, v))
+      case GreaterThan(Col(a), Lit(v)) => Some(above(a, v))
+      case LessThan(Lit(v), Col(a)) => Some(above(a, v))
+      case GreaterThanOrEqual(Col(a), Lit(v)) => Some((a, v, Long.MaxValue))
+      case LessThanOrEqual(Lit(v), Col(a)) => Some((a, v, Long.MaxValue))
+      case _ => None
+    }
+  }
+
+  /** The [lo, hi] that the top-level conjuncts of `filters` bound
+    * `column` to, when one of them bounds it; lo > hi when they
+    * exclude every value. */
+  def keyRange(filters: Seq[Expression], column: String): Option[(Long, Long)] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    filters.flatMap(conjuncts).collect { case Bound(a, lo, hi) if a.name == column => (lo, hi) }
+      .reduceOption((x, y) => (math.max(x._1, y._1), math.min(x._2, y._2)))
   }
 
   /** The region of `file` from its `footer`, with spans for the

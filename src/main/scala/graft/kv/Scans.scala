@@ -118,8 +118,11 @@ object Scans {
           projection: Seq[String]): DataFrame =
     df.where(col(keyCol) === key).select(projection.map(col): _*)
 
+  /** The most keys a [[multiGet]] sends as one pushed IN-list. */
+  val InListMax = 1000
+
   /** HTable.get(List[Get]) — batched point reads. An IN-list stays a
-    * pushed-down predicate up to `inListThreshold` keys; past that the
+    * pushed-down predicate up to [[InListMax]] keys; past that the
     * predicate stops being scan-prunable (and the task binary bloats
     * with literals), so the batch switches to [[multiGetBulk]]. The
     * IN-list form opens only the region files that can hold a key,
@@ -127,8 +130,8 @@ object Scans {
     * Spark job while those files total at most 2 MB in at most 4
     * partitions ([[graft.core.Fetch]]). */
   def multiGet(df: DataFrame, keyCol: String, keys: Seq[Long],
-               projection: Seq[String], inListThreshold: Int = 1000): DataFrame =
-    if (keys.size <= inListThreshold)
+               projection: Seq[String]): DataFrame =
+    if (keys.size <= InListMax)
       df.where(col(keyCol).isInCollection(keys))
         .select(projection.map(col): _*)
     else {

@@ -328,6 +328,12 @@ class CoreToolsSpec extends SparkSpec {
     assert(copies == 0, s"graft/core/Deltas.scala calls newHadoopConf() $copies times")
   }
 
+  test("the delta commit resolves no version: Deltas.scala never calls Snapshots.read(") {
+    // a commit builds on the read its mutation was given, found in the read memo
+    val calls = matchesPerFile("""Snapshots\.read\(""".r).toMap.getOrElse("graft/core/Deltas.scala", -1)
+    assert(calls == 0, s"graft/core/Deltas.scala calls Snapshots.read( $calls times")
+  }
+
   test("no concurrent map outside Once, the read and file memos, and StreamOps' key set") {
     val allowed = Map("graft/core/Once.scala" -> 1, "graft/core/Tables.scala" -> 2,
       "graft/streaming/StreamOps.scala" -> 1)

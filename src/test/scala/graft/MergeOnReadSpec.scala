@@ -174,10 +174,11 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * v1 holds 16000 even keys (0 to 31998) in 8 region files; v2 puts
     * 400 keys from 10000 with long payloads, v3 60 from 20000, and v4
     * puts 31001 and 31003 and deletes 500 and 502. Returns the
-    * snapshot and v4's rows as a model. */
-  private def threeTiers(name: String): (String, Map[Long, String]) = {
+    * snapshot and v4's rows as a model; `counting` puts it under the
+    * [[CountingFs]] scheme. */
+  private def threeTiers(name: String, counting: Boolean = false): (String, Map[Long, String]) = {
     import spark.implicits._
-    val base = TempDirs.create(s"graft_tiers_$name").toString
+    val base = if (counting) CountingFs.dir(spark, s"graft_tiers_$name") else TempDirs.create(s"graft_tiers_$name").toString
     val model = scala.collection.mutable.Map[Long, String]()
     (0L until 32000L by 2).foreach(k => model(k) = s"b$k")
     Layout.writeSorted(model.toSeq.toDF("k", "s"), "k", Snapshots.path(base, 1), buckets = 8)
@@ -413,5 +414,48 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val e = intercept[IllegalStateException](Snapshots.read(spark, base, 2).collect())
     for (name <- Seq(base, Snapshots.path(base, 2), marker.getName))
       assert(e.getMessage.contains(name), e.getMessage)
+  }
+
+  test("a commit over a fresh read lists no dir, and stats or opens only its own dir and the tiers it compacts") {
+    import spark.implicits._
+    def path(base: String, v: Int) = new org.apache.hadoop.fs.Path(Snapshots.path(base, v)).toUri.getPath
+    def tierFiles(base: String, v: Int) =
+      graft.core.Region.of(Snapshots.read(spark, base, v))._3.delta.fold(Set.empty[String])(_.tiers.map(_.file.toUri.getPath).toSet)
+    val full = CountingFs.dir(spark, "graft_mor_commit_full")
+    Layout.writeSorted((0L until 4000L by 2).map(k => (k, s"b$k")).toDF("k", "s"), "k", Snapshots.path(full, 1), buckets = 4)
+    val (tiered, _) = threeTiers("commit", counting = true)
+    for ((base, u) <- Seq(full -> 1, tiered -> 4)) {
+      val next = Mutations.put(Snapshots.read(spark, base, u), Seq(1001L -> "p", 20002L -> "q").toDF("k", "s"), "k")
+      val (_, calls) = CountingFs.during(Snapshots.write(next, "k", base, u + 1))
+      val chain = tierFiles(base, u + 1)
+      assert(chain.nonEmpty, s"v${u + 1} was written in full")
+      assert(!calls.exists(_._1 == "list"), s"the commit of v${u + 1} listed: $calls")
+      // the parent's tier files merged away were read by a minor compaction
+      val compacted = tierFiles(base, u) -- chain
+      val own = path(base, u + 1)
+      val outside = calls.filterNot { case (_, p) => p == own || p.startsWith(s"$own/") || compacted(p) }
+      assert(outside.isEmpty, s"the commit of v${u + 1} touched other files: $outside")
+    }
+  }
+
+  test("a parent rewritten between its read and the commit fails the new version's read, naming both dirs") {
+    import spark.implicits._
+    // (parent is tiered, dir rewritten): a full v1 itself, a tiered v2
+    // itself, and the base v1 under a tiered v2
+    for ((tiered, rewritten) <- Seq(false -> 1, true -> 2, true -> 1)) {
+      val base = TempDirs.create("graft_mor_stale_parent").toString
+      Snapshots.write((1L to 64L).map(k => (k, k)).toDF("k", "v"), "k", base, 1)
+      if (tiered) Snapshots.write(Mutations.deleteRows(Snapshots.read(spark, base, 1), Seq(3L).toDF("k"), "k"),
+        "k", base, 2)
+      val u = if (tiered) 2 else 1
+      assert(isDelta(base, u) == tiered)
+      val next = Mutations.put(Snapshots.read(spark, base, u), Seq((5L, 50L), (99L, 9L)).toDF("k", "v"), "k")
+      Snapshots.write((1L to 64L).map(k => (k, -k)).toDF("k", "v"), "k", base, rewritten)
+      Snapshots.write(next, "k", base, u + 1)
+      assert(isDelta(base, u + 1), s"v${u + 1} was written in full")
+      val e = intercept[IllegalStateException](Snapshots.read(spark, base, u + 1).collect())
+      for (name <- Seq(Snapshots.path(base, u + 1), Snapshots.path(base, rewritten), "rewritten"))
+        assert(e.getMessage.contains(name), e.getMessage)
+    }
   }
 }

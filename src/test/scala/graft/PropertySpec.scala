@@ -987,4 +987,65 @@ class PropertySpec extends SparkSpec {
       assert(FuzzyMatch.matches(s, pat) == want, s"s=$s pat=$pat")
     }
   }
+
+  test("region pruning keeps every file that can hold a match, on random predicates at span edges") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types.LongType
+    import graft.core.Region
+    val rnd = new scala.util.Random(1313L)
+    val (k, j) = (AttributeReference("k", LongType)(), AttributeReference("j", LongType)())
+    // at most 5 values, at 0 or against either end of Long
+    def span(): Region.Span = {
+      val width = rnd.nextInt(5)
+      val lo = rnd.nextInt(3) match {
+        case 0 => Long.MinValue + rnd.nextInt(3)
+        case 1 => rnd.nextInt(7) - 3L
+        case _ => Long.MaxValue - width - rnd.nextInt(3)
+      }
+      Region.Span(lo, lo + width)
+    }
+    def values(s: Region.Span): Seq[Long] = (0L to s.hi - s.lo).map(s.lo + _)
+    val comparisons: Seq[(Expression, Expression) => Expression] = Seq(
+      EqualTo(_, _), LessThan(_, _), LessThanOrEqual(_, _), GreaterThan(_, _), GreaterThanOrEqual(_, _))
+    var (pruned, narrowed) = (0, 0)
+    for (_ <- 1 to 3000) {
+      val spans = Map(k -> span(), j -> span())
+      // a literal at, or one past, an edge of its column's span, or at an end of Long
+      def lit(a: AttributeReference): Long = {
+        val s = spans(a)
+        val near = Seq(s.lo - 1, s.lo, s.lo + 1, s.hi - 1, s.hi, s.hi + 1, Long.MinValue, Long.MaxValue, 0L)
+        near(rnd.nextInt(near.size))
+      }
+      def pred(depth: Int): Expression = {
+        val a = if (rnd.nextBoolean()) k else j
+        rnd.nextInt(if (depth == 0) 7 else 9) match {
+          case 5 => In(a, Seq.fill(rnd.nextInt(4))(Literal(lit(a))))
+          case 6 => InSet(a, Set.fill(1 + rnd.nextInt(3))(Long.box(lit(a)): Any))
+          case 7 => And(pred(depth - 1), pred(depth - 1))
+          case 8 => Or(pred(depth - 1), pred(depth - 1))
+          case _ =>
+            val c = comparisons(rnd.nextInt(comparisons.size))
+            if (rnd.nextBoolean()) c(a, Literal(lit(a))) else c(Literal(lit(a)), a)
+        }
+      }
+      val filters = Seq.fill(1 + rnd.nextInt(3))(pred(2))
+      val rows = for (v <- values(spans(k)); w <- values(spans(j))) yield (v, w)
+      def holds(p: Expression, row: (Long, Long)): Boolean =
+        BindReferences.bindReference(p, Seq(k, j)).eval(InternalRow(row._1, row._2)) == true
+      // a span left unknown keeps the file whatever the predicate
+      val known = if (rnd.nextInt(5) == 0) spans - j else spans
+      val region = Region(new org.apache.hadoop.fs.FileStatus(), rows.size.toLong, known.map { case (a, s) => a.name -> s })
+      for (p <- filters if !region.mayHold(p)) {
+        pruned += 1
+        assert(!rows.exists(holds(p, _)), s"mayHold is false for $p over $known, yet a row matches")
+      }
+      Region.keyRange(filters, "k").foreach { case (lo, hi) =>
+        if (values(spans(k)).exists(v => v < lo || v > hi)) narrowed += 1
+        for ((v, w) <- rows if filters.forall(holds(_, (v, w))))
+          assert(lo <= v && v <= hi, s"keyRange [$lo, $hi] of $filters excludes k = $v, which matches")
+      }
+    }
+    assert(pruned > 500 && narrowed > 500, s"only $pruned pruned and $narrowed narrowed")
+  }
 }
