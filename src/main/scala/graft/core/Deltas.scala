@@ -10,9 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, Distinct, Filter, LocalRelation, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ListingBridge, ParquetBridge, PlanBridge, SessionBridge}
+import org.apache.spark.sql.graftbridge.{ListingBridge, ParquetBridge, PlanBridge}
 import org.apache.spark.sql.types._
 
 /** One row-level mutation of `base`, as HBase applies a batch: every
@@ -45,7 +44,7 @@ private[graft] object MergeDelta {
     val anti = keys.fold(base)(base.join(_, Seq(keyCol), "left_anti"))
     val merged = rows.fold(anti)(anti.unionByName(_))
     val spark = base.sparkSession
-    if (!SessionBridge.hasOptimizerRule(spark, ExpandMergeDelta)) merged
+    if (!PlanBridge.hasOptimizerRule(spark, ExpandMergeDelta)) merged
     else PlanBridge.ofRows(spark, MergeDelta(merged.queryExecution.analyzed, keyCol,
       base.queryExecution.analyzed, keys.map(_.queryExecution.analyzed),
       rows.map(_.queryExecution.analyzed)))
@@ -163,10 +162,11 @@ private[graft] case class DeltaVisible(key: Expression, op: Expression, keys: Ti
 private[graft] final case class Tier(version: Option[Int], file: Path, id: Int, bytes: Long,
                                      mtime: Long, keys: Array[Long], puts: Array[Boolean])
 
-/** What a tiered version's relation carries beyond its files: its dir,
-  * its base version and the base stamp its check saw, the key column,
-  * the tier keys, and its chain of tiers, oldest first. */
-private[graft] final case class DeltaInfo(dir: Path, baseVersion: Int, baseStamp: String,
+/** What a tiered version's relation carries beyond its files and the
+  * [[RegionIndex]]'s path and stamp: its base version and the base
+  * stamp its check saw, the key column, the tier keys, and its chain of
+  * tiers, oldest first. */
+private[graft] final case class DeltaInfo(baseVersion: Int, baseStamp: String,
                                           keyCol: String, keys: TierKeys, tiers: Seq[Tier])
 
 /** Merge-on-read snapshot versions, after HBase's memstore flush plus
@@ -210,11 +210,12 @@ private[graft] final case class DeltaInfo(dir: Path, baseVersion: Int, baseStamp
   * one of those keys lies in it.
   *
   * A commit lists no dir and resolves no version: it builds on the read
-  * its mutation was given, found by its [[Tables.readMemo]] entry, and
-  * its marker records what that read saw: u's stamp for a full u, else
-  * u's base stamp and chain files as u's check found them. So a parent
-  * rewritten between its read and the commit fails the new version's
-  * first read, naming both dirs, and is never merged silently. */
+  * its mutation was given, whose [[RegionIndex]] names the version and
+  * the stamp it was read at, and its marker records what that read saw:
+  * u's stamp for a full u, else u's base stamp and chain files as u's
+  * check found them. So a parent rewritten between its read and the
+  * commit fails the new version's first read, naming both dirs, and is
+  * never merged silently. */
 private[graft] object Deltas {
   val OpCol = "_graft_op"
   val Marker = "_graft_delta_of_v"
@@ -410,14 +411,15 @@ private[graft] object Deltas {
   }
 
   /** The relation of tiered version `path`, listed at `stamp` and
-    * checked as `c` (see the object doc): no dir is listed again. The base's relation comes through the read memo from the
-    * check's listing, each tier's footer through [[Tables.footer]], and
+    * checked as `c` (see the object doc): no dir is listed again. The
+    * base's relation comes through the read memo from the check's
+    * listing, each tier's footer through [[Tables.footer]], and
     * the file index is built from the listings in hand. Fails, naming
     * the version, when it is not tier files over a full base of the
     * same columns. */
   def resolve(spark: SparkSession, path: String, what: String, stamp: String, c: Checked): DataFrame = {
     val fs = Tables.fileSystem(spark, new Path(path))
-    val dir = fs.makeQualified(new Path(path))
+    val dir = Tables.qualified(spark, path)
     val own = versionOf(dir).getOrElse(
       throw new IllegalStateException(s"$what: delta version $path is not a v=<n> snapshot dir"))
     val m = c.meta
@@ -455,17 +457,17 @@ private[graft] object Deltas {
     val regions = bIndex.regions.map { case (p, r) =>
       p -> r.copy(points = Some(Region.Points(m.keyCol, keys, None)))
     } ++ tierRegions
-    val info = DeltaInfo(dir, c.b, c.baseStamp, m.keyCol, keys, tiers.map(_._1))
-    val relation = HadoopFsRelation(new RegionIndex(listing, regions, delta = Some(info)),
-      listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)
-    PlanBridge.ofRows(spark, visible(LogicalRelation(relation), info))
+    Tables.relation(spark, path, stamp, listing, regions, schema,
+      Some(DeltaInfo(c.b, c.baseStamp, m.keyCol, keys, tiers.map(_._1))))
   }
 
-  /** `lr` under the tiers' visibility filter, without [[OpCol]]. */
-  def visible(lr: LogicalRelation, info: DeltaInfo): LogicalPlan = {
+  /** `lr`, the relation of `index`, under the tiers' visibility filter
+    * and without [[OpCol]] when `index` is a tiered version's; else `lr`
+    * itself. */
+  def visible(lr: LogicalRelation, index: RegionIndex): LogicalPlan = index.delta.fold[LogicalPlan](lr) { info =>
     val (op, cols) = lr.output.partition(_.name == OpCol)
     val key = cols.find(_.name == info.keyCol).getOrElse(throw new IllegalStateException(
-      s"delta version ${info.dir}: no key column ${info.keyCol}"))
+      s"delta version ${index.path}: no key column ${info.keyCol}"))
     Project(cols, Filter(DeltaVisible(key, op.head, info.keys), lr))
   }
 
@@ -473,11 +475,13 @@ private[graft] object Deltas {
 
   /** Commit `df` as version `version` of snapshot `base` as a tiered
     * version, if it is a chain of [[MergeDelta]]s on `keyCol` over the
-    * memo'd read of an earlier version u of `base` (full or tiered), with
-    * an integral key and the same column types throughout. u's dir,
-    * stamp, base and chain come from that read's memo key and relation,
-    * with no file-system call, and the marker records them as the read
-    * saw them (see the object doc). Only the steps' keys and rows are
+    * read of an earlier version u of `base` (full or tiered) as
+    * [[Tables.read]] resolved it: its relation or that under
+    * [[visible]], over a whole-version [[RegionIndex]] (no `restrict`
+    * view), with an integral key and the same column types throughout.
+    * u's dir, stamp, base and chain come from that index, with no
+    * file-system call, and the marker records them as the read saw them
+    * (see the object doc). Only the steps' keys and rows are
     * evaluated: each part that is client rows ([[ClientRows]]) by a
     * Dataset collect of its own, which starts no job (a
     * `LocalTableScan`), the parts of table-derived batches by
@@ -500,23 +504,17 @@ private[graft] object Deltas {
       case other => (other, steps)
     }
     val (bottom, steps) = unwind(df.queryExecution.analyzed, Nil)
-    // the parent is the read `bottom` is: its read-memo key says where
-    // and at what stamp it was read, with no file-system call
-    val session = SessionBridge.sessionUUID(spark)
-    val parent = if (steps.isEmpty) None else Tables.readMemo.asScala.collectFirst {
-      case (k, p) if k.session == session && !k.events && (p.queryExecution.analyzed eq bottom) => (k, p)
-    }.flatMap { case (k, p) =>
-      val dir = new Path(k.path)
-      def qualified(q: Path) = Tables.fileSystem(spark, q).makeQualified(q)
-      versionOf(dir).filter(u => u < version && qualified(dir) == qualified(new Path(Snapshots.path(base, u))))
-        .map(u => (p, u, k.stamp))
-    }
-    parent.exists { case (p, u, stamp) =>
-      val schema = p.schema
+    // the parent is the whole-version read `bottom` is: its index names
+    // the version and the stamp it was read at, with no file-system call
+    val parent = for {
+      (lr, h, index) <- Region.in(bottom) if steps.nonEmpty && index.only.isEmpty && visible(lr, index) == bottom
+      u <- versionOf(index.path) if u < version && index.path == Tables.qualified(spark, Snapshots.path(base, u))
+    } yield (lr, h, index, u)
+    parent.exists { case (lr, h, index, u) =>
+      val schema = bottom.schema
       val kt = schema.find(_.name == keyCol).map(_.dataType)
       def sameTypes(plan: LogicalPlan, names: Seq[String]): Boolean = names.forall(n =>
         plan.schema.find(_.name == n).map(_.dataType) == schema.find(_.name == n).map(_.dataType))
-      val index = Region.of(p)._3
       val chain = index.delta.fold(Seq.empty[Tier])(_.tiers)
       val tierFiles = chain.map(_.file).toSet
       val bRows = index.regions.collect { case (f, r) if !tierFiles(f) => r.rows }.sum
@@ -526,7 +524,7 @@ private[graft] object Deltas {
         fold(spark, steps, keyCol, schema, room).exists { batch =>
           // what the tier is computed against: a full parent at its
           // read's stamp, a tiered one's base at the stamp its check saw
-          val (b, bStamp) = index.delta.fold((u, stamp))(d => (d.baseVersion, d.baseStamp))
+          val (b, bStamp) = index.delta.fold((u, index.stamp))(d => (d.baseVersion, d.baseStamp))
           val out = new Path(Snapshots.path(base, version))
           val fs = Tables.fileSystem(spark, out)
           if (fs.exists(out)) fs.delete(out, true)
@@ -545,7 +543,7 @@ private[graft] object Deltas {
           val tiers = chain :+ fresh
           val merged = select(tiers.map(_.bytes)).fold(tiers) { case (s, n) =>
             val window = tiers.slice(s, s + n)
-            val read = tierRows(p, window.filter(_.version.isDefined).map(_.file).toSet)
+            val read = tierRows(lr, h, index, window.filter(_.version.isDefined).map(_.file).toSet)
             // oldest first, so the newest tier's row of a key wins
             val rows = new java.util.TreeMap[java.lang.Long, Row]()
             window.foreach { t =>
@@ -566,12 +564,13 @@ private[graft] object Deltas {
     }
   }
 
-  /** The rows of tier `files` of parent read `p`, by tier id, each with
-    * a put flag in place of [[OpCol]]: one Dataset collect of the raw
-    * files, one small scan that [[Fetch]] reads in-thread. */
-  private def tierRows(p: DataFrame, files: Set[Path]): Map[Int, Seq[Row]] = {
-    val (lr, h, index) = Region.of(p)
-    val raw = PlanBridge.ofRows(p.sparkSession,
+  /** The rows of tier `files` of parent relation `lr` (`h` over
+    * `index`), by tier id, each with a put flag in place of [[OpCol]]:
+    * one Dataset collect of the raw files, one small scan that [[Fetch]]
+    * reads in-thread. */
+  private def tierRows(lr: LogicalRelation, h: HadoopFsRelation, index: RegionIndex,
+                       files: Set[Path]): Map[Int, Seq[Row]] = {
+    val raw = PlanBridge.ofRows(h.sparkSession,
       lr.copy(relation = h.copy(location = index.restrict(files))(h.sparkSession)).newInstance())
     val op = raw.schema.fieldIndex(OpCol)
     raw.collect().toSeq.groupBy(r => math.abs(r.getInt(op)))

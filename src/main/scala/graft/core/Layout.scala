@@ -34,9 +34,9 @@ object Layout {
       .write.mode("overwrite").option(PageRowsOption, PageRows).parquet(path)
 
   /** The parquet at `path`, resolved once per (session, path, stamp)
-    * through [[Tables.readMemo]]: plans, not results — a rewrite of
-    * the path is seen by the next read because its stamp changes. The
-    * relation prunes files by their footer key ranges. */
+    * through [[Tables.read]]'s plan memo: plans, not results — a
+    * rewrite of the path is seen by the next read because its stamp
+    * changes. The relation prunes files by their footer key ranges. */
   def read(spark: SparkSession, path: String): DataFrame =
     Tables.read(spark, path, "Layout.read: parquet")
 
@@ -78,7 +78,7 @@ object Layout {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       org.apache.spark.sql.graftbridge.SessionBridge.defaultTablePath(spark, table))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Tables.fileSystem(spark, loc)
     if (fs.exists(loc)) fs.delete(loc, true)
     df.write.mode("overwrite")
       .bucketBy(buckets, keyCol).sortBy(keyCol)
@@ -146,7 +146,7 @@ object Indexes {
         // SUPPRESSED onto the build error, never replacing it.
         try {
           val tp = new org.apache.hadoop.fs.Path(target)
-          val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val fs = Tables.fileSystem(spark, tp)
           if (fs.exists(tp)) fs.delete(tp, true)
           java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(target))
         } catch { case c: Throwable => e.addSuppressed(c) }

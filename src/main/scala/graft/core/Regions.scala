@@ -7,6 +7,7 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.types._
 
@@ -183,11 +184,14 @@ private[graft] object Region {
       }
     }
 
-  /** The memo'd relation under a [[Tables.read]] result and its index. */
+  /** The first region-indexed relation in `plan`, and its index. */
+  def in(plan: LogicalPlan): Option[(LogicalRelation, HadoopFsRelation, RegionIndex)] = plan.collectFirst {
+    case lr @ LogicalRelation(h @ HadoopFsRelation(r: RegionIndex, _, _, _, _, _), _, _, _, _) => (lr, h, r)
+  }
+
+  /** The relation under a [[Tables.read]] result and its index. */
   def of(df: DataFrame): (LogicalRelation, HadoopFsRelation, RegionIndex) =
-    df.queryExecution.analyzed.collectFirst {
-      case lr @ LogicalRelation(h @ HadoopFsRelation(r: RegionIndex, _, _, _, _, _), _, _, _, _) => (lr, h, r)
-    }.getOrElse(throw new IllegalArgumentException(
+    in(df.queryExecution.analyzed).getOrElse(throw new IllegalArgumentException(
       "not a region-indexed read: resolve it through Tables.read / Layout.read"))
 
   /** A fresh relation over the files of the [[Tables.read]] result `df`
@@ -198,22 +202,22 @@ private[graft] object Region {
     val (lr, h, index) = of(df)
     val view = index.restrict(index.regions.collect { case (p, r) if keep(r) => p }.toSet)
     val fresh = lr.copy(relation = h.copy(location = view)(h.sparkSession)).newInstance()
-    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(df.sparkSession,
-      index.delta.fold[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan](fresh)(
-        Deltas.visible(fresh, _)))
+    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(df.sparkSession, Deltas.visible(fresh, view))
   }
 }
 
 /** A file index that drops, per scan, every file whose footer key
   * ranges ([[Region.mayHold]]) cannot satisfy the scan's pushed data
   * filters. Listing, partitioning and refresh are `inner`'s; files the
-  * footer pass never saw are always kept. `only`, when set, is a fixed
-  * file subset (a split pick); `delta` is set on a tiered version's
-  * relation. Equality is by root paths, as InMemoryFileIndex's is, so
-  * `sameResult` and exchange reuse treat two reads of one path as the
-  * same relation. */
+  * footer pass never saw are always kept. It names the version it reads
+  * ([[Tables.relation]]): `path`, qualified, listed at `stamp`. `only`,
+  * when set, is a fixed file subset (a split pick); `delta` is set on a
+  * tiered version's relation. Equality is by root paths, as
+  * InMemoryFileIndex's is, so `sameResult` and exchange reuse treat two
+  * reads of one path as the same relation. */
 private[graft] final class RegionIndex(inner: FileIndex, val regions: Map[Path, Region],
-                                       only: Option[Set[Path]] = None,
+                                       val path: Path, val stamp: String,
+                                       val only: Option[Set[Path]] = None,
                                        val delta: Option[DeltaInfo] = None) extends FileIndex {
   override def rootPaths: Seq[Path] = only.fold(inner.rootPaths)(_.toSeq.sortBy(_.toString))
 
@@ -232,7 +236,7 @@ private[graft] final class RegionIndex(inner: FileIndex, val regions: Map[Path, 
   override def partitionSchema: StructType = inner.partitionSchema
   override def metadataOpsTimeNs: Option[Long] = inner.metadataOpsTimeNs
 
-  def restrict(files: Set[Path]): RegionIndex = new RegionIndex(inner, regions, Some(files), delta)
+  def restrict(files: Set[Path]): RegionIndex = new RegionIndex(inner, regions, path, stamp, Some(files), delta)
 
   override def equals(other: Any): Boolean = other match {
     case r: RegionIndex => rootPaths.toSet == r.rootPaths.toSet

@@ -5,10 +5,11 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ListingBridge, ParquetBridge, PlanBridge, SessionBridge}
-import org.apache.spark.sql.types.TimestampNTZType
+import org.apache.spark.sql.types.{StructType, TimestampNTZType}
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables, plus the
   * KV "cell view" that re-expresses HBase's data model
@@ -41,7 +42,11 @@ object Tables {
     * inference (a one-task Spark job reading a footer) per call; HBase
     * opens a store file's reader once per region open, and this is the
     * same once-per-version resolution ([[read]]: one listing, footers
-    * through the per-file memo [[footer]], no Spark job). Invariants:
+    * through the per-file memo [[footer]], no Spark job). It is a plan
+    * cache only: nothing reads it but [[readListed]], and what a plan
+    * reads (its version and stamp) is on the plan's [[RegionIndex]], so
+    * an evicted entry costs a re-resolve and changes no result and no
+    * commit. Invariants:
     *  - plans, not results: the memo holds the resolved DataFrame, and
     *    every action against it still scans parquet;
     *  - stamp-keyed: the key is (session, path, [[listStamp]] of the
@@ -70,11 +75,18 @@ object Tables {
     * session's whole Hadoop conf, and every read and commit resolves a
     * FileSystem for two or three paths. Hadoop's own FileSystem cache
     * keeps the instance a conf first built for a URI, so reuse changes
-    * nothing but the copies. */
+    * nothing but the copies. graft reaches a FileSystem only here
+    * (CoreToolsSpec fails on `getFileSystem(` in any other file). */
   private[graft] def fileSystem(spark: SparkSession, p: Path): FileSystem = {
     val u = p.toUri
     fileSystems(spark, s"${SessionBridge.sessionUUID(spark)}|${u.getScheme}|${u.getAuthority}")(
       p.getFileSystem(spark.sessionState.newHadoopConf()))
+  }
+
+  /** `path`, qualified by the file system that holds it. */
+  private[graft] def qualified(spark: SparkSession, path: String): Path = {
+    val p = new Path(path)
+    fileSystem(spark, p).makeQualified(p)
   }
 
   /** Generation stamp of a path: (count, newest mtime, total length,
@@ -129,7 +141,7 @@ object Tables {
       readMemo.keySet().removeIf(k =>
         k.session == key.session && k.path == path && k.stamp != key.stamp)
       if (readMemo.size >= memoCap) readMemo.clear()
-      val fresh = tiered.fold(loadFresh(spark, path, what, events, files))(
+      val fresh = tiered.fold(loadFresh(spark, path, what, events, stamp, files))(
         Deltas.resolve(spark, path, what, stamp, _))
       val won = readMemo.putIfAbsent(key, fresh)
       if (won == null) fresh else won
@@ -188,12 +200,13 @@ object Tables {
     Footer(Region(f, m), m.getFileMetaData.getSchema, ParquetBridge.storedSchema(m))
   }
 
-  /** Resolve the parquet at `path`, listed as `files`, with no Spark
-    * job and no second listing: read every data file's footer through
-    * [[footer]], and build the relation over a [[RegionIndex]] of the
-    * footers' key ranges, so a scan whose pushed filters miss a file's
-    * range never opens it. The schema is the one Spark's non-merging
-    * inference derives, from the first data file by path.
+  /** Resolve the parquet at `path`, listed as `files` at `stamp`, with
+    * no Spark job and no second listing: read every data file's footer
+    * through [[footer]], and build the relation over a [[RegionIndex]]
+    * of the footers' key ranges ([[relation]]), so a scan whose pushed
+    * filters miss a file's range never opens it. The schema is the one
+    * Spark's non-merging inference derives, from the first data file by
+    * path.
     *
     * events.parquet has shipped with two ts encodings across data
     * generations: TIMESTAMP(NANOS) (which Spark's vectorized reader
@@ -204,11 +217,9 @@ object Tables {
     * way normalize to TimestampType (LTZ): watermarks reject
     * TIMESTAMP_NTZ, and the UTC session timezone makes the NTZ→LTZ
     * cast wall-clock exact. */
-  private def loadFresh(spark: SparkSession, path: String, what: String,
-                        events: Boolean, files: Seq[FileStatus]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val root = new Path(path)
-    val listing = ListingBridge.fileIndex(spark, Seq(fileSystem(spark, root).makeQualified(root) -> files))
+  private def loadFresh(spark: SparkSession, path: String, what: String, events: Boolean,
+                        stamp: String, files: Seq[FileStatus]): DataFrame = {
+    val listing = ListingBridge.fileIndex(spark, Seq(qualified(spark, path) -> files))
     val footers = listing.allFiles().filter(_.getLen > 0).sortBy(_.getPath.toString)
       .map(f => f.getPath -> footer(spark, what, f))
     if (footers.isEmpty) throw new IllegalArgumentException(
@@ -223,13 +234,23 @@ object Tables {
     if (schema.fieldNames.contains(Deltas.OpCol)) throw new IllegalStateException(
       s"$what: $path holds a delta file but no ${Deltas.Marker}<base> marker, " +
         "so its delta commit did not finish; rewrite the version")
-    val relation = HadoopFsRelation(
-      new RegionIndex(listing, footers.map { case (p, f) => p -> f.region }.toMap),
-      listing.partitionSchema, schema, None, new ParquetFileFormat, Map("path" -> path))(spark)
-    val df = PlanBridge.ofRows(spark, LogicalRelation(relation))
+    val df = relation(spark, path, stamp, listing, footers.map { case (p, f) => p -> f.region }.toMap, schema, None)
     if (nanos) df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else if (events && df.schema("ts").dataType == TimestampNTZType) df.withColumn("ts", col("ts").cast("timestamp"))
     else df
+  }
+
+  /** The plan of the parquet at `path`, listed at `stamp`: one relation
+    * over `listing`, whose files `regions` prune, under the tiers'
+    * visibility filter when `delta` is set. Every resolved read is
+    * built here, by [[loadFresh]] or [[Deltas.resolve]], so its plan's
+    * [[RegionIndex]] names the version and the stamp it reads. */
+  private[graft] def relation(spark: SparkSession, path: String, stamp: String, listing: FileIndex,
+                              regions: Map[Path, Region], schema: StructType, delta: Option[DeltaInfo]): DataFrame = {
+    val index = new RegionIndex(listing, regions, qualified(spark, path), stamp, delta = delta)
+    val lr = LogicalRelation(HadoopFsRelation(index, listing.partitionSchema, schema, None,
+      new ParquetFileFormat, Map("path" -> path))(spark))
+    PlanBridge.ofRows(spark, Deltas.visible(lr, index))
   }
 
   /** Unpivot a wide relational table into HBase-style cells

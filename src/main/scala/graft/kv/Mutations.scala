@@ -16,8 +16,9 @@ import graft.core.{ClientRows, MergeDelta, Region}
   *
   * HBase mutates in place (memstore + WAL); an analytics engine on
   * immutable parquet instead produces a NEW snapshot version per batch.
-  * Every op below is a pure DataFrame → DataFrame transform built from
-  * joins/windows — distributed, no driver loops.
+  * Every op below is a DataFrame → DataFrame transform built from
+  * joins/windows, run distributed, except over a batch of client rows,
+  * which the driver checks itself (below).
   *
   * The row ops (put, deleteRows, checkAndPut, checkAndPutAbsent,
   * checkAndDelete, mutateRow, checkAndMutateRow and the ops built on

@@ -74,14 +74,6 @@ object SessionBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
 
-  /** Whether the session's optimizer runs `rule` among its
-    * extension-injected operator optimization rules. */
-  def hasOptimizerRule(spark: SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Boolean =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.optimizer.extendedOperatorOptimizationRules.contains(rule)
-
   /** The managed location the catalog would assign `table` — respects
     * the session's CURRENT database (a hardcoded <warehouse>/<table>
     * guess is wrong outside `default`, e.g. <warehouse>/x.db/<table>). */
@@ -125,15 +117,23 @@ object ListenerBridge {
     sc.listenerBus.waitUntilEmpty()
 }
 
-/** Plan-level access for audits: rebuild a DataFrame from a logical
-  * subtree (Dataset.ofRows is private[sql]) — lets a spec EXECUTE the
-  * input of a plan fragment, e.g. count the child of an unpartitioned
-  * window to prove it is a bounded metadata relation. */
+/** Plan-level access: rebuild a DataFrame from a logical subtree
+  * (Dataset.ofRows is private[sql]) — lets a spec EXECUTE the input of
+  * a plan fragment, e.g. count the child of an unpartitioned window to
+  * prove it is a bounded metadata relation — and ask whether a
+  * session's optimizer runs a rule. */
 object PlanBridge {
   import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
+
+  /** Whether the session's optimizer runs `rule` among its
+    * extension-injected operator optimization rules. */
+  def hasOptimizerRule(spark: org.apache.spark.sql.SparkSession,
+      rule: org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Boolean =
+    spark.asInstanceOf[CSparkSession].sessionState.optimizer.extendedOperatorOptimizationRules.contains(rule)
 }
 
 /** JVM-lifetime scratch dirs for graft's build-once registry

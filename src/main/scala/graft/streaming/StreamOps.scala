@@ -228,7 +228,7 @@ object StreamOps {
     import org.apache.hadoop.fs.Path
     require(keepLast >= 1, s"keepLast ($keepLast) must keep the serving version")
     val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.core.Tables.fileSystem(spark, base)
     val (completeRaw, partialRaw) = versionDirs(fs, base)
     val complete = completeRaw.sorted
     val dropComplete = complete.dropRight(keepLast)
@@ -278,7 +278,7 @@ object StreamOps {
                                   (write: Seq[Int] => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.core.Tables.fileSystem(spark, base)
     val versions = completeVersions(fs, base)
     // FOREIGN-STREAM check by IDENTITY, not version arithmetic: the
     // table carries its owning streaming query's id (_QUERY_ID —
@@ -356,7 +356,7 @@ object StreamOps {
   def readMaintained(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.core.Tables.fileSystem(spark, base)
     val versions = completeVersions(fs, base)
     require(versions.nonEmpty, s"no complete maintained-table snapshot under $path")
     graft.core.Snapshots.read(spark, path, versions.max)

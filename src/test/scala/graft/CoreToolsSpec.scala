@@ -329,7 +329,7 @@ class CoreToolsSpec extends SparkSpec {
   }
 
   test("the delta commit resolves no version: Deltas.scala never calls Snapshots.read(") {
-    // a commit builds on the read its mutation was given, found in the read memo
+    // a commit builds on the read its mutation was given, named by its plan
     val calls = matchesPerFile("""Snapshots\.read\(""".r).toMap.getOrElse("graft/core/Deltas.scala", -1)
     assert(calls == 0, s"graft/core/Deltas.scala calls Snapshots.read( $calls times")
   }
@@ -343,5 +343,17 @@ class CoreToolsSpec extends SparkSpec {
     assert(extra.isEmpty, "a ConcurrentHashMap outside the allowed memos — build once through " +
       "graft.core.Once, or memo a file's bytes through Tables.perFile: " +
       extra.map { case (f, n) => s"$f ($n)" }.mkString(", "))
+  }
+
+  test("the read memo is read only in Tables.scala: a commit takes its parent from the plan") {
+    val outside = matchesPerFile("""readMemo""".r).filter { case (f, n) => n > 0 && f != "graft/core/Tables.scala" }
+    assert(outside.isEmpty, "readMemo outside graft/core/Tables.scala — the memo is a plan cache; " +
+      "take what a read resolved from its RegionIndex instead: " + outside.map { case (f, n) => s"$f ($n)" }.mkString(", "))
+  }
+
+  test("a FileSystem is reached only through Tables.fileSystem") {
+    val outside = matchesPerFile("""getFileSystem\(""".r).filter { case (f, n) => n > 0 && f != "graft/core/Tables.scala" }
+    assert(outside.isEmpty, "getFileSystem( outside graft/core/Tables.scala — resolve it through " +
+      "Tables.fileSystem instead: " + outside.map { case (f, n) => s"$f ($n)" }.mkString(", "))
   }
 }

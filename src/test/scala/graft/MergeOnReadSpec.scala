@@ -458,4 +458,60 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(e.getMessage.contains(name), e.getMessage)
     }
   }
+
+  test("a commit over a read the memo no longer holds still writes a tier, reading as the model") {
+    import spark.implicits._
+    val full = TempDirs.create("graft_mor_evicted_full").toString
+    val fullModel = (0L until 4000L by 2).map(k => k -> s"b$k").toMap
+    Layout.writeSorted(fullModel.toSeq.toDF("k", "s"), "k", Snapshots.path(full, 1), buckets = 4)
+    val (tiered, tieredModel) = threeTiers("evicted")
+    for ((base, u, model) <- Seq((full, 1, fullModel), (tiered, 4, tieredModel))) {
+      val puts = Seq(1001L -> "p", 20002L -> "q")
+      val next = Mutations.put(Snapshots.read(spark, base, u), puts.toDF("k", "s"), "k")
+      Tables.readMemo.clear()
+      Snapshots.write(next, "k", base, u + 1)
+      assert(isDelta(base, u + 1), s"v${u + 1} was written in full")
+      val want = (model ++ puts).toSeq.map { case (k, s) => s"[$k,$s]" }.sorted
+      assert(sorted(Snapshots.read(spark, base, u + 1)) == want, s"v${u + 1} differs from the model")
+    }
+  }
+
+  test("a commit over a parent rewritten and read again before it fails the new version's read, naming both dirs") {
+    import spark.implicits._
+    for (tiered <- Seq(false, true)) {
+      val base = TempDirs.create("graft_mor_stale_reread").toString
+      Snapshots.write((1L to 64L).map(k => (k, k)).toDF("k", "v"), "k", base, 1)
+      if (tiered) Snapshots.write(Mutations.deleteRows(Snapshots.read(spark, base, 1), Seq(3L).toDF("k"), "k"),
+        "k", base, 2)
+      val u = if (tiered) 2 else 1
+      val next = Mutations.put(Snapshots.read(spark, base, u), Seq((5L, 50L), (99L, 9L)).toDF("k", "v"), "k")
+      Snapshots.write((1L to 64L).map(k => (k, -k)).toDF("k", "v"), "k", base, u)
+      // the new stamp's read evicts the read `next` was built over
+      assert(Snapshots.read(spark, base, u).count() == 64L)
+      Snapshots.write(next, "k", base, u + 1)
+      val e = intercept[IllegalStateException](Snapshots.read(spark, base, u + 1).collect())
+      for (name <- Seq(Snapshots.path(base, u + 1), Snapshots.path(base, u), "rewritten"))
+        assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
+
+  test("a put over a filtered read, a scanDirect view or a restricted read writes in full") {
+    import spark.implicits._
+    val base = TempDirs.create("graft_mor_derived").toString
+    Snapshots.write((1L to 64L).map(k => (k, k)).toDF("k", "v"), "k", base, 1)
+    Snapshots.write(Mutations.deleteRows(Snapshots.read(spark, base, 1), Seq(3L).toDF("k"), "k"), "k", base, 2)
+    assert(isDelta(base, 2))
+    val bases = Seq(
+      "a filtered read" -> Snapshots.read(spark, base, 1).where(col("k") > 0),
+      "a scanDirect view" -> Snapshots.scanDirect(spark, base, 1, "k", 0L, 100L),
+      "a restricted full read" -> graft.core.Region.restrict(Snapshots.read(spark, base, 1), _ => true),
+      "a restricted tiered read" -> graft.core.Region.restrict(Snapshots.read(spark, base, 2), _ => true))
+    for (((what, over), i) <- bases.zipWithIndex) {
+      val v = 3 + i
+      Snapshots.write(Mutations.put(over, Seq((5L, 50L)).toDF("k", "v"), "k"), "k", base, v)
+      assert(!isDelta(base, v), s"a put over $what wrote a tier")
+      val want = (1L to 64L).filter(k => k != 3L || i < 3).map(k => s"[$k,${if (k == 5L) 50L else k}]").sorted
+      assert(sorted(Snapshots.read(spark, base, v)) == want, s"a put over $what")
+    }
+  }
 }
